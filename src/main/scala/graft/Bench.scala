@@ -22,33 +22,15 @@ object Bench {
     }
   }
 
-  /** Materialize every output column of `df`, defeating the two ways
-    * `count()` lies about map-only queries: Catalyst prunes unreferenced
-    * project columns and eliminates sorts under a bare count, so a
-    * pure-projection query (url_slug, text_normalize, ...) degenerates
-    * to a parquet-footer row count. The noop sink consumes each row
-    * fully (all columns evaluated, codegen exercised) without write I/O
-    * skewing the timing.
-    */
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Fixpoint.reliably writes per-call checkpoint files; let the
-      // ContextCleaner delete them when the frames are GC'd so a
-      // long-lived session doesn't accumulate temp-dir state
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional filter for local iteration (comma-separated names);
+    // unset = the full driver-contract run.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty[String])
+    Harness.requireKnown(only)
+    val spark = GraftSession.local()
     // Warmup: pay one-time JVM/codegen/parquet-footer costs outside the
     // timed loop so they don't land on whichever query runs first.
     // A warmup failure is NOT swallowed silently: a broken table read
@@ -61,14 +43,6 @@ object Bench {
       case e: Throwable =>
         System.err.println(s"BENCH WARMUP FAIL: ${e.getClass.getName}: ${e.getMessage}")
     }
-    // Release EVERYTHING a query may have pinned in the block manager:
-    // clearCache() only empties the SQL CacheManager (Dataset.persist/
-    // cache); `localCheckpoint()` blocks — the fixpoint queries' lineage
-    // rule — live at the RDD level and survive it. Without this scrub
-    // the 167-query loop accumulates checkpoint blocks, and queries that
-    // happen to run after the crawl/dedup fixpoints (alphabetically:
-    // cube_sales right after crawl_*) recorded 20×-steady-state spikes
-    // in BENCH_r05 from the resulting memory/GC pressure.
     // SPARK_GRAFT_KEEP_MEMO=1 (round 18, VERDICT r17 item 2): keep the
     // session memos WARM across the whole run — the full-surface
     // deployment shape, where one session computes the closure / pair
@@ -76,17 +50,7 @@ object Bench {
     // default (unset) stays the isolated per-query pricing the driver
     // bench contract requires.
     val keepMemo = sys.env.get("SPARK_GRAFT_KEEP_MEMO").contains("1")
-    def scrub(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // per-query honesty: min-of-reps over a warm session memo
-      // (components closure, LSH pairs, quality-train artifact) would
-      // time only the downstream aggregate (the shared frame is the
-      // production shape — measured in BASELINE.md rounds 13/17; the
-      // bench prices each query standalone unless KEEP_MEMO says
-      // otherwise)
-      if (!keepMemo) graft.etl.Memos.clearAll()
-    }
+    def scrub(): Unit = Harness.scrub(spark, keepMemo)
     // One warm execution per query, then the timed run: the first
     // execution pays Janino/JIT compilation of the generated code
     // (measured 5-30s spikes vs 0.5-1.5s steady state) — compile cost,
@@ -115,27 +79,11 @@ object Bench {
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(priorPath)),
         java.nio.charset.StandardCharsets.UTF_8))
       catch { case _: Throwable => Map.empty }
-    // GC-weather control for the timed reps: a full collection + brief
-    // settle drains the garbage the cold rep (and earlier queries) left
-    // behind, so a concurrent GC cycle doesn't land mid-rep. BENCH_r09
-    // recorded token_chunk at 6.2s (steady 0.8s) because BOTH of its
-    // min-of-2 reps absorbed collections triggered by neighbors' heaps.
-    def settle(): Unit = { System.gc(); Thread.sleep(100) }
     def timedMin(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                  reps: Int): Double = {
-      settle()
-      (1 to reps).map { _ =>
-        scrub() // each rep pays its own persists — honest timing
-        val t0 = System.nanoTime()
-        materialize(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      Harness.settle()
+      Harness.timedReps(spark, reps, keepMemo)(Harness.materialize(fn(spark, sfDir))).min
     }
-    // Optional filter for local iteration (comma-separated names);
-    // unset = the full driver-contract run.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
     // Weather canary (VERDICT r16 item 2): the SAME fixed physical
     // probe — q1_agg, scrubbed/settled like a timed rep — measured at
     // loop START, MIDDLE and END of every run and emitted as
@@ -147,12 +95,7 @@ object Bench {
     // BASELINE.md). One unrecorded warm call first — the canary's noop
     // materialization has its own one-time codegen cost, which is
     // compile weather, not run weather.
-    def canary(): Double = {
-      scrub(); settle()
-      val t0 = System.nanoTime()
-      materialize(SparkEntry.queries("q1_agg")(spark, sfDir))
-      (System.nanoTime() - t0) / 1e9
-    }
+    def canary(): Double = timedMin(SparkEntry.queries("q1_agg"), reps = 1)
     // FIXED 3-slot array (ADVICE r17): the canary is positional
     // ([start, mid, end]), so a failed probe must leave a null
     // PLACEHOLDER, not shrink the array — a consumer applying the
@@ -171,7 +114,7 @@ object Bench {
       scrub()
       val c0 = System.nanoTime()
       val coldOk =
-        try { materialize(fn(spark, sfDir)); true }
+        try { Harness.materialize(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           errors(name) = errMsg(e)
           System.err.println(s"BENCH FAIL $name: ${errMsg(e)}")

@@ -354,41 +354,38 @@ object ScaleCheck {
     r
   }
 
+  /** Median at >= 3 samples (the evidence-row policy), min below it.
+    * TRUE median for even counts (ADVICE r16): the two middle samples
+    * average — sorted(n/2) alone is the upper-middle element.
+    */
+  private def central(samples: Seq[Double]): Double =
+    if (samples.length >= 3) {
+      val s = samples.sorted
+      val n = s.length
+      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+    } else samples.min
+
+  /** [[TimedReps]] samples of `run` after one untimed warmup
+    * (codegen/JIT), for the modes that time one operator over a fixed
+    * corpus. Memos stay warm: the incremental mode times merges over a
+    * memoized pair checkpoint.
+    */
+  private def warmSamples(spark: SparkSession)(run: => Unit): Seq[Double] = {
+    run
+    Harness.timedReps(spark, TimedReps, keepMemo = true)(run)
+  }
+
   private def time(spark: SparkSession, name: String, dir: String)
       : (Double, String, Map[String, Int]) = {
-    def scrub(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // memoized closure/pair/train-artifact frames would make every
-      // rep after the warmup time only the downstream agg (the
-      // CLAUDE.md warm-memo trap) — isolation timing pays the full
-      // build each rep
-      graft.etl.Memos.clearAll()
-    }
-    def once(): Unit =
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
-    scrub(); once() // warmup rep: codegen/JIT, parquet footers
+    def once(): Unit = Harness.materialize(SparkEntry.queries(name)(spark, dir))
+    Harness.scrub(spark, keepMemo = false); once() // warmup rep: codegen/JIT, parquet footers
     graft.etl.Fixpoint.lastRounds.clear()
-    val samples = (1 to TimedReps).map { _ =>
-      scrub()
-      val t0 = System.nanoTime()
-      once()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // median at >= 3 reps (the evidence-row policy), min below it.
-    // TRUE median for even rep counts (ADVICE r16): the two middle
-    // samples average — sorted(n/2) alone is the upper-middle element
-    val secs =
-      if (TimedReps >= 3) {
-        val s = samples.sorted
-        if (TimedReps % 2 == 1) s(TimedReps / 2)
-        else (s(TimedReps / 2 - 1) + s(TimedReps / 2)) / 2
-      } else samples.min
+    val secs = central(Harness.timedReps(spark, TimedReps, keepMemo = false)(once()))
     // dynamic-fixpoint round counts recorded by the timed runs — the
     // round-growth evidence for the O(log diameter) claim
     import scala.jdk.CollectionConverters._
     val rounds = graft.etl.Fixpoint.lastRounds.asScala.toMap
-    scrub()
+    Harness.scrub(spark, keepMemo = false)
     (secs, planSig(SparkEntry.queries(name)(spark, dir)), rounds)
   }
 
@@ -396,20 +393,7 @@ object ScaleCheck {
     val base = "/root/testdata/sf0.1"
     val out = if (args.length > 0) args(0) else "/tmp/graft_scale10"
     val reps = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Fixpoint.reliably writes per-call checkpoint files; let the
-      // ContextCleaner delete them when the frames are GC'd so a
-      // long-lived session doesn't accumulate temp-dir state
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // gramprofile accepts EXTERNAL corpora (r9 verdict item 7): `pages`
     // treats args(0) as a graftpages store root instead of a
@@ -463,14 +447,8 @@ object ScaleCheck {
       // 100× tier's form, where the fixed bits=3 control is known-
       // quadratic (≈10⁴× the 1× within-cell pairs) and deliberately
       // not run; its quadratic-growth evidence is the 10× table
-      def t(dir: String, bits: Int): Double = {
-        def once(): Unit = GraphCuration.knnGraphEdges(spark, dir, bits)
-          .write.format("noop").mode("overwrite").save()
-        once()
-        (1 to TimedReps).map { _ =>
-          val t0 = System.nanoTime(); once(); (System.nanoTime() - t0) / 1e9
-        }.min
-      }
+      def t(dir: String, bits: Int): Double = warmSamples(spark)(
+        Harness.materialize(GraphCuration.knnGraphEdges(spark, dir, bits))).min
       val autoOnly = args.length > 3 && args(3) == "auto"
       // since round 10 the knob derives itself: AutoBits reads the
       // corpus count and picks ceil(log2(n/1000)) — record what it
@@ -487,14 +465,8 @@ object ScaleCheck {
         s""""$tag":{"t1":${fmt(t1)},"tR":${fmt(tR)},"ratio":${fmt(tR / t1)}}"""
       } :+ {
         // label_prop inherits the pair stage — time its adaptive path too
-        def lp(dir: String): Double = {
-          def once(): Unit = GraphCuration.labelProp(spark, dir, GraphCuration.AutoBits)
-            .write.format("noop").mode("overwrite").save()
-          once()
-          (1 to TimedReps).map { _ =>
-            val t0 = System.nanoTime(); once(); (System.nanoTime() - t0) / 1e9
-          }.min
-        }
+        def lp(dir: String): Double = warmSamples(spark)(Harness.materialize(
+          GraphCuration.labelProp(spark, dir, GraphCuration.AutoBits))).min
         val (l1, lR) = (lp(base), lp(out))
         println(f"[scale] label_prop auto($auto1->$autoR) 1x=${fmt(l1)}%6ss ${reps}x=${fmt(lR)}%6ss ratio=${fmt(lR / l1)}")
         s""""label_prop_auto":{"t1":${fmt(l1)},"tR":${fmt(lR)},"ratio":${fmt(lR / l1)}},"auto_bits":{"b1":$auto1,"bR":$autoR}"""
@@ -525,14 +497,8 @@ object ScaleCheck {
         sum(when(col("c") > thr, lit(1)).otherwise(lit(0))).as("hot_buckets"),
         sum(when(col("c") > thr, expr("(c * (c - 1)) div 2"))
           .otherwise(lit(0L))).as("hot_pair_mass")).collect().head
-      def t(thrOpt: Int): Double = {
-        def once(): Unit = Dedup.minhashLshFrom(docs, saltThreshold = thrOpt)
-          .write.format("noop").mode("overwrite").save()
-        once()
-        (1 to TimedReps).map { _ =>
-          val t0 = System.nanoTime(); once(); (System.nanoTime() - t0) / 1e9
-        }.min
-      }
+      def t(thrOpt: Int): Double = warmSamples(spark)(
+        Harness.materialize(Dedup.minhashLshFrom(docs, saltThreshold = thrOpt))).min
       val (tOff, tOn) = (t(Int.MaxValue), t(thr))
       println(f"[scale] saltcheck max_c=${prof.getLong(0)} hot=${prof.getLong(2)} off=${fmt(tOff)}s on=${fmt(tOn)}s")
       println(s"""{"metric":"salt_check","dir":"$out","threshold":$thr,"max_bucket":${prof.getLong(0)},"total_pair_mass":${prof.getLong(1)},"hot_buckets":${prof.getLong(2)},"hot_pair_mass":${prof.getLong(3)},"t_off":${fmt(tOff)},"t_on":${fmt(tOn)}}""")
@@ -577,7 +543,8 @@ object ScaleCheck {
     // Synthetic hot-key skew proof for the gram stage (round 19,
     // VERDICT r18 item 2; guide §2.5): plant ONE 8-gram in EVERY
     // document (append a fixed 8-word phrase to each doc of the
-    // replica corpus — the phrase gram is corpus-hot, the boundary
+    // replica corpus, null text read as empty so no doc is skipped —
+    // the phrase gram is corpus-hot, the boundary
     // grams stay doc-specific) and time substring_dedup + span_clip on
     // the uniform vs hot corpora. substring_dedup's distinct-doc count
     // rides a count window partitioned by gram — a window partition
@@ -594,7 +561,7 @@ object ScaleCheck {
           java.nio.file.Paths.get(s"$hotDir/documents.parquet"))) {
         println(s"[scale] generating hot-gram corpus at $hotDir ...")
         Tables(spark, out, "documents")
-          .withColumn("text", concat(col("text"), lit(phrase)))
+          .withColumn("text", concat(coalesce(col("text"), lit("")), lit(phrase)))
           .write.mode("overwrite").parquet(s"$hotDir/documents.parquet")
         Tables.names.filterNot(_ == "documents").foreach { t =>
           Tables(spark, out, t).write.mode("overwrite")
@@ -624,23 +591,12 @@ object ScaleCheck {
     //   ScaleCheck <dir> <reps> incremental
     if (args.length > 2 && args(2) == "incremental") {
       import graft.etl.{Dedup, Fixpoint, Memos}
-      def med(f: => Unit): Double = {
-        f // warmup rep: codegen/JIT
-        val s = (1 to TimedReps).map { _ =>
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }.sorted
-        if (TimedReps >= 3) {
-          if (TimedReps % 2 == 1) s(TimedReps / 2)
-          else (s(TimedReps / 2 - 1) + s(TimedReps / 2)) / 2
-        } else s.min
-      }
-      def noop(df: DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
+      def med(f: => Unit): Double = central(warmSamples(spark)(f))
       val results = Seq("base" -> base, "scaled" -> out).map { case (tag, dir) =>
         Memos.clearAll()
         val pairs = Dedup.minhashLsh(spark, dir) // memoized checkpoint scan
         val nPairs = pairs.count()
-        val tFull = med(noop(Dedup.dedupComponentsFrom(pairs)))
+        val tFull = med(Harness.materialize(Dedup.dedupComponentsFrom(pairs)))
         val mods = Seq(10, 100).map { m =>
           val priorPairs = pairs
             .filter(col("doc_a") % m =!= 0 && col("doc_b") % m =!= 0)
@@ -649,7 +605,7 @@ object ScaleCheck {
           val nDelta = deltaPairs.count()
           // the stored snapshot artifact: built once, NOT in the timing
           val prior = Dedup.dedupComponentsFrom(priorPairs)
-          val tMerge = med(noop(Dedup.mergeDeltaIntoClosure(prior, deltaPairs)))
+          val tMerge = med(Harness.materialize(Dedup.mergeDeltaIntoClosure(prior, deltaPairs)))
           val rounds = Fixpoint.lastRounds.getOrDefault("components_closure", 0)
           println(f"[scale] incremental $tag mod=$m pairs=$nPairs delta=$nDelta full=${fmt(tFull)}s merge=${fmt(tMerge)}s rounds=$rounds")
           s""""mod$m":{"n_delta_pairs":$nDelta,"t_merge":${fmt(tMerge)},"merge_rounds":$rounds}"""
@@ -663,22 +619,15 @@ object ScaleCheck {
 
     // accept any SparkEntry query name, not only the Heavy list — the
     // 100× tier names its family members explicitly on the CLI
-    val chosen =
-      if (args.length > 2) {
-        val (known, unknown) =
-          args.drop(2).toSeq.partition(SparkEntry.queries.contains)
-        if (unknown.nonEmpty)
-          println(s"[scale] skipping unknown queries: ${unknown.mkString(", ")}")
-        known
-      } else Heavy
+    val chosen = if (args.length > 2) args.drop(2).toSeq else Heavy
+    Harness.requireKnown(chosen)
     val rows = chosen.map { q =>
       val (t1, p1, r1) = time(spark, q, base)
       val (tR, pR, rR) = time(spark, q, out)
       val stable = p1 == pR
-      val roundsNote =
-        if (r1.isEmpty && rR.isEmpty) ""
-        else (r1.keySet ++ rR.keySet).toSeq.sorted.map(k =>
-          s"  rounds[$k]=${r1.getOrElse(k, 0)}->${rR.getOrElse(k, 0)}").mkString
+      val rounds = (r1.keySet ++ rR.keySet).toSeq.sorted
+        .map(k => (k, r1.getOrElse(k, 0), rR.getOrElse(k, 0)))
+      val roundsNote = rounds.map { case (k, a, b) => s"  rounds[$k]=$a->$b" }.mkString
       println(f"[scale] $q%-22s 1x=${fmt(t1)}%6ss  ${reps}x=${fmt(tR)}%6ss  ratio=${fmt(tR / t1)}%5s  planStable=$stable$roundsNote")
       if (!stable) {
         val (l1, lR) = (p1.linesIterator.toSeq, pR.linesIterator.toSeq)
@@ -686,13 +635,10 @@ object ScaleCheck {
         val onlyR = lR.diff(l1).distinct
         println(s"[scale]   plan diff: 1x-only=${only1.mkString(",")} ${reps}x-only=${onlyR.mkString(",")}")
       }
-      (q, t1, tR, stable, r1, rR)
+      (q, t1, tR, stable, rounds)
     }
-    val js = rows.map { case (q, t1, tR, st, r1, rR) =>
-      val rj =
-        if (r1.isEmpty && rR.isEmpty) ""
-        else (r1.keySet ++ rR.keySet).toSeq.sorted.map(k =>
-          s""","rounds_$k":[${r1.getOrElse(k, 0)},${rR.getOrElse(k, 0)}]""").mkString
+    val js = rows.map { case (q, t1, tR, st, rounds) =>
+      val rj = rounds.map { case (k, a, b) => s""","rounds_$k":[$a,$b]""" }.mkString
       s""""$q":{"t1":${fmt(t1)},"tR":${fmt(tR)},"ratio":${fmt(tR / t1)},"plan_stable":$st$rj}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scale_check","replicas":$reps,"queries":$js}""")

@@ -1,25 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner: exercises SparkEntry.entry (the driver's t1 check)
   * and prints row count + a sample. Optional arg = sf dir
   * (default /root/testdata/sf0.001, or SPARK_GRAFT_SF_DIR). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Fixpoint.reliably writes per-call checkpoint files; let the
-      // ContextCleaner delete them when the frames are GC'd so a
-      // long-lived session doesn't accumulate temp-dir state
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val df =
       if (args.nonEmpty) SparkEntry.entry(spark, args(0))
       else SparkEntry.entry(spark)

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 
 /** Streaming near-dup STATE measurement at scale (VERDICT r14 item 2):
   * replays a corpus dir through [[graft.streaming.StreamingOps]]'
@@ -37,22 +37,6 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamStateCheck {
   private val Cap = 64 // streamingNearDup's default maxPerBand
 
-  /** Scratch dirs (the components-mode pair dump + every stream
-    * checkpoint) are multi-GB at the 30×/100× tiers — remove them on
-    * exit (ADVICE r15) like TimeQuery's instrumented checkpoint dir, or
-    * repeated invocations fill /tmp.
-    */
-  private def tempDirRemovedOnExit(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(d.toFile)
-    }))
-    d.toString
-  }
-
   /** The streaming parquet source wants a DIRECTORY; driver-generated
     * sf dirs ship documents.parquet as a single file — stage a symlink.
     */
@@ -68,6 +52,30 @@ object StreamStateCheck {
     }
   }
 
+  /** Replay `dir`'s banded candidate pairs (dumped under `ckpt` as 12
+    * files, two per trigger) through the incremental union-find twin
+    * into memory table `table`: (pair frame, pair count, last
+    * progress, drain wall seconds).
+    */
+  private def replayComponents(spark: SparkSession, dir: String, ckpt: String,
+      table: String): (DataFrame, Long, StreamingQueryProgress, Double) = {
+    graft.etl.Dedup.minhashLsh(spark, dir)
+      .repartition(12).write.mode("overwrite").parquet(s"$ckpt/pairs")
+    val pairsDf = spark.read.parquet(s"$ckpt/pairs")
+    val stream = spark.readStream.schema(pairsDf.schema)
+      .option("maxFilesPerTrigger", 2).parquet(s"$ckpt/pairs")
+    val t0 = System.nanoTime()
+    val q = graft.streaming.StreamingOps.streamingComponents(stream)
+      .writeStream.format("memory").queryName(table)
+      .option("checkpointLocation", s"$ckpt/$table")
+      .start()
+    q.processAllAvailable()
+    val wall = (System.nanoTime() - t0) / 1e9
+    val progress = q.lastProgress
+    q.stop()
+    (pairsDf, pairsDf.count(), progress, wall)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: StreamStateCheck <dir> [ttlSeconds|components]")
@@ -81,16 +89,7 @@ object StreamStateCheck {
       s"usage: StreamStateCheck <dir> [ttlSeconds|components|funnel] — got '${args(1)}'")
     val ttlSecs =
       if (compMode || funnelMode) None else args.lift(1).map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val docsPath = s"$dir/documents.parquet"
 
     // components mode (round 15): replay the banded candidate-pair
@@ -102,27 +101,15 @@ object StreamStateCheck {
     // vs n_graph_docs is the number that says when that boundary is
     // hit and the batch closure on a compaction cadence takes over.
     if (compMode) {
-      import graft.etl.Dedup
-      val ckpt = tempDirRemovedOnExit("graft-streamcomp")
-      Dedup.minhashLsh(spark, dir)
-        .repartition(12).write.mode("overwrite").parquet(s"$ckpt/pairs")
-      val pairsDf = spark.read.parquet(s"$ckpt/pairs")
-      val nPairs = pairsDf.count()
-      val stream = spark.readStream.schema(pairsDf.schema)
-        .option("maxFilesPerTrigger", 2).parquet(s"$ckpt/pairs")
-      val q = graft.streaming.StreamingOps.streamingComponents(stream)
-        .writeStream.format("memory").queryName("comp_out")
-        .option("checkpointLocation", s"$ckpt/q")
-        .start()
-      q.processAllAvailable()
-      val so = q.lastProgress.stateOperators.head
+      val (pairsDf, nPairs, progress, _) = replayComponents(
+        spark, dir, Harness.tempDirRemovedOnExit("graft-streamcomp"), "comp_out")
+      val so = progress.stateOperators.head
       val (rows, bytes) = (so.numRowsTotal, so.memoryUsedBytes)
-      q.stop()
       // union-by-min makes roots non-increasing: final assignment =
       // min emitted component per doc (the twin's consumption contract)
       val streamed = spark.table("comp_out")
         .groupBy(col("doc_id")).agg(min(col("component")).as("sc"))
-      val truth = Dedup.dedupComponentsFrom(pairsDf)
+      val truth = graft.etl.Dedup.dedupComponentsFrom(pairsDf)
         .select(col("doc_id"), col("component").as("tc"))
       val mism = streamed.join(truth, Seq("doc_id"), "full")
         .filter(col("sc").isNull || col("tc").isNull || col("sc") =!= col("tc"))
@@ -141,7 +128,7 @@ object StreamStateCheck {
     // per-level histogram is the live funnel report itself.
     if (funnelMode) {
       import graft.etl.{CorpusPipeline, TextAnalysis}
-      val ckpt = tempDirRemovedOnExit("graft-streamfunnel")
+      val ckpt = Harness.tempDirRemovedOnExit("graft-streamfunnel")
       val docsDf = spark.read.parquet(docsPath)
         .select(col("doc_id"), col("text"))
       val gp = udf((t: String) => TextAnalysis.gopherPass(t))
@@ -187,24 +174,11 @@ object StreamStateCheck {
       // combined footprint is (survivor digests) + (pair-graph docs) —
       // each side scales with its own survivor/graph set, never the
       // corpus.
-      import graft.etl.Dedup
-      Dedup.minhashLsh(spark, dir)
-        .repartition(12).write.mode("overwrite").parquet(s"$ckpt/pairs")
-      val pairsDf = spark.read.parquet(s"$ckpt/pairs")
-      val nPairs = pairsDf.count()
-      val pstream = spark.readStream.schema(pairsDf.schema)
-        .option("maxFilesPerTrigger", 2).parquet(s"$ckpt/pairs")
-      val c0 = System.nanoTime()
-      val cq = graft.streaming.StreamingOps.streamingComponents(pstream)
-        .writeStream.format("memory").queryName("funnel_comp_out")
-        .option("checkpointLocation", s"$ckpt/cq")
-        .start()
-      cq.processAllAvailable()
-      val compWall = (System.nanoTime() - c0) / 1e9
-      val compBatches = cq.lastProgress.batchId + 1
-      val cso = cq.lastProgress.stateOperators.head
+      val (_, nPairs, cp, compWall) =
+        replayComponents(spark, dir, ckpt, "funnel_comp_out")
+      val compBatches = cp.batchId + 1
+      val cso = cp.stateOperators.head
       val (cRows, cBytes) = (cso.numRowsTotal, cso.memoryUsedBytes)
-      cq.stop()
       val assign = spark.table("funnel_comp_out")
         .groupBy(col("doc_id")).agg(min(col("component")).as("component"))
       val full = graft.streaming.StreamingOps.funnelCanonicalReconcile(
@@ -241,7 +215,7 @@ object StreamStateCheck {
     val hist = profile.map(r =>
       s""""c${r.getInt(0)}":${r.getLong(1)}""").mkString("{", ",", "}")
 
-    val ckpt = tempDirRemovedOnExit("graft-streamstate")
+    val ckpt = Harness.tempDirRemovedOnExit("graft-streamstate")
     val streamDir = stageStreamDir(docsPath, ckpt)
     val stream = spark.readStream
       .schema(spark.read.parquet(docsPath).schema)

@@ -1,28 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Repeat-timer for a single query: separates plan cost from JVM/JIT
-  * warmup and run-to-run noise. Usage: runMain graft.TimeQuery <sfDir> <query> [reps]
+  * warmup and run-to-run noise.
+  * Usage: runMain graft.TimeQuery <sfDir> <query[,query...]> [reps]
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    val dir = args(0); val name = args(1)
+    val dir = args(0)
+    val names = args(1).split(',').toSeq.map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Fixpoint.reliably writes per-call checkpoint files; let the
-      // ContextCleaner delete them when the frames are GC'd so a
-      // long-lived session doesn't accumulate temp-dir state
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.requireKnown(names)
+    val spark = GraftSession.local()
     // SPARK_GRAFT_CODEGEN_LOG=1: surface Janino compile events ("Code
     // generated in N ms") so a cold-rep spike can be attributed to (or
     // cleared of) generated-code compilation — the r9 verdict item 6
@@ -43,67 +31,27 @@ object TimeQuery {
     // file-release behavior at realistic scale (item 3).
     val ckptReport = sys.env.get("SPARK_GRAFT_CKPT_REPORT").contains("1")
     if (ckptReport) {
-      val d = java.nio.file.Files.createTempDirectory("graft-tq-ckpt")
-      // the final rep's memoized checkpoint files outlive the run
-      // (clears happen at rep START) — remove the dir on exit like
-      // Fixpoint's fallback dir, or repeated instrumented runs fill /tmp
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-        }
-        rm(d.toFile)
-      }))
-      spark.sparkContext.setCheckpointDir(d.toString)
+      spark.sparkContext.setCheckpointDir(Harness.tempDirRemovedOnExit("graft-tq-ckpt"))
       println(s"[timequery] checkpoint dir: ${spark.sparkContext.getCheckpointDir}")
     }
     var ckptPeak = 0L
-    // visitor-based walk: the ContextCleaner (cleanCheckpoints=true)
-    // deletes released rdd-N dirs CONCURRENTLY with this measurement —
-    // a raced-away file is skipped, never a crash mid-run
-    def ckptBytes(): Long =
-      try spark.sparkContext.getCheckpointDir.map { p =>
-        val root = java.nio.file.Paths.get(p.stripPrefix("file:"))
-        if (!java.nio.file.Files.exists(root)) 0L
-        else {
-          var sum = 0L
-          java.nio.file.Files.walkFileTree(root,
-            new java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
-              override def visitFile(f: java.nio.file.Path,
-                  a: java.nio.file.attribute.BasicFileAttributes)
-                  : java.nio.file.FileVisitResult = {
-                sum += a.size()
-                java.nio.file.FileVisitResult.CONTINUE
-              }
-              override def visitFileFailed(f: java.nio.file.Path,
-                  e: java.io.IOException): java.nio.file.FileVisitResult =
-                java.nio.file.FileVisitResult.CONTINUE
-            })
-          sum
-        }
-      }.getOrElse(0L)
-      catch { case scala.util.control.NonFatal(_) => 0L }
-    val names = name.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-    // fail fast on typos BEFORE the reps loop: a misspelled name used to
-    // surface as a NoSuchElementException mid-rep, after earlier queries
-    // in the list had already run and printed timings (ADVICE r13)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown queries: ${unknown.mkString(", ")} — " +
-        "names must match SparkEntry.queries keys")
+    // the ContextCleaner (cleanCheckpoints=true) deletes released rdd-N
+    // dirs CONCURRENTLY with this walk — a raced-away dir lists as null
+    // and a raced-away file has length 0, so it is skipped, never a
+    // crash mid-run
+    def ckptBytes(): Long = {
+      def size(f: java.io.File): Long =
+        Option(f.listFiles()).fold(f.length())(_.map(size).sum)
+      spark.sparkContext.getCheckpointDir
+        .fold(0L)(p => size(new java.io.File(p.stripPrefix("file:"))))
+    }
     val keepMemo = sys.env.get("SPARK_GRAFT_KEEP_MEMO").contains("1")
     for (i <- 1 to reps) {
       graft.etl.Memos.clearAll()
       var total = 0.0
       for (n <- names) {
-        // same scrub as Bench: SQL cache + RDD-level localCheckpoint blocks
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        if (!keepMemo) graft.etl.Memos.clearAll()
-        val t0 = System.nanoTime()
-        // noop sink, not count(): count lets Catalyst prune all columns and
-        // drop sorts, under-measuring map-only queries (see Bench.materialize).
-        SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save()
-        val s = (System.nanoTime() - t0) / 1e9
+        val s = Harness.timed(spark, keepMemo)(
+          Harness.materialize(SparkEntry.queries(n)(spark, dir)))
         total += s
         if (ckptReport) {
           val b = ckptBytes()

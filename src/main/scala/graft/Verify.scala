@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** JSON string escaping shared by the harness mains (Verify, Bench):
@@ -28,23 +27,8 @@ object Verify {
     // optional filter: dump only the named queries (fast iteration loop);
     // no names = the full driver-contract dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts has shipped as TIMESTAMP(NANOS) and as timestamp[us];
-      // this flag covers the nanos encoding (reads as BIGINT) and
-      // Tables.withNanosTs canonicalizes whichever one is on disk.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Fixpoint.reliably writes per-call checkpoint files; let the
-      // ContextCleaner delete them when the frames are GC'd so a
-      // long-lived session doesn't accumulate temp-dir state
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.requireKnown(only)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
@@ -56,13 +40,8 @@ object Verify {
         failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name FAILED: ${failures(name)}")
       }
-      finally {
-        // clearCache() empties only the SQL CacheManager; localCheckpoint()
-        // blocks (the fixpoint queries' lineage rule) persist at the RDD
-        // level and would accumulate across the 167-query loop otherwise.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      }
+      // nothing here is timed, so memo consumers may share one build
+      finally Harness.scrub(spark, keepMemo = true)
     }
     def q(s: String): String = JsonOut.quote(s)
     val json = SparkEntry.oracleSql

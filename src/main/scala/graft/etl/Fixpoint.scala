@@ -79,17 +79,8 @@ object Fixpoint {
   private val dirLock = new Object
 
   private def ensureCheckpointDir(spark: SparkSession): Unit = dirLock.synchronized {
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val d = java.nio.file.Files.createTempDirectory("graft-ckpt")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(p: java.io.File): Unit = {
-          Option(p.listFiles()).foreach(_.foreach(rm))
-          p.delete(); ()
-        }
-        rm(d.toFile)
-      }))
-      spark.sparkContext.setCheckpointDir(d.toString)
-    }
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(graft.Harness.tempDirRemovedOnExit("graft-ckpt"))
   }
 
   /** Compute `df` NOW, write it to a reliable checkpoint, and return a

@@ -195,7 +195,7 @@ object QualityTrain {
   }
 
   /** Lazy loop-body twin for plan evidence (VERDICT r18 item 5 — the
-    * DumpPlan planOnly view shows only the artifact scan): one round's
+    * PlanDump --plan-only view shows only the artifact scan): one round's
     * update frame over an UN-checkpointed warm start, exactly the tree
     * each checkpointed round executes.
     */

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.IntegerType
   * physical plan is Sort → WindowGroupLimit(partial) → exchange →
   * Sort → WindowGroupLimit(final) → Window: every input partition is
   * still fully sorted, O(n log n), before a single row is dropped
-  * (verify with Explain on topk_per_lang). This operator keeps a
+  * (verify with PlanDump on topk_per_lang). This operator keeps a
   * bounded k-row heap per group and never sorts beyond it — O(n log k)
   * with no Sort node at all, the same reason TakeOrderedAndProject
   * exists for the global-limit case. Reference semantics: T2/A5 top-N

@@ -15,15 +15,7 @@ import org.apache.spark.sql.SparkSession
 object DeadSessionMemoCheck {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    def sess(): SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val s1 = sess()
-    s1.sparkContext.setLogLevel("WARN")
+    val s1 = GraftSession.local(4)
     def ckptFileOf(f: org.apache.spark.sql.DataFrame, what: String) = {
       require(f.count() > 0, s"vacuous: empty $what frame")
       val ckpt = org.apache.spark.sql.graft.PlanBridge.checkpointFile(f)
@@ -43,8 +35,7 @@ object DeadSessionMemoCheck {
     SparkSession.clearDefaultSession()
     require(ckptFile.exists && ckptFileT.exists,
       "stop() itself deleted the files — the sweep has nothing to prove")
-    val s2 = sess()
-    s2.sparkContext.setLogLevel("WARN")
+    val s2 = GraftSession.local(4)
     // any memo lookup runs that memo's dead-session sweep first
     require(graft.etl.Dedup.componentsFrame(s2, dir).count() > 0)
     require(graft.etl.QualityTrain.trainArtifact(s2, dir).count() > 0)

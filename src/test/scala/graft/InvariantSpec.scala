@@ -558,9 +558,7 @@ class InvariantSpec extends AnyFunSuite with SparkTestBase {
       "ts_anomaly") // needs enough hours for a >3·MAD spike; 89 rows at sf0.01
     def scrubbed(q: String, d: String): Boolean = {
       val r = SparkEntry.queries(q)(spark, d).isEmpty
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.scrub(spark, keepMemo = true)
       r
     }
     val empty = SparkEntry.queries.keys.toSeq.sorted

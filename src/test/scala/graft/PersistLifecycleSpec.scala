@@ -24,11 +24,7 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
 
   // Other suites share this JVM's session; scrub once up front so any
   // residue the assertions see is attributable to THESE operators.
-  private def freshStart(): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-  }
+  private def freshStart(): Unit = Harness.scrub(spark, keepMemo = true)
 
   test("graph fixpoints compose without harness scrub: zero pinned RDDs " +
       "after each materialization") {
@@ -84,25 +80,9 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
       "files (round 16; ADVICE r14 stretch) — run in a child JVM, " +
       "since the stopped-context scenario cannot share this suite's " +
       "live context") {
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++
-      Seq("-Xmx4g", "-cp", cp, "graft.DeadSessionMemoCheck",
-        "/root/testdata/sf0.001")
-    val out = new StringBuilder
-    val code = scala.sys.process.Process(cmd)
-      .!(scala.sys.process.ProcessLogger(l => out.append(l).append('\n')))
-    assert(code == 0 && out.toString.contains("DEADSESSION_DELETED=true"),
-      s"child JVM exit $code:\n${out.toString.linesIterator.toSeq.takeRight(30).mkString("\n")}")
+    val (code, out) = ChildJvm.run("graft.DeadSessionMemoCheck", Seq(dir))
+    assert(code == 0 && out.contains("DEADSESSION_DELETED=true"),
+      s"child JVM exit $code:\n${ChildJvm.tail(out)}")
   }
 
   test("session memos refresh when the data under dir changes " +
@@ -147,10 +127,7 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
         graft.etl.Dedup.componentsFrame(spark, tmp))
     } finally {
       graft.etl.Dedup.clearComponentsMemo()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(new java.io.File(local))
+      Harness.deleteRecursively(new java.io.File(local))
     }
   }
 

@@ -29,29 +29,34 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     * for the eager graph fixpoints, whose interesting plans (per-round
     * joins, checkpoint materializations) run INSIDE the operator and
     * are invisible in the returned frame's single checkpoint-scan leaf.
-    * A QueryExecutionListener records each action's executed plan (the
-    * per-round `checkpoint` actions included); delivery is async, so we
-    * drain the bus before unregistering.
     */
-  private def executedPlans(name: String): Seq[String] = {
+  private def executedPlans(name: String): Seq[String] =
+    executedQes(SparkEntry.queries(name)(spark, dir))
+      .map(_.explainString(FormattedMode))
+
+  /** Materialize `df` and return every QueryExecution it ran. A
+    * QueryExecutionListener records each action (the per-round
+    * `checkpoint` actions included); delivery is async, so we drain the
+    * bus before unregistering.
+    */
+  private def executedQes(df: => DataFrame)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val l = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        plans.add(qe.explainString(FormattedMode))
+          durationNs: Long): Unit = qes.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
     try {
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+      Harness.materialize(df)
       org.apache.spark.graft.TestBusBridge.waitUntilEmpty(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
+    qes.asScala.toSeq
   }
 
   /** Single-partition exchanges that funnel real data through one task.
@@ -99,29 +104,15 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
 
   private def funnelRecordCountsOf(df: => org.apache.spark.sql.DataFrame)
       : Seq[(String, Long)] = {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = qes.add(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      df.write.format("noop").mode("overwrite").save()
-      org.apache.spark.graft.TestBusBridge.waitUntilEmpty(spark.sparkContext)
-    } finally spark.listenerManager.unregister(l)
     def flatten(p: SparkPlan): Seq[SparkPlan] = (p match {
       case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
       case q: QueryStageExec => flatten(q.plan)
       case o => o.children.flatMap(flatten)
     }) :+ p
-    import scala.jdk.CollectionConverters._
-    qes.asScala.toSeq.flatMap(qe => flatten(qe.executedPlan)).collect {
+    executedQes(df).flatMap(qe => flatten(qe.executedPlan)).collect {
       case e: ShuffleExchangeExec if e.outputPartitioning ==
           org.apache.spark.sql.catalyst.plans.physical.SinglePartition =>
         // a missing metric must read as unbounded, never as tolerated

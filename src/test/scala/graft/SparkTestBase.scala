@@ -1,29 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.GraftExtensions
 
 /** One shared local session for the whole forked test JVM. */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[2]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Fixpoint.reliably writes per-call checkpoint files; let the
-      // ContextCleaner delete them when the frames are GC'd so a
-      // long-lived session doesn't accumulate temp-dir state
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(2, Seq(
+    "spark.app.name" -> "graft-tests",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh_").toString))
 }
 
 trait SparkTestBase {

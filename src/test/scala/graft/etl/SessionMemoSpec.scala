@@ -69,10 +69,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestBase {
       assert(resolved.count() == 6L)
     } finally {
       memo.clearAndRelease()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(new java.io.File(tmp))
+      graft.Harness.deleteRecursively(new java.io.File(tmp))
     }
   }
 }
