@@ -321,31 +321,30 @@ object CorpusStats {
         .orderBy(col("n").desc, col("pair")).limit(1)
         .select(lit(round).as("round"), col("pair"), col("n"))
     }
-    // wf rounds are locals (released below); the returned picks go to
-    // reliable checkpoints — callers read them lazily, and nothing may
-    // stay pinned after this returns (round-10 lifecycle rule)
-    val bpeLocals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // wf rounds are scope locals; the returned picks go to reliable
+    // checkpoints — callers read them lazily, and nothing may stay
+    // pinned after this returns (round-10 lifecycle rule)
     val roundSecs = Vector.newBuilder[Double]
-    try {
-      var wf = Fixpoint.locally(Shingles.words(
+    Fixpoint.scoped { scope =>
+      var wf = scope.local(Shingles.words(
           Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-        .groupBy(col("word")).agg(count(lit(1)).as("freq")), bpeLocals)
+        .groupBy(col("word")).agg(count(lit(1)).as("freq")))
       var picks = Vector.empty[DataFrame]
       for (r <- 1 to rank) {
         val t0 = System.nanoTime()
         val top = Fixpoint.reliably(topPair(wf, r))
         picks :+= top
         // sentinel-free words are injective under replace: no re-group
-        wf = Fixpoint.locally(
+        wf = scope.local(
           wf.crossJoin(broadcast(top.select(col("pair").as("mp"))))
             .select(replace(col("word"), col("mp"),
-              lit(sent(r - 1))).as("word"), col("freq")), bpeLocals)
+              lit(sent(r - 1))).as("word"), col("freq")))
         roundSecs += (System.nanoTime() - t0) / 1e9
       }
       Fixpoint.lastRounds.put("bpe_merges", rank)
       lastBpeRoundSecs = roundSecs.result()
       picks
-    } finally Fixpoint.releaseAll(bpeLocals)
+    }
   }
 
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
@@ -544,28 +543,26 @@ object CorpusStats {
     * need a vocab-wide total order); the band agg has ≤ ~40 groups
     * with map-side partials, the 1-row total broadcasts.
     */
-  def zipfBands(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+  def zipfBands(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
       val wc = Shingles.words(
           Tables.documents(spark, dir).select(col("doc_id"), col("text")))
         .groupBy(col("word")).agg(count(lit(1)).as("c"))
       // staged once: the ≤~40-row band frame feeds BOTH the total and
       // the share join — without the checkpoint each branch re-nests
       // the corpus scan (the survival_hazard lesson)
-      val bands = Fixpoint.locally(wc
+      val bands = scope.local(wc
         .withColumn("band", (length(bin(col("c"))) - 1).cast("int"))
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n_words"), sum(col("c")).as("mass"),
-          min(col("c")).as("f_min"), max(col("c")).as("f_max")), locals)
+          min(col("c")).as("f_min"), max(col("c")).as("f_max")))
       val total = bands.agg(sum(col("mass")).as("total_mass"))
       Fixpoint.reliably(bands.crossJoin(broadcast(total))
         .withColumn("mass_bp", expr("(10000 * mass) div total_mass"))
         .select(col("band"), col("n_words"), col("mass"), col("f_min"),
           col("f_max"), col("mass_bp"))
         .orderBy("band"))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** Sketch REAGGREGATION audit — the property that makes a sketch
     * tier worth deploying at 100 TB: per-slice sketches union into the
@@ -587,15 +584,14 @@ object CorpusStats {
     */
   def hllUnion(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HllSketchFunctions.{hllEstimate, hllSketch}
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    Fixpoint.scoped { scope =>
       // lang is coalesced to 'und' on BOTH sides (here and the oracle's
       // coalesce(lang,'und')): Spark's groupBy includes a NULL-lang group
       // while SQL count(DISTINCT lang) skips NULLs — a latent off-by-one
       // in n_langs if the corpus ever carries a null lang (r12 ADVICE).
-      val words = Fixpoint.locally(Tables.documents(spark, dir)
+      val words = scope.local(Tables.documents(spark, dir)
         .select(coalesce(col("lang"), lit("und")).as("lang"),
-          explode(Shingles.wordArray(col("text"))).as("word")), locals)
+          explode(Shingles.wordArray(col("text"))).as("word")))
       val byLang = words.groupBy(col("lang"))
         .agg(hllSketch(col("word")).as("regs"))
       val merged = byLang
@@ -615,7 +611,7 @@ object CorpusStats {
           expr("abs(__est - exact_words) * 10000 <= 1000 * exact_words"))
         .select(col("n_langs"), col("exact_words"), col("union_eq_direct"),
           col("approx_ok")))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Cross-corpus distinct-overlap audit through the native KMV
@@ -644,15 +640,14 @@ object CorpusStats {
     */
   def kmvOverlap(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.KmvSketchFunctions.{kmvCommon, kmvEstimate, kmvSketch}
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val lw = Fixpoint.locally(Tables.documents(spark, dir)
+    Fixpoint.scoped { scope =>
+      val lw = scope.local(Tables.documents(spark, dir)
         .select(col("lang"),
           explode(Shingles.wordArray(col("text"))).as("word"))
-        .distinct(), locals)
-      val byLang = Fixpoint.locally(lw.groupBy(col("lang"))
+        .distinct())
+      val byLang = scope.local(lw.groupBy(col("lang"))
         .agg(kmvSketch(col("word")).as("sk"),
-          count(lit(1)).as("exact_n")), locals)
+          count(lit(1)).as("exact_n")))
       val pairsExact = lw.as("a")
         .join(lw.as("b"),
           col("a.word") === col("b.word") && col("a.lang") < col("b.lang"))
@@ -678,7 +673,7 @@ object CorpusStats {
           col("exact_b"), col("exact_common"), col("card_ok"),
           col("common_ok"))
         .orderBy("lang_a", "lang_b"))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Cross-SNAPSHOT vocabulary novelty through the full KMV set
@@ -717,15 +712,14 @@ object CorpusStats {
     */
   def kmvNovelty(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.KmvSketchFunctions.{kmvDiff, kmvMerge, kmvSketch, kmvUnion}
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    Fixpoint.scoped { scope =>
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val mid = docs.agg(expr("max(doc_id) div 2").as("mid"))
-      val sw = Fixpoint.locally(docs.crossJoin(broadcast(mid))
+      val sw = scope.local(docs.crossJoin(broadcast(mid))
         .select(when(col("doc_id") <= col("mid"), lit("a")).otherwise(lit("b"))
           .as("snap"),
           explode(Shingles.wordArray(col("text"))).as("word"))
-        .distinct(), locals)
+        .distinct())
       val bySnap = sw.groupBy(col("snap"))
         .agg(kmvSketch(col("word")).as("sk"), count(lit(1)).as("n"))
       // ONE conditional aggregation pivots the ≤2 snapshot rows onto a
@@ -758,7 +752,7 @@ object CorpusStats {
         .select(col("exact_a"), col("exact_b"), col("exact_union"),
           col("exact_new"), col("merge_eq_direct"), col("union_ok"),
           col("new_ok")))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Per-language document-length QUANTILES through the native q-digest
@@ -793,19 +787,16 @@ object CorpusStats {
     */
   def quantileDigest(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.QdigestSketchFunctions.{qdigestMerge, qdigestQuantile, qdigestSketch}
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val lens = Fixpoint.locally(Tables.documents(spark, dir)
+    Fixpoint.scoped { scope =>
+      val lens = scope.local(Tables.documents(spark, dir)
         .select(coalesce(col("lang"), lit("und")).as("lang"), col("source"),
-          expr("least(greatest(n_chars, 0), 65535)").cast("bigint").as("len")),
-        locals)
+          expr("least(greatest(n_chars, 0), 65535)").cast("bigint").as("len")))
       // sk is read by the exact-rank join AND the estimate projection;
       // est by the rank recount AND the final join — both are
       // lang-domain-bounded, so stage them (the bounded-frame rule:
       // each extra branch otherwise re-nests the digest aggregation)
-      val sk = Fixpoint.locally(lens.groupBy(col("lang"))
-        .agg(qdigestSketch(col("len")).as("sk"), count(lit(1)).as("n")),
-        locals)
+      val sk = scope.local(lens.groupBy(col("lang"))
+        .agg(qdigestSketch(col("len")).as("sk"), count(lit(1)).as("n")))
       // exact per-lang quantiles: value-histogram + cumulative ranks
       val hist = lens.groupBy(col("lang"), col("len")).agg(count(lit(1)).as("c"))
       val cum = hist.withColumn("cum",
@@ -823,12 +814,12 @@ object CorpusStats {
         .select(col("lang"),
           aggregate(col("sks"), lit(Array.empty[Long]),
             (acc, x) => qdigestMerge(acc, x)).as("msk"))
-      val est = Fixpoint.locally(sk.join(broadcast(merged), Seq("lang"))
+      val est = scope.local(sk.join(broadcast(merged), Seq("lang"))
         .select(col("lang"), col("n"),
           qdigestQuantile(col("sk"), lit(5000)).as("e50"),
           qdigestQuantile(col("sk"), lit(9000)).as("e90"),
           qdigestQuantile(col("sk"), lit(9900)).as("e99"),
-          qdigestQuantile(col("msk"), lit(5000)).as("m50")), locals)
+          qdigestQuantile(col("msk"), lit(5000)).as("m50")))
       // true ranks of the estimates (strict and inclusive counts)
       def lt(e: String) = sum(when(col("len") < col(e), 1L).otherwise(0L))
       def le(e: String) = sum(when(col("len") <= col(e), 1L).otherwise(0L))
@@ -849,7 +840,7 @@ object CorpusStats {
           ok(9900, "lt99", "le99").as("ok99"),
           ok(5000, "ltm", "lem").as("merge_ok"))
         .orderBy("lang"))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** TOKEN-MASS-weighted length quantiles through the weighted q-digest
@@ -868,16 +859,14 @@ object CorpusStats {
     */
   def quantileWeighted(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.QdigestSketchFunctions.{qdigestQuantile, qdigestSketchWeighted}
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val d = Fixpoint.locally(Tables.documents(spark, dir)
+    Fixpoint.scoped { scope =>
+      val d = scope.local(Tables.documents(spark, dir)
         .select(coalesce(col("lang"), lit("und")).as("lang"),
           expr("least(greatest(n_chars, 0), 65535)").cast("bigint").as("len"),
-          size(Shingles.wordArray(col("text"))).cast("bigint").as("wt")),
-        locals)
-      val sk = Fixpoint.locally(d.groupBy(col("lang"))
+          size(Shingles.wordArray(col("text"))).cast("bigint").as("wt")))
+      val sk = scope.local(d.groupBy(col("lang"))
         .agg(qdigestSketchWeighted(col("len"), col("wt")).as("sk"),
-          sum(col("wt")).as("w_total")), locals)
+          sum(col("wt")).as("w_total")))
       val hist = d.groupBy(col("lang"), col("len")).agg(sum(col("wt")).as("c"))
       val cum = hist.withColumn("cum",
         sum(col("c")).over(Window.partitionBy(col("lang")).orderBy(col("len"))))
@@ -887,9 +876,9 @@ object CorpusStats {
         .groupBy(col("lang"))
         .agg(min(when(col("cum") >= tgt(5000), col("len"))).as("p50w"),
           min(when(col("cum") >= tgt(9000), col("len"))).as("p90w"))
-      val est = Fixpoint.locally(sk.select(col("lang"), col("w_total"),
+      val est = scope.local(sk.select(col("lang"), col("w_total"),
         qdigestQuantile(col("sk"), lit(5000)).as("e50"),
-        qdigestQuantile(col("sk"), lit(9000)).as("e90")), locals)
+        qdigestQuantile(col("sk"), lit(9000)).as("e90")))
       val ranks = d.join(broadcast(est), Seq("lang"))
         .groupBy(col("lang"))
         .agg(sum(when(col("len") < col("e50"), col("wt")).otherwise(0L)).as("lt50"),
@@ -905,19 +894,18 @@ object CorpusStats {
           ok(5000, "lt50", "le50").as("ok50w"),
           ok(9000, "lt90", "le90").as("ok90w"))
         .orderBy("lang"))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
-  def cmsFrequency(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+  def cmsFrequency(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
       val wc = Shingles.words(
           Tables.documents(spark, dir).select(col("doc_id"), col("text")))
         .groupBy(col("word")).agg(count(lit(1)).as("c"))
-      val wb = Fixpoint.locally(wc.select(col("word"), col("c"),
+      val wb = scope.local(wc.select(col("word"), col("c"),
           explode(cmsBuckets).as("rb"))
         .select(col("word"), col("c"),
-          col("rb.rw").as("rw"), col("rb.bucket").as("bucket")), locals)
+          col("rb.rw").as("rw"), col("rb.bucket").as("bucket")))
       val cells = wb.groupBy(col("rw"), col("bucket"))
         .agg(sum(col("c")).as("cell"))
       Fixpoint.reliably(wb.join(broadcast(cells), Seq("rw", "bucket"))
@@ -927,8 +915,7 @@ object CorpusStats {
         .select(col("word"), col("exact"), col("est_cms"), col("over_count"))
         .orderBy(col("exact").desc, col("word").asc)
         .limit(20))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** The Count-Min audit of [[cmsFrequency]] rebuilt through the NATIVE
     * sketch aggregate ([[graft.functions.CmsSketchAgg]], a
@@ -945,8 +932,7 @@ object CorpusStats {
     */
   def cmsNative(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.CmsSketchFunctions.cmsSketch
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    Fixpoint.scoped { scope =>
       val words = Shingles.words(
           Tables.documents(spark, dir).select(col("doc_id"), col("text")))
         .select(col("word"))
@@ -955,11 +941,11 @@ object CorpusStats {
         .select((expr("pos div 256") + 1).as("rw"),
           (col("pos") % 256).cast("bigint").as("bucket"),
           col("col").as("cell"))
-      val wb = Fixpoint.locally(words.groupBy(col("word"))
+      val wb = scope.local(words.groupBy(col("word"))
         .agg(count(lit(1)).as("c"))
         .select(col("word"), col("c"), explode(cmsBuckets).as("rb"))
         .select(col("word"), col("c"),
-          col("rb.rw").as("rw"), col("rb.bucket").as("bucket")), locals)
+          col("rb.rw").as("rw"), col("rb.bucket").as("bucket")))
       Fixpoint.reliably(wb.join(broadcast(cells), Seq("rw", "bucket"))
         .groupBy(col("word"))
         .agg(max(col("c")).as("exact"), min(col("cell")).as("est_cms"))
@@ -967,7 +953,7 @@ object CorpusStats {
         .select(col("word"), col("exact"), col("est_cms"), col("over_count"))
         .orderBy(col("exact").desc, col("word").asc)
         .limit(20))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Equi-join CARDINALITY estimation from two Count-Min sketches —
@@ -1257,16 +1243,14 @@ object CorpusStats {
     // far smaller distinct-pair frame, and the output values are
     // unchanged (position counts = Σ multiplicities). Measured
     // isolated at sf0.1: 5.3-5.5 s → see BASELINE.md round 17.
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    Fixpoint.scoped { scope =>
       val grams = Shingles.wordShingles(
           Tables.documents(spark, dir).select(col("doc_id"), col("text")), 8)
         .select(col("doc_id"),
           conv(substring(md5(col("shingle")), 1, 15), 16, 10)
             .cast("bigint").as("g"))
-      val gd = Fixpoint.locally(
-        grams.groupBy(col("g"), col("doc_id")).agg(count(lit(1)).as("c")),
-        locals)
+      val gd = scope.local(
+        grams.groupBy(col("g"), col("doc_id")).agg(count(lit(1)).as("c")))
       val firstOwner = gd.groupBy(col("g"))
         .agg(min(col("doc_id")).as("first_doc"))
         .withColumnRenamed("g", "fg")
@@ -1280,7 +1264,7 @@ object CorpusStats {
         .withColumn("novel_bp", expr("(10000 * n_novel) div n_grams"))
         .select(col("doc_id"), col("n_grams"), col("n_novel"), col("novel_bp"))
         .orderBy("doc_id"))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Deterministic stratified sampling: a fixed 100-doc budget

@@ -19,7 +19,7 @@ import graft.Tables
   *
   * Scale posture: frontier and visited stay distributed (anti-join, not
   * a driver-side set); per-level results are eagerly materialized to
-  * FAST local checkpoints ([[Fixpoint.locally]], round 19 — the old
+  * FAST local checkpoints ([[Fixpoint.Scope.local]], round 19 — the old
   * per-level reliable checkpoint paid a disk write+read round trip per
   * level) with only the final result on reliable storage, and every
   * pinned block is released before the operator returns (composing two
@@ -44,10 +44,9 @@ object Crawl {
   }
 
   /** BFS from node 0: returns (node, depth of first visit). */
-  def crawlBfs(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).persist()
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+  def crawlBfs(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      val e = scope.persist(edges(spark, dir))
       var visited = spark.range(1)
         .select(lit(0L).as("node"), lit(0).as("depth"))
       var frontier = visited.select(col("node"))
@@ -57,24 +56,20 @@ object Crawl {
         // per-level reliable checkpoint paid a disk write+read round
         // trip per level for state only the final result reads; only
         // the result itself goes to reliable storage below.
-        val next = Fixpoint.locally(e
+        val next = scope.local(e
           .join(broadcast(frontier.withColumnRenamed("node", "src")), Seq("src"))
           .select(col("dst").as("node"))
           .distinct()
           .filter(col("node") % 11 >= RelevanceThreshold) // F8 prune
           .join(visited, Seq("node"), "left_anti")        // J1 dedup
-          .select(col("node"), lit(d).as("depth")), locals)
+          .select(col("node"), lit(d).as("depth")))
         visited = visited.unionByName(next)
         frontier = next.select(col("node"))
       }
       // materialize the union while the level locals are alive — the
       // returned frame reads only the reliable checkpoint
       Fixpoint.reliably(visited.orderBy("node"))
-    } finally {
-      e.unpersist(blocking = false)
-      Fixpoint.releaseAll(locals)
     }
-  }
 
   /** Priority-frontier crawl (the reference's actual loop, T1+X3+J1+U1:
     * queue of discovered links, pop best-priority, expand, repeat under
@@ -87,10 +82,9 @@ object Crawl {
     * Urls.priority); deterministic dedup takes max priority over parents.
     */
   def crawlPriority(spark: SparkSession, dir: String,
-      rounds: Int = 3, popPerRound: Int = 5): DataFrame = {
-    val e = edges(spark, dir).persist()
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+      rounds: Int = 3, popPerRound: Int = 5): DataFrame =
+    Fixpoint.scoped { scope =>
+      val e = scope.persist(edges(spark, dir))
       var visited = spark.range(1)
         .select(lit(0L).as("node"), lit(0).as("round"),
           lit(0L).as("priority"))
@@ -106,19 +100,14 @@ object Crawl {
             col("dst") === col("node"), "left_anti")
         // fast local per-round pops, reliable final — crawlBfs's
         // round-19 lifecycle
-        val selected = Fixpoint.locally(cand
+        val selected = scope.local(cand
           .orderBy(col("priority").desc, col("dst").asc)
           .limit(popPerRound)
-          .select(col("dst").as("node"), lit(r).as("round"), col("priority")),
-          locals)
+          .select(col("dst").as("node"), lit(r).as("round"), col("priority")))
         visited = visited.unionByName(selected)
       }
       Fixpoint.reliably(visited.orderBy("node"))
-    } finally {
-      e.unpersist(blocking = false)
-      Fixpoint.releaseAll(locals)
     }
-  }
 
   /** Link-graph PageRank, 3 damped power iterations — the classic
     * crawl-frontier / corpus-curation quality signal (what CommonCrawl-
@@ -179,15 +168,14 @@ object Crawl {
       .orderBy(col("n_triangles").desc, col("node"))
   }
 
-  def pagerankIter(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    // e stays persisted across the two staging jobs (nodes, eDeg) —
-    // its orders-scan + distinct would otherwise run twice; released
-    // in the finally once the result is on reliable storage
-    val e = edges(spark, dir).persist()
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val nodes = Fixpoint.locally(e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(), locals)
+  def pagerankIter(spark: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    Fixpoint.scoped { scope =>
+      // e stays persisted across the two staging jobs (nodes, eDeg) —
+      // its orders-scan + distinct would otherwise run twice; released
+      // when the scope exits, once the result is on reliable storage
+      val e = scope.persist(edges(spark, dir))
+      val nodes = scope.local(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
       // round 19 (guide §2.4: remove shuffles from the round body): the
       // out-degree joins onto the edge list ONCE, outside the loop — the
       // old round body recomputed deg from a fresh edge scan and
@@ -195,9 +183,9 @@ object Crawl {
       // builds in the unrolled plan). Join reorder only ((e⋈mass)⋈deg →
       // (e⋈deg)⋈mass — inner equi-joins, identical rows), so pr_ppm is
       // bit-identical.
-      val eDeg = Fixpoint.locally(
+      val eDeg = scope.local(
         e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-          Seq("src")), locals)
+          Seq("src")))
       var mass = nodes.withColumn("pr_ppm", lit(1000000L))
       for (_ <- 1 to iters) {
         val contrib = eDeg
@@ -210,11 +198,7 @@ object Crawl {
       }
       // materialize the result while the locals are alive, then release
       Fixpoint.reliably(mass.orderBy("node"))
-    } finally {
-      e.unpersist(blocking = false)
-      Fixpoint.releaseAll(locals)
     }
-  }
 
   /** PERSONALIZED PageRank from seed node 0 — the locality-aware twin
     * of [[pagerankIter]]: all restart mass returns to the seed
@@ -229,26 +213,25 @@ object Crawl {
     * seed's neighborhood, and at 100 TB the frontier only carries
     * nonzero rows).
     */
-  def pprSeed(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    // UNROLL GUARD: at the default 3-round unroll the nested analyzed
-    // plan is fine (the oracle unrolls identically), but Catalyst
-    // re-optimizes the whole nested tree each round — raising `iters`
-    // past ~4 REQUIRES ending each round in `Fixpoint.reliably(mass)`
-    // (NOT persist(): persist truncates recomputation, not the
-    // analyzed tree — the dedup_components 43s→3s lesson, CLAUDE.md).
-    // Persist lifecycle: the result is materialized inside the
-    // operator and e is released before returning — nothing stays
-    // pinned, no harness scrub needed (r9 verdict item 2).
-    val e = edges(spark, dir).persist() // see pagerankIter's persist note
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val nodes = Fixpoint.locally(e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(), locals)
+  def pprSeed(spark: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    Fixpoint.scoped { scope =>
+      // UNROLL GUARD: at the default 3-round unroll the nested analyzed
+      // plan is fine (the oracle unrolls identically), but Catalyst
+      // re-optimizes the whole nested tree each round — raising `iters`
+      // past ~4 REQUIRES ending each round in `Fixpoint.reliably(mass)`
+      // (NOT persist(): persist truncates recomputation, not the
+      // analyzed tree — the dedup_components 43s→3s lesson).
+      // Persist lifecycle: the result is materialized inside the
+      // operator and e is released before returning — nothing stays
+      // pinned, no harness scrub needed (r9 verdict item 2).
+      val e = scope.persist(edges(spark, dir)) // see pagerankIter's persist note
+      val nodes = scope.local(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
       // degree fused onto the edge list once — see [[pagerankIter]]'s
       // round-19 note (same join reorder, bit-identical mass)
-      val eDeg = Fixpoint.locally(
+      val eDeg = scope.local(
         e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-          Seq("src")), locals)
+          Seq("src")))
       val restart = when(col("node") === 0L, 150000L).otherwise(0L)
       var mass = nodes.withColumn("pr_ppm",
         when(col("node") === 0L, 1000000L).otherwise(0L))
@@ -262,11 +245,7 @@ object Crawl {
             (restart + expr("(85 * coalesce(inbound, 0)) div 100")).as("pr_ppm"))
       }
       Fixpoint.reliably(mass.filter(col("pr_ppm") > 0).orderBy("node"))
-    } finally {
-      e.unpersist(blocking = false)
-      Fixpoint.releaseAll(locals)
     }
-  }
 
   /** Out-degree distribution in power-of-two buckets — the power-law
     * audit run before trusting degree-dependent designs (the
@@ -291,25 +270,24 @@ object Crawl {
     * node-keyed agg + a 1-row max broadcast; two rounds unrolled
     * (fixpoint checkpoint rule applies past ~4).
     */
-  def hitsScores(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).filter(col("src") =!= col("dst")).persist()
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+  def hitsScores(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      val e = scope.persist(edges(spark, dir).filter(col("src") =!= col("dst")))
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
 
       // the agg frame feeds both the max and the rescale, and each round
       // feeds the next — the eager per-half-round materialization stops
       // the plan doubling (fixpoint rule). Intermediates use the FAST
-      // local checkpoint (released in the finally once the final result
+      // local checkpoint (released at scope exit, once the final result
       // is on reliable storage); only the result itself is reliable.
-      // Round 19 MEASURED the no-checkpoint variant (drop the locally,
+      // Round 19 MEASURED the no-checkpoint variant (drop the local,
       // rely on ReuseExchange like the r18 tfidf rejection): 4.2 →
       // 25.9 s at sf0.1 — here each half-round feeds the NEXT one, so
       // the un-truncated tree COMPOUNDS ×2 per half-round and the
       // replays are real, not notional. The staging stays.
       def norm(df: DataFrame, c: String): DataFrame = {
-        val d = Fixpoint.locally(df, locals)
+        val d = scope.local(df)
         val m = d.agg(greatest(max(col(c)), lit(1L)).as("m"))
         d.crossJoin(broadcast(m))
           .select(col("node"), expr(s"(1000 * $c) div m").as(c))
@@ -324,18 +302,14 @@ object Crawl {
           .groupBy(col("src").as("node")).agg(sum(col("a")).as("h")), "h")
       }
       // final join still reads `nodes` (lazy over e) and the half-round
-      // locals — materialize it before the finally releases them
+      // locals — materialize it before the scope exit releases them
       Fixpoint.reliably(nodes
         .join(auth, Seq("node"), "left")
         .join(hub, Seq("node"), "left")
         .select(col("node"), coalesce(col("a"), lit(0L)).as("auth_1000"),
           coalesce(col("h"), lit(0L)).as("hub_1000"))
         .orderBy("node"))
-    } finally {
-      e.unpersist(blocking = false)
-      Fixpoint.releaseAll(locals)
     }
-  }
 
   def degreeDistribution(spark: SparkSession, dir: String): DataFrame = {
     val deg = edges(spark, dir).groupBy(col("src"))
@@ -369,22 +343,21 @@ object Crawl {
     * the visited set, frontier persisted per level (bounded lineage);
     * the node-universe total is a 1-row broadcast. Output = 4 rows.
     */
-  def bfsLayers(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).filter(col("src") =!= col("dst")).persist()
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val nodes = Fixpoint.locally(e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(), locals)
+  def bfsLayers(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      val e = scope.persist(edges(spark, dir).filter(col("src") =!= col("dst")))
+      val nodes = scope.local(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
       val nTotal = nodes.count()
-      var visited = Fixpoint.locally(nodes.filter(col("node") < 8)
-        .select(col("node"), lit(0).as("level")), locals)
+      var visited = scope.local(nodes.filter(col("node") < 8)
+        .select(col("node"), lit(0).as("level")))
       var frontier = visited.select(col("node"))
       for (lvl <- 1 to 3) {
-        val next = Fixpoint.locally(e
+        val next = scope.local(e
           .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node")).distinct()
           .join(visited, Seq("node"), "left_anti")
-          .select(col("node"), lit(lvl).as("level")), locals)
+          .select(col("node"), lit(lvl).as("level")))
         visited = visited.unionByName(next)
         frontier = next.select(col("node"))
       }
@@ -399,11 +372,7 @@ object Crawl {
         .withColumn("reach_bp", expr(s"(10000 * n_cum) div ${nTotal}L"))
         .select(col("level"), col("n_new"), col("n_cum"), col("reach_bp"))
         .orderBy("level")
-    } finally {
-      e.unpersist(blocking = false)
-      Fixpoint.releaseAll(locals)
     }
-  }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of
     * endpoint degrees over the undirected edge multiset (each edge in

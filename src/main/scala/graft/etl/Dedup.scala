@@ -256,13 +256,12 @@ object Dedup {
     // banded table: fast local checkpoint read by both self-join sides;
     // the (small) pair OUTPUT goes to reliable storage, after which the
     // band blocks are released — zero pins, memory-speed staging
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val banded0 =
       sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
         .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey"))
-    try {
+    Fixpoint.scoped { scope =>
       if (saltThreshold == Int.MaxValue) {
-        val banded = Fixpoint.locally(banded0, locals)
+        val banded = scope.local(banded0)
         // round 19: the checkpointed pair frame is UNSORTED — the build
         // paid a full range exchange + sort for an order only the
         // declared minhash_lsh query surface needs ([[minhashLsh]] adds
@@ -276,18 +275,18 @@ object Dedup {
           .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
           .distinct())
       } else {
-        val staged = Fixpoint.locally(banded0, locals)
+        val staged = scope.local(banded0)
         val hot = staged.groupBy(col("band"), col("bkey"))
           .agg(count(lit(1)).as("c"))
           .filter(col("c") > saltThreshold)
-        val salted = Fixpoint.locally(
+        val salted = scope.local(
           staged.join(hot, Seq("band", "bkey"), "left")
             .withColumn("k",
               coalesce(ceil(col("c") / saltThreshold).cast("int"), lit(1)))
             .withColumn("salt",
               pmod(xxhash64(col("doc_id")), col("k")).cast("int"))
             .select(col("doc_id"), col("band"), col("bkey"),
-              col("k"), col("salt")), locals)
+              col("k"), col("salt")))
         val left = salted
           .withColumn("probe", explode(sequence(col("salt"), col("k") - 1)))
           .select(col("doc_id").as("doc_l"), col("band").as("bl"),
@@ -302,7 +301,7 @@ object Dedup {
             greatest(col("doc_l"), col("doc_r")).as("doc_b"))
           .distinct()) // unsorted like the cold branch (round 19)
       }
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** LSH banding: a band key = md5 of its bandSize signature slots;
@@ -320,11 +319,7 @@ object Dedup {
     */
   def minhashLsh(spark: SparkSession, dir: String,
       numHashes: Int = TestNumHashes, bandSize: Int = TestBandSize): DataFrame =
-    if (Fixpoint.isPlanOnly)
-      minhashLshFrom(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-        numHashes, bandSize)
-    else pairsMemo.get(spark, dir, (numHashes, bandSize))(
+    pairsMemo.get(spark, dir, (numHashes, bandSize))(
       minhashLshFrom(
         Tables.documents(spark, dir).select(col("doc_id"), col("text")),
         numHashes, bandSize))
@@ -376,16 +371,16 @@ object Dedup {
     // full md5 signature pipeline (measured 2× the query cost at sf0.1).
     // Fast local staging + reliable pair output: zero pinned blocks on
     // return (the round-10 lifecycle rule).
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val all = Fixpoint.locally(banded(docs), locals)
-    val batch = all.filter(col("doc_id") % 10 === 0)
-    val corpus = all.filter(col("doc_id") % 10 =!= 0)
-    try Fixpoint.reliably(batch.as("n").join(corpus.as("c"),
-        col("n.band") === col("c.band") && col("n.bkey") === col("c.bkey"))
-      .select(col("n.doc_id").as("new_doc"), col("c.doc_id").as("corpus_doc"))
-      .distinct()
-      .orderBy("new_doc", "corpus_doc"))
-    finally Fixpoint.releaseAll(locals)
+    Fixpoint.scoped { scope =>
+      val all = scope.local(banded(docs))
+      val batch = all.filter(col("doc_id") % 10 === 0)
+      val corpus = all.filter(col("doc_id") % 10 =!= 0)
+      Fixpoint.reliably(batch.as("n").join(corpus.as("c"),
+          col("n.band") === col("c.band") && col("n.bkey") === col("c.bkey"))
+        .select(col("n.doc_id").as("new_doc"), col("c.doc_id").as("corpus_doc"))
+        .distinct()
+        .orderBy("new_doc", "corpus_doc"))
+    }
   }
 
   /** Benchmark decontamination — the n-gram collision test every
@@ -941,7 +936,7 @@ object Dedup {
     * block-manager residue (PersistLifecycleSpec's contract is
     * untouched), and holding the frame keeps the ContextCleaner from
     * deleting its files. The bench/TimeQuery harnesses CLEAR it
-    * between reps ([[clearComponentsMemo]]) so per-query timings stay
+    * between reps ([[Memos.clearAll]]) so per-query timings stay
     * honest — min-of-reps over a warm memo would time only the
     * downstream aggregate; the measured shared-vs-isolated numbers
     * live in BASELINE.md (round 13). Bypassed under planOnly: caching
@@ -951,22 +946,9 @@ object Dedup {
     * never the stale checkpoint scan — ADVICE r13).
     */
   def componentsFrame(spark: SparkSession, dir: String): DataFrame =
-    if (Fixpoint.isPlanOnly) dedupComponents(spark, dir)
-    else componentsMemo.get(spark, dir, ())(dedupComponents(spark, dir))
+    componentsMemo.get(spark, dir, ())(dedupComponents(spark, dir))
 
   private val componentsMemo = new SessionMemo[Unit]
-
-  /** Harness hook: drop every memoized closure AND pair frame so the
-    * next consumer pays the full build (honest per-query timing), AND
-    * delete their reliable-checkpoint files so N cleared snapshots
-    * cost zero accumulated disk. Frames obtained from the memos before
-    * a clear must not be re-read afterwards — their backing files are
-    * gone (harness reps never do; production sessions don't clear).
-    */
-  def clearComponentsMemo(): Unit = {
-    componentsMemo.clearAndRelease()
-    pairsMemo.clearAndRelease()
-  }
 
   def dedupComponents(spark: SparkSession, dir: String,
       numHashes: Int = TestNumHashes, bandSize: Int = TestBandSize): DataFrame =
@@ -977,7 +959,7 @@ object Dedup {
   /** pairs(doc_a < doc_b) → (doc_id, component, cluster_size).
     *
     * Lineage discipline: every round ends in an eager LOCAL checkpoint
-    * ([[Fixpoint.locally]]), not `persist()`. A persist only truncates
+    * ([[Fixpoint.Scope.local]]), not `persist()`. A persist only truncates
     * RECOMPUTATION — the analyzed plan still nests the previous round's
     * plan (twice, via the pointer-jump self-join), so with persist alone
     * Catalyst re-optimizes an exponentially growing tree and the
@@ -989,12 +971,11 @@ object Dedup {
     * reliable final is also the executor-loss-tolerant piece a cluster
     * needs).
     */
-  def dedupComponentsFrom(pairs: DataFrame): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val edges = Fixpoint.locally(pairs
+  def dedupComponentsFrom(pairs: DataFrame): DataFrame =
+    Fixpoint.scoped { scope =>
+      val edges = scope.local(pairs
         .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))), locals)
+        .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))))
       def lblSum(df: DataFrame): Long =
         df.agg(coalesce(sum(col("lbl")), lit(0L))).head.getLong(0)
       // Round 19 (guide §2.4): round 1 runs SPECIALIZED — labels start
@@ -1012,7 +993,7 @@ object Dedup {
           coalesce(col("b.lbl"), col("a.lbl")).as("lbl"))
       val stepped1 = edges.groupBy(col("u")).agg(min(col("v")).as("nbl"))
         .select(col("u").as("node"), least(col("u"), col("nbl")).as("lbl"))
-      var labels = Fixpoint.locally(jump(stepped1), locals)
+      var labels = scope.local(jump(stepped1))
       var prevSum = lblSum(labels)
       var converged = false
       var rounds = 1
@@ -1026,7 +1007,7 @@ object Dedup {
           .select(col("node"),
             least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
         // (2) pointer-jump: follow the label one hop (lbl is a node id)
-        val jumped = Fixpoint.locally(jump(stepped), locals)
+        val jumped = scope.local(jump(stepped))
         val curSum = lblSum(jumped)
         labels = jumped
         converged = curSum == prevSum
@@ -1041,8 +1022,7 @@ object Dedup {
       Fixpoint.reliably(labels.join(sizes, Seq("lbl"))
         .select(col("node").as("doc_id"), col("lbl").as("component"),
           col("cluster_size")))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** INCREMENTAL components closure — the daily-snapshot production
     * story (round 18, VERDICT r17 item 1): a corpus that grows ~1% per
@@ -1359,21 +1339,21 @@ object Dedup {
         ((block(bs(0)) * 1048576L) + (block(bs(1)) * 1024L) + block(bs(2)))
           .as("ckey"))
     }
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val banded = Fixpoint.locally(sig
-      .select(col("doc_id"), col("simhash60"), explode(array(keys: _*)).as("bs"))
-      .select(col("doc_id"), col("simhash60"),
-        col("bs.comb").as("comb"), col("bs.ckey").as("ckey")), locals)
-    try Fixpoint.reliably(banded.as("x").join(banded.as("y"),
-        col("x.comb") === col("y.comb") && col("x.ckey") === col("y.ckey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash60").bitwiseXOR(col("y.simhash60")))
-          .cast("int").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .distinct()
-      .orderBy("doc_a", "doc_b"))
-    finally Fixpoint.releaseAll(locals)
+    Fixpoint.scoped { scope =>
+      val banded = scope.local(sig
+        .select(col("doc_id"), col("simhash60"), explode(array(keys: _*)).as("bs"))
+        .select(col("doc_id"), col("simhash60"),
+          col("bs.comb").as("comb"), col("bs.ckey").as("ckey")))
+      Fixpoint.reliably(banded.as("x").join(banded.as("y"),
+          col("x.comb") === col("y.comb") && col("x.ckey") === col("y.ckey") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+          bit_count(col("x.simhash60").bitwiseXOR(col("y.simhash60")))
+            .cast("int").as("hamming"))
+        .filter(col("hamming") <= 3)
+        .distinct()
+        .orderBy("doc_a", "doc_b"))
+    }
   }
 
   /** SimHash NEAR-DUP pairing over the BOUNDED AUDIT SLICE — completes
@@ -1405,21 +1385,21 @@ object Dedup {
       .select(col("doc_id"), col("simhash16"))
     val blocks = (0 until 4).map(b => struct(lit(b).as("blk"),
       shiftright(col("simhash16"), b * 4).bitwiseAND(15).as("bval")))
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val banded = Fixpoint.locally(sig
-      .select(col("doc_id"), col("simhash16"), explode(array(blocks: _*)).as("bs"))
-      .select(col("doc_id"), col("simhash16"),
-        col("bs.blk").as("blk"), col("bs.bval").as("bval")), locals)
-    try Fixpoint.reliably(banded.as("x").join(banded.as("y"),
-        col("x.blk") === col("y.blk") && col("x.bval") === col("y.bval") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash16").bitwiseXOR(col("y.simhash16")))
-          .cast("int").as("hamming"))
-      .filter(col("hamming") <= 2)
-      .distinct()
-      .orderBy("doc_a", "doc_b"))
-    finally Fixpoint.releaseAll(locals)
+    Fixpoint.scoped { scope =>
+      val banded = scope.local(sig
+        .select(col("doc_id"), col("simhash16"), explode(array(blocks: _*)).as("bs"))
+        .select(col("doc_id"), col("simhash16"),
+          col("bs.blk").as("blk"), col("bs.bval").as("bval")))
+      Fixpoint.reliably(banded.as("x").join(banded.as("y"),
+          col("x.blk") === col("y.blk") && col("x.bval") === col("y.bval") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+          bit_count(col("x.simhash16").bitwiseXOR(col("y.simhash16")))
+            .cast("int").as("hamming"))
+        .filter(col("hamming") <= 2)
+        .distinct()
+        .orderBy("doc_a", "doc_b"))
+    }
   }
 
   /** LSH band-bucket occupancy profile — the banded self-join's COST

@@ -1,6 +1,9 @@
 package graft.etl
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Eager materialization for fixpoint/iterative operators that leaves
   * NOTHING pinned in the block manager.
@@ -39,31 +42,24 @@ object Fixpoint {
     * unchanged so plan specs can inspect an operator's final-stage lazy
     * tree (the checkpoint would otherwise hide everything upstream
     * behind a `Scan ExistingRDD` leaf) without eagerly executing it.
-    * [[locally]] is NOT passed through: convergence loops depend on the
-    * per-round truncation (the 43 s optimizer-blowup rule), and those
-    * rounds were checkpoint leaves in the observable plan before round
-    * 10 too. [[releaseAll]] is also a no-op under planOnly so those
-    * local blocks stay readable by in-operator consumers (a components
-    * loop over a passthrough pair frame) — plan inspection accepts the
-    * pins. Never set outside tests.
+    * [[Scope.local]] is NOT passed through, and a [[scoped]] exit keeps
+    * the local blocks under planOnly — see [[Scope]]. Never set outside
+    * tests.
     */
   // DynamicVariable, not a process-global flag: operators build their
   // frames on the thread that called them, so the passthrough scope is
   // exactly the planOnly body's thread (child threads inherit it).
   // Under forked-parallel testing a global flag would silently turn a
   // CONCURRENTLY executing operator's reliably into a passthrough and
-  // its releaseAll into a no-op (ADVICE r10) — thread-scoping removes
-  // that hazard outright.
+  // its scope release into a no-op (ADVICE r10) — thread-scoping
+  // removes that hazard outright.
   private val passthroughVar = new scala.util.DynamicVariable[Boolean](false)
   private def passthrough: Boolean = passthroughVar.value
 
   def planOnly[T](body: => T): T = passthroughVar.withValue(true)(body)
 
-  /** Whether the current thread is inside a [[planOnly]] scope — memo
-    * layers ([[Dedup.componentsFrame]]) must bypass their cache there:
-    * a passthrough (lazy, un-checkpointed) frame cached under planOnly
-    * would poison later REAL executions, and a cached real frame would
-    * hide the tree the plan inspection came to see.
+  /** Whether the current thread is inside a [[planOnly]] scope —
+    * [[SessionMemo.get]] bypasses its cache there.
     */
   private[etl] def isPlanOnly: Boolean = passthrough
 
@@ -96,31 +92,60 @@ object Fixpoint {
     finally { pinned.unpersist(blocking = false); () }
   }
 
-  /** Fast INTERMEDIATE materialization: a localCheckpoint (memory
-    * blocks, no file write — measured ~0.6 s/call cheaper than
-    * [[reliably]] on hits_scores' half-rounds at sf0.1), registered on
-    * `scope` so the operator can release the blocks once the final
-    * consumer has been materialized with [[reliably]]. The released
-    * frame must never be re-read (lineage is truncated) — use ONLY for
-    * state that no returned frame references.
-    */
-  def locally(df: DataFrame,
-      scope: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
-    val d = df.localCheckpoint()
-    scope += d
-    d
-  }
-
-  /** Release every frame registered by [[locally]]. Call from the
-    * operator's `finally`, after the final [[reliably]]. Under
-    * [[planOnly]] this is a NO-OP: reliably passed the final frame
-    * through lazily, so downstream consumers (a components loop over a
-    * passthrough pair frame, a later eager stage) still read the local
-    * blocks — releasing them here made the plan sweep throw
+  /** The temporary materializations of ONE operator call, released
+    * together when its [[scoped]] body exits — normally or by an
+    * exception — so no staging job that fails midway leaves earlier
+    * blocks pinned. Only [[scoped]] creates one.
+    *
+    * [[local]] is the fast INTERMEDIATE materialization: a
+    * localCheckpoint (memory blocks, no file write — measured ~0.6
+    * s/call cheaper than [[reliably]] on hits_scores' half-rounds at
+    * sf0.1). Convergence loops depend on its per-round truncation (the
+    * 43 s optimizer-blowup rule), so it is NOT passed through under
+    * [[planOnly]]; those rounds were checkpoint leaves in the observable
+    * plan before round 10 too. A released frame must never be re-read
+    * (lineage is truncated) — use it ONLY for state that no returned
+    * frame references; the returned frame goes through [[reliably]]
+    * inside the body.
+    *
+    * [[persist]] pins a frame the body reads many times but never
+    * returns (the crawl family's edge list); it is unpersisted
+    * non-blocking on exit.
+    *
+    * Under [[planOnly]] the exit keeps the LOCAL blocks: reliably passed
+    * the final frame through lazily, so downstream consumers (a
+    * components loop over a passthrough pair frame, a later eager stage)
+    * still read them — releasing them made the plan sweep throw
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Plan inspection accepts the
     * pins; real execution paths never run under planOnly.
     */
-  def releaseAll(scope: scala.collection.mutable.Buffer[DataFrame]): Unit =
-    if (!passthrough)
-      scope.foreach(org.apache.spark.sql.graft.PlanBridge.releaseLocalCheckpoint)
+  final class Scope private[Fixpoint] () {
+    private val locals = ArrayBuffer.empty[DataFrame]
+    private val pinned = ArrayBuffer.empty[DataFrame]
+
+    def local(df: DataFrame): DataFrame = {
+      val d = df.localCheckpoint()
+      locals += d
+      d
+    }
+
+    def persist(df: DataFrame): DataFrame = {
+      val d = df.persist()
+      pinned += d
+      d
+    }
+
+    private[Fixpoint] def release(): Unit = {
+      pinned.foreach(_.unpersist(blocking = false))
+      if (!passthrough) locals.foreach(PlanBridge.releaseLocalCheckpoint)
+    }
+  }
+
+  /** Run `body` with a fresh [[Scope]] and release everything it
+    * registered on every exit path.
+    */
+  def scoped[T](body: Scope => T): T = {
+    val scope = new Scope
+    try body(scope) finally scope.release()
+  }
 }

@@ -196,18 +196,17 @@ object GraphCuration {
     * propagation's per-node vote rank, no division, no cartesian.
     */
   def modularity(spark: SparkSession, dir: String,
-      bits: Int = AutoBits): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val edges = Fixpoint.locally(knnGraphEdges(spark, dir, bits), locals)
-      val lbl = Fixpoint.locally(lpRounds(spark, dir, edges)
-        .select(col("node"), col("lp_label")), locals)
-      val le = Fixpoint.locally(edges
+      bits: Int = AutoBits): DataFrame =
+    Fixpoint.scoped { scope =>
+      val edges = scope.local(knnGraphEdges(spark, dir, bits))
+      val lbl = scope.local(lpRounds(spark, dir, edges)
+        .select(col("node"), col("lp_label")))
+      val le = scope.local(edges
         .join(lbl.select(col("node").as("src"), col("lp_label").as("la")),
           Seq("src"))
         .join(lbl.select(col("node").as("dst"), col("lp_label").as("lb")),
           Seq("dst"))
-        .select(col("la"), col("lb")), locals)
+        .select(col("la"), col("lb")))
       val mdf = le.agg(count(lit(1)).as("m"))
       val deg = le.select(col("la").as("lp_label"))
         .unionAll(le.select(col("lb").as("lp_label")))
@@ -227,8 +226,7 @@ object GraphCuration {
         .select(col("lp_label"), col("n_nodes"), col("intra_edges"),
           col("degree_sum"), col("m"), col("q_x4m2"))
         .orderBy("lp_label"))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** Peel-round safety cap, shared with the DuckDB oracle's unroll.
     * The Spark loop stops EARLY at the fixpoint (a peel that removes
@@ -278,14 +276,13 @@ object GraphCuration {
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
     }
 
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      var edges = Fixpoint.locally(und, locals)
+    Fixpoint.scoped { scope =>
+      var edges = scope.local(und)
       var n = edges.count()
       var rounds = 0
       var stable = n == 0
       while (!stable && rounds < KcoreMaxRounds) {
-        val next = Fixpoint.locally(peel(edges), locals)
+        val next = scope.local(peel(edges))
         val m = next.count()
         rounds += 1
         stable = m == n
@@ -298,7 +295,7 @@ object GraphCuration {
           .union(edges.select(col("b").as("node")))
           .groupBy(col("node")).agg(count(lit(1)).as("deg"))
           .orderBy("node"))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Common-neighbor link prediction over the crawl link graph

@@ -194,65 +194,56 @@ object Observability {
     * at memory speed, the per-nation result written reliably, staging
     * blocks released on return — zero pins.
     */
-  def tCloseness(spark: SparkSession, dir: String): DataFrame = {
-    val cust = Tables.customer(spark, dir).select(
-      col("c_nationkey").as("nation"),
-      col("c_mktsegment").as("segment"),
-      expr("CAST(floor(c_acctbal / 1000) AS BIGINT)").as("band"))
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val cb = Fixpoint.locally(cust.groupBy("nation", "segment", "band")
-      .agg(count(lit(1)).as("c")), locals)
-    try tClosenessOn(cb)
-    finally Fixpoint.releaseAll(locals)
-  }
-
-  /** [[tCloseness]]'s grid/EMD stages over an already-materialized
-    * QI×band count frame — split out so the staging lifecycle above
-    * stays one try/finally. Returns the reliably-checkpointed
-    * per-nation audit. */
-  private def tClosenessOn(cb: DataFrame): DataFrame = {
-    val cls = cb.groupBy("nation", "segment").agg(sum(col("c")).as("n_c"))
-    val gb = cb.groupBy("band").agg(sum(col("c")).as("g"))
-    val tot = gb.agg(sum(col("g")).as("n_total"),
-      count(lit(1)).as("k_bands"))
-    val grid = cls.crossJoin(broadcast(gb))
-      .join(cb, Seq("nation", "segment", "band"), "left")
-      .withColumn("c", coalesce(col("c"), lit(0L)))
-    val w = Window.partitionBy("nation", "segment").orderBy("band")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val perClass = grid
-      .withColumn("cum_c", sum(col("c")).over(w))
-      .withColumn("cum_g", sum(col("g")).over(w))
-      .crossJoin(broadcast(tot))
-      // decimal(38,0) before the cross-multiplication: n_c·N clears
-      // int64 only below ~10⁷ rows at K=11 (within 10² of production
-      // corpora), so the promotion is unconditional (round-11, the
-      // pcaPower discipline; oracle mirrors with HUGEINT) — surface
-      // t_bp stays an exact IntegralDivide long, 1× hashes unchanged
-      .withColumn("p_abs",
-        abs(col("cum_c").cast("decimal(38,0)") * col("n_total")
-          - col("cum_g").cast("decimal(38,0)") * col("n_c")))
-      .groupBy(col("nation"), col("segment"), col("n_c"))
-      .agg(sum(col("p_abs")).as("emd_num"),
-        max(col("n_total")).as("n_total"), max(col("k_bands")).as("k_bands"))
-      .withColumn("t_bp", // greatest(...,1): K=1 support ⇒ EMD 0, not ÷0
-        expr("(10000 * emd_num) div " +
-          "(greatest(k_bands - 1, 1) * CAST(n_c AS DECIMAL(38,0)) * n_total)"))
-    Fixpoint.reliably(perClass.groupBy(col("nation"))
-      .agg(count(lit(1)).as("n_classes"),
-        sum(col("n_c")).as("n_rows"),
-        max(col("t_bp")).as("max_t_bp"),
-        sum(col("t_bp")).as("sum_t"),
-        sum(when(col("t_bp") > TCloseBp, 1L).otherwise(0L))
-          .as("breach_classes"),
-        sum(when(col("t_bp") > TCloseBp, col("n_c")).otherwise(lit(0L)))
-          .as("breach_rows"))
-      .withColumn("avg_t_bp", expr("sum_t div n_classes"))
-      .select(col("nation"), col("n_classes"), col("n_rows"),
-        col("max_t_bp"), col("avg_t_bp"), col("breach_classes"),
-        col("breach_rows"))
-      .orderBy("nation"))
-  }
+  def tCloseness(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      val cb = scope.local(Tables.customer(spark, dir)
+        .select(col("c_nationkey").as("nation"),
+          col("c_mktsegment").as("segment"),
+          expr("CAST(floor(c_acctbal / 1000) AS BIGINT)").as("band"))
+        .groupBy("nation", "segment", "band")
+        .agg(count(lit(1)).as("c")))
+      val cls = cb.groupBy("nation", "segment").agg(sum(col("c")).as("n_c"))
+      val gb = cb.groupBy("band").agg(sum(col("c")).as("g"))
+      val tot = gb.agg(sum(col("g")).as("n_total"),
+        count(lit(1)).as("k_bands"))
+      val grid = cls.crossJoin(broadcast(gb))
+        .join(cb, Seq("nation", "segment", "band"), "left")
+        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val w = Window.partitionBy("nation", "segment").orderBy("band")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val perClass = grid
+        .withColumn("cum_c", sum(col("c")).over(w))
+        .withColumn("cum_g", sum(col("g")).over(w))
+        .crossJoin(broadcast(tot))
+        // decimal(38,0) before the cross-multiplication: n_c·N clears
+        // int64 only below ~10⁷ rows at K=11 (within 10² of production
+        // corpora), so the promotion is unconditional (round-11, the
+        // pcaPower discipline; oracle mirrors with HUGEINT) — surface
+        // t_bp stays an exact IntegralDivide long, 1× hashes unchanged
+        .withColumn("p_abs",
+          abs(col("cum_c").cast("decimal(38,0)") * col("n_total")
+            - col("cum_g").cast("decimal(38,0)") * col("n_c")))
+        .groupBy(col("nation"), col("segment"), col("n_c"))
+        .agg(sum(col("p_abs")).as("emd_num"),
+          max(col("n_total")).as("n_total"), max(col("k_bands")).as("k_bands"))
+        .withColumn("t_bp", // greatest(...,1): K=1 support ⇒ EMD 0, not ÷0
+          expr("(10000 * emd_num) div " +
+            "(greatest(k_bands - 1, 1) * CAST(n_c AS DECIMAL(38,0)) * n_total)"))
+      Fixpoint.reliably(perClass.groupBy(col("nation"))
+        .agg(count(lit(1)).as("n_classes"),
+          sum(col("n_c")).as("n_rows"),
+          max(col("t_bp")).as("max_t_bp"),
+          sum(col("t_bp")).as("sum_t"),
+          sum(when(col("t_bp") > TCloseBp, 1L).otherwise(0L))
+            .as("breach_classes"),
+          sum(when(col("t_bp") > TCloseBp, col("n_c")).otherwise(lit(0L)))
+            .as("breach_rows"))
+        .withColumn("avg_t_bp", expr("sum_t div n_classes"))
+        .select(col("nation"), col("n_classes"), col("n_rows"),
+          col("max_t_bp"), col("avg_t_bp"), col("breach_classes"),
+          col("breach_rows"))
+        .orderBy("nation"))
+    }
 
   /** Poisson bootstrap of the mean tokens-per-document — uncertainty
     * for corpus metrics in ONE pass (Chamandy et al., "Estimating

@@ -205,9 +205,8 @@ object QualityTrain {
   }
 
   private def candidates(tr: DataFrame, spark: SparkSession,
-      locals: scala.collection.mutable.ArrayBuffer[DataFrame])
-      : Vector[DataFrame] = {
-    var w = Fixpoint.locally(nbInit(tr, spark), locals)
+      scope: Fixpoint.Scope): Vector[DataFrame] = {
+    var w = scope.local(nbInit(tr, spark))
     var cands = Vector(w)
     for (_ <- 1 to Rounds) {
       // Round 19 MEASURED checkpoint-every-2nd-round (halve the driver
@@ -216,7 +215,7 @@ object QualityTrain {
       // tagged union + both mistake curves, so an un-checkpointed
       // round re-evaluates per reference and the replays are real.
       // Per-round checkpoints stay (the fixpoint rule).
-      w = Fixpoint.locally(roundBody(tr, w), locals)
+      w = scope.local(roundBody(tr, w))
       cands :+= w
     }
     cands
@@ -260,42 +259,32 @@ object QualityTrain {
     * ([[Rounds]]+1)·([[Buckets]]+1) rows, trivially small. It ends in
     * a reliable checkpoint, so the memoized frame is an immutable file
     * scan; identity/eviction/locking discipline live in [[SessionMemo]]
-    * (data-fingerprint keys, dead-session sweep, harness clear), and
-    * the memo is bypassed under planOnly like every other memo layer.
+    * (data-fingerprint keys, dead-session sweep, harness clear,
+    * planOnly bypass).
     */
   def trainArtifact(spark: SparkSession, dir: String): DataFrame =
-    if (Fixpoint.isPlanOnly) buildArtifact(spark, dir)
-    else trainMemo.get(spark, dir, (Buckets, Rounds))(
-      buildArtifact(spark, dir))
+    trainMemo.get(spark, dir, (Buckets, Rounds))(buildArtifact(spark, dir))
 
   private val trainMemo = new SessionMemo[(Int, Int)]
 
-  /** Harness hook (bench/TimeQuery/ScaleCheck rep boundaries) — same
-    * contract as [[Dedup.clearComponentsMemo]]: drops the memoized
-    * artifact AND deletes its checkpoint files.
-    */
-  def clearTrainMemo(): Unit = trainMemo.clearAndRelease()
-
-  private def buildArtifact(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try Fixpoint.reliably {
+  private def buildArtifact(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped(scope => Fixpoint.reliably {
       // ONE doc-feature staging (one row per doc, bag as an array) for
       // train AND valid — the test slice rides the same frame in
       // qualityTrainEval; the old plan staged each slice from its own
       // two corpus scans + three doc-keyed join shuffles
-      val lf = Fixpoint.locally(
-        docFeatures(spark, dir).filter(col("bucket") < 90), locals)
+      val lf = scope.local(
+        docFeatures(spark, dir).filter(col("bucket") < 90))
       val tr = sliceOf(lf, "train")
       val va = sliceOf(lf, "valid")
-      val cands = candidates(tr, spark, locals)
+      val cands = candidates(tr, spark, scope)
       val tagged = cands.zipWithIndex
         .map { case (w, r) => w.withColumn("round", lit(r.toLong)) }
         .reduce(_ unionByName _)
       val curve = mistakesAllRounds(tr, tagged, "train_mistakes")
         .join(mistakesAllRounds(va, tagged, "valid_mistakes"), Seq("round"))
       tagged.join(curve, Seq("round"))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    })
 
   /** In-plan pocket pick over the artifact (fewest valid mistakes,
     * ties to the earliest round) — a 1-row broadcast, never a collect.

@@ -40,15 +40,23 @@ import org.apache.spark.sql.graft.PlanBridge
   * current fingerprint — no snapshot leaks through the race window
   * (ADVICE r14 item 2).
   *
-  * [[clearAndRelease]] is the HARNESS hook (bench/TimeQuery rep
-  * boundaries): it drops every entry AND deletes the built frames'
-  * reliable-checkpoint files, so N cleared snapshots cost zero
-  * accumulated disk. Frames obtained before a clear must not be
-  * re-read afterwards — their backing files are gone. Production
-  * sessions don't call it; they rely on fingerprint eviction plus the
-  * ContextCleaner (`spark.cleaner.referenceTracking.cleanCheckpoints`).
+  * Every memo registers itself in the companion on construction;
+  * [[SessionMemo.clearAll]] (behind [[Memos.clearAll]]) is the HARNESS
+  * hook (bench/TimeQuery rep boundaries): it drops every entry of every
+  * memo AND deletes the built frames' reliable-checkpoint files, so N
+  * cleared snapshots cost zero accumulated disk. Frames obtained before
+  * a clear must not be re-read afterwards — their backing files are
+  * gone. Production sessions don't call it; they rely on fingerprint
+  * eviction plus the ContextCleaner
+  * (`spark.cleaner.referenceTracking.cleanCheckpoints`).
+  *
+  * Under [[Fixpoint.planOnly]] [[get]] runs `build` and caches nothing:
+  * a passthrough (lazy, un-checkpointed) frame cached there would
+  * poison later REAL executions, and a cached real frame would hide the
+  * tree the plan inspection came to see.
   */
 private[etl] final class SessionMemo[P] {
+  SessionMemo.registry.add(this)
 
   private final class Holder(build: () => DataFrame) {
     @volatile private var v: DataFrame = _
@@ -76,7 +84,7 @@ private[etl] final class SessionMemo[P] {
 
   @annotation.tailrec
   def get(spark: SparkSession, dir: String, params: P)(
-      build: => DataFrame): DataFrame = {
+      build: => DataFrame): DataFrame = if (Fixpoint.isPlanOnly) build else {
     // dead sessions can never hit again (the key IS the session) — a
     // JVM that cycles sessions would otherwise leak a frame per cycle.
     // evict() (not bare remove) so their checkpoint files are deleted
@@ -126,6 +134,11 @@ private[etl] final class SessionMemo[P] {
 }
 
 private[etl] object SessionMemo {
+
+  private val registry =
+    new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo[_]]()
+
+  def clearAll(): Unit = registry.forEach(_.clearAndRelease())
 
   def canonical(dir: String): String =
     try java.nio.file.Paths.get(dir).toRealPath().toString

@@ -368,55 +368,55 @@ object Similarity {
         round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("cid").asc)
-    val mmrLocals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val cand = Fixpoint.locally(scored.withColumn("srk", row_number().over(w))
-      .filter(col("srk") <= 20)
-      .select(col("qid"), col("cid"),
-        round(col("cos") * 10000).cast("bigint").as("rel_bp"),
-        col("ce"), col("cn")), mmrLocals)
-    val sims = cand.select(col("qid"), col("cid").as("acid"),
-        col("ce").as("ae"), col("cn").as("an"))
-      .join(cand.select(col("qid"), col("cid").as("bcid"),
-        col("ce").as("be"), col("cn").as("bn")), Seq("qid"))
-      .filter(col("acid") =!= col("bcid"))
-      .select(col("qid"), col("acid"), col("bcid"),
-        round(round(dotF(col("ae"), col("be")) / (col("an") * col("bn")), 4)
-          * 10000).cast("bigint").as("sim_bp"))
-    val simsCk = Fixpoint.locally(sims, mmrLocals)
-    val slim = cand.select(col("qid"), col("cid"), col("rel_bp"))
-    val first = slim
-      .withColumn("pk", row_number().over(Window.partitionBy(col("qid"))
-        .orderBy(col("rel_bp").desc, col("cid").asc)))
-      .filter(col("pk") === 1)
-      .select(col("qid"), col("cid"), col("rel_bp"),
-        col("rel_bp").as("mmr2"), lit(1).as("rank"))
-    var selected = Fixpoint.locally(first, mmrLocals)
-    for (r <- 2 to 5) {
-      val remaining = slim.join(
-        selected.select(col("qid").as("vq"), col("cid").as("vc")),
-        col("qid") === col("vq") && col("cid") === col("vc"), "left_anti")
-      val simsR = simsCk.select(col("qid").as("sq"), col("acid"),
-        col("bcid"), col("sim_bp"))
-      val withMs = remaining
-        .join(selected.select(col("qid"), col("cid").as("scid")), Seq("qid"))
-        .join(simsR, col("qid") === col("sq")
-          && col("cid") === col("acid") && col("scid") === col("bcid"))
-        .groupBy(col("qid"), col("cid"), col("rel_bp"))
-        .agg(max(col("sim_bp")).as("ms"))
-      val pick = withMs
-        .withColumn("mmr2", col("rel_bp") - col("ms"))
+    Fixpoint.scoped { scope =>
+      val cand = scope.local(scored.withColumn("srk", row_number().over(w))
+        .filter(col("srk") <= 20)
+        .select(col("qid"), col("cid"),
+          round(col("cos") * 10000).cast("bigint").as("rel_bp"),
+          col("ce"), col("cn")))
+      val sims = cand.select(col("qid"), col("cid").as("acid"),
+          col("ce").as("ae"), col("cn").as("an"))
+        .join(cand.select(col("qid"), col("cid").as("bcid"),
+          col("ce").as("be"), col("cn").as("bn")), Seq("qid"))
+        .filter(col("acid") =!= col("bcid"))
+        .select(col("qid"), col("acid"), col("bcid"),
+          round(round(dotF(col("ae"), col("be")) / (col("an") * col("bn")), 4)
+            * 10000).cast("bigint").as("sim_bp"))
+      val simsCk = scope.local(sims)
+      val slim = cand.select(col("qid"), col("cid"), col("rel_bp"))
+      val first = slim
         .withColumn("pk", row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("mmr2").desc, col("cid").asc)))
+          .orderBy(col("rel_bp").desc, col("cid").asc)))
         .filter(col("pk") === 1)
-        .select(col("qid"), col("cid"), col("rel_bp"), col("mmr2"),
-          lit(r).as("rank"))
-      selected = Fixpoint.locally(selected.unionByName(pick), mmrLocals)
+        .select(col("qid"), col("cid"), col("rel_bp"),
+          col("rel_bp").as("mmr2"), lit(1).as("rank"))
+      var selected = scope.local(first)
+      for (r <- 2 to 5) {
+        val remaining = slim.join(
+          selected.select(col("qid").as("vq"), col("cid").as("vc")),
+          col("qid") === col("vq") && col("cid") === col("vc"), "left_anti")
+        val simsR = simsCk.select(col("qid").as("sq"), col("acid"),
+          col("bcid"), col("sim_bp"))
+        val withMs = remaining
+          .join(selected.select(col("qid"), col("cid").as("scid")), Seq("qid"))
+          .join(simsR, col("qid") === col("sq")
+            && col("cid") === col("acid") && col("scid") === col("bcid"))
+          .groupBy(col("qid"), col("cid"), col("rel_bp"))
+          .agg(max(col("sim_bp")).as("ms"))
+        val pick = withMs
+          .withColumn("mmr2", col("rel_bp") - col("ms"))
+          .withColumn("pk", row_number().over(Window.partitionBy(col("qid"))
+            .orderBy(col("mmr2").desc, col("cid").asc)))
+          .filter(col("pk") === 1)
+          .select(col("qid"), col("cid"), col("rel_bp"), col("mmr2"),
+            lit(r).as("rank"))
+        selected = scope.local(selected.unionByName(pick))
+      }
+      Fixpoint.reliably(
+        selected.select(col("qid"), col("rank"), col("cid"), col("rel_bp"),
+            col("mmr2"))
+          .orderBy("qid", "rank"))
     }
-    try Fixpoint.reliably(
-      selected.select(col("qid"), col("rank"), col("cid"), col("rel_bp"),
-          col("mmr2"))
-        .orderBy("qid", "rank"))
-    finally Fixpoint.releaseAll(mmrLocals)
   }
 
   /** Triplet mining for contrastive/metric learning: per anchor, the
@@ -797,28 +797,28 @@ object Similarity {
       .withColumn("cos",
         round(dotF(col("qe"), col("a_emb")) / (col("qn") * col("a_nrm")), 4))
       .select(col("qid"), col("prk"), col("a_vid").as("cid"), col("cos"))
-    val sweepLocals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val scoredCk = Fixpoint.locally(scored, sweepLocals)
-    val exact = Fixpoint.locally(
-      knnBrute(spark, dir).select(col("qid"), col("cid")), sweepLocals)
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val stats = (1 to 3).map { p =>
-      val cand = scoredCk.filter(col("prk") <= p)
-      val w5 = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("cid").asc)
-      val top = cand.withColumn("rank", row_number().over(w5))
-        .filter(col("rank") <= 5).select(col("qid"), col("cid"))
-      val scanned = cand.agg(count(lit(1)).as("n_scanned"))
-      val hits = exact.join(top, Seq("qid", "cid"), "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-      scanned.crossJoin(broadcast(hits)).crossJoin(broadcast(nExact))
-        .select(lit(p).as("nprobe"), col("n_scanned"), col("n_hit"),
-          col("n_exact"))
-    }.reduce(_ unionByName _)
-    try Fixpoint.reliably(
-      stats.withColumn("recall_bp", expr("(10000 * n_hit) div n_exact"))
-        .orderBy("nprobe"))
-    finally Fixpoint.releaseAll(sweepLocals)
+    Fixpoint.scoped { scope =>
+      val scoredCk = scope.local(scored)
+      val exact = scope.local(
+        knnBrute(spark, dir).select(col("qid"), col("cid")))
+      val nExact = exact.agg(count(lit(1)).as("n_exact"))
+      val stats = (1 to 3).map { p =>
+        val cand = scoredCk.filter(col("prk") <= p)
+        val w5 = Window.partitionBy(col("qid"))
+          .orderBy(col("cos").desc, col("cid").asc)
+        val top = cand.withColumn("rank", row_number().over(w5))
+          .filter(col("rank") <= 5).select(col("qid"), col("cid"))
+        val scanned = cand.agg(count(lit(1)).as("n_scanned"))
+        val hits = exact.join(top, Seq("qid", "cid"), "left_semi")
+          .agg(count(lit(1)).as("n_hit"))
+        scanned.crossJoin(broadcast(hits)).crossJoin(broadcast(nExact))
+          .select(lit(p).as("nprobe"), col("n_scanned"), col("n_hit"),
+            col("n_exact"))
+      }.reduce(_ unionByName _)
+      Fixpoint.reliably(
+        stats.withColumn("recall_bp", expr("(10000 * n_hit) div n_exact"))
+          .orderBy("nprobe"))
+    }
   }
 
   /** IVF with a TRAINED codebook — the full train→index→search path:
@@ -1133,54 +1133,53 @@ object Similarity {
       seedLo: Long, lloydRounds: Int): DataFrame = {
     val K = 16
     def sqdist = pqSqdist _
-    val cbLocals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var cbT = broadcast(subv
-      .filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + K)
-      .select(col("m").as("cm"), (col("vec_id") - seedLo).as("k"),
-        col("xvec").as("cvec")))
-    for (_ <- 1 to lloydRounds) {
-      // assignment: argmin sub-L2² per (vec_id, m), ties to low k
-      val a = subv.join(cbT, col("cm") === col("m"))
-        .withColumn("du", sqdist(col("xvec"), col("cvec")))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(struct(col("du"), col("k"))).as("mn"))
-        .select(col("vec_id"), col("m"), col("mn.k").as("code"))
-      // Lloyd update, MEDOID flavor: per (m, code) the new codeword is
-      // the member subvector closest to the cluster's floor-div integer
-      // mean (ties to low vec_id). Plain means shrink every codeword
-      // toward the corpus centroid — on this near-isotropic corpus that
-      // collapses the ADC dynamic range and LOSES recall (measured
-      // 22→20/80 after one mean round); medoids re-center the cells
-      // while keeping codewords real corpus points, preserving spread.
-      val mean = subv.join(a, Seq("vec_id", "m"))
-        .select(col("m"), col("code"), posexplode(col("xvec")).as(Seq("dim", "x")))
-        .groupBy(col("m"), col("code"), col("dim"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .withColumn("c", expr("(s - pmod(s, n)) div n"))
-        .groupBy(col("m"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-          s => s.getField("c")).as("mvec"))
-      val medoid = subv.join(a, Seq("vec_id", "m"))
-        .join(broadcast(mean), Seq("m", "code"))
-        .withColumn("dm", sqdist(col("xvec"), col("mvec")))
-        .groupBy(col("m"), col("code"))
-        .agg(min(struct(col("dm"), col("vec_id"))).as("md"))
-        .select(col("m"), col("code"), col("md.vec_id").as("mvid"))
-      // end every Lloyd round in an EAGER local checkpoint: the codebook
-      // is M·K tiny rows, but without the lineage cut each downstream
-      // reference re-nests the whole round's join chain and Catalyst
-      // re-optimizes an exponentially growing tree (the repo's
-      // dedup_components fixpoint lesson; measured 36.8 s cold rep on
-      // knn_pq_trained from exactly this).
-      cbT = broadcast(Fixpoint.locally(medoid
-        .join(subv.select(col("vec_id").as("mvid"), col("m"), col("xvec")),
-          Seq("mvid", "m"))
-        .select(col("m").as("cm"), col("code").as("k"), col("xvec").as("cvec")),
-        cbLocals))
+    Fixpoint.scoped { scope =>
+      var cbT = broadcast(subv
+        .filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + K)
+        .select(col("m").as("cm"), (col("vec_id") - seedLo).as("k"),
+          col("xvec").as("cvec")))
+      for (_ <- 1 to lloydRounds) {
+        // assignment: argmin sub-L2² per (vec_id, m), ties to low k
+        val a = subv.join(cbT, col("cm") === col("m"))
+          .withColumn("du", sqdist(col("xvec"), col("cvec")))
+          .groupBy(col("vec_id"), col("m"))
+          .agg(min(struct(col("du"), col("k"))).as("mn"))
+          .select(col("vec_id"), col("m"), col("mn.k").as("code"))
+        // Lloyd update, MEDOID flavor: per (m, code) the new codeword is
+        // the member subvector closest to the cluster's floor-div integer
+        // mean (ties to low vec_id). Plain means shrink every codeword
+        // toward the corpus centroid — on this near-isotropic corpus that
+        // collapses the ADC dynamic range and LOSES recall (measured
+        // 22→20/80 after one mean round); medoids re-center the cells
+        // while keeping codewords real corpus points, preserving spread.
+        val mean = subv.join(a, Seq("vec_id", "m"))
+          .select(col("m"), col("code"), posexplode(col("xvec")).as(Seq("dim", "x")))
+          .groupBy(col("m"), col("code"), col("dim"))
+          .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
+          .withColumn("c", expr("(s - pmod(s, n)) div n"))
+          .groupBy(col("m"), col("code"))
+          .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
+            s => s.getField("c")).as("mvec"))
+        val medoid = subv.join(a, Seq("vec_id", "m"))
+          .join(broadcast(mean), Seq("m", "code"))
+          .withColumn("dm", sqdist(col("xvec"), col("mvec")))
+          .groupBy(col("m"), col("code"))
+          .agg(min(struct(col("dm"), col("vec_id"))).as("md"))
+          .select(col("m"), col("code"), col("md.vec_id").as("mvid"))
+        // end every Lloyd round in an EAGER local checkpoint: the codebook
+        // is M·K tiny rows, but without the lineage cut each downstream
+        // reference re-nests the whole round's join chain and Catalyst
+        // re-optimizes an exponentially growing tree (the repo's
+        // dedup_components fixpoint lesson; measured 36.8 s cold rep on
+        // knn_pq_trained from exactly this).
+        cbT = broadcast(scope.local(medoid
+          .join(subv.select(col("vec_id").as("mvid"), col("m"), col("xvec")),
+            Seq("mvid", "m"))
+          .select(col("m").as("cm"), col("code").as("k"), col("xvec").as("cvec"))))
+      }
+      // hand callers a reliable, unpinned codebook and drop the round blocks
+      broadcast(Fixpoint.reliably(cbT))
     }
-    // hand callers a reliable, unpinned codebook and drop the round blocks
-    try broadcast(Fixpoint.reliably(cbT))
-    finally Fixpoint.releaseAll(cbLocals)
   }
 
   /** Total quantization SSE (1e-6 units) of the corpus under the
@@ -1357,26 +1356,26 @@ object Similarity {
     // checkpoint the plan doubles per round (the CLAUDE.md fixpoint
     // rule; e would be re-scanned 2^rounds times). Round blocks are
     // locals, released once the final frame is reliably materialized.
-    val pcaLocals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def round1(v: DataFrame): DataFrame = {
-      val dots = e.join(broadcast(v), Seq("dim"))
-        .groupBy(col("vec_id"))
-        .agg(sum(col("ei") * col("v")).as("dot"))
-      val s = Fixpoint.locally(e.join(dots, Seq("vec_id"))
-        .groupBy(col("dim"))
-        .agg(sum(col("ei") * col("dot")).as("s")), pcaLocals)
-      val m = s.agg(greatest(max(abs(col("s"))), lit(1L)).as("m"))
-      s.crossJoin(broadcast(m))
-        .select(col("dim"),
-          expr("(100 * (s + m)) div m - 100").as("v"))
-    }
+    Fixpoint.scoped { scope =>
+      def round1(v: DataFrame): DataFrame = {
+        val dots = e.join(broadcast(v), Seq("dim"))
+          .groupBy(col("vec_id"))
+          .agg(sum(col("ei") * col("v")).as("dot"))
+        val s = scope.local(e.join(dots, Seq("vec_id"))
+          .groupBy(col("dim"))
+          .agg(sum(col("ei") * col("dot")).as("s")))
+        val m = s.agg(greatest(max(abs(col("s"))), lit(1L)).as("m"))
+        s.crossJoin(broadcast(m))
+          .select(col("dim"),
+            expr("(100 * (s + m)) div m - 100").as("v"))
+      }
 
-    val v0 = spark.range(0, 64)
-      .select(col("id").cast("int").as("dim"), lit(100L).as("v"))
-    val v3 = round1(round1(round1(v0)))
-    try Fixpoint.reliably(
-      v3.select(col("dim"), col("v").as("v_100")).orderBy("dim"))
-    finally Fixpoint.releaseAll(pcaLocals)
+      val v0 = spark.range(0, 64)
+        .select(col("id").cast("int").as("dim"), lit(100L).as("v"))
+      val v3 = round1(round1(round1(v0)))
+      Fixpoint.reliably(
+        v3.select(col("dim"), col("v").as("v_100")).orderBy("dim"))
+    }
   }
 
   /** Redundant-dimension audit: Pearson correlation of every embedding

@@ -42,25 +42,24 @@ object Summaries {
     * outer-array rule: 2 re-evaluations of the split, not O(n²)).
     * Text moves exactly once, in the final doc-keyed join.
     */
-  def extractiveSummary(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+  def extractiveSummary(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val w = Fixpoint.locally(
+      val w = scope.local(
         Shingles.words(docs)
-          .withColumn("cidx", expr("word_pos div 40")), locals)
+          .withColumn("cidx", expr("word_pos div 40")))
       val tf = w.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
-      val k3 = Fixpoint.locally(graft.plans.GroupTopK.topK(tf, Seq("doc_id"),
+      val k3 = scope.local(graft.plans.GroupTopK.topK(tf, Seq("doc_id"),
         Seq(("c", false), ("word", true)), 3)
-        .select(col("doc_id"), col("word")), locals)
+        .select(col("doc_id"), col("word")))
       val kw = k3.groupBy(col("doc_id")).agg(collect_list(col("word")).as("kw"))
       // chunk-level frame: one keyword-marker join + one agg, all
       // scalar columns (doc_id, cidx, score) — the only token-level
       // shuffle left; staged for its two readers (top-2 cut, totals)
-      val ch = Fixpoint.locally(w
+      val ch = scope.local(w
         .join(k3.withColumn("__kw", lit(1)), Seq("doc_id", "word"), "left")
         .groupBy(col("doc_id"), col("cidx"))
-        .agg(count(col("__kw")).as("score")), locals)
+        .agg(count(col("__kw")).as("score")))
       val kept = graft.plans.GroupTopK.topK(ch, Seq("doc_id"),
           Seq(("score", false), ("cidx", true)), 2)
       val keptArr = kept.groupBy(col("doc_id"))
@@ -85,8 +84,7 @@ object Summaries {
         .select(col("doc_id"), col("keywords"), col("n_chunks"),
           col("n_kept"), col("top_score"), col("summary"))
         .orderBy("doc_id"))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** A3's ENRICHMENT BOUNDARY made executable — [[extractiveSummary]]'s
     * analog of [[Multimodal.describeEnriched]]: production composes the

@@ -493,10 +493,9 @@ object TextAnalysis {
       .select(explode(Shingles.shingleArray(col("text"), 2)).as("bg"))
       .select(substring_index(col("bg"), " ", 1).as("w1"),
         substring_index(col("bg"), " ", -1).as("w2"))
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val pairs = Fixpoint.locally(
-        bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")), locals)
+    Fixpoint.scoped { scope =>
+      val pairs = scope.local(
+        bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
       val m1 = pairs.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
       val m2 = pairs.groupBy(col("w2")).agg(sum(col("c12")).as("c2"))
       val tot = pairs.agg(sum(col("c12")).as("n"))
@@ -516,7 +515,7 @@ object TextAnalysis {
           col("llr"))
         .orderBy(col("llr").desc, col("w1").asc, col("w2").asc)
         .limit(20))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Corpus-level n-gram NOVELTY — the inverse of decontamination: for
@@ -975,20 +974,19 @@ object TextAnalysis {
     * candidate-keyed aggs. No window, no broadcast of anything
     * data-sized, no pair explosion beyond the gram-overlap join.
     */
-  def bleuEval(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try Fixpoint.reliably(pairClipStats(spark, dir, locals)
-      .select(col("doc_id"), col("ref_id"), col("n1_total"), col("n1_match"),
-        col("n2_total"), col("n2_match"), col("r1_total"))
-      .withColumn("p1_bp", expr("(10000 * n1_match) div n1_total"))
-      .withColumn("p2_bp", expr("(10000 * n2_match) div n2_total"))
-      .withColumn("bleu2_bp",
-        floor(sqrt((col("p1_bp") * col("p2_bp")).cast("double"))).cast("long"))
-      .withColumn("len_ratio_bp", expr("(10000 * n1_total) div r1_total"))
-      .drop("r1_total")
-      .orderBy("doc_id"))
-    finally Fixpoint.releaseAll(locals)
-  }
+  def bleuEval(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      Fixpoint.reliably(pairClipStats(spark, dir, scope)
+        .select(col("doc_id"), col("ref_id"), col("n1_total"), col("n1_match"),
+          col("n2_total"), col("n2_match"), col("r1_total"))
+        .withColumn("p1_bp", expr("(10000 * n1_match) div n1_total"))
+        .withColumn("p2_bp", expr("(10000 * n2_match) div n2_total"))
+        .withColumn("bleu2_bp",
+          floor(sqrt((col("p1_bp") * col("p2_bp")).cast("double"))).cast("long"))
+        .withColumn("len_ratio_bp", expr("(10000 * n1_total) div r1_total"))
+        .drop("r1_total")
+        .orderBy("doc_id"))
+    }
 
   /** ROUGE-1/2 clipped n-gram RECALL (Lin 2004) with the F1 option over
     * the same candidate/reference pairs as [[bleuEval]] — the
@@ -1006,23 +1004,22 @@ object TextAnalysis {
     * [[pairClipStats]] frame is the whole cost; the recall/F1 surface
     * is one map pass over the bounded pair output.
     */
-  def rougeEval(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try Fixpoint.reliably(pairClipStats(spark, dir, locals)
-      .select(col("doc_id"), col("ref_id"), col("n1_match"), col("n2_match"),
-        col("r1_total"), col("r2_total"), col("n1_total"))
-      .withColumn("r1_bp", expr("(10000 * n1_match) div r1_total"))
-      .withColumn("r2_bp", expr("(10000 * n2_match) div r2_total"))
-      .withColumn("p1_bp", expr("(10000 * n1_match) div n1_total"))
-      .withColumn("f1_bp",
-        when(col("p1_bp") + col("r1_bp") === 0, lit(0L))
-          .otherwise(expr("(2 * p1_bp * r1_bp) div (p1_bp + r1_bp)")))
-      .select(col("doc_id"), col("ref_id"), col("n1_match"), col("n2_match"),
-        col("r1_total"), col("r2_total"), col("r1_bp"), col("r2_bp"),
-        col("f1_bp"))
-      .orderBy("doc_id"))
-    finally Fixpoint.releaseAll(locals)
-  }
+  def rougeEval(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      Fixpoint.reliably(pairClipStats(spark, dir, scope)
+        .select(col("doc_id"), col("ref_id"), col("n1_match"), col("n2_match"),
+          col("r1_total"), col("r2_total"), col("n1_total"))
+        .withColumn("r1_bp", expr("(10000 * n1_match) div r1_total"))
+        .withColumn("r2_bp", expr("(10000 * n2_match) div r2_total"))
+        .withColumn("p1_bp", expr("(10000 * n1_match) div n1_total"))
+        .withColumn("f1_bp",
+          when(col("p1_bp") + col("r1_bp") === 0, lit(0L))
+            .otherwise(expr("(2 * p1_bp * r1_bp) div (p1_bp + r1_bp)")))
+        .select(col("doc_id"), col("ref_id"), col("n1_match"), col("n2_match"),
+          col("r1_total"), col("r2_total"), col("r1_bp"), col("r2_bp"),
+          col("f1_bp"))
+        .orderBy("doc_id"))
+    }
 
   /** chrF character-n-gram F-score (Popović 2015) over the same
     * candidate/reference pairs as [[bleuEval]]/[[rougeEval]] — the
@@ -1065,13 +1062,12 @@ object TextAnalysis {
     */
   def chrfEval(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.GramClipFunctions.clipF
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val docs = Fixpoint.locally(Tables.documents(spark, dir)
+    Fixpoint.scoped { scope =>
+      val docs = scope.local(Tables.documents(spark, dir)
         .select(col("doc_id"),
           substring(translate(coalesce(col("text"), lit("")),
             " \t\r\n", ""), 1, 1000).as("t"))
-        .withColumn("len", length(col("t")).cast("bigint")), locals)
+        .withColumn("len", length(col("t")).cast("bigint")))
       val pairs = docs.filter(col("doc_id") % 2 === 0 && col("len") >= 3)
         .select(col("doc_id"), col("t").as("ct"), col("len").as("clen"))
         .join(docs.filter(col("len") >= 3)
@@ -1096,7 +1092,7 @@ object TextAnalysis {
           col("m1"), col("m2"), col("m3"), col("p_bp"), col("r_bp"),
           col("chrf2_bp"))
         .orderBy("doc_id"))
-    } finally Fixpoint.releaseAll(locals)
+    }
   }
 
   /** Word error rate (the ASR/MT edit-distance metric; Levenshtein
@@ -1130,13 +1126,12 @@ object TextAnalysis {
     * per-pair cost at any corpus size. Final frame written reliably,
     * staging released (zero pins).
     */
-  def werEval(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val docs = Fixpoint.locally(Tables.documents(spark, dir)
+  def werEval(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      val docs = scope.local(Tables.documents(spark, dir)
         .select(col("doc_id"),
           slice(Shingles.wordArray(col("text")), 1, 40).as("ws"))
-        .withColumn("nw", size(col("ws")).cast("bigint")), locals)
+        .withColumn("nw", size(col("ws")).cast("bigint")))
       val pairs = docs.filter(col("doc_id") % 2 === 0 && col("nw") >= 1)
         .select(col("doc_id"), col("nw").as("clen"))
         .join(docs.filter(col("nw") >= 1)
@@ -1149,8 +1144,8 @@ object TextAnalysis {
       val ref = docs.join(pairs.select(col("ref_id").as("doc_id"),
           col("doc_id").as("pid")), Seq("doc_id"))
         .select(col("pid"), lit(1).as("side"), posexplode(col("ws")))
-      val toks = Fixpoint.locally(
-        cand.unionByName(ref).withColumnRenamed("col", "word"), locals)
+      val toks = scope.local(
+        cand.unionByName(ref).withColumnRenamed("col", "word"))
       val vocab = toks.select(col("pid"), col("word")).distinct()
         .withColumn("idx", row_number().over(
           Window.partitionBy(col("pid")).orderBy(col("word"))))
@@ -1170,8 +1165,7 @@ object TextAnalysis {
         .select(col("doc_id"), col("ref_id"), col("clen"), col("rlen"),
           col("dist"), col("wer_bp"))
         .orderBy("doc_id"))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** [[werEval]]'s output computed IN-ROW — the scale path for WER:
     * the relational plan re-encodes each pair through a joint-vocab
@@ -1309,12 +1303,11 @@ object TextAnalysis {
   }
 
   private def pairClipStats(spark: SparkSession, dir: String,
-      locals: scala.collection.mutable.ArrayBuffer[DataFrame]): DataFrame = {
+      scope: Fixpoint.Scope): DataFrame = {
     import graft.functions.GramClipFunctions.wordClipF
-    val docs = Fixpoint.locally(Tables.documents(spark, dir)
+    val docs = scope.local(Tables.documents(spark, dir)
       .select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
-      .withColumn("nw", size(Shingles.wordArray(col("t"))).cast("bigint")),
-      locals)
+      .withColumn("nw", size(Shingles.wordArray(col("t"))).cast("bigint")))
     docs.filter(col("doc_id") % 2 === 0 && col("nw") >= 2)
       .select(col("doc_id"), col("t").as("ct"), col("nw").as("cw"))
       .join(docs.filter(col("nw") >= 2)

@@ -216,12 +216,10 @@ object TfIdf {
     * unstaged, the whole tfidf tier replays for each consumer), the
     * final frame is written reliably, staging released (zero pins).
     */
-  def rboOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val lex = Fixpoint.locally(tfidfSearch(spark, dir)
-        .select(col("qid"), col("did").as("cand"), col("rank").as("rl")),
-        locals)
+  def rboOverlap(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
+      val lex = scope.local(tfidfSearch(spark, dir)
+        .select(col("qid"), col("did").as("cand"), col("rank").as("rl")))
       val vec = Similarity.knnBrute(spark, dir)
         .select(col("qid"), col("cid").as("cand"), col("rank").as("rv"))
       val contrib = lex.join(vec, Seq("qid", "cand"))
@@ -237,8 +235,7 @@ object TfIdf {
           coalesce(col("n_common"), lit(0L)).as("n_common"),
           coalesce(col("rbo_x960"), lit(0L)).as("rbo_x960"))
         .orderBy("qid"))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** [[rboOverlap]]'s IN-ROW twin — the production plan (the
     * wer_inrow treatment, r12 verdict item 2): stage each tier's top-5
@@ -516,9 +513,8 @@ object TfIdf {
     * cumulative-hits windows partition by term over ≤ 10 rows each;
     * output is bounded by the EvalTerms domain.
     */
-  def apEval(spark: SparkSession, dir: String): DataFrame = {
-    val locals = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+  def apEval(spark: SparkSession, dir: String): DataFrame =
+    Fixpoint.scoped { scope =>
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val n = docs.count()
       val words = Shingles.words(docs)
@@ -527,9 +523,9 @@ object TfIdf {
       val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
       val sumDl = dl.agg(sum(col("dl"))).head.getLong(0)
       val dfq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-      val scored = Fixpoint.locally(tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
+      val scored = scope.local(tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
         .withColumn("bm25", bm25Score(n, sumDl))
-        .withColumn("rel", when(col("tf") >= 3, 1L).otherwise(0L)), locals)
+        .withColumn("rel", when(col("tf") >= 3, 1L).otherwise(0L)))
       val w = Window.partitionBy(col("word"))
         .orderBy(col("bm25").desc, col("doc_id").asc)
       val wc = Window.partitionBy(col("word")).orderBy(col("rk"))
@@ -550,8 +546,7 @@ object TfIdf {
         .select(col("word"), col("n_rel"), col("rel10"),
           col("sum_prec_x2520"), col("ap_bp"))
         .orderBy("word"))
-    } finally Fixpoint.releaseAll(locals)
-  }
+    }
 
   /** Graded ranking eval: nDCG@5 per query term, [[mrrEval]]'s binary
     * metrics upgraded to graded relevance (rel = 2 for tf ≥ 5, 1 for

@@ -10,14 +10,29 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftSessionSpec extends AnyFunSuite with SparkTestBase {
 
+  private def filesContaining(root: String, needles: String*): Seq[String] =
+    Files.walk(Paths.get(root)).iterator.asScala
+      .filter { p =>
+        p.toString.endsWith(".scala") && {
+          val src = Files.readString(p)
+          needles.exists(src.contains)
+        }
+      }
+      .map(_.getFileName.toString).toSeq
+
   test("GraftSession.scala is the only source file that builds a SparkSession") {
     val needle = "SparkSession" + ".builder()"
-    val hits = Seq("src/main", "src/test").flatMap { root =>
-      Files.walk(Paths.get(root)).iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(needle))
-        .map(_.getFileName.toString)
-    }
+    val hits = Seq("src/main", "src/test").flatMap(filesContaining(_, needle))
     assert(hits == Seq("GraftSession.scala"))
+  }
+
+  // An operator's staged blocks are released by Fixpoint.scoped on every
+  // exit path; a direct localCheckpoint/persist or a hand-kept buffer of
+  // frames elsewhere in etl/ is a release the scope does not own.
+  test("Fixpoint.scala is the only etl source that stages or pins a frame directly") {
+    val hits = filesContaining("src/main/scala/graft/etl",
+      ".localCheckpoint" + "()", ".persist" + "()", "ArrayBuffer.empty" + "[DataFrame]")
+    assert(hits == Seq("Fixpoint.scala"))
   }
 
   test("the test session carries the factory's UTC, nanosAsLong and cleanCheckpoints") {

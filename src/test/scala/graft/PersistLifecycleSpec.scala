@@ -68,7 +68,10 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
       "quality_train", "quality_train_curve", "quality_train_eval",
       "pdf_extract",
       // round-17 eager operator: staged (g, doc) multiplicity frame
-      "ingest_novelty")
+      "ingest_novelty",
+      // local-checkpoint scopes no entry above exercised
+      "zipf_bands", "hll_union", "kmv_overlap", "cms_native", "modularity",
+      "llr_collocations", "simhash_wide_neardup")
     qs.foreach { name =>
       assert(SparkEntry.queries(name)(spark, dir).count() > 0,
         s"$name returned no rows")
@@ -90,7 +93,7 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
       "with the dir named by a file:// URI so the staleness check " +
       "provably runs through the Hadoop FileSystem path (r14 item 5)") {
     freshStart()
-    graft.etl.Dedup.clearComponentsMemo()
+    graft.etl.Memos.clearAll()
     val local = java.nio.file.Files.createTempDirectory("graft-memo-stale").toString
     // the memo sees only the URI form: fingerprinting it exercises the
     // Hadoop listStatus walk (a java.io.File walk would not resolve a
@@ -126,7 +129,7 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
       assert(graft.etl.Dedup.componentsFrame(spark, tmp) eq
         graft.etl.Dedup.componentsFrame(spark, tmp))
     } finally {
-      graft.etl.Dedup.clearComponentsMemo()
+      graft.etl.Memos.clearAll()
       Harness.deleteRecursively(new java.io.File(local))
     }
   }
@@ -162,7 +165,7 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
       "queries share ONE fixpoint build per (session, dir, data) — " +
       "same frame identity across consumers, zero pinned blocks") {
     freshStart()
-    graft.etl.QualityTrain.clearTrainMemo()
+    graft.etl.Memos.clearAll()
     val a = graft.etl.QualityTrain.trainArtifact(spark, dir)
     assert(a eq graft.etl.QualityTrain.trainArtifact(spark, dir),
       "second lookup rebuilt instead of hitting the memo")
@@ -173,7 +176,37 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
       graft.etl.QualityTrain.Rounds + 1)
     assert(graft.etl.QualityTrain.qualityTrainEval(spark, dir).count() == 1)
     assertNoPins("train artifact consumers")
-    graft.etl.QualityTrain.clearTrainMemo()
+    graft.etl.Memos.clearAll()
+  }
+
+  test("Fixpoint.scoped releases every registered frame when its body " +
+      "throws") {
+    freshStart()
+    import spark.implicits._
+    val boom = new IllegalStateException("staging failed")
+    val thrown = intercept[IllegalStateException] {
+      graft.etl.Fixpoint.scoped { scope =>
+        scope.local(Seq(1L, 2L).toDF("x"))
+        scope.local(Seq(3L).toDF("y"))
+        scope.persist(Seq(4L).toDF("z")).count()
+        throw boom
+      }
+    }
+    assert(thrown eq boom)
+    assertNoPins("throwing scope")
+  }
+
+  test("under Fixpoint.planOnly a scope exit keeps its local blocks " +
+      "readable") {
+    freshStart()
+    import spark.implicits._
+    val kept = graft.etl.Fixpoint.planOnly {
+      graft.etl.Fixpoint.scoped(_.local(Seq(1L, 2L, 3L).toDF("x")))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
+      "planOnly scope exit released its local blocks")
+    assert(kept.count() == 3L)
+    Harness.scrub(spark, keepMemo = true)
   }
 
   test("released results stay re-executable (checkpoint-backed lineage)") {

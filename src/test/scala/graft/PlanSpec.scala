@@ -1585,7 +1585,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // the artifact memo (round 17) must not hide the per-round build:
     // a warm memo would reduce the executed plans to the downstream
     // 1799-row scan and silently vacate this pin
-    graft.etl.QualityTrain.clearTrainMemo()
+    graft.etl.Memos.clearAll()
     val cp = executedPlans("quality_train")
       .mkString("\n=== next executed plan ===\n")
     assert(!cp.contains("CartesianProduct"),
