@@ -196,6 +196,44 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
     assertNoPins("throwing scope")
   }
 
+  test("corpus build releases its staged survivor sets on return and " +
+      "when its chunk write fails") {
+    freshStart()
+    val out = java.nio.file.Files.createTempDirectory("graft_corpus_pins_")
+    assert(graft.etl.CorpusPipeline.build(spark, dir, out.toString).count() == 1L)
+    assertNoPins("corpus build")
+    // every stage is staged before the chunk write, which fails because
+    // its directory would sit under a regular file
+    val blocker = java.nio.file.Files.createFile(out.resolve("not_a_dir"))
+    val thrown = intercept[org.apache.hadoop.fs.ParentNotDirectoryException] {
+      graft.etl.CorpusPipeline.build(spark, dir, s"$blocker/out")
+    }
+    assert(thrown.getMessage.contains(blocker.toString), thrown.getMessage)
+    assertNoPins("failed corpus build")
+  }
+
+  test("corpus build runs each stage once: job count pinned at sf0.001") {
+    // Each survivor set is staged once, so a count reads staged blocks.
+    // A stage left lazy re-runs its whole upstream chain at every later
+    // count and read (199 jobs here with no stage staged).
+    val MaxBuildJobs = 79
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.TestBusBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      graft.etl.CorpusPipeline.build(spark, dir,
+        java.nio.file.Files.createTempDirectory("graft_corpus_jobs_").toString)
+      org.apache.spark.graft.TestBusBridge.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= MaxBuildJobs,
+      s"corpus build launched ${jobs.get} jobs (pin $MaxBuildJobs): a stage recomputes")
+  }
+
   test("under Fixpoint.planOnly a scope exit keeps its local blocks " +
       "readable") {
     freshStart()

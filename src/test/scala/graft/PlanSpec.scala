@@ -819,6 +819,46 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       s"session_paths lost its bounded top-k:\n$spp")
   }
 
+  test("pagerank_iter / ppr_seed aggregate out-degree once, outside the " +
+      "loop, and plan the unrolled rounds with 7 exchanges") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every node, through AQE wrappers and into the cached plan that the
+    // reliable result checkpoint scans
+    def nodesOf(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodesOf(a.executedPlan)
+      case s: QueryStageExec => nodesOf(s.plan)
+      case m: InMemoryTableScanExec => m +: nodesOf(m.relation.cachedPlan)
+      case o => o +: o.children.flatMap(nodesOf)
+    }
+    def aggsOf(p: SparkPlan, column: String): Int = nodesOf(p).count {
+      case a: BaseAggregateExec => a.output.exists(_.name == column)
+      case _ => false
+    }
+    Seq("pagerank_iter", "ppr_seed").foreach { q =>
+      val plans = executedQes(SparkEntry.queries(q)(spark, dir)).map(_.executedPlan)
+      def all = plans.mkString("\n=== next executed plan ===\n")
+      // the 3 unrolled rounds run as one job (the result checkpoint)
+      val rounds = plans.filter(aggsOf(_, "inbound") > 0)
+      assert(rounds.size == 1 && aggsOf(rounds.head, "inbound") == 3,
+        s"$q: expected one plan holding the 3 rounds:\n$all")
+      assert(aggsOf(rounds.head, "outdeg") == 0,
+        s"$q aggregates out-degree inside the loop:\n${rounds.head}")
+      assert(plans.map(aggsOf(_, "outdeg")).sum == 1,
+        s"$q must aggregate out-degree exactly once:\n$all")
+      // the rounds' plan as the checkpoint job starts it, before AQE
+      // re-plans or reuses a stage: 16 exchanges before round 19
+      val initial = graft.etl.Fixpoint.planOnly {
+        SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      }
+      val exchanges = nodesOf(initial).count(_.isInstanceOf[ShuffleExchangeExec])
+      assert(exchanges == 7, s"$q rounds plan $exchanges exchanges, not 7:\n$initial")
+    }
+  }
+
   test("round-9 close-out wave keeps its claimed plan shapes") {
     // survival_hazard: the bounded day grid is localCheckpoint'ed, so
     // the triangular joins read the materialized grid (Scan
