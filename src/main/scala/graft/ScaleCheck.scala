@@ -389,16 +389,25 @@ object ScaleCheck {
     (secs, planSig(SparkEntry.queries(name)(spark, dir)), rounds)
   }
 
+  /** Third-argument names that select a one-off measurement instead of
+    * naming queries. */
+  private val Modes = Set("gramprofile", "hotgram", "incremental")
+
   def main(args: Array[String]): Unit = {
     val base = "/root/testdata/sf0.1"
     val out = if (args.length > 0) args(0) else "/tmp/graft_scale10"
     val reps = if (args.length > 1) args(1).toInt else 10
+    val mode = if (args.length > 2) args(2) else ""
+    // accept any SparkEntry query name, not only the Heavy list — the
+    // 100× tier names its family members explicitly on the CLI. Names
+    // are checked before a corpus is generated.
+    val chosen = if (args.length > 2) args.drop(2).toSeq else Heavy
+    if (!Modes(mode)) Harness.requireKnown(chosen)
     val spark = GraftSession.local()
 
     // gramprofile accepts EXTERNAL corpora (r9 verdict item 7): `pages`
     // treats args(0) as a graftpages store root instead of a
     // documents.parquet dir — never replicate into either.
-    val mode = if (args.length > 2) args(2) else ""
     val pagesMode = mode == "gramprofile" && args.length > 3 && args(3) == "pages"
     if (!pagesMode &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/documents.parquet"))) {
@@ -435,111 +444,6 @@ object ScaleCheck {
       return
     }
 
-    // Bucket-bits scaling demonstration for the mutual-kNN graph: the
-    // verified query pins bits=3 (8 cells, oracle-matched); at 10× the
-    // fixed cell count makes within-cell pairs grow ~quadratically
-    // (ratio ≈ 4.5). Growing bits with the corpus (the documented
-    // production knob, Similarity.signBucket) must restore ~linear
-    // wall — this measures both settings on the same 10× corpus.
-    if (args.length > 2 && args(2) == "knnbits") {
-      import graft.etl.GraphCuration
-      // optional 4th arg "auto": time ONLY the adaptive setting — the
-      // 100× tier's form, where the fixed bits=3 control is known-
-      // quadratic (≈10⁴× the 1× within-cell pairs) and deliberately
-      // not run; its quadratic-growth evidence is the 10× table
-      def t(dir: String, bits: Int): Double = warmSamples(spark)(
-        Harness.materialize(GraphCuration.knnGraphEdges(spark, dir, bits))).min
-      val autoOnly = args.length > 3 && args(3) == "auto"
-      // since round 10 the knob derives itself: AutoBits reads the
-      // corpus count and picks ceil(log2(n/1000)) — record what it
-      // chose at each scale alongside the manual settings it replaces
-      val auto1 = GraphCuration.adaptiveBits(Tables.embeddings(spark, base).count())
-      val autoR = GraphCuration.adaptiveBits(Tables.embeddings(spark, out).count())
-      val settings =
-        if (autoOnly) Seq("auto" -> GraphCuration.AutoBits)
-        else Seq("bits3" -> 3, "bits6" -> 6, "auto" -> GraphCuration.AutoBits)
-      val r = (settings.map { case (tag, b) =>
-        val (t1, tR) = (t(base, b), t(out, b))
-        val lbl = if (b == GraphCuration.AutoBits) s"auto($auto1->$autoR)" else s"bits=$b"
-        println(f"[scale] knn_graph $lbl%-14s 1x=${fmt(t1)}%6ss ${reps}x=${fmt(tR)}%6ss ratio=${fmt(tR / t1)}")
-        s""""$tag":{"t1":${fmt(t1)},"tR":${fmt(tR)},"ratio":${fmt(tR / t1)}}"""
-      } :+ {
-        // label_prop inherits the pair stage — time its adaptive path too
-        def lp(dir: String): Double = warmSamples(spark)(Harness.materialize(
-          GraphCuration.labelProp(spark, dir, GraphCuration.AutoBits))).min
-        val (l1, lR) = (lp(base), lp(out))
-        println(f"[scale] label_prop auto($auto1->$autoR) 1x=${fmt(l1)}%6ss ${reps}x=${fmt(lR)}%6ss ratio=${fmt(lR / l1)}")
-        s""""label_prop_auto":{"t1":${fmt(l1)},"tR":${fmt(lR)},"ratio":${fmt(lR / l1)}},"auto_bits":{"b1":$auto1,"bR":$autoR}"""
-      }).mkString("{", ",", "}")
-      println(s"""{"metric":"knn_graph_bits","replicas":$reps,"results":$r}""")
-      spark.stop()
-      return
-    }
-
-    // Skew-salting evidence for the banded LSH join (round 15, VERDICT
-    // r14 stretch 7): measure the slow-tier (band, bkey) occupancy
-    // profile on the given corpus — max bucket, buckets over the
-    // threshold, their pair-mass share — then time minhashLshFrom with
-    // salting OFF vs ON at that threshold. If no bucket clears the
-    // threshold the run documents salting as measured-unnecessary for
-    // this corpus; the InvariantSpec pair-set proof holds either way.
-    //   ScaleCheck <dir> <reps> saltcheck [threshold]
-    if (args.length > 2 && args(2) == "saltcheck") {
-      import graft.etl.Dedup
-      val thr = if (args.length > 3) args(3).toInt else 32
-      val docs = Tables(spark, out, "documents").select(col("doc_id"), col("text"))
-      val occ = Dedup.minhashSignature(docs, 8)
-        .select(explode(array(Dedup.bandStructs(8, 2, Dedup.md5BandKey): _*)).as("bs"))
-        .groupBy(col("bs.band"), col("bs.bkey"))
-        .agg(count(lit(1)).as("c"))
-      val prof = occ.agg(max(col("c")).as("max_c"),
-        sum(expr("(c * (c - 1)) div 2")).as("pair_mass"),
-        sum(when(col("c") > thr, lit(1)).otherwise(lit(0))).as("hot_buckets"),
-        sum(when(col("c") > thr, expr("(c * (c - 1)) div 2"))
-          .otherwise(lit(0L))).as("hot_pair_mass")).collect().head
-      def t(thrOpt: Int): Double = warmSamples(spark)(
-        Harness.materialize(Dedup.minhashLshFrom(docs, saltThreshold = thrOpt))).min
-      val (tOff, tOn) = (t(Int.MaxValue), t(thr))
-      println(f"[scale] saltcheck max_c=${prof.getLong(0)} hot=${prof.getLong(2)} off=${fmt(tOff)}s on=${fmt(tOn)}s")
-      println(s"""{"metric":"salt_check","dir":"$out","threshold":$thr,"max_bucket":${prof.getLong(0)},"total_pair_mass":${prof.getLong(1)},"hot_buckets":${prof.getLong(2)},"hot_pair_mass":${prof.getLong(3)},"t_off":${fmt(tOff)},"t_on":${fmt(tOn)}}""")
-      spark.stop()
-      return
-    }
-
-    // BPE rank scaling (round 18, VERDICT r17 item 4): run the merge
-    // loop at a production-ish rank over the given corpus and publish
-    // PER-ROUND wall — the per-round plan is rank-invariant (one
-    // vocab-sized pair aggregate + a 1-row broadcast rewrite), so the
-    // claim under test is a flat per-round profile (total linear in R).
-    // The oracle-verified R=3 queries are untouched; this measures the
-    // generalized knob. Learned merges print decoded (sentinels
-    // expanded through earlier rounds) — the merges.txt a tokenizer
-    // would ship.
-    //   ScaleCheck <dir> <reps> bpe [rank]
-    if (args.length > 2 && args(2) == "bpe") {
-      import graft.etl.CorpusStats
-      val rank = if (args.length > 3) args(3).toInt else 16
-      val t0 = System.nanoTime()
-      val picks = CorpusStats.bpeLearnedPicksR(spark, out, rank)
-      val rows = picks.map(_.collect().head) // bounded: rank × 1-row frames
-      val total = (System.nanoTime() - t0) / 1e9
-      val secs = CorpusStats.lastBpeRoundSecs
-      val sent = CorpusStats.sentinelAlphabet(rank)
-      val decoded = new Array[String](rank)
-      rows.zipWithIndex.foreach { case (r, i) =>
-        var p = r.getString(1)
-        ((i - 1) to 0 by -1).foreach { j => p = p.replace(sent(j), decoded(j)) }
-        decoded(i) = p
-      }
-      val perRound = rows.zipWithIndex.map { case (r, i) =>
-        println(f"[scale] bpe round ${i + 1}%2d pair=${JsonOut.quote(decoded(i))} n=${r.getLong(2)} wall=${fmt(secs(i))}s")
-        s"""{"round":${i + 1},"pair":${JsonOut.quote(decoded(i))},"n":${r.getLong(2)},"secs":${fmt(secs(i))}}"""
-      }.mkString("[", ",", "]")
-      println(s"""{"metric":"bpe_rank","dir":"$out","rank":$rank,"total_secs":${fmt(total)},"rounds":$perRound}""")
-      spark.stop()
-      return
-    }
-
     // Synthetic hot-key skew proof for the gram stage (round 19,
     // VERDICT r18 item 2; guide §2.5): plant ONE 8-gram in EVERY
     // document (append a fixed 8-word phrase to each doc of the
@@ -554,7 +458,7 @@ object ScaleCheck {
     // words cannot collide with cipher output (letters only), and
     // n_chars is deliberately left stale — neither query reads it.
     //   ScaleCheck <dir> <reps> hotgram
-    if (args.length > 2 && args(2) == "hotgram") {
+    if (mode == "hotgram") {
       val hotDir = out + "_hot"
       val phrase = " zq0 zq1 zq2 zq3 zq4 zq5 zq6 zq7"
       if (!java.nio.file.Files.exists(
@@ -589,7 +493,7 @@ object ScaleCheck {
     // paths read the same memoized pair checkpoint; production reads a
     // signature store).
     //   ScaleCheck <dir> <reps> incremental
-    if (args.length > 2 && args(2) == "incremental") {
+    if (mode == "incremental") {
       import graft.etl.{Dedup, Fixpoint, Memos}
       def med(f: => Unit): Double = central(warmSamples(spark)(f))
       val results = Seq("base" -> base, "scaled" -> out).map { case (tag, dir) =>
@@ -617,10 +521,6 @@ object ScaleCheck {
       return
     }
 
-    // accept any SparkEntry query name, not only the Heavy list — the
-    // 100× tier names its family members explicitly on the CLI
-    val chosen = if (args.length > 2) args.drop(2).toSeq else Heavy
-    Harness.requireKnown(chosen)
     val rows = chosen.map { q =>
       val (t1, p1, r1) = time(spark, q, base)
       val (tR, pR, rR) = time(spark, q, out)

@@ -128,13 +128,13 @@ object StreamStateCheck {
     // per-level histogram is the live funnel report itself.
     if (funnelMode) {
       import graft.etl.{CorpusPipeline, TextAnalysis}
+      import graft.functions.QualityKernelFunctions.gopherPassF
       val ckpt = Harness.tempDirRemovedOnExit("graft-streamfunnel")
       val docsDf = spark.read.parquet(docsPath)
         .select(col("doc_id"), col("text"))
-      val gp = udf((t: String) => TextAnalysis.gopherPass(t))
       val m3keys = TextAnalysis.withLangPredicted(
           TextAnalysis.qualityAnnotated(docsDf))
-        .filter(gp(coalesce(col("text"), lit(""))) &&
+        .filter(gopherPassF(coalesce(col("text"), lit(""))) &&
           col("predicted") =!= "unknown" &&
           col("quality_bp") >= CorpusPipeline.FunnelQualityBp)
         .select(md5(coalesce(col("text"), lit(""))).as("h"))

@@ -267,51 +267,16 @@ object CorpusStats {
     */
   private val Sentinels = Seq("\u0001", "\u0002", "\u0003")
 
-  /** Sentinel alphabet for merge rank R — DERIVED, not enumerated
-    * (round 18, VERDICT r17 item 4): ranks 1-3 keep the pinned
-    * control chars so the oracle-verified R=3 queries are
-    * bit-identical (the adaptiveBits precedent — verified tier frozen,
-    * scale knob generalized); ranks beyond 3 draw from the Unicode
-    * Private Use Area (U+E000+), which no corpus tokenizer input
-    * contains, so every rank's backward replace exactly inverts its
-    * forward replace regardless of R. Production tokenizers switch to
-    * integer token ids past a few thousand merges; the string encoding
-    * here is what keeps the loop oracle-replayable.
-    */
-  private[graft] def sentinelAlphabet(rank: Int): IndexedSeq[String] =
-    (1 to rank).map(r =>
-      if (r <= 3) Sentinels(r - 1) else (0xE000 + r - 4).toChar.toString)
-
-  /** Per-round wall seconds of the LAST [[bpeLearnedPicksR]] run — the
-    * round-scaling readout ScaleCheck's `bpe` mode publishes (each BPE
-    * round is one vocab-table pair aggregate + a 1-row broadcast
-    * rewrite; the claim under test is that per-round cost stays FLAT
-    * with rank, i.e. total cost is linear in R).
-    */
-  @volatile private[graft] var lastBpeRoundSecs: Vector[Double] = Vector.empty
-
   /** The 3 learned merges as 1-row (round, pair, n) frames — shared by
     * [[bpeTrain]] (the merge table) and [[bpeEncode]] (corpus
-    * tokenization). Pairs may contain earlier rounds' sentinels.
-    * Fixed at rank 3 — the oracle-verified tier; the rank axis lives
-    * in [[bpeLearnedPicksR]].
+    * tokenization). Pairs may contain earlier rounds' sentinels. Round
+    * r picks the globally most frequent adjacent pair of the current
+    * vocabulary and rewrites it to sentinel r. Each round is one
+    * vocab-sized pair aggregate + TakeOrdered(1) + a 1-row broadcast
+    * rewrite, vocab localCheckpoint'ed per round (the fixpoint lineage
+    * rule); the round count lands in Fixpoint.lastRounds("bpe_merges").
     */
-  private def bpeLearnedPicks(spark: SparkSession, dir: String): Vector[DataFrame] =
-    bpeLearnedPicksR(spark, dir, 3)
-
-  /** The R-round BPE merge loop (round 18): rank-parameterized form of
-    * the kernel — round r picks the globally most frequent adjacent
-    * pair of the current vocabulary and rewrites it to sentinel r.
-    * Per-round plan is IDENTICAL at every rank (one vocab-sized pair
-    * aggregate + TakeOrdered(1) + a 1-row broadcast rewrite, vocab
-    * localCheckpoint'ed per round — the fixpoint lineage rule), so
-    * cost is linear in R; round count lands in Fixpoint.lastRounds
-    * ("bpe_merges") and per-round walls in [[lastBpeRoundSecs]].
-    */
-  private[graft] def bpeLearnedPicksR(spark: SparkSession, dir: String,
-      rank: Int): Vector[DataFrame] = {
-    require(rank >= 1, s"bpe rank must be >= 1, got $rank")
-    val sent = sentinelAlphabet(rank)
+  private def bpeLearnedPicks(spark: SparkSession, dir: String): Vector[DataFrame] = {
     def topPair(wf: DataFrame, round: Int): DataFrame = {
       val pairCol = transform(sequence(lit(1), length(col("word")) - 1),
         i => col("word").substr(i, lit(2)))
@@ -324,25 +289,21 @@ object CorpusStats {
     // wf rounds are scope locals; the returned picks go to reliable
     // checkpoints — callers read them lazily, and nothing may stay
     // pinned after this returns (round-10 lifecycle rule)
-    val roundSecs = Vector.newBuilder[Double]
     Fixpoint.scoped { scope =>
       var wf = scope.local(Shingles.words(
           Tables.documents(spark, dir).select(col("doc_id"), col("text")))
         .groupBy(col("word")).agg(count(lit(1)).as("freq")))
       var picks = Vector.empty[DataFrame]
-      for (r <- 1 to rank) {
-        val t0 = System.nanoTime()
+      for (r <- 1 to Sentinels.size) {
         val top = Fixpoint.reliably(topPair(wf, r))
         picks :+= top
         // sentinel-free words are injective under replace: no re-group
         wf = scope.local(
           wf.crossJoin(broadcast(top.select(col("pair").as("mp"))))
             .select(replace(col("word"), col("mp"),
-              lit(sent(r - 1))).as("word"), col("freq")))
-        roundSecs += (System.nanoTime() - t0) / 1e9
+              lit(Sentinels(r - 1))).as("word"), col("freq")))
       }
-      Fixpoint.lastRounds.put("bpe_merges", rank)
-      lastBpeRoundSecs = roundSecs.result()
+      Fixpoint.lastRounds.put("bpe_merges", Sentinels.size)
       picks
     }
   }

@@ -59,18 +59,19 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** MinHash signatures: numHashes independent min-hashes per doc, hash_i
-    * = min over shingles of md5(seed_i || shingle). Computed inside the
-    * shingle ARRAY (array_min ∘ transform) — a pure map, no explode, no
-    * shuffle; signature extraction over 100 TB is a single scan. Docs
-    * with <3 words have no shingles and are excluded (can't near-dup
-    * match).
+  /** MinHash signatures: [[TestNumHashes]] independent min-hashes per
+    * doc, hash_i = min over shingles of md5(seed_i || shingle). Computed
+    * inside the shingle ARRAY (array_min ∘ transform) — a pure map, no
+    * explode, no shuffle; signature extraction over 100 TB is a single
+    * scan. Docs with <3 words have no shingles and are excluded (can't
+    * near-dup match).
     *
-    * Parameters trade recall for cost on the standard s-curve
-    * P(candidate | jaccard=s) = 1 − (1 − s^r)^(n/r), r = bandSize (see
+    * The banding trades recall for cost on the standard s-curve
+    * P(candidate | jaccard=s) = 1 − (1 − s^r)^(n/r), r = band size (see
     * [[candidateProbability]]); the (r/n)^(1/r) rule of thumb estimates
-    * the 50% point. [[TestNumHashes]]/[[TestBandSize]] (8/2 → exact 50%
-    * point s ≈ 0.40; the rule of thumb says 0.50) keep the oracle
+    * the 50% point. Every LSH operator here runs
+    * [[TestNumHashes]]/[[TestBandSize]] (8/2 → exact 50% point
+    * s ≈ 0.40; the rule of thumb says 0.50), which keeps the oracle
     * corpus productive; [[ProdNumHashes]]/[[ProdBandSize]] (128/4 →
     * 32 bands, exact 50% point s ≈ 0.38 with a much sharper curve) is
     * the documented production preset — same plan shape, just more
@@ -98,10 +99,9 @@ object Dedup {
     * hash columns read a computed attribute instead of re-deriving the
     * array n times.
     */
-  def minhashSignature(docs: DataFrame,
-      numHashes: Int = TestNumHashes): DataFrame =
-    minhashSignatureWith(docs, numHashes,
-      sh => graft.functions.ShingleFunctions.minhashF(sh, numHashes))
+  def minhashSignature(docs: DataFrame): DataFrame =
+    minhashSignatureWith(docs, TestNumHashes,
+      sh => graft.functions.ShingleFunctions.minhashF(sh, TestNumHashes))
 
   /** Shared signature core — ONE implementation for both hash tiers,
     * parametrized ONLY by the seeded signature kernel. The md5
@@ -195,10 +195,8 @@ object Dedup {
     * core as [[minhashLsh]]; band key = xxhash64 of the slots instead
     * of md5 (same verification layering as [[minhashSignatureFast]]).
     */
-  def minhashLshFast(docs: DataFrame, numHashes: Int = TestNumHashes,
-      bandSize: Int = TestBandSize): DataFrame =
-    lshPairsWith(minhashSignatureFast(docs, numHashes), numHashes, bandSize,
-      fastBandKey)
+  def minhashLshFast(docs: DataFrame): DataFrame =
+    lshPairsWith(minhashSignatureFast(docs), fastBandKey)
 
   /** (band, bkey) struct columns over the mh_* signature columns —
     * THE banding definition, shared by every site that bands (batch
@@ -232,97 +230,49 @@ object Dedup {
     * sides of the self-join read it instead of re-deriving the
     * signature pipeline.
     */
-  /** Banded candidate pairs. `saltThreshold` (default OFF) is the
-    * round-15 skew hardening: a band bucket holding c > threshold docs
-    * is one straggler task at 100 TB (its c² pair work lands on the
-    * single reducer owning that join key). When enabled, hot buckets
-    * split into k = ceil(c/threshold) salted sub-groups
-    * (salt = xxhash64(doc_id) mod k — deterministic), and the join
-    * covers within- AND cross-salt pairs by probing: the left side
-    * emits one row per target salt in [own salt, k), the right side
-    * keys on its own salt, so the join key (band, bkey, salt) spreads
-    * the bucket over k reducers while the PAIR SET is provably
-    * unchanged — a pair with salts a ≤ b is produced exactly once (by
-    * the a-side probing b; same-salt pairs keep the doc_id < guard),
-    * InvariantSpec-verified. Cold buckets keep k = 1 (left anti-ish:
-    * the occupancy join is a left join against the hot slice only).
-    * Cost: one extra (band, bkey)-keyed agg + left join; left-side
-    * rows grow only by Σ_hot (k − salt) ≈ (3/2)·hot rows.
-    */
-  private def lshPairsWith(sig: DataFrame, numHashes: Int, bandSize: Int,
-      bandKey: Seq[Column] => Column,
-      saltThreshold: Int = Int.MaxValue): DataFrame = {
-    val bandCols = bandStructs(numHashes, bandSize, bandKey)
+  private def lshPairsWith(sig: DataFrame,
+      bandKey: Seq[Column] => Column): DataFrame = {
+    val bandCols = bandStructs(TestNumHashes, TestBandSize, bandKey)
     // banded table: fast local checkpoint read by both self-join sides;
     // the (small) pair OUTPUT goes to reliable storage, after which the
     // band blocks are released — zero pins, memory-speed staging
-    val banded0 =
-      sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-        .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey"))
     Fixpoint.scoped { scope =>
-      if (saltThreshold == Int.MaxValue) {
-        val banded = scope.local(banded0)
-        // round 19: the checkpointed pair frame is UNSORTED — the build
-        // paid a full range exchange + sort for an order only the
-        // declared minhash_lsh query surface needs ([[minhashLsh]] adds
-        // it back on top; every other consumer aggregates, and
-        // EliminateSorts would have dropped the order from their plans
-        // anyway — guide §2.4: an orderBy used only to make output
-        // deterministic is an accidental exchange)
-        Fixpoint.reliably(banded.as("x").join(banded.as("y"),
-            col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .distinct())
-      } else {
-        val staged = scope.local(banded0)
-        val hot = staged.groupBy(col("band"), col("bkey"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") > saltThreshold)
-        val salted = scope.local(
-          staged.join(hot, Seq("band", "bkey"), "left")
-            .withColumn("k",
-              coalesce(ceil(col("c") / saltThreshold).cast("int"), lit(1)))
-            .withColumn("salt",
-              pmod(xxhash64(col("doc_id")), col("k")).cast("int"))
-            .select(col("doc_id"), col("band"), col("bkey"),
-              col("k"), col("salt")))
-        val left = salted
-          .withColumn("probe", explode(sequence(col("salt"), col("k") - 1)))
-          .select(col("doc_id").as("doc_l"), col("band").as("bl"),
-            col("bkey").as("kl"), col("salt").as("salt_l"), col("probe"))
-        val right = salted.select(col("doc_id").as("doc_r"),
-          col("band").as("br"), col("bkey").as("kr"), col("salt").as("salt_r"))
-        Fixpoint.reliably(left.join(right,
-            col("bl") === col("br") && col("kl") === col("kr") &&
-              col("probe") === col("salt_r") &&
-              (col("salt_l") =!= col("salt_r") || col("doc_l") < col("doc_r")))
-          .select(least(col("doc_l"), col("doc_r")).as("doc_a"),
-            greatest(col("doc_l"), col("doc_r")).as("doc_b"))
-          .distinct()) // unsorted like the cold branch (round 19)
-      }
+      val banded = scope.local(
+        sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
+          .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey")))
+      // round 19: the checkpointed pair frame is UNSORTED — the build
+      // paid a full range exchange + sort for an order only the
+      // declared minhash_lsh query surface needs ([[minhashLsh]] adds
+      // it back on top; every other consumer aggregates, and
+      // EliminateSorts would have dropped the order from their plans
+      // anyway — guide §2.4: an orderBy used only to make output
+      // deterministic is an accidental exchange)
+      Fixpoint.reliably(banded.as("x").join(banded.as("y"),
+          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .distinct())
     }
   }
 
-  /** LSH banding: a band key = md5 of its bandSize signature slots;
+  /** LSH banding: a band key = md5 of its [[TestBandSize]] signature slots;
     * candidate pairs = docs sharing any band key (distinct a<b pairs).
     * The self-join is per-bucket — the O(n²) blowup only happens inside
     * a bucket, which is the entire point of LSH at scale.
     *
-    * Sizing the banding for a NEW corpus: run [[lshBandAdvisor]] first
-    * — it measures the exact pair mass this join would produce at
-    * every band size tiling the signature and picks the smallest one
-    * whose candidate join stays within a linear-in-corpus budget
-    * (recall is monotone-decreasing in band size, so smallest
-    * affordable = max recall). [[lshBucketStats]] is the companion
+    * The banding is fixed at [[TestNumHashes]]/[[TestBandSize]]. For a
+    * NEW corpus, [[lshBandAdvisor]] measures the exact pair mass this
+    * join would produce at every band size tiling the signature and
+    * picks the smallest one whose candidate join stays within a
+    * linear-in-corpus budget (recall is monotone-decreasing in band
+    * size, so smallest affordable = max recall) — the evidence for
+    * changing [[TestBandSize]]. [[lshBucketStats]] is the companion
     * per-occupancy-class breakdown of the same cost.
     */
-  def minhashLsh(spark: SparkSession, dir: String,
-      numHashes: Int = TestNumHashes, bandSize: Int = TestBandSize): DataFrame =
-    pairsMemo.get(spark, dir, (numHashes, bandSize))(
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame =
+    pairsMemo.get(spark, dir, ())(
       minhashLshFrom(
-        Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-        numHashes, bandSize))
+        Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
 
   /** Session-shared LSH pair frame — [[componentsFrame]]'s pattern one
     * level down: SIX queries consume the same banded candidate pairs
@@ -332,17 +282,12 @@ object Dedup {
     * ends in a reliable checkpoint, so the memoized frame is an
     * immutable file scan; the same honesty rules apply (cleared by the
     * harness hook, bypassed under planOnly, dead sessions evicted,
-    * data-fingerprint identity — see [[SessionMemo]]). Keyed on the
-    * banding parameters so the parameterized sweep tests never collide
-    * with the default tier.
+    * data-fingerprint identity — see [[SessionMemo]]).
     */
-  private val pairsMemo = new SessionMemo[(Int, Int)]
+  private val pairsMemo = new SessionMemo[Unit]
 
-  def minhashLshFrom(docs: DataFrame,
-      numHashes: Int = TestNumHashes, bandSize: Int = TestBandSize,
-      saltThreshold: Int = Int.MaxValue): DataFrame =
-    lshPairsWith(minhashSignature(docs, numHashes), numHashes, bandSize,
-      md5BandKey, saltThreshold)
+  def minhashLshFrom(docs: DataFrame): DataFrame =
+    lshPairsWith(minhashSignature(docs), md5BandKey)
 
   /** INCREMENTAL near-dup: a new batch against the existing corpus —
     * the shape production dedup actually runs (nobody re-pairs 100 TB
@@ -355,24 +300,20 @@ object Dedup {
     * slice; production passes the real batch and reads the signature
     * store instead of recomputing it).
     */
-  def dedupIncremental(spark: SparkSession, dir: String,
-      numHashes: Int = TestNumHashes, bandSize: Int = TestBandSize): DataFrame = {
-    require(numHashes % bandSize == 0, "bands must tile the signature")
+  def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    def banded(df: DataFrame) = {
-      val sig = minhashSignature(df, numHashes)
-      val bandCols = bandStructs(numHashes, bandSize, md5BandKey)
-      sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-        .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey"))
-    }
+    val bandCols = bandStructs(TestNumHashes, TestBandSize, md5BandKey)
+    val banded = minhashSignature(docs)
+      .select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey"))
     // one signature pass for BOTH sides: banding is per-doc, so band
     // everything once, materialize the (tiny) band rows, and split by
-    // filter — two banded(filter(...)) branches would each re-run the
+    // filter — two per-side banding branches would each re-run the
     // full md5 signature pipeline (measured 2× the query cost at sf0.1).
     // Fast local staging + reliable pair output: zero pinned blocks on
     // return (the round-10 lifecycle rule).
     Fixpoint.scoped { scope =>
-      val all = scope.local(banded(docs))
+      val all = scope.local(banded)
       val batch = all.filter(col("doc_id") % 10 === 0)
       val corpus = all.filter(col("doc_id") % 10 =!= 0)
       Fixpoint.reliably(batch.as("n").join(corpus.as("c"),
@@ -950,11 +891,10 @@ object Dedup {
 
   private val componentsMemo = new SessionMemo[Unit]
 
-  def dedupComponents(spark: SparkSession, dir: String,
-      numHashes: Int = TestNumHashes, bandSize: Int = TestBandSize): DataFrame =
+  def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     // pairs route through minhashLsh so the closure build shares the
     // session's banding pass with the pair-frame consumers
-    dedupComponentsFrom(minhashLsh(spark, dir, numHashes, bandSize))
+    dedupComponentsFrom(minhashLsh(spark, dir))
 
   /** pairs(doc_a < doc_b) → (doc_id, component, cluster_size).
     *
@@ -1419,12 +1359,10 @@ object Dedup {
     * themselves — the profile prices the join WITHOUT paying for it,
     * which is the whole point at 100 TB.
     */
-  def lshBucketStats(spark: SparkSession, dir: String,
-      numHashes: Int = TestNumHashes, bandSize: Int = TestBandSize): DataFrame = {
-    require(numHashes % bandSize == 0, "bands must tile the signature")
+  def lshBucketStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val sig = minhashSignature(docs, numHashes)
-    val bandCols = bandStructs(numHashes, bandSize, md5BandKey)
+    val sig = minhashSignature(docs)
+    val bandCols = bandStructs(TestNumHashes, TestBandSize, md5BandKey)
     val occ = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
       .groupBy(col("bs.band").as("band"), col("bs.bkey").as("bkey"))
       .agg(count(lit(1)).as("c"))
@@ -1463,12 +1401,11 @@ object Dedup {
     * Σ c·(c−1)/2 the banded join would produce — at every candidate r
     * simultaneously. No s-curve model, no re-banding: doubling r can
     * only split buckets, and the advisor reads the measured split.
-    * The budget is linear in the corpus (`budgetPerDoc` candidate
-    * pairs per signed doc — candidate-join output a cluster can
-    * absorb); chosen = the SMALLEST r within budget (recall falls
-    * monotonically with r, so the smallest affordable r maximizes
-    * recall), falling back to the largest r when nothing fits (the
-    * minimum-mass configuration). Pure integer arithmetic over
+    * The budget is linear in the corpus (4 candidate pairs per signed
+    * doc — candidate-join output a cluster can absorb); chosen = the
+    * SMALLEST r within budget (recall falls monotonically with r, so
+    * the smallest affordable r maximizes recall), falling back to the
+    * largest r when nothing fits (the minimum-mass configuration). Pure integer arithmetic over
     * measured counts — DuckDB replays it bit-for-bit.
     *
     * Scale posture: one signature scan (in-array, shuffle-free), one
@@ -1477,14 +1414,13 @@ object Dedup {
     * two readers), 1-row budget/pick broadcasts. Like the profile it
     * extends, it never builds the pairs it prices.
     */
-  def lshBandAdvisor(spark: SparkSession, dir: String,
-      numHashes: Int = TestNumHashes, budgetPerDoc: Int = 4): DataFrame = {
+  def lshBandAdvisor(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val sig = minhashSignature(docs, numHashes)
+    val sig = minhashSignature(docs)
     val sizes = Iterator.iterate(TestBandSize)(_ * 2)
-      .takeWhile(r => r <= numHashes && numHashes % r == 0).toSeq
+      .takeWhile(r => r <= TestNumHashes && TestNumHashes % r == 0).toSeq
     val bandCols = sizes.flatMap { r =>
-      (0 until numHashes / r).map { b =>
+      (0 until TestNumHashes / r).map { b =>
         struct(lit(r).as("band_size"), lit(b).as("band"),
           concat_ws("|", (0 until r).map(i => col(s"mh_${b * r + i}")): _*)
             .as("key"))
@@ -1500,14 +1436,14 @@ object Dedup {
       .agg(count(lit(1)).as("n_buckets"),
         sum(col("c")).as("doc_rows"),
         sum(expr("(c * (c - 1)) div 2")).as("pair_mass")))
-    // the one-band tiling (r = numHashes) holds each signed doc exactly
+    // the one-band tiling (r = TestNumHashes) holds each signed doc exactly
     // once, so its doc_rows IS the signed-doc count — the budget base
     // without a second corpus scan
     val budget = cells.agg(
-      (sum(when(col("band_size") === numHashes, col("doc_rows")))
-        * budgetPerDoc).as("pair_budget"))
+      (sum(when(col("band_size") === TestNumHashes, col("doc_rows")))
+        * 4).as("pair_budget"))
     val j = cells.crossJoin(broadcast(budget))
-      .withColumn("n_bands", expr(s"$numHashes div band_size").cast("int"))
+      .withColumn("n_bands", expr(s"$TestNumHashes div band_size").cast("int"))
       .withColumn("within_budget", col("pair_mass") <= col("pair_budget"))
     val pick = j.agg(coalesce(
       min(when(col("within_budget"), col("band_size"))),

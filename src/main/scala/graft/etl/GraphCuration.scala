@@ -17,8 +17,9 @@ import graft.functions.VectorFunctions.{dotF, normF}
   *
   * Scale posture, per operator:
   *  - [[knnGraph]]: the pair join is SIGN-BUCKET-blocked (the
-  *    [[Similarity.signBucket]] cells — 8 cells here, 256-4096 in
-  *    production with the same expression), never all-pairs; top-k is a
+  *    [[Similarity.signBucket]] cells, [[adaptiveBits]] of the corpus
+  *    count — 8 cells at the verified scale, up to 4096 as the corpus
+  *    grows), never all-pairs; top-k is a
   *    per-node window over node-keyed partitions; the mutuality check
   *    is a self-join on the (node, nbr) pair key — all shuffle keys
   *    high-cardinality.
@@ -37,18 +38,14 @@ import graft.functions.VectorFunctions.{dotF, normF}
   */
 object GraphCuration {
 
-  /** Sentinel for [[knnGraphEdges]]/[[labelProp]]: derive the blocking
-    * bits from the corpus size instead of pinning them. */
-  val AutoBits: Int = -1
-
   /** bits = clamp(ceil(log2(n / targetCell)), 3, 12): the cell count
     * that keeps within-cell pair work roughly constant as the corpus
-    * grows — the knob BASELINE.md's `knnbits` ScaleCheck measured by
-    * hand through round 9 (bits=3 at the base corpus, bits=6 at 10×:
-    * exactly what targetCell=1000 derives — 5 cells → 3 bits, 50 cells
-    * → 6 bits). Floor 3 = the verified-oracle config; cap 12 (4096
-    * cells) = the documented production range, still far below the
-    * 64-dim sign-bit budget.
+    * grows — the setting BASELINE.md's (since retired) `knnbits`
+    * ScaleCheck measured by hand through round 9 (bits=3 at the base
+    * corpus, bits=6 at 10×: exactly what targetCell=1000 derives —
+    * 5 cells → 3 bits, 50 cells → 6 bits). Floor 3 = the
+    * verified-oracle config; cap 12 (4096 cells) = the documented
+    * production range, still far below the 64-dim sign-bit budget.
     *
     * Since round 15 the derivation is INTEGER-EXACT — the smallest
     * b ∈ [3,12] with 2^b · targetCell ≥ n (identical to the clamped
@@ -62,14 +59,10 @@ object GraphCuration {
   def adaptiveBits(nVectors: Long, targetCell: Long = 1000L): Int =
     (3 to 12).find(b => (1L << b) * targetCell >= nVectors).getOrElse(12)
 
-  /** Directed top-5 cosine neighbor lists, sign-bucket-blocked.
-    * `bits` sets the cell count (2^bits): the verified query pins 3
-    * (8 cells, oracle-matched); by default ([[AutoBits]]) bits grow
-    * with the corpus via [[adaptiveBits]] so per-cell pair work stays
-    * constant — the 10× ScaleCheck measures exactly this knob
-    * (BASELINE.md round-9/10 posture tables).
+  /** Directed top-5 cosine neighbor lists, sign-bucket-blocked into
+    * 2^bits cells.
     */
-  private def directedKnn(spark: SparkSession, dir: String, bits: Int = 3): DataFrame = {
+  private def directedKnn(spark: SparkSession, dir: String, bits: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .withColumn("nrm", normF(col("embedding")))
       .filter(col("nrm").isNotNull)
@@ -91,14 +84,14 @@ object GraphCuration {
   /** Mutual-kNN graph: an edge (src, dst) exists iff each endpoint is
     * in the other's bucket-local top-5. Mutuality is the standard
     * symmetrization that kills hub vectors (a hub appears in thousands
-    * of top-k lists but reciprocates only k of them).
+    * of top-k lists but reciprocates only k of them). The blocking
+    * bits are [[adaptiveBits]] of the corpus count, so per-cell pair
+    * work stays constant as the corpus grows (BASELINE.md round-9/10
+    * posture tables).
     */
-  def knnGraphEdges(spark: SparkSession, dir: String,
-      bits: Int = AutoBits): DataFrame = {
-    val chosen =
-      if (bits == AutoBits) adaptiveBits(Tables.embeddings(spark, dir).count())
-      else bits
-    val k = directedKnn(spark, dir, chosen)
+  def knnGraphEdges(spark: SparkSession, dir: String): DataFrame = {
+    val k = directedKnn(spark, dir,
+      adaptiveBits(Tables.embeddings(spark, dir).count()))
     val rev = k.select(col("qid").as("rqid"), col("cid").as("rcid"))
     k.join(rev, col("qid") === col("rcid") && col("cid") === col("rqid"))
       .filter(col("qid") < col("cid"))
@@ -106,15 +99,15 @@ object GraphCuration {
   }
 
   /** Verified query — since round 15 it runs the ADAPTIVE blocking
-    * ([[AutoBits]] → [[adaptiveBits]] of the corpus count), not the
-    * pinned 3: the integer-exact derivation is pure count arithmetic
+    * ([[adaptiveBits]] of the corpus count), not a pinned 3: the
+    * integer-exact derivation is pure count arithmetic
     * the DuckDB oracle replays bit-for-bit (same as embedding_neardup/
     * semdedup), so the verified plan IS the plan you'd run at 100× —
     * no more fixed-8-cell quadratic pinned by the oracle. At the
     * verified SFs (n ≤ 8000) the derivation floors at 3, so results
     * are unchanged from the pre-r15 config. */
   def knnGraph(spark: SparkSession, dir: String): DataFrame =
-    knnGraphEdges(spark, dir, AutoBits).orderBy("src", "dst")
+    knnGraphEdges(spark, dir).orderBy("src", "dst")
 
   /** Semi-supervised label propagation over the mutual-kNN graph:
     * seeds (vec_id % 4 == 0) keep their true label (clamped); two
@@ -125,16 +118,10 @@ object GraphCuration {
     * before mixture weighting (labels here are the embeddings table's
     * cluster labels; production swaps in quality/domain annotations).
     */
-  def labelProp(spark: SparkSession, dir: String,
-      bits: Int = AutoBits): DataFrame = {
-    // since round 15 the verified query ALSO runs AutoBits — the count
-    // derivation is oracle-replayable (see knnGraph), so the pinned-3
-    // escape is no longer needed anywhere
-    val edges = knnGraphEdges(spark, dir, bits)
-    lpRounds(spark, dir, edges)
+  def labelProp(spark: SparkSession, dir: String): DataFrame =
+    lpRounds(spark, dir, knnGraphEdges(spark, dir))
       .select(col("node").as("vec_id"), col("lp_round"), col("lp_label"))
       .orderBy("vec_id")
-  }
 
   /** The propagation core of [[labelProp]] over a PRECOMPUTED edge
     * frame (extracted so [[modularity]] scores the same partition
@@ -195,10 +182,9 @@ object GraphCuration {
     * output) plus one 1-row m broadcast. No window beyond
     * propagation's per-node vote rank, no division, no cartesian.
     */
-  def modularity(spark: SparkSession, dir: String,
-      bits: Int = AutoBits): DataFrame =
+  def modularity(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.scoped { scope =>
-      val edges = scope.local(knnGraphEdges(spark, dir, bits))
+      val edges = scope.local(knnGraphEdges(spark, dir))
       val lbl = scope.local(lpRounds(spark, dir, edges)
         .select(col("node"), col("lp_label")))
       val le = scope.local(edges
@@ -309,9 +295,9 @@ object GraphCuration {
     * before the wedge join — the production guard that bounds the
     * candidate-pair blowup at Σ cap·deg instead of Σ deg² (a 100 TB
     * web graph's hub pages would otherwise emit billions of wedges;
-    * same knob family as [[knnGraph]]'s `bits`). Jaccard uses the
-    * capped degree on both sides, so the ratio stays ≤ 1 by
-    * construction and exact in integer basis points.
+    * same guard family as [[knnGraph]]'s sign-bucket blocking).
+    * Jaccard uses the capped degree on both sides, so the ratio stays
+    * ≤ 1 by construction and exact in integer basis points.
     *
     * Scale posture: the wedge join is keyed by the shared neighbor
     * (high-cardinality); pair counting is a (a, b)-keyed agg; existing

@@ -20,6 +20,26 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object Pipeline {
 
+  /** The page rows of a batch of (url) rows: S6 route → S4/S5 fetch
+    * (error rows survive as status rows, then drop here) → landing
+    * frontmatter → relevance, lang and doc_id — what [[run]] and each
+    * [[runStream]] micro-batch write through the quarantine split.
+    */
+  private def pages(urls: DataFrame, transport: Transport, topic: String,
+      minIntervalMs: Long): DataFrame = {
+    val fetched = Sources.fetch(
+      urls.withColumn("engine", Urls.engineFor(col("url"))),
+      transport, minIntervalMs)
+    // landing-zone shape: frontmatter travels with the body
+    Sources.withFrontmatter(fetched)
+      .filter(!col("status").startsWith("error"))
+      .withColumn("relevance", Scoring.scorePage(col("body"), topic))
+      .withColumn("lang", lit("en")) // corpus metadata slot (K1 partition key)
+      .withColumn("doc_id", xxhash64(col("url"))) // stable distributed id
+      .select(col("doc_id"), col("url"), col("lang"), col("relevance"),
+        col("page_md"), col("body"))
+  }
+
   /** Run the flow over a frontier of (url) rows. Returns the INDEX.md
     * text (the one bounded, driver-side artifact); everything else
     * lands under `outDir` (pages/, quarantine via route=, chunks/).
@@ -27,23 +47,11 @@ object Pipeline {
   def run(spark: SparkSession, frontier: DataFrame, transport: Transport,
       outDir: String, topic: String = Scoring.PageTopic,
       minIntervalMs: Long = 0L): String = {
-    // S6 route → S4/S5 fetch (error rows survive as status rows)
-    val fetched = Sources.fetch(
-      frontier.withColumn("engine", Urls.engineFor(col("url"))),
-      transport, minIntervalMs)
-    // landing-zone shape: frontmatter travels with the body
-    val pages = Sources.withFrontmatter(fetched)
-      .filter(!col("status").startsWith("error"))
-      .withColumn("relevance", Scoring.scorePage(col("body"), topic))
-      .withColumn("lang", lit("en")) // corpus metadata slot (K1 partition key)
-      .withColumn("doc_id", xxhash64(col("url"))) // stable distributed id
     // F6: one-pass split — clean rows and quarantined rows in one write
-    Sinks.writeRouted(
-      pages.select(col("doc_id"), col("url"), col("lang"), col("relevance"),
-        col("page_md"), col("body")),
+    Sinks.writeRouted(pages(frontier, transport, topic, minIntervalMs),
       "body", s"$outDir/pages")
     // G1: code-aware chunks from the clean partition only. The read-back
-    // (rather than reusing `pages`) avoids re-running the effectful
+    // (rather than reusing the page rows) avoids re-running the effectful
     // fetch; an all-error/empty frontier leaves no parquet footers, and
     // a pipeline whose fetch deliberately degrades failures to rows must
     // not die one stage later on UNABLE_TO_INFER_SCHEMA — it returns the
@@ -97,21 +105,12 @@ object Pipeline {
       .trigger(Trigger.ProcessingTime(0))
       .option("checkpointLocation", s"$outDir/ckpt")
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val fetched = Sources.fetch(
-          batch.withColumn("engine", Urls.engineFor(col("url"))),
-          transport, minIntervalMs)
-        val pages = Sources.withFrontmatter(fetched)
-          .filter(!col("status").startsWith("error"))
-          .withColumn("relevance", Scoring.scorePage(col("body"), topic))
-          .withColumn("lang", lit("en"))
-          .withColumn("doc_id", xxhash64(col("url")))
-          .select(col("doc_id"), col("url"), col("lang"), col("relevance"),
-            col("page_md"), col("body"))
         // exactly-once under replay: foreachBatch is at-least-once, so a
         // batch re-run after a crash/restart must land in the SAME place
         // — overwrite of a batch-id directory is idempotent, a flat
         // append would duplicate every replayed page
-        Sinks.writeRouted(pages, "body", s"$outDir/pages/batch=$id",
+        Sinks.writeRouted(pages(batch, transport, topic, minIntervalMs),
+          "body", s"$outDir/pages/batch=$id",
           org.apache.spark.sql.SaveMode.Overwrite)
         ()
       }

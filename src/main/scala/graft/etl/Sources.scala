@@ -317,24 +317,4 @@ object Sources {
       .when(bytes < 1024 * 1024,
         concat(round(bytes / 1024.0, 1).cast("string"), lit(" KB")))
       .otherwise(concat(round(bytes / (1024.0 * 1024.0), 1).cast("string"), lit(" MB")))
-
-  /** Engine limits (config/limits.yaml mirror — constants become plan
-    * literals, Catalyst constant-folds them).
-    */
-  case class Limits(
-    maxDepth: Int = 3,            // limits.yaml:102
-    maxPagesDefault: Int = 20,    // limits.yaml:103
-    maxPagesHard: Int = 50,       // limits.yaml:104
-    skipThreshold: Int = 5,       // limits.yaml:119
-    maxCharsPerFile: Int = 20000, // limits.yaml:87
-    maxSnapshotChars: Int = 30000,// limits.yaml:88
-    maxTotalOutput: Int = 50000,  // limits.yaml:89
-    summaryChars: Int = 500,      // limits.yaml:153
-    chunkChars: Int = 1000,       // limits.yaml:166-170
-    chunkOverlap: Int = 100,
-    maxChunksPerFile: Int = 50,
-    imageMinPx: Int = 100,        // limits.yaml:57
-    imagesPerSession: Int = 15)   // limits.yaml:48
-
-  val DefaultLimits: Limits = Limits()
 }

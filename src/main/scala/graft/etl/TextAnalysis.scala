@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 
 /** North-star text-analysis operators for a training-data pipeline
@@ -225,34 +226,14 @@ object TextAnalysis {
   /** Per-row scala form of the [[gopherRules]] verdict — the streaming
     * funnel's m1 gate, where the relational form's word explode +
     * doc-keyed aggregations would be a stateful shuffle per
-    * micro-batch. Semantics are the SAME five rules over the same
-    * word split; any drift fails StreamingSpec's exact stream==batch
-    * funnel parity (the mechanized-enforcement rule — this is the one
-    * permitted re-statement, and the stop list is shared).
+    * micro-batch. It IS the compiled kernel
+    * ([[graft.functions.QualityKernelOps.gopherPass]], code-point
+    * lengths like Spark's `length`), so the streaming funnel, the
+    * batch funnel and the trainer labels share one statement of the
+    * five rules; null reads as "".
     */
-  def gopherPass(text: String): Boolean = {
-    val t = if (text == null) "" else text
-    val words = t.split(" ").filter(_.nonEmpty)
-    val nWords = words.length.toLong
-    val sumLen = words.iterator.map(_.length.toLong).sum
-    val alphaWords = words.count(_.exists(c =>
-      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z'))).toLong
-    val stopHits = GopherStops.count(words.contains).toLong
-    // the repeat rule reads cnt·len of the top bigram (ties cnt desc →
-    // length desc; the bigram-asc tie-break never changes the product)
-    val top2Chars: Long =
-      if (words.length < 2) 0L
-      else words.iterator.sliding(2).withPartial(false)
-        .map(a => a.head + " " + a(1))
-        .toSeq.groupBy(identity).iterator
-        .map { case (bg, g) => (g.size.toLong, bg.length.toLong) }
-        .maxBy(identity) match { case (c, l) => c * l }
-    (nWords >= 50 && nWords <= 100000) &&
-      (nWords > 0 && sumLen >= nWords * 3 && sumLen <= nWords * 10) &&
-      (nWords > 0 && alphaWords * 10 >= nWords * 8) &&
-      stopHits >= 2 &&
-      top2Chars * 5 <= t.length.toLong
-  }
+  def gopherPass(text: String): Boolean =
+    graft.functions.QualityKernelOps.gopherPass(UTF8String.fromString(text))
 
   def gopherRules(spark: SparkSession, dir: String): DataFrame = {
     // ONE compiled pass per document (round 18): the five rule

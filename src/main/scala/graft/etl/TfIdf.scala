@@ -88,9 +88,10 @@ object TfIdf {
   }
 
   /** ONE home for the Okapi BM25 score expression (k1=1.2, b=0.75) —
-    * shared by [[bm25TopK]], [[mrrEval]], [[apEval]] and [[ndcgEval]]
-    * (VERDICT r16 item 3: the pasted copies were the same silent-
-    * divergence class QualityCtes eliminated in the oracles). Expects
+    * shared by [[bm25TopK]] and, through [[evalScored]], every
+    * [[EvalTerms]] eval (VERDICT r16 item 3: the pasted copies were the
+    * same silent-divergence class QualityCtes eliminated in the
+    * oracles). Expects
     * `tf`, `df`, `dl` columns in scope; `n` = doc count of the scored
     * block, `sumDl` = Σ dl over it. Determinism: every factor is a
     * rational of integer aggregates combined in the SAME textual
@@ -453,6 +454,24 @@ object TfIdf {
   val EvalTerms: Seq[String] = Seq(
     "spark", "window", "hash", "merge", "scan", "batch", "vector", "filter")
 
+  /** The corpus-wide BM25 prelude shared by the [[EvalTerms]] evals:
+    * the word stream, and per (doc, eval term) its tf, df, dl and
+    * [[bm25Score]]. Runs two driver actions, in this order: the doc
+    * count and the Σ dl scalar.
+    */
+  private def evalScored(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val n = docs.count() // corpus scalar, same role as bm25TopK's
+    val words = Shingles.words(docs)
+    val tf = words.filter(col("word").isin(EvalTerms: _*))
+      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
+    val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+    val sumDl = dl.agg(sum(col("dl"))).head.getLong(0)
+    val dfq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
+    (words, tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
+      .withColumn("bm25", bm25Score(n, sumDl)))
+  }
+
   /** Ranking-quality eval of the BM25 retriever: for each query term,
     * rank the WHOLE corpus by the [[bm25TopK]] score (same Okapi
     * formula and textual operation order, corpus-wide here), call a
@@ -469,16 +488,7 @@ object TfIdf {
     * the window exactly as in topk_native).
     */
   def mrrEval(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val n = docs.count() // corpus scalar, same role as bm25TopK's
-    val words = Shingles.words(docs)
-    val tf = words.filter(col("word").isin(EvalTerms: _*))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-    val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val sumDl = dl.agg(sum(col("dl"))).head.getLong(0)
-    val dfq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val scored = tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
-      .withColumn("bm25", bm25Score(n, sumDl))
+    val scored = evalScored(spark, dir)._2
       .withColumn("rel", when(col("tf") >= 3, 1L).otherwise(0L))
     val w = Window.partitionBy(col("word"))
       .orderBy(col("bm25").desc, col("doc_id").asc)
@@ -515,16 +525,7 @@ object TfIdf {
     */
   def apEval(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.scoped { scope =>
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val n = docs.count()
-      val words = Shingles.words(docs)
-      val tf = words.filter(col("word").isin(EvalTerms: _*))
-        .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val sumDl = dl.agg(sum(col("dl"))).head.getLong(0)
-      val dfq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-      val scored = scope.local(tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
-        .withColumn("bm25", bm25Score(n, sumDl))
+      val scored = scope.local(evalScored(spark, dir)._2
         .withColumn("rel", when(col("tf") >= 3, 1L).otherwise(0L)))
       val w = Window.partitionBy(col("word"))
         .orderBy(col("bm25").desc, col("doc_id").asc)
@@ -566,16 +567,7 @@ object TfIdf {
     * the term; both DCG sums are |terms|-keyed aggs over ≤ 5 rows.
     */
   def ndcgEval(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val n = docs.count()
-    val words = Shingles.words(docs)
-    val tf = words.filter(col("word").isin(EvalTerms: _*))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-    val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val sumDl = dl.agg(sum(col("dl"))).head.getLong(0)
-    val dfq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val scored = tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
-      .withColumn("bm25", bm25Score(n, sumDl))
+    val scored = evalScored(spark, dir)._2
       .withColumn("rel",
         when(col("tf") >= 5, 2L).when(col("tf") >= 3, 1L).otherwise(0L))
     val wSys = Window.partitionBy(col("word"))
@@ -617,20 +609,7 @@ object TfIdf {
     * — both scans term/doc-pruned, never a third.
     */
   def queryExpansion(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val n = docs.count()
-    val words = Shingles.words(docs)
-    val tf = words.filter(col("word").isin(EvalTerms: _*))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-    val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val sumDl = dl.agg(sum(col("dl"))).head.getLong(0)
-    val dfq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val idf = log(lit(1.0) +
-      (lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val denom = col("tf") + lit(1.2) *
-      (lit(0.25) + lit(0.75) * col("dl") * lit(n.toDouble) / lit(sumDl.toDouble))
-    val scored = tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
-      .withColumn("bm25", round(idf * (col("tf") * lit(2.2)) / denom, 4))
+    val (words, scored) = evalScored(spark, dir)
     val wSys = Window.partitionBy(col("word"))
       .orderBy(col("bm25").desc, col("doc_id").asc)
     val prf = scored.withColumn("rk", row_number().over(wSys))
@@ -666,20 +645,7 @@ object TfIdf {
     * term frequency, not doc length); one rank window over candidates.
     */
   def bestSnippet(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val n = docs.count()
-    val words = Shingles.words(docs)
-    val tf = words.filter(col("word").isin(EvalTerms: _*))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-    val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val sumDl = dl.agg(sum(col("dl"))).head.getLong(0)
-    val dfq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val idf = log(lit(1.0) +
-      (lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val denom = col("tf") + lit(1.2) *
-      (lit(0.25) + lit(0.75) * col("dl") * lit(n.toDouble) / lit(sumDl.toDouble))
-    val scored = tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
-      .withColumn("bm25", round(idf * (col("tf") * lit(2.2)) / denom, 4))
+    val (words, scored) = evalScored(spark, dir)
     val wSys = Window.partitionBy(col("word"))
       .orderBy(col("bm25").desc, col("doc_id").asc)
     val top1 = scored.withColumn("rk", row_number().over(wSys))

@@ -13,11 +13,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * path (round 18 optimization).
   *
   * [[QualityKernelOps.gopherPass]] is the gopher gate VERDICT as one
-  * in-row pass — semantically the [[graft.etl.TextAnalysis.gopherPass]]
-  * streaming twin (same five rules, same word split, same tie-breaks),
-  * producing values identical to the relational `gopherRules` pipeline
-  * (word explode + two doc-keyed aggs + a bigram rank window) that the
-  * trainer's label pass previously executed per artifact build. Counts
+  * in-row pass — the one statement of the five rules, which
+  * [[graft.etl.TextAnalysis.gopherPass]] (the streaming funnel's gate)
+  * calls directly, producing values identical to the relational
+  * `gopherRules` pipeline (word explode + two doc-keyed aggs + a
+  * bigram rank window) that the trainer's label pass previously
+  * executed per artifact build. Counts
   * use code points ([[UTF8String.numChars]]) exactly like Spark's
   * `length`.
   *

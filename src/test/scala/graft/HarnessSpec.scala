@@ -69,4 +69,13 @@ class HarnessSpec extends AnyFunSuite with SparkTestBase {
     assertRejected(pd, pdLog)
     assert(!pdLog.contains("====="))
   }
+
+  test("ScaleCheck fails on a retired mode name before generating a corpus") {
+    val out = Files.createTempDirectory("graft-scale-typo")
+    val (code, log) = ChildJvm.run("graft.ScaleCheck", Seq(out.toString, "1", "saltcheck"))
+    assert(code != 0 && log.contains("unknown queries: saltcheck"),
+      s"exit $code:\n${ChildJvm.tail(log)}")
+    assert(!Files.exists(out.resolve("documents.parquet")))
+    Files.delete(out)
+  }
 }

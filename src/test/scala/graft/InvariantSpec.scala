@@ -596,39 +596,6 @@ class InvariantSpec extends AnyFunSuite with SparkTestBase {
         s"extra=${(banded -- brute).take(5)}")
   }
 
-  test("banded LSH pair set is INVARIANT under hot-bucket salt-splitting " +
-      "(round-15 skew hardening, VERDICT r14 stretch 7)") {
-    import graft.etl.Dedup
-    // forced skew: 40 identical docs share every band key — one bucket
-    // of occupancy 40, far over the threshold, so the salted path
-    // genuinely splits (k = ceil(40/4) = 10) and covers within- AND
-    // cross-salt pairs; the varied tail exercises cold buckets (k=1)
-    val skewTexts = (1L to 40L).map(i =>
-      (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa")) ++
-      (41L to 80L).map(i => (i, s"unique text number $i with words " +
-        s"${"w" + i} ${"v" + (i % 7)} tail common suffix phrase"))
-    val skewDocs = skewTexts.toDF("doc_id", "text")
-    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.as[(Long, Long)].collect().toSet
-    val plain = pairSet(Dedup.minhashLshFrom(skewDocs))
-    val salted = pairSet(Dedup.minhashLshFrom(skewDocs, saltThreshold = 4))
-    assert(plain.size >= (40 * 39) / 2, s"skew bucket too small: ${plain.size}")
-    assert(salted == plain,
-      s"salting changed the pair set: only-plain=${(plain -- salted).take(5)} " +
-        s"only-salted=${(salted -- plain).take(5)}")
-    // ...and on the real corpus (organic bucket sizes, threshold low
-    // enough that several buckets actually split)
-    val real = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"))
-    val realPlain = pairSet(Dedup.minhashLshFrom(real))
-    val realSalted = pairSet(Dedup.minhashLshFrom(real, saltThreshold = 2))
-    assert(realPlain.nonEmpty)
-    assert(realSalted == realPlain,
-      s"salting changed the real-corpus pair set: " +
-        s"only-plain=${(realPlain -- realSalted).take(5)} " +
-        s"only-salted=${(realSalted -- realPlain).take(5)}")
-  }
-
   test("quality_train pocket invariant: the eval's chosen_round is the " +
        "valid-mistake argmin of the published curve (ties to the " +
        "earliest round), and the shipped vector covers every bucket") {

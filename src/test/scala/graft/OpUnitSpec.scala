@@ -1002,13 +1002,20 @@ class OpUnitSpec extends AnyFunSuite with SparkTestBase {
     assert(curve == curve.sorted, curve.toString)
   }
 
-  test("knnGraphEdges AutoBits reproduces the pinned bits=3 result at " +
-       "the verified corpus scale") {
-    import graft.etl.GraphCuration
-    val dir = "/root/testdata/sf0.001"
-    val auto = GraphCuration.knnGraphEdges(spark, dir).collect().toSet
-    val pinned = GraphCuration.knnGraphEdges(spark, dir, bits = 3).collect().toSet
-    assert(auto == pinned, "adaptive blocking diverged from the oracle config")
+  test("gopherPass: the streaming gate's verdict equals the compiled " +
+       "gopher_pass kernel on astral-plane words (code-point lengths)") {
+    import graft.etl.TextAnalysis
+    import graft.functions.QualityKernelFunctions.gopherPassF
+    // 62 words, every rule but mean word length clearly met; each w_i
+    // carries five U+1F600, so the mean is 476/62 ≤ 10 in code points
+    // (Spark's `length`) but 776/62 > 10 in UTF-16 units
+    val emoji = new String(Character.toChars(0x1F600)) * 5
+    val text = "the and " + (0 until 60).map(i => s"w$i$emoji").mkString(" ")
+    val kernel = Seq(text).toDF("text").select(gopherPassF(col("text")))
+      .as[Boolean].head()
+    assert(kernel, "gopher_pass counts code points: this text passes")
+    assert(TextAnalysis.gopherPass(text) == kernel,
+      "the streaming gate diverged from the batch kernel")
   }
 
   test("RangeJoin.bandCount: band edges are inclusive, bucket-boundary " +

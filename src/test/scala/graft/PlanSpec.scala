@@ -859,6 +859,42 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("crawl_bfs reads its level state from local checkpoints and " +
+      "writes one reliable checkpoint, for its result") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.hadoop.fs.Path
+    def nodesOf(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodesOf(a.executedPlan)
+      case s: QueryStageExec => nodesOf(s.plan)
+      case m: InMemoryTableScanExec => m +: nodesOf(m.relation.cachedPlan)
+      case o => o +: o.children.flatMap(nodesOf)
+    }
+    def rddDirs(): Set[String] =
+      spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
+        val p = new Path(d)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(p)) Nil
+        else fs.listStatus(p).toSeq.map(_.getPath.getName).filter(_.startsWith("rdd-"))
+      }.toSet
+    val before = rddDirs()
+    val plans = executedQes(graft.etl.Crawl.crawlBfs(spark, dir)).map(_.executedPlan)
+    val added = rddDirs() -- before
+    def all = plans.mkString("\n=== next executed plan ===\n")
+    assert(added.size == 1, s"crawl_bfs wrote ${added.size} reliable " +
+      s"checkpoints (${added.mkString(", ")}), expected 1")
+    val scanned = plans.flatMap(nodesOf).collect {
+      case s: RDDScanExec if s.rdd.isCheckpointed => s.rdd
+    }.distinct
+    val (local, reliable) = scanned.partition(_.getCheckpointFile.isEmpty)
+    assert(local.size == graft.etl.Crawl.MaxDepth,
+      s"expected one local-checkpoint scan per level, got ${local.size}:\n$all")
+    // the only reliable checkpoint read is the result's, by the caller
+    assert(reliable.flatMap(_.getCheckpointFile).map(new Path(_).getName).toSet == added,
+      s"level state read from reliable checkpoints:\n$all")
+  }
+
   test("round-9 close-out wave keeps its claimed plan shapes") {
     // survival_hazard: the bounded day grid is localCheckpoint'ed, so
     // the triangular joins read the materialized grid (Scan
