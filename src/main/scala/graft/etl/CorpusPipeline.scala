@@ -27,17 +27,26 @@ import graft.Tables
   * (dedupComponentsFrom), and the chunker a pure generator. Each
   * survivor set (kept1, capped, kept2, kept3, clipped, kept4, sampled)
   * is staged ONCE through one [[Fixpoint.scoped]] local checkpoint, the
-  * paper's materialized stage handoff: its count and every later read
-  * (the joins that read a stage two or three times, the chunk write)
-  * scan the staged blocks instead of re-running the lineage from the
-  * documents scan. Unstaged, every count re-ran the whole upstream
-  * chain: a 5,000-document build launched 199 jobs and took ~9× its
-  * stage-by-stage replay (4-core host); staged, 79 jobs and ~1.2×. Local
-  * checkpoints are MEMORY_AND_DISK, so a corpus-sized stage spills
-  * rather than fails; the returned report is a local relation, so the
-  * scope releases every staged block on exit, normal or exceptional.
-  * Per-stage counts are one driver-side scalar per stage (the build
-  * report — same discipline as Pipeline.run's artifacts).
+  * paper's materialized stage handoff: every later read (the joins that
+  * read a stage two or three times, the chunk write) scans the staged
+  * blocks instead of re-running the lineage from the documents scan,
+  * and the stage's survivor count is observed in its staging job
+  * ([[Fixpoint.Scope.localObserved]]) rather than by a second job over
+  * the blocks. The input count rides the quality gate's job and the
+  * chunk count the chunk write. The gates filter in place: the quality
+  * score is a column of the one documents scan, and the entropy is a
+  * column of the span-clip stage, so nothing is joined back. The LSH
+  * pairs and the components closure are read only here, so they are
+  * staged in this scope, with no reliable-checkpoint files. Unstaged,
+  * every count re-ran the whole upstream chain: a 5,000-document build
+  * launched 199 jobs and took ~9× its stage-by-stage replay (4-core
+  * host); staged and counted with `count()`, 79 jobs; counted in the
+  * staging jobs, 54. Local checkpoints are MEMORY_AND_DISK, so a
+  * corpus-sized stage spills rather than fails; the returned report is
+  * a local relation, so the scope releases every staged block on exit,
+  * normal or exceptional. Per-stage counts are one driver-side scalar
+  * per stage (the build report — same discipline as Pipeline.run's
+  * artifacts).
   */
 object CorpusPipeline {
 
@@ -53,17 +62,15 @@ object CorpusPipeline {
     */
   def build(spark: SparkSession, dir: String, outDir: String): DataFrame =
     Fixpoint.scoped { scope =>
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      val nInput = docs.count()
+      val (docs, nInput) = Fixpoint.observed(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text"), col("lang"), col("source")))
 
       // 1. quality gate (same basis-point score as the quality_score
-      //    query); quality_bp rides along so the cap needs no rescore
-      val kept1 = scope.local(docs.join(
-        TextAnalysis.qualityFrom(docs)
-          .filter(col("quality_bp") >= QualityFloorBp).select("doc_id", "quality_bp"),
-        Seq("doc_id")))
-      val nQuality = kept1.count()
+      //    query), filtered in place on the one documents scan;
+      //    quality_bp rides along so the cap needs no rescore
+      val (kept1, nQuality) = scope.localObserved(TextAnalysis.qualityAnnotated(docs)
+        .filter(col("quality_bp") >= QualityFloorBp)
+        .select(col("doc_id"), col("text"), col("lang"), col("source"), col("quality_bp")))
 
       // 1b. per-source domain cap (round 6): keep at most DomainCapDocs
       //     best-quality docs per source so no domain dominates the mix
@@ -71,48 +78,47 @@ object CorpusPipeline {
       val wSrc = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source"))
         .orderBy(col("quality_bp").desc, col("doc_id").asc)
-      val capped = scope.local(kept1
+      val (capped, nDomCap) = scope.localObserved(kept1
         .withColumn("src_rank", row_number().over(wSrc))
         .filter(col("src_rank") <= DomainCapDocs)
         .drop("quality_bp", "src_rank"))
-      val nDomCap = capped.count()
 
       // 2. exact dedup: one survivor per distinct text (min doc_id)
-      val kept2 = scope.local(capped.join(
+      val (kept2, nExact) = scope.localObserved(capped.join(
         Dedup.dedupExactFrom(capped).select(col("canonical_doc").as("doc_id")),
         Seq("doc_id")))
-      val nExact = kept2.count()
 
       // 3. near-dup canonicalization: LSH candidates → connected
-      //    components → best copy per cluster (longest text, id tie-break)
-      val comp = Dedup.dedupComponentsFrom(
-        Dedup.minhashLshFrom(kept2.select(col("doc_id"), col("text"))))
+      //    components → best copy per cluster (longest text, id
+      //    tie-break). Pairs and components are read only here, so they
+      //    stay in this scope's blocks: no checkpoint files.
+      val pairs = scope.local(
+        Dedup.minhashLshIn(scope, kept2.select(col("doc_id"), col("text"))))
+      val comp = scope.local(Dedup.dedupComponentsIn(scope, pairs))
       val keepers = comp
         .join(kept2.select(col("doc_id"), length(col("text")).as("len")), Seq("doc_id"))
         .groupBy(col("component"))
         .agg(max(struct(col("len"), (-col("doc_id")).as("nid"))).as("m"))
         .select((-col("m.nid")).as("doc_id"))
       val clustered = comp.select("doc_id")
-      val kept3 = scope.local(kept2.join(clustered, Seq("doc_id"), "left_anti")
-        .unionByName(kept2.join(keepers, Seq("doc_id"))))
-      val nNearDup = kept3.count()
+      val (kept3, nNearDup) = scope.localObserved(
+        kept2.join(clustered, Seq("doc_id"), "left_anti")
+          .unionByName(kept2.join(keepers, Seq("doc_id"))))
 
       // 3b. span clipping (round 6): remove cross-survivor duplicated
       //     8-gram spans from the texts themselves (Lee et al. clip, not
-      //     drop), then drop documents the clip hollowed out
-      val clipped = scope.local(Dedup.spanClipFrom(kept3.select(col("doc_id"), col("text")))
-        .filter(col("n_words") - col("n_removed") >= MinCleanWords)
-        .select(col("doc_id"), col("clean_text").as("text"))
-        .join(kept3.select(col("doc_id"), col("lang")), Seq("doc_id")))
-      val nClipped = clipped.count()
+      //     drop), then drop documents the clip hollowed out. The
+      //     character entropy (3c's signal) is a column of this stage.
+      val (clipped, nClipped) = scope.localObserved(TextAnalysis.withCharEntropy(
+        Dedup.spanClipFrom(kept3.select(col("doc_id"), col("text")))
+          .filter(col("n_words") - col("n_removed") >= MinCleanWords)
+          .select(col("doc_id"), col("clean_text").as("text"))
+          .join(kept3.select(col("doc_id"), col("lang")), Seq("doc_id"))))
 
       // 3c. character-entropy floor (round 6): a clip can leave
       //     degenerate repetition that word stats miss
-      val kept4 = scope.local(clipped.join(
-        TextAnalysis.charEntropyFrom(clipped)
-          .filter(col("entropy") >= EntropyFloor).select("doc_id"),
-        Seq("doc_id")))
-      val nEntropy = kept4.count()
+      val (kept4, nEntropy) = scope.localObserved(clipped
+        .filter(col("entropy") >= EntropyFloor).drop("entropy"))
 
       // 4. per-language mix rebalance toward a uniform budget (the
       //    mix_weights rates driving a salted-hash bucket cut)
@@ -124,20 +130,19 @@ object CorpusPipeline {
         .select(col("lang"),
           least(lit(10000L),
             expr("(10000 * (total div n_langs)) div n_tokens")).as("rate_bp"))
-      val sampled = scope.local(kept4.join(broadcast(rates), Seq("lang"))
+      val (sampled, nSampled) = scope.localObserved(kept4.join(broadcast(rates), Seq("lang"))
         .filter(Splits.hashBucket(col("doc_id"), "mix:") * lit(100) < col("rate_bp")))
-      val nSampled = sampled.count()
 
-      // 5. RAG chunking (reference chunk_size/overlap limits)
-      val chunks = Chunker.chunk(sampled, col("text"), ChunkSize, ChunkOverlap)
-        .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
+      // 5. RAG chunking (reference chunk_size/overlap limits), counted
+      //    as the writer consumes it
+      val (chunks, nChunks) = Fixpoint.observed(
+        Chunker.chunk(sampled, col("text"), ChunkSize, ChunkOverlap)
+          .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk")))
       chunks.write.mode("overwrite").partitionBy("lang").parquet(s"$outDir/chunks")
-      val written = spark.read.parquet(s"$outDir/chunks")
-      val nChunks = written.count()
 
       import spark.implicits._
-      val report = Seq((nInput, nQuality, nDomCap, nExact, nNearDup, nClipped,
-          nEntropy, nSampled, nChunks))
+      val report = Seq((nInput(), nQuality, nDomCap, nExact, nNearDup, nClipped,
+          nEntropy, nSampled, nChunks()))
         .toDF("n_input", "n_quality", "n_domcap", "n_exact", "n_neardup",
           "n_clipped", "n_entropy", "n_sampled", "n_chunks")
       report.write.mode("overwrite").parquet(s"$outDir/report")
@@ -151,7 +156,7 @@ object CorpusPipeline {
 
   /** ORACLE-VERIFIED curation funnel — the declarative twin of
     * [[build]]: where build() local-checkpoints each stage's survivors
-    * once and counts the staged blocks driver-side (an
+    * once and observes each survivor count in that staging job (an
     * artifact-writing pipeline), this computes the
     * whole survivorship curve in ONE plan with no per-stage actions —
     * the "how much corpus survives each gate" report every training-

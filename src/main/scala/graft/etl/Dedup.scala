@@ -225,35 +225,36 @@ object Dedup {
     * the band's signature slots; candidate pairs = docs sharing any
     * band key (distinct a<b pairs). The self-join is per-bucket — the
     * O(n²) blowup only happens inside a bucket, which is the entire
-    * point of LSH at scale. The banded table is materialized once
-    * (reliable checkpoint — nothing pinned outlives the call) so both
-    * sides of the self-join read it instead of re-deriving the
-    * signature pipeline.
+    * point of LSH at scale. The banded table is staged once in `scope`
+    * (a local checkpoint) so both sides of the self-join read it
+    * instead of re-deriving the signature pipeline; the pair frame is
+    * returned LAZY over those blocks, so it is valid only inside
+    * `scope`. [[lshPairsWith]] is the standalone form: it writes the
+    * (small) pair output to reliable storage, after which the band
+    * blocks are released — zero pins, memory-speed staging.
     */
-  private def lshPairsWith(sig: DataFrame,
+  private def lshPairsIn(scope: Fixpoint.Scope, sig: DataFrame,
       bandKey: Seq[Column] => Column): DataFrame = {
     val bandCols = bandStructs(TestNumHashes, TestBandSize, bandKey)
-    // banded table: fast local checkpoint read by both self-join sides;
-    // the (small) pair OUTPUT goes to reliable storage, after which the
-    // band blocks are released — zero pins, memory-speed staging
-    Fixpoint.scoped { scope =>
-      val banded = scope.local(
-        sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-          .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey")))
-      // round 19: the checkpointed pair frame is UNSORTED — the build
-      // paid a full range exchange + sort for an order only the
-      // declared minhash_lsh query surface needs ([[minhashLsh]] adds
-      // it back on top; every other consumer aggregates, and
-      // EliminateSorts would have dropped the order from their plans
-      // anyway — guide §2.4: an orderBy used only to make output
-      // deterministic is an accidental exchange)
-      Fixpoint.reliably(banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct())
-    }
+    val banded = scope.local(
+      sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
+        .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey")))
+    // round 19: the pair frame is UNSORTED — the build paid a full
+    // range exchange + sort for an order only the declared minhash_lsh
+    // query surface needs ([[minhashLsh]] adds it back on top; every
+    // other consumer aggregates, and EliminateSorts would have dropped
+    // the order from their plans anyway — guide §2.4: an orderBy used
+    // only to make output deterministic is an accidental exchange)
+    banded.as("x").join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .distinct()
   }
+
+  private def lshPairsWith(sig: DataFrame,
+      bandKey: Seq[Column] => Column): DataFrame =
+    Fixpoint.scoped(s => Fixpoint.reliably(lshPairsIn(s, sig, bandKey)))
 
   /** LSH banding: a band key = md5 of its [[TestBandSize]] signature slots;
     * candidate pairs = docs sharing any band key (distinct a<b pairs).
@@ -288,6 +289,13 @@ object Dedup {
 
   def minhashLshFrom(docs: DataFrame): DataFrame =
     lshPairsWith(minhashSignature(docs), md5BandKey)
+
+  /** [[minhashLshFrom]]'s pairs as a lazy frame over blocks staged in
+    * `scope` — for a caller that reads them only inside its own scope
+    * ([[CorpusPipeline.build]]) and needs no checkpoint file.
+    */
+  private[etl] def minhashLshIn(scope: Fixpoint.Scope, docs: DataFrame): DataFrame =
+    lshPairsIn(scope, minhashSignature(docs), md5BandKey)
 
   /** INCREMENTAL near-dup: a new batch against the existing corpus —
     * the shape production dedup actually runs (nobody re-pairs 100 TB
@@ -899,70 +907,75 @@ object Dedup {
   /** pairs(doc_a < doc_b) → (doc_id, component, cluster_size).
     *
     * Lineage discipline: every round ends in an eager LOCAL checkpoint
-    * ([[Fixpoint.Scope.local]]), not `persist()`. A persist only truncates
-    * RECOMPUTATION — the analyzed plan still nests the previous round's
-    * plan (twice, via the pointer-jump self-join), so with persist alone
-    * Catalyst re-optimizes an exponentially growing tree and the
-    * fixpoint spends its time in the optimizer (measured 43 s at
-    * sf0.1), not in the joins. The checkpoint materializes the round
-    * AND resets the plan to a leaf. The FINAL result goes to a reliable
+    * ([[Fixpoint.Scope.localObserved]]), not `persist()`. A persist only
+    * truncates RECOMPUTATION — the analyzed plan still nests the previous
+    * round's plan (twice, via the pointer-jump self-join), so with
+    * persist alone Catalyst re-optimizes an exponentially growing tree
+    * and the fixpoint spends its time in the optimizer (measured 43 s
+    * at sf0.1), not in the joins. The checkpoint materializes the round
+    * AND resets the plan to a leaf, and the round's convergence witness
+    * (the label sum) is observed in that same staging job — no separate
+    * sum action per round. The FINAL result goes to a reliable
     * checkpoint and every round's local blocks are released before
     * returning — zero pinned residue (round-10 lifecycle rule; the
     * reliable final is also the executor-loss-tolerant piece a cluster
     * needs).
     */
   def dedupComponentsFrom(pairs: DataFrame): DataFrame =
-    Fixpoint.scoped { scope =>
-      val edges = scope.local(pairs
-        .select(col("doc_a").as("u"), col("doc_b").as("v"))
-        .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))))
-      def lblSum(df: DataFrame): Long =
-        df.agg(coalesce(sum(col("lbl")), lit(0L))).head.getLong(0)
-      // Round 19 (guide §2.4): round 1 runs SPECIALIZED — labels start
-      // as the identity, so the neighbor-min join against a labels
-      // frame is vacuous (lbl(v) = v) and stepped₁(u) = min(u, min
-      // N(u)) comes straight off one edge aggregate. This folds away
-      // the separate labels-init distinct + checkpoint, its priming
-      // sum action, and round 1's two label joins; rounds 2+ and the
-      // label sequence are IDENTICAL (the convergence witness compares
-      // s₁ vs s₂ onward — s₀ vs s₁ could only match on an empty edge
-      // set, where the loop now just pays one extra no-op round).
-      def jump(stepped: DataFrame): DataFrame = stepped.as("a")
-        .join(stepped.as("b"), col("a.lbl") === col("b.node"), "left")
-        .select(col("a.node").as("node"),
-          coalesce(col("b.lbl"), col("a.lbl")).as("lbl"))
-      val stepped1 = edges.groupBy(col("u")).agg(min(col("v")).as("nbl"))
-        .select(col("u").as("node"), least(col("u"), col("nbl")).as("lbl"))
-      var labels = scope.local(jump(stepped1))
-      var prevSum = lblSum(labels)
-      var converged = false
-      var rounds = 1
-      while (!converged) {
-        rounds += 1
-        // (1) min over neighbors (left join: isolated labels keep their own)
-        val nbr = edges.as("e")
-          .join(labels.as("l"), col("e.v") === col("l.node"))
-          .groupBy(col("e.u").as("node")).agg(min(col("l.lbl")).as("nbl"))
-        val stepped = labels.join(nbr, Seq("node"), "left")
-          .select(col("node"),
-            least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
-        // (2) pointer-jump: follow the label one hop (lbl is a node id)
-        val jumped = scope.local(jump(stepped))
-        val curSum = lblSum(jumped)
-        labels = jumped
-        converged = curSum == prevSum
-        prevSum = curSum
-      }
-      Fixpoint.lastRounds.put("components_closure", rounds)
-      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-      // unsorted (round 19): only the declared dedup_components surface
-      // needs doc_id order — SparkEntry adds it on top of the memoized
-      // scan; every other consumer aggregates, and the build was paying
-      // a sampling pass + range exchange per isolated rebuild for it
-      Fixpoint.reliably(labels.join(sizes, Seq("lbl"))
-        .select(col("node").as("doc_id"), col("lbl").as("component"),
-          col("cluster_size")))
+    Fixpoint.scoped(s => Fixpoint.reliably(dedupComponentsIn(s, pairs)))
+
+  /** [[dedupComponentsFrom]]'s closure as a lazy frame over the last
+    * round's blocks staged in `scope` — valid only inside `scope`
+    * ([[CorpusPipeline.build]] stages it there itself).
+    */
+  private[etl] def dedupComponentsIn(scope: Fixpoint.Scope, pairs: DataFrame): DataFrame = {
+    val edges = scope.local(pairs
+      .select(col("doc_a").as("u"), col("doc_b").as("v"))
+      .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))))
+    val lblSum = coalesce(sum(col("lbl")), lit(0L))
+    // Round 19 (guide §2.4): round 1 runs SPECIALIZED — labels start
+    // as the identity, so the neighbor-min join against a labels
+    // frame is vacuous (lbl(v) = v) and stepped₁(u) = min(u, min
+    // N(u)) comes straight off one edge aggregate. This folds away
+    // the separate labels-init distinct + checkpoint, its priming
+    // sum, and round 1's two label joins; rounds 2+ and the label
+    // sequence are IDENTICAL (the convergence witness compares s₁ vs
+    // s₂ onward — s₀ vs s₁ could only match on an empty edge set,
+    // where the loop now just pays one extra no-op round).
+    def jump(stepped: DataFrame): DataFrame = stepped.as("a")
+      .join(stepped.as("b"), col("a.lbl") === col("b.node"), "left")
+      .select(col("a.node").as("node"),
+        coalesce(col("b.lbl"), col("a.lbl")).as("lbl"))
+    val stepped1 = edges.groupBy(col("u")).agg(min(col("v")).as("nbl"))
+      .select(col("u").as("node"), least(col("u"), col("nbl")).as("lbl"))
+    var (labels, prevSum) = scope.localObserved(jump(stepped1), lblSum)
+    var converged = false
+    var rounds = 1
+    while (!converged) {
+      rounds += 1
+      // (1) min over neighbors (left join: isolated labels keep their own)
+      val nbr = edges.as("e")
+        .join(labels.as("l"), col("e.v") === col("l.node"))
+        .groupBy(col("e.u").as("node")).agg(min(col("l.lbl")).as("nbl"))
+      val stepped = labels.join(nbr, Seq("node"), "left")
+        .select(col("node"),
+          least(col("lbl"), coalesce(col("nbl"), col("lbl"))).as("lbl"))
+      // (2) pointer-jump: follow the label one hop (lbl is a node id)
+      val (jumped, curSum) = scope.localObserved(jump(stepped), lblSum)
+      labels = jumped
+      converged = curSum == prevSum
+      prevSum = curSum
     }
+    Fixpoint.lastRounds.put("components_closure", rounds)
+    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
+    // unsorted (round 19): only the declared dedup_components surface
+    // needs doc_id order — SparkEntry adds it on top of the memoized
+    // scan; every other consumer aggregates, and the build was paying
+    // a sampling pass + range exchange per isolated rebuild for it
+    labels.join(sizes, Seq("lbl"))
+      .select(col("node").as("doc_id"), col("lbl").as("component"),
+        col("cluster_size"))
+  }
 
   /** INCREMENTAL components closure — the daily-snapshot production
     * story (round 18, VERDICT r17 item 1): a corpus that grows ~1% per

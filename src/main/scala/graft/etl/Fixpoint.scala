@@ -2,7 +2,8 @@ package graft.etl
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.PlanBridge
 
 /** Eager materialization for fixpoint/iterative operators that leaves
@@ -92,6 +93,18 @@ object Fixpoint {
     finally { pinned.unpersist(blocking = false); () }
   }
 
+  /** `df` with the long-valued aggregate `agg` (by default the row
+    * count) observed over its rows in whichever job runs it, and the
+    * read of that value. Call the read only after an action over the
+    * frame (or over a frame built on it) has RETURNED: an observation
+    * of a failed or never-run job never fires, and the read would wait
+    * on it forever. No extra job runs.
+    */
+  def observed(df: DataFrame, agg: Column = count(lit(1))): (DataFrame, () => Long) = {
+    val obs = Observation()
+    (df.observe(obs, agg.as("v")), () => obs.get("v").asInstanceOf[Long])
+  }
+
   /** The temporary materializations of ONE operator call, released
     * together when its [[scoped]] body exits — normally or by an
     * exception — so no staging job that fails midway leaves earlier
@@ -107,6 +120,14 @@ object Fixpoint {
     * (lineage is truncated) — use it ONLY for state that no returned
     * frame references; the returned frame goes through [[reliably]]
     * inside the body.
+    *
+    * [[localObserved]] is [[local]] that also yields a long-valued
+    * aggregate over the staged rows (by default their count; the
+    * components closure's label sum) from the staging job itself: a
+    * trailing `.count()` or `.agg(...).head` on a staged frame is a
+    * second job that only re-scans the blocks. The observation sits at
+    * the top of the staged plan, so it runs in the result stage, where
+    * Spark applies accumulator updates once per partition.
     *
     * [[persist]] pins a frame the body reads many times but never
     * returns (the crawl family's edge list); it is unpersisted
@@ -127,6 +148,12 @@ object Fixpoint {
       val d = df.localCheckpoint()
       locals += d
       d
+    }
+
+    def localObserved(df: DataFrame, agg: Column = count(lit(1))): (DataFrame, Long) = {
+      val (tapped, value) = observed(df, agg)
+      val d = local(tapped)
+      (d, value())
     }
 
     def persist(df: DataFrame): DataFrame = {

@@ -38,17 +38,20 @@ import graft.functions.VectorFunctions.{dotF, normF}
   */
 object GraphCuration {
 
-  /** bits = clamp(ceil(log2(n / targetCell)), 3, 12): the cell count
+  /** Vectors per sign-bucket cell that [[adaptiveBits]] aims for. */
+  private val TargetCell = 1000L
+
+  /** bits = clamp(ceil(log2(n / TargetCell)), 3, 12): the cell count
     * that keeps within-cell pair work roughly constant as the corpus
     * grows — the setting BASELINE.md's (since retired) `knnbits`
     * ScaleCheck measured by hand through round 9 (bits=3 at the base
-    * corpus, bits=6 at 10×: exactly what targetCell=1000 derives —
+    * corpus, bits=6 at 10×: exactly what TargetCell=1000 derives —
     * 5 cells → 3 bits, 50 cells → 6 bits). Floor 3 = the
     * verified-oracle config; cap 12 (4096 cells) = the documented
     * production range, still far below the 64-dim sign-bit budget.
     *
     * Since round 15 the derivation is INTEGER-EXACT — the smallest
-    * b ∈ [3,12] with 2^b · targetCell ≥ n (identical to the clamped
+    * b ∈ [3,12] with 2^b · TargetCell ≥ n (identical to the clamped
     * ceil-log2 on every input, but with zero float ops): the blocking
     * key of oracle-verified queries (`embedding_neardup`, `semdedup`)
     * now derives from this count, and a float log2 can straddle a ulp
@@ -56,8 +59,8 @@ object GraphCuration {
     * which would flip the bucket domain between engines. DuckDB
     * replays the same comparison scan bit-for-bit.
     */
-  def adaptiveBits(nVectors: Long, targetCell: Long = 1000L): Int =
-    (3 to 12).find(b => (1L << b) * targetCell >= nVectors).getOrElse(12)
+  def adaptiveBits(nVectors: Long): Int =
+    (3 to 12).find(b => (1L << b) * TargetCell >= nVectors).getOrElse(12)
 
   /** Directed top-5 cosine neighbor lists, sign-bucket-blocked into
     * 2^bits cells.

@@ -35,6 +35,15 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestBase {
     assert(hits == Seq("Fixpoint.scala"))
   }
 
+  // An Observation read before its action returns, or on a job that
+  // never ran, waits forever; Fixpoint's staging helpers are the one
+  // place that reads one, after the action. Named observe(name, ...)
+  // metrics (Observability.withDocStats) carry no such wait.
+  test("Fixpoint.scala is the only main source that uses an Observation") {
+    val hits = filesContaining("src/main", "Observation")
+    assert(hits == Seq("Fixpoint.scala"))
+  }
+
   test("the test session carries the factory's UTC, nanosAsLong and cleanCheckpoints") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")

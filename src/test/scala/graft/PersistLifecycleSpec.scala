@@ -213,10 +213,12 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("corpus build runs each stage once: job count pinned at sf0.001") {
-    // Each survivor set is staged once, so a count reads staged blocks.
-    // A stage left lazy re-runs its whole upstream chain at every later
-    // count and read (199 jobs here with no stage staged).
-    val MaxBuildJobs = 79
+    // Each survivor set is staged once, and its count is observed in
+    // that staging job. A stage left lazy re-runs its whole upstream
+    // chain at every later count and read (199 jobs here with no stage
+    // staged); a trailing count() per stage costs two more jobs each
+    // (79 jobs with every stage staged and counted that way).
+    val MaxBuildJobs = 54
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -232,6 +234,71 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
     } finally sc.removeSparkListener(listener)
     assert(jobs.get <= MaxBuildJobs,
       s"corpus build launched ${jobs.get} jobs (pin $MaxBuildJobs): a stage recomputes")
+  }
+
+  test("corpus build writes no reliable checkpoint files: its LSH pairs " +
+      "and components stay in the build's own scope") {
+    freshStart()
+    val sc = spark.sparkContext
+    def rddDirs(): Set[String] = sc.getCheckpointDir.toSeq.flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(sc.hadoopConfiguration)
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.map(_.getPath.getName).filter(_.startsWith("rdd-"))
+    }.toSet
+    val before = rddDirs()
+    graft.etl.CorpusPipeline.build(spark, dir,
+      java.nio.file.Files.createTempDirectory("graft_corpus_ckpt_").toString)
+    val added = rddDirs() -- before
+    assert(added.isEmpty, s"corpus build wrote reliable checkpoints: $added")
+    assertNoPins("corpus build")
+  }
+
+  test("components closure observes its convergence witness in the " +
+      "staging jobs: no head action") {
+    freshStart()
+    val sc = spark.sparkContext
+    val pairs = graft.etl.Dedup.minhashLsh(spark, dir)
+    val actions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        actions.add(funcName)
+    }
+    org.apache.spark.graft.TestBusBridge.waitUntilEmpty(sc)
+    spark.listenerManager.register(listener)
+    try {
+      graft.etl.Dedup.dedupComponentsFrom(pairs)
+      org.apache.spark.graft.TestBusBridge.waitUntilEmpty(sc)
+    } finally spark.listenerManager.unregister(listener)
+    assert(actions.contains("localCheckpoint"), actions.toString)
+    assert(!actions.contains("head"), s"closure actions: $actions")
+    assertNoPins("components closure")
+  }
+
+  test("an empty quality gate cannot hang the build: every later count " +
+      "is observed as 0") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    import spark.implicits._
+    freshStart()
+    val in = java.nio.file.Files.createTempDirectory("graft_corpus_empty_")
+    // no stopwords and at most a few characters: quality_bp stays far
+    // below the floor
+    val n = 40
+    (0L until n.toLong).map(i => (i, s"x$i", "en", s"src${i % 3}"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.parquet(in.resolve("documents.parquet").toString)
+    implicit val signaler: Signaler = ThreadSignaler
+    val row = TimeLimits.failAfter(120.seconds) {
+      graft.etl.CorpusPipeline.build(spark, in.toString, in.resolve("out").toString)
+        .collect().head
+    }
+    assert((0 until row.length).map(row.getLong) == (n.toLong +: Seq.fill(8)(0L)))
+    assertNoPins("empty corpus build")
   }
 
   test("under Fixpoint.planOnly a scope exit keeps its local blocks " +
