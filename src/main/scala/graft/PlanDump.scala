@@ -16,9 +16,10 @@ import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
   *    operators (reliable-checkpoint finishers) show their full lazy
   *    twin instead of a checkpoint-scan leaf — the same view PlanSpec
   *    pins read. Also accepts "quality_train_loopbody", the trainer's
-  *    one-round update frame (VERDICT r18 item 5: the artifact
-  *    queries' own dumps only show the memoized artifact scan, so the
-  *    loop body gets its own lazy twin).
+  *    per-round frame: the mistake filter and delta aggregate over the
+  *    staged features, with the weight vector as a literal (the
+  *    artifact queries' own dumps only show the memoized artifact
+  *    scan, so the loop body gets its own view).
   */
 object PlanDump {
   private val LoopBody = "quality_train_loopbody"

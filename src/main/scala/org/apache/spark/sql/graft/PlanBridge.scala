@@ -18,12 +18,15 @@ object PlanBridge {
     * SQL CacheManager). Safe once nothing downstream will re-read the
     * frame; a later action on it would fail (lineage is truncated), so
     * callers release only intermediates whose final consumer has been
-    * materialized. No-op for non-LogicalRDD plans.
+    * materialized. No-op for non-LogicalRDD plans. Goes through the
+    * `private[spark]` `SparkContext.unpersistRDD`: `RDD.unpersist` on a
+    * locally checkpointed RDD logs a lineage-truncation WARN on every
+    * call, and releasing is the expected end of its life here.
     */
   def releaseLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false); ()
+        df.sparkSession.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
       case _ => ()
     }
 

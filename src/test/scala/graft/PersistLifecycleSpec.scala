@@ -236,6 +236,66 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
       s"corpus build launched ${jobs.get} jobs (pin $MaxBuildJobs): a stage recomputes")
   }
 
+  test("quality-train artifact build: job count pinned at sf0.001") {
+    // Staging, the warm-start aggregate, one aggregate per perceptron
+    // round and one scoring pass for every candidate, then the
+    // artifact's checkpoint; a weight vector staged as a frame cost
+    // several jobs per round and a 28-partition union at the end.
+    val MaxTrainJobs = 19
+    freshStart()
+    graft.etl.Memos.clearAll()
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.TestBusBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      graft.etl.QualityTrain.trainArtifact(spark, dir)
+      org.apache.spark.graft.TestBusBridge.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    graft.etl.Memos.clearAll()
+    assert(jobs.get <= MaxTrainJobs,
+      s"train artifact build launched ${jobs.get} jobs (pin $MaxTrainJobs)")
+    assertNoPins("train artifact build")
+  }
+
+  test("releasing a scope's local checkpoints logs no lineage warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import spark.implicits._
+    freshStart()
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("release-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val level = root.getLevel
+    if (!root.isWarnEnabled) root.setLevel(Level.WARN)
+    root.addAppender(appender)
+    try {
+      graft.etl.Fixpoint.scoped { scope =>
+        assert(scope.local(Seq(1L, 2L).toDF("x")).count() == 2L)
+        scope.local(spark.range(5).toDF("y"))
+      }
+    } finally {
+      root.removeAppender(appender)
+      root.setLevel(level)
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val warned = lines.asScala.filter(_.contains("locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+    assertNoPins("released scope")
+  }
+
   test("corpus build writes no reliable checkpoint files: its LSH pairs " +
       "and components stay in the build's own scope") {
     freshStart()

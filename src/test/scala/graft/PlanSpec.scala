@@ -1676,6 +1676,18 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       s"quality_train's bucket-keyed weight join fell to a shuffle:\n$cp")
   }
 
+  test("quality-train artifact build joins nothing: the weight vector " +
+       "rides each round as a literal, every candidate is scored in one " +
+       "pass, and the artifact is a local relation") {
+    graft.etl.Memos.clearAll()
+    val plans = executedQes(graft.etl.QualityTrain.trainArtifact(spark, dir))
+      .map(_.explainString(FormattedMode))
+    graft.etl.Memos.clearAll()
+    assert(plans.nonEmpty)
+    plans.foreach(p => assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      s"quality-train artifact build ran a join:\n$p"))
+  }
+
   test("round-18 pin: dedup_components_incremental's merge stays keyed " +
        "— the quotient mapping and the relabel are equi-joins on " +
        "doc/label columns, never a cartesian or nested loop, in EVERY " +
