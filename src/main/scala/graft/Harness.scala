@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
 
 /** What the timing and dump mains (Bench, TimeQuery, ScaleCheck,
   * Verify, PlanDump) share: the name check, the between-query scrub,
@@ -40,7 +41,8 @@ object Harness {
     */
   def scrub(spark: SparkSession, keepMemo: Boolean): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(PlanBridge.unpersist(_, blocking = true))
     if (!keepMemo) graft.etl.Memos.clearAll()
   }
 

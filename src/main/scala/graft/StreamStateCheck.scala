@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+import graft.etl.Dedup
 
 /** Streaming near-dup STATE measurement at scale (VERDICT r14 item 2):
   * replays a corpus dir through [[graft.streaming.StreamingOps]]'
@@ -11,7 +12,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
   *
   * Two facts make the measurement exact rather than sampled:
   *  - per-band state occupancy under the first-seen-wins cap is
-  *    `min(count, maxPerBand)` REGARDLESS of arrival order (the cap
+  *    `min(count, Dedup.MaxPerBand)` REGARDLESS of arrival order (the cap
   *    only truncates; which docs are kept is order-dependent, how many
   *    is not), so one batch pass over the same banding computes the
   *    exact occupancy distribution of the replayed state;
@@ -35,8 +36,6 @@ import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
   * BASELINE.md's streaming-state table.
   */
 object StreamStateCheck {
-  private val Cap = 64 // streamingNearDup's default maxPerBand
-
   /** The streaming parquet source wants a DIRECTORY; driver-generated
     * sf dirs ship documents.parquet as a single file — stage a symlink.
     */
@@ -59,7 +58,7 @@ object StreamStateCheck {
     */
   private def replayComponents(spark: SparkSession, dir: String, ckpt: String,
       table: String): (DataFrame, Long, StreamingQueryProgress, Double) = {
-    graft.etl.Dedup.minhashLsh(spark, dir)
+    Dedup.minhashLsh(spark, dir)
       .repartition(12).write.mode("overwrite").parquet(s"$ckpt/pairs")
     val pairsDf = spark.read.parquet(s"$ckpt/pairs")
     val stream = spark.readStream.schema(pairsDf.schema)
@@ -109,7 +108,7 @@ object StreamStateCheck {
       // min emitted component per doc (the twin's consumption contract)
       val streamed = spark.table("comp_out")
         .groupBy(col("doc_id")).agg(min(col("component")).as("sc"))
-      val truth = graft.etl.Dedup.dedupComponentsFrom(pairsDf)
+      val truth = Dedup.dedupComponentsFrom(pairsDf)
         .select(col("doc_id"), col("component").as("tc"))
       val mism = streamed.join(truth, Seq("doc_id"), "full")
         .filter(col("sc").isNull || col("tc").isNull || col("sc") =!= col("tc"))
@@ -196,18 +195,17 @@ object StreamStateCheck {
 
     // exact derived profile: occupancy = min(c, cap) per (band, bkey)
     val docs = spark.read.parquet(docsPath).select(col("doc_id"), col("text"))
-    val sig = graft.etl.Dedup.minhashSignatureFast(docs, 8)
-    val occ = sig.select(explode(array(
-        graft.etl.Dedup.bandStructs(8, 2, graft.etl.Dedup.fastBandKey): _*)).as("bs"))
-      .groupBy(col("bs.band").as("band"), col("bs.bkey").as("bkey"))
+    val occ = Dedup.bandRows(Dedup.minhashSignatureFast(docs),
+        Dedup.bandStructs(Dedup.fastBandKey))
+      .groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("c"))
     val cls = when(col("c") < 2, 0).when(col("c") < 4, 1)
       .when(col("c") < 8, 2).when(col("c") < 16, 3)
-      .when(col("c") < 32, 4).when(col("c") < Cap, 5).otherwise(6)
+      .when(col("c") < 32, 4).when(col("c") < Dedup.MaxPerBand, 5).otherwise(6)
     val profile = occ.withColumn("occ_class", cls)
       .groupBy(col("occ_class"))
       .agg(count(lit(1)).as("n_keys"), max(col("c")).as("max_c"),
-        sum(least(col("c"), lit(Cap.toLong))).as("state_entries"))
+        sum(least(col("c"), lit(Dedup.MaxPerBand.toLong))).as("state_entries"))
       .orderBy("occ_class").collect()
     val nKeys = profile.map(_.getLong(1)).sum
     val maxC = profile.map(_.getLong(2)).max
@@ -233,7 +231,7 @@ object StreamStateCheck {
         val so = q.lastProgress.stateOperators.head
         val (rows, bytes) = (so.numRowsTotal, so.memoryUsedBytes)
         q.stop()
-        println(s"""{"metric":"stream_state","mode":"replay","dir":${JsonOut.quote(dir)},"cap":$Cap,"derived":{"n_keys":$nKeys,"max_occ":${math.min(maxC, Cap)},"max_raw_count":$maxC,"state_entries":$entries,"hist":$hist},"measured":{"state_rows":$rows,"memory_bytes":$bytes},"keys_match":${rows == nKeys}}""")
+        println(s"""{"metric":"stream_state","mode":"replay","dir":${JsonOut.quote(dir)},"cap":${Dedup.MaxPerBand},"derived":{"n_keys":$nKeys,"max_occ":${math.min(maxC, Dedup.MaxPerBand)},"max_raw_count":$maxC,"state_entries":$entries,"hist":$hist},"measured":{"state_rows":$rows,"memory_bytes":$bytes},"keys_match":${rows == nKeys}}""")
 
       case Some(t) =>
         spark.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -274,7 +272,7 @@ object StreamStateCheck {
         }
         q.stop()
         val peak = if (timeline.isEmpty) -1L else timeline.map(_._2).max
-        println(s"""{"metric":"stream_state","mode":"ttl","ttl_s":$t,"dir":${JsonOut.quote(dir)},"cap":$Cap,"derived_total_keys":$nKeys,"fed_rows":$fed,"peak_state_rows":$peak,"settled_state_rows":$settled,"bounded_by_churn":${peak < nKeys || settled < peak}}""")
+        println(s"""{"metric":"stream_state","mode":"ttl","ttl_s":$t,"dir":${JsonOut.quote(dir)},"cap":${Dedup.MaxPerBand},"derived_total_keys":$nKeys,"fed_rows":$fed,"peak_state_rows":$peak,"settled_state_rows":$settled,"bounded_by_churn":${peak < nKeys || settled < peak}}""")
     }
     spark.stop()
   }

@@ -206,14 +206,11 @@ object Dedup {
     * self-review). `bandKey` is the per-tier hash: md5 for the
     * oracle-checkable tier, xxhash64 for the fast tier.
     */
-  private[graft] def bandStructs(numHashes: Int, bandSize: Int,
-      bandKey: Seq[Column] => Column): Seq[Column] = {
-    require(numHashes % bandSize == 0, "bands must tile the signature")
-    (0 until numHashes / bandSize).map { b =>
-      val slots = (0 until bandSize).map(i => col(s"mh_${b * bandSize + i}"))
+  private[graft] def bandStructs(bandKey: Seq[Column] => Column): Seq[Column] =
+    (0 until TestNumHashes / TestBandSize).map { b =>
+      val slots = (0 until TestBandSize).map(i => col(s"mh_${b * TestBandSize + i}"))
       struct(lit(b).as("band"), bandKey(slots).as("bkey"))
     }
-  }
 
   /** md5 band key (oracle tier) / xxhash64 band key (fast tier). */
   private[graft] val md5BandKey: Seq[Column] => Column =
@@ -221,36 +218,51 @@ object Dedup {
   private[graft] val fastBandKey: Seq[Column] => Column =
     slots => xxhash64(slots: _*)
 
-  /** Shared banding core for both hash tiers: band key = `bandKey` of
-    * the band's signature slots; candidate pairs = docs sharing any
-    * band key (distinct a<b pairs). The self-join is per-bucket — the
-    * O(n²) blowup only happens inside a bucket, which is the entire
-    * point of LSH at scale. The banded table is staged once in `scope`
-    * (a local checkpoint) so both sides of the self-join read it
-    * instead of re-deriving the signature pipeline; the pair frame is
-    * returned LAZY over those blocks, so it is valid only inside
+  /** First-seen signatures a band key holds in the streaming twins. */
+  private[graft] val MaxPerBand = 64
+
+  /** `sig` as (doc_id, carry…, band fields…) rows, one per struct in
+    * `bands` (its field names become the columns) — a map-side explode
+    * that every banding site, batch and streaming, reads its rows from.
+    */
+  private[graft] def bandRows(sig: DataFrame, bands: Seq[Column],
+      carry: String*): DataFrame = {
+    val kept = ("doc_id" +: carry).map(col)
+    sig.select(kept :+ explode(array(bands: _*)).as("bs"): _*)
+      .select(kept :+ col("bs.*"): _*)
+  }
+
+  /** Docs sharing a bucket: [[bandRows]] staged once in `scope` (both
+    * join sides read the blocks), self-joined on every band field with
+    * x.doc_id < y.doc_id — the O(n²) term lives only inside a bucket.
+    * Read as `x.*`/`y.*`; lazy over the blocks, valid only in `scope`.
+    */
+  private def bucketPairs(scope: Fixpoint.Scope, sig: DataFrame,
+      bands: Seq[Column], carry: String*): DataFrame = {
+    val banded = scope.local(bandRows(sig, bands, carry: _*))
+    val keys = banded.columns.drop(1 + carry.size)
+    banded.as("x").join(banded.as("y"),
+      keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+        col("x.doc_id") < col("y.doc_id"))
+  }
+
+  /** Shared banding core for both MinHash tiers: distinct a<b
+    * [[bucketPairs]] over the `bandKey` band keys, valid only inside
     * `scope`. [[lshPairsWith]] is the standalone form: it writes the
     * (small) pair output to reliable storage, after which the band
     * blocks are released — zero pins, memory-speed staging.
     */
   private def lshPairsIn(scope: Fixpoint.Scope, sig: DataFrame,
-      bandKey: Seq[Column] => Column): DataFrame = {
-    val bandCols = bandStructs(TestNumHashes, TestBandSize, bandKey)
-    val banded = scope.local(
-      sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-        .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey")))
+      bandKey: Seq[Column] => Column): DataFrame =
     // round 19: the pair frame is UNSORTED — the build paid a full
     // range exchange + sort for an order only the declared minhash_lsh
     // query surface needs ([[minhashLsh]] adds it back on top; every
     // other consumer aggregates, and EliminateSorts would have dropped
     // the order from their plans anyway — guide §2.4: an orderBy used
     // only to make output deterministic is an accidental exchange)
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
+    bucketPairs(scope, sig, bandStructs(bandKey))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-  }
 
   private def lshPairsWith(sig: DataFrame,
       bandKey: Seq[Column] => Column): DataFrame =
@@ -271,7 +283,7 @@ object Dedup {
     * per-occupancy-class breakdown of the same cost.
     */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
-    pairsMemo.get(spark, dir, ())(
+    pairsMemo.get(spark, dir)(
       minhashLshFrom(
         Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
 
@@ -285,7 +297,7 @@ object Dedup {
     * harness hook, bypassed under planOnly, dead sessions evicted,
     * data-fingerprint identity — see [[SessionMemo]]).
     */
-  private val pairsMemo = new SessionMemo[Unit]
+  private val pairsMemo = new SessionMemo
 
   def minhashLshFrom(docs: DataFrame): DataFrame =
     lshPairsWith(minhashSignature(docs), md5BandKey)
@@ -310,10 +322,7 @@ object Dedup {
     */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val bandCols = bandStructs(TestNumHashes, TestBandSize, md5BandKey)
-    val banded = minhashSignature(docs)
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.bkey").as("bkey"))
+    val banded = bandRows(minhashSignature(docs), bandStructs(md5BandKey))
     // one signature pass for BOTH sides: banding is per-doc, so band
     // everything once, materialize the (tiny) band rows, and split by
     // filter — two per-side banding branches would each re-run the
@@ -347,7 +356,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     def shingleRows(df: DataFrame) = df
       .select(col("doc_id"),
-        explode(array_distinct(Shingles.shingleArray(col("text"), 3))).as("shingle"))
+        explode(shingleSet(col("text"))).as("shingle"))
     val bench = shingleRows(docs.filter(col("doc_id") % 97 === 0))
       .select("shingle").distinct()
     shingleRows(docs.filter(col("doc_id") % 97 =!= 0))
@@ -670,37 +679,70 @@ object Dedup {
       .orderBy("src_win", "src_lose")
   }
 
-  /** n-gram Jaccard similarity on a bounded candidate block (doc_id < 64
-    * on both sides — fixed-size regardless of SF; production pairing
-    * comes from minhashLsh candidates instead).
-    * |A∩B| via join on distinct shingles, |A∪B| = |A|+|B|-|A∩B|.
+  /** The distinct word 3-shingle set every near-dup overlap reads. */
+  private[etl] def shingleSet(text: Column): Column =
+    array_distinct(Shingles.shingleArray(text, 3))
+
+  /** Jaccard over an overlap core in basis points, |A∪B| = |A|+|B|-|A∩B|
+    * (integer div: rational values sit exactly on rounding boundaries).
     */
-  /** Unthresholded exact pair Jaccard over every INTERSECTING pair of
-    * `docs` (shared by [[ngramJaccard]] and [[lshQuality]] so ground
-    * truth cannot drift between the similarity and audit surfaces).
+  private[graft] val jaccardBp: Column =
+    expr("(10000 * n_common) div (na + nb - n_common)")
+
+  /** Broder containment of one side (`n` = na or nb) in basis points. */
+  private def containmentBp(n: String): Column =
+    expr(s"(10000 * n_common) div $n")
+
+  /** BLOCK-tier overlap core: (doc_a, doc_b, n_common, na, nb) for
+    * every INTERSECTING a<b pair of `docs`, |A∩B| via the shared-shingle
+    * equi-join — the one ground truth of the block's Jaccard and
+    * containment surfaces.
     */
-  private def pairJaccardFrom(docs0: DataFrame): DataFrame = {
+  private[graft] def blockOverlap(docs0: DataFrame): DataFrame = {
     val docs = docs0.select(col("doc_id"), col("text"))
-      .withColumn("sh_set", array_distinct(Shingles.shingleArray(col("text"), 3)))
+      .withColumn("sh_set", shingleSet(col("text")))
     // shingle sets and their sizes both come from the array — the only
     // shuffle left is the intersect self-join itself
     val sh = docs.select(col("doc_id"), explode(col("sh_set")).as("shingle"))
     val sizes = docs.select(col("doc_id"), size(col("sh_set")).cast("bigint").as("n_sh"))
       .filter(col("n_sh") > 0)
-    val inter = sh.as("a").join(sh.as("b"),
+    sh.as("a").join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_common"))
-    inter
       .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("n_union", col("sa.n_sh") + col("sb.n_sh") - col("n_common"))
-      // basis points via integer div: exact in both engines (rational
-      // similarity values sit exactly on decimal rounding boundaries)
-      .withColumn("jaccard_bp", expr("(10000 * n_common) div n_union"))
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard_bp"))
+      .select(col("doc_a"), col("doc_b"), col("n_common"),
+        col("sa.n_sh").as("na"), col("sb.n_sh").as("nb"))
   }
 
+  /** CANDIDATE-tier overlap core: [[blockOverlap]]'s columns for given
+    * a<b `pairs`, by doc-keyed joins and an in-row intersect.
+    */
+  private[graft] def candidateOverlap(spark: SparkSession, dir: String,
+      pairs: DataFrame): DataFrame = {
+    val sets = Tables.documents(spark, dir)
+      .select(col("doc_id"), shingleSet(col("text")).as("sh_set"))
+      .filter(size(col("sh_set")) > 0)
+    pairs
+      .join(sets.select(col("doc_id").as("doc_a"), col("sh_set").as("sa")), Seq("doc_a"))
+      .join(sets.select(col("doc_id").as("doc_b"), col("sh_set").as("sb")), Seq("doc_b"))
+      .withColumn("n_common",
+        size(array_intersect(col("sa"), col("sb"))).cast("bigint"))
+      .withColumn("na", size(col("sa")).cast("bigint"))
+      .withColumn("nb", size(col("sb")).cast("bigint"))
+      .drop("sa", "sb")
+  }
+
+  /** Unthresholded exact Jaccard of every intersecting pair of `docs`. */
+  private def pairJaccardFrom(docs: DataFrame): DataFrame =
+    blockOverlap(docs).select(col("doc_a"), col("doc_b"), col("n_common"),
+      jaccardBp.as("jaccard_bp"))
+
+  /** n-gram Jaccard similarity on a bounded candidate block (doc_id < 64
+    * on both sides — fixed-size regardless of SF; production pairing
+    * comes from minhashLsh candidates instead).
+    */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     pairJaccardFrom(Tables.documents(spark, dir).filter(col("doc_id") < 64))
       // threshold calibrated to the synthetic corpus (max ≈ 224 bp);
@@ -723,29 +765,14 @@ object Dedup {
     * dedup_sweep does for Jaccard). All values exact integer basis
     * points.
     */
-  def containmentDedup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).filter(col("doc_id") < 64)
-      .select(col("doc_id"), col("text"))
-      .withColumn("sh_set", array_distinct(Shingles.shingleArray(col("text"), 3)))
-    val sh = docs.select(col("doc_id"), explode(col("sh_set")).as("shingle"))
-    val sizes = docs.select(col("doc_id"), size(col("sh_set")).cast("bigint").as("n_sh"))
-      .filter(col("n_sh") > 0)
-    val inter = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("cont_a_bp", expr("(10000 * n_common) div sa.n_sh"))
-      .withColumn("cont_b_bp", expr("(10000 * n_common) div sb.n_sh"))
+  def containmentDedup(spark: SparkSession, dir: String): DataFrame =
+    blockOverlap(Tables.documents(spark, dir).filter(col("doc_id") < 64))
+      .select(col("doc_a"), col("doc_b"), col("n_common"),
+        containmentBp("na").as("cont_a_bp"), containmentBp("nb").as("cont_b_bp"))
       // threshold calibrated to the synthetic corpus; production
       // subset-dup detection uses ~9000 bp — same plan
       .filter(col("cont_a_bp") >= 500 || col("cont_b_bp") >= 500)
-      .select(col("doc_a"), col("doc_b"), col("n_common"),
-        col("cont_a_bp"), col("cont_b_bp"))
       .orderBy("doc_a", "doc_b")
-  }
 
   /** Corpus-scale CONTAINMENT tier — the LSH-candidate form of
     * [[containmentDedup]] (round 14; that query audits the bounded
@@ -763,26 +790,11 @@ object Dedup {
     * explosion, no new shuffle class. Unthresholded (the verify
     * tier); production cuts at ~9000 bp like [[containmentDedup]].
     */
-  def containmentPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val sets = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        array_distinct(Shingles.shingleArray(col("text"), 3)).as("sh_set"))
-      .filter(size(col("sh_set")) > 0)
-    minhashLsh(spark, dir)
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh_set").as("sa")),
-        Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh_set").as("sb")),
-        Seq("doc_b"))
-      .withColumn("n_common",
-        size(array_intersect(col("sa"), col("sb"))).cast("bigint"))
-      .withColumn("na", size(col("sa")).cast("bigint"))
-      .withColumn("nb", size(col("sb")).cast("bigint"))
-      .withColumn("cont_a_bp", expr("(10000 * n_common) div na"))
-      .withColumn("cont_b_bp", expr("(10000 * n_common) div nb"))
+  def containmentPipeline(spark: SparkSession, dir: String): DataFrame =
+    candidateOverlap(spark, dir, minhashLsh(spark, dir))
       .select(col("doc_a"), col("doc_b"), col("n_common"),
-        col("cont_a_bp"), col("cont_b_bp"))
+        containmentBp("na").as("cont_a_bp"), containmentBp("nb").as("cont_b_bp"))
       .orderBy("doc_a", "doc_b")
-  }
 
   /** LSH quality audit — the EMPIRICAL s-curve: per exact-Jaccard
     * decile, what fraction of pairs did the banded MinHash tier
@@ -895,9 +907,9 @@ object Dedup {
     * never the stale checkpoint scan — ADVICE r13).
     */
   def componentsFrame(spark: SparkSession, dir: String): DataFrame =
-    componentsMemo.get(spark, dir, ())(dedupComponents(spark, dir))
+    componentsMemo.get(spark, dir)(dedupComponents(spark, dir))
 
-  private val componentsMemo = new SessionMemo[Unit]
+  private val componentsMemo = new SessionMemo
 
   def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     // pairs route through minhashLsh so the closure build shares the
@@ -1283,7 +1295,6 @@ object Dedup {
     * plan. 20 probe rows per doc is the priced recall-1 cost.
     */
   def simhashWideNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val sig = simhashWideFrom(Tables.documents(spark, dir))
     def block(b: Int): Column =
       shiftright(col("simhash60"), b * 10).bitwiseAND(1023)
     val combos = (0 until 6).combinations(3).toSeq.zipWithIndex
@@ -1292,22 +1303,24 @@ object Dedup {
         ((block(bs(0)) * 1048576L) + (block(bs(1)) * 1024L) + block(bs(2)))
           .as("ckey"))
     }
+    simhashPairs(simhashWideFrom(Tables.documents(spark, dir)), "simhash60",
+      keys, maxHamming = 3)
+  }
+
+  /** Both SimHash tiers: [[bucketPairs]] over `bands`, kept when the
+    * popcount of the `sigCol` XOR is ≤ `maxHamming`.
+    */
+  private def simhashPairs(sig: DataFrame, sigCol: String, bands: Seq[Column],
+      maxHamming: Int): DataFrame =
     Fixpoint.scoped { scope =>
-      val banded = scope.local(sig
-        .select(col("doc_id"), col("simhash60"), explode(array(keys: _*)).as("bs"))
-        .select(col("doc_id"), col("simhash60"),
-          col("bs.comb").as("comb"), col("bs.ckey").as("ckey")))
-      Fixpoint.reliably(banded.as("x").join(banded.as("y"),
-          col("x.comb") === col("y.comb") && col("x.ckey") === col("y.ckey") &&
-            col("x.doc_id") < col("y.doc_id"))
+      Fixpoint.reliably(bucketPairs(scope, sig, bands, sigCol)
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          bit_count(col("x.simhash60").bitwiseXOR(col("y.simhash60")))
+          bit_count(col(s"x.$sigCol").bitwiseXOR(col(s"y.$sigCol")))
             .cast("int").as("hamming"))
-        .filter(col("hamming") <= 3)
+        .filter(col("hamming") <= maxHamming)
         .distinct()
         .orderBy("doc_a", "doc_b"))
     }
-  }
 
   /** SimHash NEAR-DUP pairing over the BOUNDED AUDIT SLICE — completes
     * the SimHash family the way LSH banding completes MinHash:
@@ -1338,21 +1351,7 @@ object Dedup {
       .select(col("doc_id"), col("simhash16"))
     val blocks = (0 until 4).map(b => struct(lit(b).as("blk"),
       shiftright(col("simhash16"), b * 4).bitwiseAND(15).as("bval")))
-    Fixpoint.scoped { scope =>
-      val banded = scope.local(sig
-        .select(col("doc_id"), col("simhash16"), explode(array(blocks: _*)).as("bs"))
-        .select(col("doc_id"), col("simhash16"),
-          col("bs.blk").as("blk"), col("bs.bval").as("bval")))
-      Fixpoint.reliably(banded.as("x").join(banded.as("y"),
-          col("x.blk") === col("y.blk") && col("x.bval") === col("y.bval") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          bit_count(col("x.simhash16").bitwiseXOR(col("y.simhash16")))
-            .cast("int").as("hamming"))
-        .filter(col("hamming") <= 2)
-        .distinct()
-        .orderBy("doc_a", "doc_b"))
-    }
+    simhashPairs(sig, "simhash16", blocks, maxHamming = 2)
   }
 
   /** LSH band-bucket occupancy profile — the banded self-join's COST
@@ -1374,10 +1373,8 @@ object Dedup {
     */
   def lshBucketStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val sig = minhashSignature(docs)
-    val bandCols = bandStructs(TestNumHashes, TestBandSize, md5BandKey)
-    val occ = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-      .groupBy(col("bs.band").as("band"), col("bs.bkey").as("bkey"))
+    val occ = bandRows(minhashSignature(docs), bandStructs(md5BandKey))
+      .groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("c"))
     val occClass = when(col("c") < 2, 0).when(col("c") < 4, 1)
       .when(col("c") < 8, 2).when(col("c") < 16, 3)

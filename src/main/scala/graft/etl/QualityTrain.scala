@@ -254,9 +254,9 @@ object QualityTrain {
     * planOnly bypass).
     */
   def trainArtifact(spark: SparkSession, dir: String): DataFrame =
-    trainMemo.get(spark, dir, (Buckets, Rounds))(buildArtifact(spark, dir))
+    trainMemo.get(spark, dir)(buildArtifact(spark, dir))
 
-  private val trainMemo = new SessionMemo[(Int, Int)]
+  private val trainMemo = new SessionMemo
 
   private def buildArtifact(spark: SparkSession, dir: String): DataFrame =
     Fixpoint.scoped { scope =>

@@ -11,10 +11,11 @@ import org.apache.spark.sql.graft.PlanBridge
   * (ADVICE r13 items 1-2, VERDICT r13 next-round item 3), re-hardened
   * round 15 (VERDICT r14 item 5, ADVICE r14 items 2/5).
   *
-  * Identity: entries key on (session, canonical dir, data fingerprint,
-  * params). The fingerprint hashes the sorted (path, length, modTime)
-  * `FileStatus` listing of `<dir>/documents.parquet` through the HADOOP
-  * filesystem API (round 15) — the staleness guarantee now holds for
+  * Identity: entries key on (session, canonical dir, data
+  * fingerprint); each memo holds one frame per key. The fingerprint
+  * hashes the sorted (path, length, modTime) `FileStatus` listing of
+  * `<dir>/documents.parquet` through the HADOOP filesystem API
+  * (round 15) — the staleness guarantee now holds for
   * any scheme the session can reach (hdfs://, s3a://, file://), not
   * just `java.io.File` paths. A session that REGENERATES the same path
   * (incremental ingest, a test reusing a directory) gets a fresh build
@@ -55,7 +56,7 @@ import org.apache.spark.sql.graft.PlanBridge
   * poison later REAL executions, and a cached real frame would hide the
   * tree the plan inspection came to see.
   */
-private[etl] final class SessionMemo[P] {
+private[etl] final class SessionMemo {
   SessionMemo.registry.add(this)
 
   private final class Holder(build: () => DataFrame) {
@@ -80,10 +81,10 @@ private[etl] final class SessionMemo[P] {
     def evicted: Boolean = dead
   }
 
-  private val m = new ConcurrentHashMap[(SparkSession, String, Long, P), Holder]()
+  private val m = new ConcurrentHashMap[(SparkSession, String, Long), Holder]()
 
   @annotation.tailrec
-  def get(spark: SparkSession, dir: String, params: P)(
+  def get(spark: SparkSession, dir: String)(
       build: => DataFrame): DataFrame = if (Fixpoint.isPlanOnly) build else {
     // dead sessions can never hit again (the key IS the session) — a
     // JVM that cycles sessions would otherwise leak a frame per cycle.
@@ -115,15 +116,15 @@ private[etl] final class SessionMemo[P] {
         it.remove()
       }
     }
-    val h = m.computeIfAbsent((spark, canon, fp, params),
+    val h = m.computeIfAbsent((spark, canon, fp),
       _ => new Holder(() => build))
     val f = h.frame
     if (h.evicted) {
       // an eviction raced this build: its files are (being) deleted —
       // release idempotently and resolve against the current state
       SessionMemo.deleteCheckpointFiles(f)
-      m.remove((spark, canon, fp, params), h)
-      get(spark, dir, params)(build)
+      m.remove((spark, canon, fp), h)
+      get(spark, dir)(build)
     } else f
   }
 
@@ -136,7 +137,7 @@ private[etl] final class SessionMemo[P] {
 private[etl] object SessionMemo {
 
   private val registry =
-    new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo[_]]()
+    new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo]()
 
   def clearAll(): Unit = registry.forEach(_.clearAndRelease())
 

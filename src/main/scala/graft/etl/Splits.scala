@@ -115,11 +115,6 @@ object Splits {
       .orderBy("lang", "rk")
   }
 
-  /** End-to-end near-duplicate pipeline: LSH candidate pairs → exact
-    * Jaccard verification on candidates only — the production dedup
-    * flow (signatures: single scan; quadratic work bounded to LSH
-    * buckets; exact set math only on the surviving pairs).
-    */
   /** CDC snapshot diff — the MERGE/upsert precheck: old vs new snapshot
     * full-outer-joined on the key, each row classified
     * added/removed/changed/unchanged by exact cents compare. One
@@ -147,6 +142,11 @@ object Splits {
       .orderBy("status")
   }
 
+  /** End-to-end near-duplicate pipeline: LSH candidate pairs → exact
+    * Jaccard verification on candidates only — the production dedup
+    * flow (signatures: single scan; quadratic work bounded to LSH
+    * buckets; exact set math only on the surviving pairs).
+    */
   def neardupPipeline(spark: SparkSession, dir: String): DataFrame =
     neardupVerify(spark, dir, Dedup.minhashLsh(spark, dir))
 
@@ -157,22 +157,11 @@ object Splits {
     * signature+banding pipeline a second time.
     */
   def neardupVerify(spark: SparkSession, dir: String,
-      pairs: DataFrame): DataFrame = {
-    val sets = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        array_distinct(Shingles.shingleArray(col("text"), 3)).as("sh_set"))
-      .filter(size(col("sh_set")) > 0)
-    pairs
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh_set").as("sa")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh_set").as("sb")), Seq("doc_b"))
-      .withColumn("n_common",
-        size(array_intersect(col("sa"), col("sb"))).cast("bigint"))
-      .withColumn("n_union",
-        size(col("sa")).cast("bigint") + size(col("sb")) - col("n_common"))
-      .withColumn("jaccard_bp", expr("(10000 * n_common) div n_union"))
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard_bp"))
+      pairs: DataFrame): DataFrame =
+    Dedup.candidateOverlap(spark, dir, pairs)
+      .select(col("doc_a"), col("doc_b"), col("n_common"),
+        Dedup.jaccardBp.as("jaccard_bp"))
       .orderBy("doc_a", "doc_b")
-  }
 
   /** EVAL-SIDE benchmark decontamination (VERDICT r16 stretch item 8)
     * — [[Dedup.decontaminate]] reports the training docs touching a

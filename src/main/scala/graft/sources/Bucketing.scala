@@ -39,14 +39,24 @@ object Bucketing {
     * small-files problem: a 100 TB sink must emit bounded,
     * evenly-sized, cluster-ordered parquet, not one file per shuffle
     * task.
+    *
+    * Spark seeds its range-bound sample with the sampled RDD's id, so
+    * the write samples up to Spark's 10⁶-key cap: below it every row
+    * is sampled and the layout does not depend on the session's past.
     */
   def compact(df: DataFrame, keys: Seq[Column], files: Int,
-      maxRecordsPerFile: Long, out: String): Unit =
-    df.repartitionByRange(files, keys: _*)
+      maxRecordsPerFile: Long, out: String): Unit = {
+    val conf = df.sparkSession.conf
+    val sample = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    val prev = conf.getOption(sample)
+    conf.set(sample, 1000000L)
+    try df.repartitionByRange(files, keys: _*)
       .sortWithinPartitions(keys: _*)
       .write.mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(out)
+    finally prev.fold(conf.unset(sample))(conf.set(sample, _))
+  }
 
   def compact(df: DataFrame, keyNames: Seq[String], files: Int,
       maxRecordsPerFile: Long, out: String)(implicit d: DummyImplicit): Unit =

@@ -353,22 +353,23 @@ object StreamingOps {
     * [[graft.etl.Dedup.minhashSignatureFast]] + xxhash64 band keys as
     * the batch fast tier — map-side, no shuffle before the state op),
     * then flatMapGroupsWithState keyed by (band, bkey) holds the
-    * band's signatures and flags each new doc against its band-mates:
-    * a hit fires when the signature match fraction clears
-    * `thresholdBp` (the MinHash Jaccard estimate — `thresholdBp = 0`
-    * reproduces the batch candidate semantics exactly, which is what
-    * StreamingSpec pins against [[graft.etl.Dedup.minhashLshFast]]).
+    * band's signatures and flags each new doc against every band-mate,
+    * with the signature match fraction as its Jaccard estimate — the
+    * batch candidate semantics exactly, which is what StreamingSpec
+    * pins against [[graft.etl.Dedup.minhashLshFast]]. The banding is
+    * the batch tier's own ([[graft.etl.Dedup.TestNumHashes]]/
+    * [[graft.etl.Dedup.TestBandSize]]).
     *
     * State is BOUNDED two ways: a band key only ever holds
-    * `maxPerBand` signatures (first-seen wins — the canonical-keeper
-    * rule; later docs are still flagged against the kept set, so
-    * recall on "is this new doc a dup of the standing corpus"
-    * survives the cap, only dup-vs-dup pairs beyond it are dropped),
-    * and numHashes longs per entry. Per-band occupancy in a real
-    * near-dup graph is tiny (the LSH sparsity argument,
-    * Dedup.scala:202) — the cap is a backstop against adversarial
-    * band collisions, not a working limit. Emission order within a
-    * micro-batch is doc_id-sorted, so replays are deterministic.
+    * [[graft.etl.Dedup.MaxPerBand]] signatures (first-seen wins — the
+    * canonical-keeper rule; later docs are still flagged against the
+    * kept set, so recall on "is this new doc a dup of the standing
+    * corpus" survives the cap, only dup-vs-dup pairs beyond it are
+    * dropped), and TestNumHashes longs per entry. Per-band occupancy
+    * in a real near-dup graph is tiny (the LSH sparsity argument) —
+    * the cap is a backstop against adversarial band collisions, not a
+    * working limit. Emission order within a micro-batch is
+    * doc_id-sorted, so replays are deterministic.
     *
     * OUTPUT MULTIPLICITY: a pair sharing k bands is flagged up to k
     * times (once per band — band-keyed state cannot see its
@@ -390,17 +391,15 @@ object StreamingOps {
     * [[streamingNearDupTtl]], whose per-entry TTL expires idle keys
     * and bounds total state by the arrival rate × horizon.
     */
-  def streamingNearDup(docs: DataFrame, numHashes: Int = 8, bandSize: Int = 2,
-      thresholdBp: Long = 0L, maxPerBand: Int = 64): Dataset[NearDupHit] = {
+  def streamingNearDup(docs: DataFrame): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    bandedDocs(docs, numHashes, bandSize)
+    bandedDocs(docs)
       .groupByKey(r => (r.band, r.bkey))
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (_: (Int, Long), rows: Iterator[BandDoc],
             state: GroupState[List[BandSigEntry]]) => {
           val (hits, merged) = NearDupProbe.probe(
-            state.getOption.getOrElse(Nil), rows.toSeq,
-            numHashes, thresholdBp, maxPerBand)
+            state.getOption.getOrElse(Nil), rows.toSeq)
           state.update(merged)
           hits.iterator
         })
@@ -629,21 +628,17 @@ object StreamingOps {
   }
 
   /** Map-side banding shared by both streaming near-dup forms: fast
-    * signatures + the full signature array + one row per band struct —
-    * the band layout is [[graft.etl.Dedup.bandStructs]], THE single
-    * banding definition, so stream and batch can never drift.
+    * signatures + the full signature array, banded by the batch tier's
+    * own [[graft.etl.Dedup.bandRows]] over
+    * [[graft.etl.Dedup.bandStructs]], so stream and batch can never
+    * drift.
     */
-  private def bandedDocs(docs: DataFrame, numHashes: Int,
-      bandSize: Int): Dataset[BandDoc] = {
+  private def bandedDocs(docs: DataFrame): Dataset[BandDoc] = {
     import docs.sparkSession.implicits._
-    graft.etl.Dedup.minhashSignatureFast(docs, numHashes)
-      .withColumn("sig", array((0 until numHashes).map(i => col(s"mh_$i")): _*))
-      .select(col("doc_id"), col("sig"),
-        explode(array(graft.etl.Dedup.bandStructs(numHashes, bandSize,
-          graft.etl.Dedup.fastBandKey): _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"),
-        col("bs.bkey").as("bkey"), col("sig"))
-      .as[BandDoc]
+    import graft.etl.Dedup
+    val sig = Dedup.minhashSignatureFast(docs).withColumn("sig",
+      array((0 until Dedup.TestNumHashes).map(i => col(s"mh_$i")): _*))
+    Dedup.bandRows(sig, Dedup.bandStructs(Dedup.fastBandKey), "sig").as[BandDoc]
   }
 
   /** [[streamingNearDup]] with PRODUCTION-HORIZON state expiry — the
@@ -659,14 +654,11 @@ object StreamingOps {
     * store provider (the only one implementing the TWS state format),
     * which StreamingSpec runs.
     */
-  def streamingNearDupTtl(docs: DataFrame, ttl: Duration,
-      numHashes: Int = 8, bandSize: Int = 2, thresholdBp: Long = 0L,
-      maxPerBand: Int = 64): Dataset[NearDupHit] = {
+  def streamingNearDupTtl(docs: DataFrame, ttl: Duration): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    bandedDocs(docs, numHashes, bandSize)
+    bandedDocs(docs)
       .groupByKey(r => (r.band, r.bkey))
-      .transformWithState(
-        new NearDupTtlProcessor(numHashes, thresholdBp, maxPerBand, ttl),
+      .transformWithState(new NearDupTtlProcessor(ttl),
         TimeMode.ProcessingTime(), OutputMode.Append())
   }
 
@@ -730,8 +722,7 @@ class VisitedTtlProcessor(ttl: Duration)
   * state store ages out old snapshots' signatures without a timer in
   * sight), so the cap only bounds SIMULTANEOUSLY-live band mates.
   */
-class NearDupTtlProcessor(numHashes: Int, thresholdBp: Long,
-    maxPerBand: Int, ttl: Duration)
+class NearDupTtlProcessor(ttl: Duration)
     extends StatefulProcessor[(Int, Long), BandDoc, NearDupHit] {
   @transient private var seen: ListState[BandSigEntry] = _
 
@@ -742,8 +733,7 @@ class NearDupTtlProcessor(numHashes: Int, thresholdBp: Long,
   override def handleInputRows(key: (Int, Long), rows: Iterator[BandDoc],
       timers: TimerValues): Iterator[NearDupHit] = {
     val live = seen.get().toList // oldest-first, TTL-filtered by the store
-    val (hits, merged) = NearDupProbe.probe(live, rows.toSeq,
-      numHashes, thresholdBp, maxPerBand)
+    val (hits, merged) = NearDupProbe.probe(live, rows.toSeq)
     // per-element TTL: append only the NEW entries (re-putting the
     // whole list would refresh old elements' clocks)
     merged.drop(live.size).foreach(seen.appendValue)
@@ -753,13 +743,12 @@ class NearDupTtlProcessor(numHashes: Int, thresholdBp: Long,
 
 /** The probe/flag/append loop shared VERBATIM by both state backends
   * (fMGWS closure and [[NearDupTtlProcessor]]) — one implementation,
-  * so a threshold/flagging change cannot desynchronize them.
+  * so a flagging change cannot desynchronize them.
   * doc_id-sorted processing keeps replays deterministic; returns the
   * hits plus the band's merged first-seen list (capped).
   */
 private[streaming] object NearDupProbe {
-  def probe(live0: List[BandSigEntry], rows: Seq[BandDoc], numHashes: Int,
-      thresholdBp: Long, maxPerBand: Int)
+  def probe(live0: List[BandSigEntry], rows: Seq[BandDoc])
       : (Seq[NearDupHit], List[BandSigEntry]) = {
     var live = live0
     val out = scala.collection.mutable.ArrayBuffer.empty[NearDupHit]
@@ -768,12 +757,11 @@ private[streaming] object NearDupProbe {
         if (e.doc_id != r.doc_id) {
           val matches = e.sig.iterator.zip(r.sig.iterator)
             .count { case (a, b) => a == b }.toLong
-          val estBp = 10000L * matches / numHashes
-          if (estBp >= thresholdBp)
-            out += NearDupHit(r.doc_id, e.doc_id, estBp)
+          out += NearDupHit(r.doc_id, e.doc_id,
+            10000L * matches / graft.etl.Dedup.TestNumHashes)
         }
       }
-      if (live.size < maxPerBand && !live.exists(_.doc_id == r.doc_id))
+      if (live.size < graft.etl.Dedup.MaxPerBand && !live.exists(_.doc_id == r.doc_id))
         live = live :+ BandSigEntry(r.doc_id, r.sig)
     }
     (out.toSeq, live)

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -18,17 +19,24 @@ object PlanBridge {
     * SQL CacheManager). Safe once nothing downstream will re-read the
     * frame; a later action on it would fail (lineage is truncated), so
     * callers release only intermediates whose final consumer has been
-    * materialized. No-op for non-LogicalRDD plans. Goes through the
-    * `private[spark]` `SparkContext.unpersistRDD`: `RDD.unpersist` on a
-    * locally checkpointed RDD logs a lineage-truncation WARN on every
-    * call, and releasing is the expected end of its life here.
+    * materialized. No-op for non-LogicalRDD plans.
     */
   def releaseLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
-        df.sparkSession.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+        unpersist(r.rdd, blocking = false)
       case _ => ()
     }
+
+  /** `rdd.unpersist(blocking)`, except that a locally checkpointed RDD
+    * goes through the `private[spark]` `SparkContext.unpersistRDD`:
+    * `RDD.unpersist` on one logs a lineage-truncation WARN on every
+    * call, and releasing is the expected end of its life here.
+    */
+  def unpersist(rdd: RDD[_], blocking: Boolean): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking)
+    else { rdd.unpersist(blocking); () }
 
   /** The reliable-checkpoint directory backing a frame returned by
     * `Fixpoint.reliably` (its analyzed plan is a `LogicalRDD` over a

@@ -97,6 +97,21 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       "z-order lost orderkey clustering entirely")
   }
 
+  test("compact's file layout does not depend on the session's RDD history") {
+    val src = Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")
+    def layout(): Set[(Long, Long)] = {
+      val out = java.nio.file.Files.createTempDirectory("graft_layout_").toString
+      Bucketing.compact(src, Seq(col("l_partkey")), 8, 1000000L, out)
+      spark.read.parquet(out).groupBy(input_file_name())
+        .agg(min("l_partkey"), max("l_partkey")).collect()
+        .map(r => (r.getLong(1), r.getLong(2))).toSet
+    }
+    val first = layout()
+    // Spark seeds its range sample with the sampled RDD's id
+    spark.sparkContext.parallelize(1 to 2).count()
+    assert(layout() == first)
+  }
+
   test("compact writes bounded, range-clustered files") {
     val out = java.nio.file.Files.createTempDirectory("graft_compact_").toString
     val src = Tables.lineitem(spark, dir) // 6005 rows at sf0.001

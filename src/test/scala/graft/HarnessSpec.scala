@@ -39,6 +39,46 @@ class HarnessSpec extends AnyFunSuite with SparkTestBase {
       "memo still served the pre-scrub frame")
   }
 
+  test("scrub releases a local checkpoint a planOnly scope left pinned, " +
+      "blocks included, without a lineage-truncation warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.graft.TestBusBridge.rddBlockCount
+    val sc = spark.sparkContext
+    Harness.scrub(spark, keepMemo = true)
+    // planOnly keeps a scope's local blocks on exit (Fixpoint.Scope)
+    graft.etl.Fixpoint.planOnly(graft.etl.Fixpoint.scoped { scope =>
+      assert(scope.local(spark.range(10).toDF("x")).count() == 10L)
+    })
+    val left = sc.getPersistentRDDs.keys.toSeq
+    assert(left.nonEmpty && left.forall(rddBlockCount(sc, _) > 0),
+      "the planOnly scope left no local checkpoint to scrub")
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("scrub-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val level = root.getLevel
+    if (!root.isWarnEnabled) root.setLevel(Level.WARN)
+    root.addAppender(appender)
+    try Harness.scrub(spark, keepMemo = true)
+    finally {
+      root.removeAppender(appender)
+      root.setLevel(level)
+      appender.stop()
+    }
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(left.forall(rddBlockCount(sc, _) == 0), "scrubbed blocks still stored")
+    import scala.jdk.CollectionConverters._
+    val warned = lines.asScala.filter(_.contains("locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+  }
+
   private def assertRejected(code: Int, out: String): Unit =
     assert(code != 0 && out.contains("unknown queries: typo"),
       s"exit $code:\n${ChildJvm.tail(out)}")

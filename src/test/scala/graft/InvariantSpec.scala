@@ -596,6 +596,26 @@ class InvariantSpec extends AnyFunSuite with SparkTestBase {
         s"extra=${(banded -- brute).take(5)}")
   }
 
+  test("near-dup overlap cores agree: every LSH candidate pair inside the " +
+      "doc_id<64 block gets the same n_common and jaccard_bp from the " +
+      "block tier and the candidate tier (lsh_quality's distinct relies on it)") {
+    import graft.etl.Dedup
+    val dir = "/root/testdata/sf0.001"
+    def rows(core: org.apache.spark.sql.DataFrame) =
+      core.select(col("doc_a"), col("doc_b"), col("n_common"),
+          Dedup.jaccardBp.as("jaccard_bp"))
+        .as[(Long, Long, Long, Long)].collect()
+    val block = rows(Dedup.blockOverlap(
+        graft.Tables.documents(spark, dir).filter(col("doc_id") < 64)))
+      .map(r => (r._1, r._2) -> r).toMap
+    val cands = rows(Dedup.candidateOverlap(spark, dir,
+      Dedup.minhashLsh(spark, dir).filter(col("doc_b") < 64)))
+    assert(cands.nonEmpty, "vacuous: no LSH candidate pair inside the block")
+    val differ = cands.filterNot(c => block.get((c._1, c._2)).contains(c))
+    assert(differ.isEmpty, s"candidate-tier rows the block tier disagrees with: " +
+      differ.take(5).map(c => s"$c vs ${block.get((c._1, c._2))}").mkString(", "))
+  }
+
   test("quality_train pocket invariant: the eval's chosen_round is the " +
        "valid-mistake argmin of the published curve (ties to the " +
        "earliest round), and the shipped vector covers every bucket") {

@@ -242,16 +242,16 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // on sf0.1 (same duplicate density by construction: the cipher
     // replication adds disjoint-vocabulary replicas, so per-bucket
     // occupancy does not grow with replica count).
-    import org.apache.spark.sql.functions.{array, count => cnt, explode, lit, max => mx}
+    import org.apache.spark.sql.functions.{count => cnt, lit, max => mx}
     val scale30 = "/tmp/graft_scale30/documents.parquet"
     val path =
       if (new java.io.File(scale30).isDirectory) scale30
       else "/root/testdata/sf0.1/documents.parquet"
     val docs = spark.read.parquet(path).select(col("doc_id"), col("text"))
     val sig = graft.etl.Dedup.minhashSignatureFast(docs, 8)
-    val worst = sig.select(explode(array(
-        graft.etl.Dedup.bandStructs(8, 2, graft.etl.Dedup.fastBandKey): _*)).as("bs"))
-      .groupBy(col("bs.band"), col("bs.bkey"))
+    val worst = graft.etl.Dedup.bandRows(sig,
+        graft.etl.Dedup.bandStructs(graft.etl.Dedup.fastBandKey))
+      .groupBy(col("band"), col("bkey"))
       .agg(cnt(lit(1)).as("c"))
       .agg(mx(col("c"))).collect().head.getLong(0)
     assert(worst <= 32,

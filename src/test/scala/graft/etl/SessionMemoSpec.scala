@@ -20,7 +20,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestBase {
   test("an eviction racing an in-flight build releases that build's " +
       "checkpoint files on completion, and the builder's caller " +
       "retries onto the current fingerprint") {
-    val memo = new SessionMemo[String]
+    val memo = new SessionMemo
     val tmp = java.nio.file.Files.createTempDirectory("graft-memo-race").toString
     import spark.implicits._
     def write(n: Int): Unit =
@@ -37,7 +37,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestBase {
     try {
       write(4)
       val builder = new Thread(() => {
-        try resolved = memo.get(spark, tmp, "p") {
+        try resolved = memo.get(spark, tmp) {
           started.countDown()
           unblock.await()
           inner = freshFrame()
@@ -50,7 +50,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkTestBase {
       // the next lookup computes a NEW fingerprint and evicts the
       // in-flight entry
       write(6)
-      val second = memo.get(spark, tmp, "p")(freshFrame())
+      val second = memo.get(spark, tmp)(freshFrame())
       assert(second.count() == 6L)
       unblock.countDown()
       builder.join(60000)
