@@ -1436,9 +1436,8 @@ object Dedup {
             .as("key"))
       }
     }
-    val occ = sig.select(explode(array(bandCols: _*)).as("bs"))
-      .groupBy(col("bs.band_size").as("band_size"),
-        col("bs.band").as("band"), col("bs.key").as("key"))
+    val occ = bandRows(sig, bandCols)
+      .groupBy(col("band_size"), col("band"), col("key"))
       .agg(count(lit(1)).as("c"))
     // ≤3 rows read by the budget agg, the pick agg, and the final
     // projection — the bounded-frame staging rule

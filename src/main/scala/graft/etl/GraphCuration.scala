@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorFunctions.{dotF, normF}
 
 /** Graph-based corpus curation: the kNN-graph family a large-scale
   * training-data pipeline builds ON TOP of ANN search — a mutual
@@ -62,25 +61,26 @@ object GraphCuration {
   def adaptiveBits(nVectors: Long): Int =
     (3 to 12).find(b => (1L << b) * TargetCell >= nVectors).getOrElse(12)
 
-  /** Directed top-5 cosine neighbor lists, sign-bucket-blocked into
-    * 2^bits cells.
+  /** [[adaptiveBits]] of `dir`'s embeddings count — the blocking width
+    * every adaptive sign-bucket query derives the same way.
     */
-  private def directedKnn(spark: SparkSession, dir: String, bits: Int): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("nrm", normF(col("embedding")))
-      .filter(col("nrm").isNotNull)
-      .withColumn("bucket", Similarity.signBucket(col("embedding"), bits))
-    val q = e.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-      col("nrm").as("qn"), col("bucket").as("qb"))
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      col("nrm").as("cn"), col("bucket").as("cb"))
-    val scored = q.join(c, col("qb") === col("cb") && col("qid") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+  private[etl] def corpusBits(spark: SparkSession, dir: String): Int =
+    adaptiveBits(Tables.embeddings(spark, dir).count())
+
+  /** Directed top-5 cosine neighbor lists, sign-bucket-blocked into
+    * 2^[[corpusBits]] cells.
+    */
+  private def directedKnn(spark: SparkSession, dir: String): DataFrame = {
+    import Similarity.{side, cos4, topK, ByCos}
+    val e = Similarity.withNorm(Tables.embeddings(spark, dir))
+      .withColumn("bucket",
+        Similarity.signBucket(col("embedding"), corpusBits(spark, dir)))
+    val cols = Seq("vec_id", "embedding", "nrm", "bucket")
+    // every vector is a query: an unbounded, bucket-keyed self-join
+    val scored = side(e, "q", cols: _*).join(side(e, "c", cols: _*),
+        col("qb") === col("cb") && col("qid") =!= col("cid"))
+      .withColumn("cos", cos4("qe", "qn", "ce", "cn"))
+    topK(scored, 5, Seq("qid"), ByCos: _*)
       .select(col("qid"), col("cid"), col("cos"))
   }
 
@@ -93,8 +93,7 @@ object GraphCuration {
     * posture tables).
     */
   def knnGraphEdges(spark: SparkSession, dir: String): DataFrame = {
-    val k = directedKnn(spark, dir,
-      adaptiveBits(Tables.embeddings(spark, dir).count()))
+    val k = directedKnn(spark, dir)
     val rev = k.select(col("qid").as("rqid"), col("cid").as("rcid"))
     k.join(rev, col("qid") === col("rcid") && col("cid") === col("rqid"))
       .filter(col("qid") < col("cid"))

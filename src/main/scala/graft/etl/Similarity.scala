@@ -25,17 +25,6 @@ import graft.functions.VectorFunctions.{dotF, normF}
   */
 object Similarity {
 
-  /** Embedding-table health audit, per label: vector count, zero and
-    * null vectors, off-dimension vectors, and the norm range/mean —
-    * the "did the encoder break?" gate run before any ANN build (a
-    * batch of zero vectors or a dim drift silently poisons every
-    * cosine downstream; this surfaces both in one scan). Norms round
-    * to 4dp (irrational rule); the mean is sum/n of the ROUNDED norms
-    * — identical formula both engines, rounded again at the surface.
-    *
-    * Scale posture: one map-side pass (norm + dim per row), one
-    * label-keyed agg. Nothing joins, nothing shuffles but the agg.
-    */
   /** Int8 symmetric scalar-quantization audit — the OTHER production
     * embedding-compression tier next to PQ ([[pqDistortion]]): per
     * vector, quantize q_i = trunc(127·x_i / amax) against the
@@ -87,6 +76,17 @@ object Similarity {
         size(expr("filter(q, v -> abs(v) = 127)")).cast("bigint").as("n_sat"))
       .orderBy("vec_id")
 
+  /** Embedding-table health audit, per label: vector count, zero and
+    * null vectors, off-dimension vectors, and the norm range/mean —
+    * the "did the encoder break?" gate run before any ANN build (a
+    * batch of zero vectors or a dim drift silently poisons every
+    * cosine downstream; this surfaces both in one scan). Norms round
+    * to 4dp (irrational rule); the mean is sum/n of the ROUNDED norms
+    * — identical formula both engines, rounded again at the surface.
+    *
+    * Scale posture: one map-side pass (norm + dim per row), one
+    * label-keyed agg. Nothing joins, nothing shuffles but the agg.
+    */
   def embeddingAudit(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .withColumn("dim", size(col("embedding")))
@@ -120,21 +120,10 @@ object Similarity {
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
     def topk(trunc: Boolean): DataFrame = {
       val emb = if (trunc) slice(col("embedding"), 1, 16) else col("embedding")
-      val e = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), emb.as("v"))
-        .withColumn("nrm", normF(col("v")))
-        .filter(col("nrm").isNotNull)
-      val q = broadcast(e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("qid"), col("v").as("qe"), col("nrm").as("qn")))
-      val c = e.select(col("vec_id").as("cid"), col("v").as("ce"),
-        col("nrm").as("cn"))
-      val scored = q.join(c, col("qid") =!= col("cid"))
-        .withColumn("cos",
-          round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("cid").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+      val e = withNorm(Tables.embeddings(spark, dir)
+        .select(col("vec_id"), emb.as("embedding")))
+      topK(knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm"),
+          5, Seq("qid"), ByCos: _*)
         .select(col("qid"), col("cid"))
     }
     val full = topk(trunc = false)
@@ -162,12 +151,118 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  // The family's shared cores: every embedding query scores, ranks and
+  // assigns through these, so each of those decisions is made once.
+
   /** embeddings with the vector norm materialized once per row (the
     * size filter is a Project-collapse barrier).
     */
-  private def withNorm(e: DataFrame): DataFrame =
+  private[etl] def withNorm(e: DataFrame): DataFrame =
     e.withColumn("nrm", normF(col("embedding")))
       .filter(col("nrm").isNotNull)
+
+  /** THE float cosine of the family: the codegen'd dot of vectors `a`
+    * and `b` over their precomputed norms `an`/`bn`, rounded to 4dp
+    * (irrational-value rule) — one dot product per pair, not three.
+    */
+  private[etl] def cos4(a: String, an: String, b: String, bn: String): Column =
+    round(dotF(col(a), col(b)) / (col(an) * col(bn)), 4)
+
+  private val SideNames = Map("vec_id" -> "id", "embedding" -> "e",
+    "nrm" -> "n", "bucket" -> "b", "label" -> "label")
+
+  /** Side `p` ("q" query, "c" corpus/centroid) of a vector pair join:
+    * `cols` of `e` in the given order, vec_id/embedding/nrm/bucket/label
+    * renamed to p+id/e/n/b/label (qid, qe, qn, …); any other column
+    * keeps its name.
+    */
+  private[etl] def side(e: DataFrame, p: String, cols: String*): DataFrame =
+    e.select(cols.map(c => SideNames.get(c).fold(col(c))(s => col(c).as(p + s))): _*)
+
+  /** The bounded slice vec_id < `n` of `e` as [[side]] `p`, broadcast —
+    * the query block (16/64 rows) or the seed centroids (8 rows), so
+    * every pair join is a map-side pass over the corpus.
+    */
+  private def bounded(e: DataFrame, n: Int, p: String, cols: String*): DataFrame =
+    broadcast(side(e.filter(col("vec_id") < n), p, cols: _*))
+
+  /** The bounded query block (vec_id < `n`) joined to the corpus on `on`
+    * and cosine-scored as `cos`; both sides carry vec_id and then `cols`
+    * (which include embedding and nrm) under their [[side]] names.
+    */
+  private def knnScored(e: DataFrame, n: Int, on: Column, cols: String*): DataFrame =
+    bounded(e, n, "q", "vec_id" +: cols: _*)
+      .join(side(e, "c", "vec_id" +: cols: _*), on)
+      .withColumn("cos", cos4("qe", "qn", "ce", "cn"))
+
+  /** Rows ranked 1..k within each `partition` group under `order`, the
+    * rank in column "rank" (planned as a GroupTopK: no sort, map-side
+    * partial pruning).
+    */
+  private[etl] def topK(df: DataFrame, k: Int, partition: Seq[String],
+      order: Column*): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(partition.map(col): _*).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+
+  /** Highest cosine first, ties to the lower cid: a total order. */
+  private[etl] val ByCos = Seq(col("cos").desc, col("cid").asc)
+
+  /** `cols` of `e` scored against every centroid (the broadcast
+    * vec_id < 8 slice as cid/ce/cn; in production the k-means output,
+    * equally broadcastable since k ≪ n), self pair excluded.
+    */
+  private def centroidCos(e: DataFrame, cols: String*): DataFrame =
+    e.select(cols.map(col): _*)
+      .join(bounded(e, 8, "c", "vec_id", "embedding", "nrm"),
+        col("vec_id") =!= col("cid"))
+      .withColumn("cos", cos4("embedding", "nrm", "ce", "cn"))
+
+  /** Each vector of [[centroidCos]] with only its nearest centroid —
+    * a rank-1 window keyed by vec_id (high cardinality, distributes).
+    */
+  private def nearest(e: DataFrame, cols: String*): DataFrame =
+    topK(centroidCos(e, cols: _*), 1, Seq("vec_id"), ByCos: _*)
+
+  /** IVF search over a centroid-scored frame `cents` (vec_id,
+    * embedding, nrm, cid, cos): the inverted lists — each vector's
+    * argmax-by-struct centroid (max cos, then min cid via the negated
+    * key), a pure two-phase agg, so the corpus shuffles once on vec_id
+    * and never sorts — and each vec_id < 16 query's `nprobe` nearest
+    * lists (rank `prk`), broadcast, joined map-side to their members
+    * and cosine-scored. Columns: qid, qe, qn, pcid, prk, a_vid, acid,
+    * a_emb, a_nrm, cos.
+    */
+  private def ivfProbed(cents: DataFrame, nprobe: Int): DataFrame = {
+    val probes = broadcast(topK(cents.filter(col("vec_id") < 16), nprobe,
+        Seq("vec_id"), ByCos: _*)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
+        col("nrm").as("qn"), col("cid").as("pcid"), col("rank").as("prk")))
+    probes.join(invertedLists(cents),
+        col("pcid") === col("acid") && col("qid") =!= col("a_vid"))
+      .withColumn("cos", cos4("qe", "qn", "a_emb", "a_nrm"))
+  }
+
+  private def invertedLists(cents: DataFrame): DataFrame =
+    cents.groupBy(col("vec_id"))
+      .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("m"),
+        first(col("embedding")).as("a_emb"), first(col("nrm")).as("a_nrm"))
+      .select(col("vec_id").as("a_vid"), (-col("m.ncid")).as("acid"),
+        col("a_emb"), col("a_nrm"))
+
+  /** Exact mean of `x` to 4dp: each value rounds to integral basis
+    * points before summing, so the BIGINT sum is order-free across
+    * partitions (avg(double) is not) and the one division is exact.
+    */
+  private def bpMean(x: Column): Column =
+    sum(round(x.cast("double") * 10000).cast("bigint")).cast("double") /
+      count(lit(1)) / 10000.0
+
+  /** A sign cell and its Hamming-1 neighbors: `bucket` plus each of its
+    * `bits` single-bit flips (bits+1 distinct values).
+    */
+  private def hamming1(bucket: Column, bits: Int): Column =
+    array((bucket +: (0 until bits).map(i => bucket.bitwiseXOR(1 << i))): _*)
 
   /** Exact brute-force top-5 cosine neighbors for query vectors
     * (vec_id < 16). Ranking on the rounded cosine with vec_id tie-break
@@ -175,18 +270,8 @@ object Similarity {
     */
   def knnBrute(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val q = broadcast(e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn")))
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      col("nrm").as("cn"))
-    val scored = q.join(c, col("qid") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    topK(knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm"),
+        5, Seq("qid"), ByCos: _*)
       .select(col("qid"), col("rank"), col("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -203,19 +288,10 @@ object Similarity {
     */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val q = broadcast(e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("embedding").as("qe"), col("nrm").as("qn")))
-    val c = e.select(col("vec_id").as("cid"), col("label").as("clabel"),
-      col("embedding").as("ce"), col("nrm").as("cn"))
-    val scored = q.join(c,
-        col("qid") =!= col("cid") && col("qlabel") =!= col("clabel"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    val scored = knnScored(e, 16,
+      col("qid") =!= col("cid") && col("qlabel") =!= col("clabel"),
+      "label", "embedding", "nrm")
+    topK(scored, 3, Seq("qid"), ByCos: _*)
       .select(col("qid"), col("rank"), col("cid"), col("clabel"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -236,18 +312,9 @@ object Similarity {
   def knnBucketed(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
       .withColumn("bucket", signBucket(col("embedding")))
-    val q = broadcast(e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("bucket").as("qb")))
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      col("nrm").as("cn"), col("bucket").as("cb"))
-    val scored = q.join(c, col("qb") === col("cb") && col("qid") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    val scored = knnScored(e, 16, col("qb") === col("cb") && col("qid") =!= col("cid"),
+      "embedding", "nrm", "bucket")
+    topK(scored, 5, Seq("qid"), ByCos: _*)
       .select(col("qid"), col("qb").as("bucket"), col("rank"), col("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -315,17 +382,8 @@ object Similarity {
     */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val cents = broadcast(e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("nrm").as("cn")))
-    val scored = e.select(col("vec_id"), col("label"), col("embedding"), col("nrm"))
-      .join(cents, col("vec_id") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val assigned = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1).select(col("cid"), col("label"))
+    val assigned = nearest(e, "vec_id", "label", "embedding", "nrm")
+      .select(col("cid"), col("label"))
     val byLabel = assigned.groupBy(col("cid"), col("label"))
       .agg(count(lit(1)).as("n"))
     val wl = Window.partitionBy(col("cid"))
@@ -358,19 +416,9 @@ object Similarity {
     */
   def mmrDiversify(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val q = broadcast(e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn")))
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      col("nrm").as("cn"))
-    val scored = q.join(c, col("qid") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
+    val scored = knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm")
     Fixpoint.scoped { scope =>
-      val cand = scope.local(scored.withColumn("srk", row_number().over(w))
-        .filter(col("srk") <= 20)
+      val cand = scope.local(topK(scored, 20, Seq("qid"), ByCos: _*)
         .select(col("qid"), col("cid"),
           round(col("cos") * 10000).cast("bigint").as("rel_bp"),
           col("ce"), col("cn")))
@@ -380,14 +428,10 @@ object Similarity {
           col("ce").as("be"), col("cn").as("bn")), Seq("qid"))
         .filter(col("acid") =!= col("bcid"))
         .select(col("qid"), col("acid"), col("bcid"),
-          round(round(dotF(col("ae"), col("be")) / (col("an") * col("bn")), 4)
-            * 10000).cast("bigint").as("sim_bp"))
+          round(cos4("ae", "an", "be", "bn") * 10000).cast("bigint").as("sim_bp"))
       val simsCk = scope.local(sims)
       val slim = cand.select(col("qid"), col("cid"), col("rel_bp"))
-      val first = slim
-        .withColumn("pk", row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("rel_bp").desc, col("cid").asc)))
-        .filter(col("pk") === 1)
+      val first = topK(slim, 1, Seq("qid"), col("rel_bp").desc, col("cid").asc)
         .select(col("qid"), col("cid"), col("rel_bp"),
           col("rel_bp").as("mmr2"), lit(1).as("rank"))
       var selected = scope.local(first)
@@ -403,11 +447,8 @@ object Similarity {
             && col("cid") === col("acid") && col("scid") === col("bcid"))
           .groupBy(col("qid"), col("cid"), col("rel_bp"))
           .agg(max(col("sim_bp")).as("ms"))
-        val pick = withMs
-          .withColumn("mmr2", col("rel_bp") - col("ms"))
-          .withColumn("pk", row_number().over(Window.partitionBy(col("qid"))
-            .orderBy(col("mmr2").desc, col("cid").asc)))
-          .filter(col("pk") === 1)
+        val pick = topK(withMs.withColumn("mmr2", col("rel_bp") - col("ms")),
+            1, Seq("qid"), col("mmr2").desc, col("cid").asc)
           .select(col("qid"), col("cid"), col("rel_bp"), col("mmr2"),
             lit(r).as("rank"))
         selected = scope.local(selected.unionByName(pick))
@@ -434,18 +475,9 @@ object Similarity {
     */
   def tripletMine(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val q = broadcast(e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("embedding").as("qe"), col("nrm").as("qn")))
-    val c = e.select(col("vec_id").as("cid"), col("label").as("clabel"),
-      col("embedding").as("ce"), col("nrm").as("cn"))
-    val scored = q.join(c, col("qid") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
+    val scored = knnScored(e, 16, col("qid") =!= col("cid"), "label", "embedding", "nrm")
       .withColumn("pos", (col("qlabel") === col("clabel")).cast("int"))
-    val w = Window.partitionBy(col("qid"), col("pos"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    topK(scored, 1, Seq("qid", "pos"), ByCos: _*)
       .groupBy(col("qid"))
       .agg(
         max(when(col("pos") === 1, col("cid"))).as("pos_cid"),
@@ -469,25 +501,13 @@ object Similarity {
     */
   def labelNoise(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val q = broadcast(e.filter(col("vec_id") < 64)
-      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-        col("embedding").as("qe"), col("nrm").as("qn")))
-    val c = e.select(col("vec_id").as("cid"), col("label").as("clabel"),
-      col("embedding").as("ce"), col("nrm").as("cn"))
-    val scored = q.join(c, col("qid") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val top5 = scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
+    val scored = knnScored(e, 64, col("qid") =!= col("cid"), "label", "embedding", "nrm")
+    val top5 = topK(scored, 5, Seq("qid"), ByCos: _*)
       .select(col("qid"), col("qlabel"), col("clabel"))
     val votes = top5.groupBy(col("qid"), col("qlabel"), col("clabel"))
       .agg(count(lit(1)).as("n"))
-    val wv = Window.partitionBy(col("qid"))
-      .orderBy(col("n").desc, col("clabel").asc)
-    votes.withColumn("vrk", row_number().over(wv))
-      .filter(col("vrk") === 1 && col("clabel") =!= col("qlabel"))
+    topK(votes, 1, Seq("qid"), col("n").desc, col("clabel").asc)
+      .filter(col("clabel") =!= col("qlabel"))
       .select(col("qid"), col("qlabel").as("label"),
         col("clabel").as("neighbor_label"), col("n").as("n_votes"))
       .orderBy("qid")
@@ -521,16 +541,14 @@ object Similarity {
     * previously-pinned config.
     */
   def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val bits = GraphCuration.adaptiveBits(Tables.embeddings(spark, dir).count())
+    val bits = GraphCuration.corpusBits(spark, dir)
     val e = withNorm(Tables.embeddings(spark, dir))
       .withColumn("bucket", signBucket(col("embedding"), bits))
       .select(col("vec_id"), col("embedding"), col("label"), col("nrm"), col("bucket"))
     val pairs = e.as("a").join(e.as("b"),
         col("a.label") === col("b.label") && col("a.bucket") === col("b.bucket")
           && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos",
-        round(dotF(col("a.embedding"), col("b.embedding"))
-          / (col("a.nrm") * col("b.nrm")), 4))
+      .withColumn("cos", cos4("a.embedding", "a.nrm", "b.embedding", "b.nrm"))
       .filter(col("cos") >= 0.3)
     pairs.select(col("a.label").as("label"),
         col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("cos"))
@@ -551,7 +569,7 @@ object Similarity {
     * retains — the recall dial priced next to what it buys.
     */
   def neardupRecall(spark: SparkSession, dir: String): DataFrame = {
-    val bits = GraphCuration.adaptiveBits(Tables.embeddings(spark, dir).count())
+    val bits = GraphCuration.corpusBits(spark, dir)
     val e = withNorm(Tables.embeddings(spark, dir))
       .filter(col("vec_id") < 256)
       .withColumn("bucket", signBucket(col("embedding"), bits))
@@ -561,8 +579,7 @@ object Similarity {
       col("embedding").as("be"), col("nrm").as("bn"), col("bucket").as("b_bk"))
     val exact = a.join(b, col("label") === col("b_label")
         && col("a_id") < col("b_id"))
-      .withColumn("cos",
-        round(dotF(col("ae"), col("be")) / (col("an") * col("bn")), 4))
+      .withColumn("cos", cos4("ae", "an", "be", "bn"))
       .filter(col("cos") >= 0.3)
     exact.groupBy(col("label"))
       .agg(count(lit(1)).as("n_exact"),
@@ -586,20 +603,17 @@ object Similarity {
     * occupancy × (bits+1).
     */
   def embeddingNearDupMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    val bits = GraphCuration.adaptiveBits(Tables.embeddings(spark, dir).count())
+    val bits = GraphCuration.corpusBits(spark, dir)
     val e = withNorm(Tables.embeddings(spark, dir))
       .withColumn("bucket", signBucket(col("embedding"), bits))
-    val probes = array((col("bucket") +:
-      (0 until bits).map(i => col("bucket").bitwiseXOR(1 << i))): _*)
-    val a = e.withColumn("probe", explode(probes))
+    val a = e.withColumn("probe", explode(hamming1(col("bucket"), bits)))
       .select(col("vec_id").as("a_id"), col("label"),
         col("embedding").as("ae"), col("nrm").as("an"), col("probe"))
     val b = e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
       col("embedding").as("be"), col("nrm").as("bn"), col("bucket").as("b_bk"))
     a.join(b, col("label") === col("b_label")
         && col("probe") === col("b_bk") && col("a_id") < col("b_id"))
-      .withColumn("cos",
-        round(dotF(col("ae"), col("be")) / (col("an") * col("bn")), 4))
+      .withColumn("cos", cos4("ae", "an", "be", "bn"))
       .filter(col("cos") >= 0.3)
       // no distinct needed: the probe list holds bits+1 DISTINCT values
       // and the b-side bucket is one value, so each (a, b) pair matches
@@ -621,22 +635,12 @@ object Similarity {
   def knnMultiprobe(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
       .withColumn("bucket", signBucket(col("embedding")))
-    val probes = array(col("bucket"),
-      col("bucket").bitwiseXOR(1), col("bucket").bitwiseXOR(2),
-      col("bucket").bitwiseXOR(4))
-    val q = broadcast(e.filter(col("vec_id") < 16)
-      .withColumn("probe", explode(probes))
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("probe")))
-    val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      col("nrm").as("cn"), col("bucket").as("cb"))
+    val q = bounded(e.withColumn("probe", explode(hamming1(col("bucket"), 3))),
+      16, "q", "vec_id", "embedding", "nrm", "probe")
+    val c = side(e, "c", "vec_id", "embedding", "nrm", "bucket")
     val scored = q.join(c, col("probe") === col("cb") && col("qid") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("ce")) / (col("qn") * col("cn")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+      .withColumn("cos", cos4("qe", "qn", "ce", "cn"))
+    topK(scored, 5, Seq("qid"), ByCos: _*)
       .select(col("qid"), col("rank"), col("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -651,24 +655,9 @@ object Similarity {
     */
   def clusterAssign(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val cents = broadcast(e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("nrm").as("cn")))
-    val scored = e.select(col("vec_id"), col("embedding"), col("nrm"))
-      .join(cents, col("vec_id") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    nearest(e, "vec_id", "embedding", "nrm")
       .groupBy(col("cid"))
-      // mean over EXACT basis points, not avg(double): double summation
-      // is order-sensitive across partitions; round(cos·10⁴) is integral
-      // so the bigint sum is order-free and the final division exact
-      .agg(count(lit(1)).as("n_assigned"),
-        (sum(round(col("cos") * 10000).cast("bigint")).cast("double")
-          / count(lit(1)) / 10000.0).as("mean_cos"))
+      .agg(count(lit(1)).as("n_assigned"), bpMean(col("cos")).as("mean_cos"))
       .orderBy("cid")
   }
 
@@ -689,22 +678,11 @@ object Similarity {
     */
   def kmeansUpdate(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val cents0 = broadcast(e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("nrm").as("cn")))
-    val scored = e.select(col("vec_id"), col("embedding"), col("nrm"))
-      .join(cents0, col("vec_id") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+    nearest(e, "vec_id", "embedding", "nrm")
       .select(col("cid"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .filter(col("dim") < 4)
       .groupBy(col("cid"), col("dim"))
-      .agg(count(lit(1)).as("n_assigned"),
-        (sum(round(col("x").cast("double") * 10000).cast("bigint")).cast("double")
-          / count(lit(1)) / 10000.0).as("mean_x"))
+      .agg(count(lit(1)).as("n_assigned"), bpMean(col("x")).as("mean_x"))
       .orderBy("cid", "dim")
   }
 
@@ -726,35 +704,8 @@ object Similarity {
     */
   def knnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val cents = broadcast(e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("nrm").as("cn")))
-    val centCos = e.select(col("vec_id"), col("embedding"), col("nrm"))
-      .join(cents, col("vec_id") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    // inverted lists: argmax-by-struct keeps this a pure two-phase agg
-    // (ties: max cos, then min cid via the negated key)
-    val assigned = centCos.groupBy(col("vec_id"))
-      .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("m"),
-        first(col("embedding")).as("a_emb"), first(col("nrm")).as("a_nrm"))
-      .select(col("vec_id").as("a_vid"), (-col("m.ncid")).as("acid"),
-        col("a_emb"), col("a_nrm"))
-    // probe set: 2 nearest cells per query — bounded, stays broadcast
-    val wq = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val probes = broadcast(centCos.filter(col("vec_id") < 16)
-      .withColumn("rk", row_number().over(wq)).filter(col("rk") <= 2)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cid").as("pcid")))
-    val scored = probes.join(assigned,
-        col("pcid") === col("acid") && col("qid") =!= col("a_vid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("a_emb")) / (col("qn") * col("a_nrm")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("a_vid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    val scored = ivfProbed(centroidCos(e, "vec_id", "embedding", "nrm"), 2)
+    topK(scored, 5, Seq("qid"), col("cos").desc, col("a_vid").asc)
       .select(col("qid"), col("rank"), col("a_vid").as("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -774,28 +725,7 @@ object Similarity {
     */
   def ivfSweep(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val cents = broadcast(e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("nrm").as("cn")))
-    val centCos = e.select(col("vec_id"), col("embedding"), col("nrm"))
-      .join(cents, col("vec_id") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    val assigned = centCos.groupBy(col("vec_id"))
-      .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("m"),
-        first(col("embedding")).as("a_emb"), first(col("nrm")).as("a_nrm"))
-      .select(col("vec_id").as("a_vid"), (-col("m.ncid")).as("acid"),
-        col("a_emb"), col("a_nrm"))
-    val wq = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val probes = broadcast(centCos.filter(col("vec_id") < 16)
-      .withColumn("prk", row_number().over(wq)).filter(col("prk") <= 3)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cid").as("pcid"), col("prk")))
-    val scored = probes.join(assigned,
-        col("pcid") === col("acid") && col("qid") =!= col("a_vid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("a_emb")) / (col("qn") * col("a_nrm")), 4))
+    val scored = ivfProbed(centroidCos(e, "vec_id", "embedding", "nrm"), 3)
       .select(col("qid"), col("prk"), col("a_vid").as("cid"), col("cos"))
     Fixpoint.scoped { scope =>
       val scoredCk = scope.local(scored)
@@ -804,10 +734,7 @@ object Similarity {
       val nExact = exact.agg(count(lit(1)).as("n_exact"))
       val stats = (1 to 3).map { p =>
         val cand = scoredCk.filter(col("prk") <= p)
-        val w5 = Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("cid").asc)
-        val top = cand.withColumn("rank", row_number().over(w5))
-          .filter(col("rank") <= 5).select(col("qid"), col("cid"))
+        val top = topK(cand, 5, Seq("qid"), ByCos: _*).select(col("qid"), col("cid"))
         val scanned = cand.agg(count(lit(1)).as("n_scanned"))
         val hits = exact.join(top, Seq("qid", "cid"), "left_semi")
           .agg(count(lit(1)).as("n_hit"))
@@ -838,23 +765,13 @@ object Similarity {
     */
   def knnIvfTrained(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    val seeds = broadcast(e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("nrm").as("cn")))
-    val seedCos = e.select(col("vec_id"), col("embedding"), col("nrm"))
-      .join(seeds, col("vec_id") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    // Lloyd round: argmax assignment under seeds, then per-dim means
-    val assigned0 = seedCos.groupBy(col("vec_id"))
-      .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("m"),
-        first(col("embedding")).as("emb")) // embedding constant per vec_id
-      .select((-col("m.ncid")).as("cid"), col("emb"))
-    val means = assigned0
-      .select(col("cid"), posexplode(col("emb")).as(Seq("dim", "x")))
+    // Lloyd round: argmax assignment under the seed centroids, then
+    // per-dim means
+    val means = invertedLists(centroidCos(e, "vec_id", "embedding", "nrm"))
+      .withColumnRenamed("acid", "cid")
+      .select(col("cid"), posexplode(col("a_emb")).as(Seq("dim", "x")))
       .groupBy(col("cid"), col("dim"))
-      .agg((sum(round(col("x").cast("double") * 10000).cast("bigint")).cast("double")
-        / count(lit(1)) / 10000.0).as("mx"))
+      .agg(bpMean(col("x")).as("mx"))
     val trained = broadcast(means.groupBy(col("cid"))
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("mx")))),
         s => s.getField("mx")).as("ce"))
@@ -865,25 +782,7 @@ object Similarity {
       .crossJoin(trained)
       .withColumn("cos",
         round(dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    val assigned2 = cos2.groupBy(col("vec_id"))
-      .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("m"),
-        first(col("embedding")).as("a_emb"), first(col("nrm")).as("a_nrm"))
-      .select(col("vec_id").as("a_vid"), (-col("m.ncid")).as("acid"),
-        col("a_emb"), col("a_nrm"))
-    val wq = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val probes = broadcast(cos2.filter(col("vec_id") < 16)
-      .withColumn("rk", row_number().over(wq)).filter(col("rk") <= 2)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cid").as("pcid")))
-    val scored = probes.join(assigned2,
-        col("pcid") === col("acid") && col("qid") =!= col("a_vid"))
-      .withColumn("cos",
-        round(dotF(col("qe"), col("a_emb")) / (col("qn") * col("a_nrm")), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("a_vid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    topK(ivfProbed(cos2, 2), 5, Seq("qid"), col("cos").desc, col("a_vid").asc)
       .select(col("qid"), col("rank"), col("a_vid").as("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -927,15 +826,17 @@ object Similarity {
     * chunk-embedding search contract).
     */
   def knnPq(spark: SparkSession, dir: String): DataFrame =
-    pqAdc(spark, dir)
-      .filter(col("rank") <= 5)
+    pqAdc(spark, dir, 5)
       .select(col("qid"), col("rank"), col("vec_id").as("cid"), col("adist_units"))
       .orderBy("qid", "rank")
 
-  /** ADC-ranked candidates shared by [[knnPq]] (top-5 surface) and
-    * [[knnPqRerank]] (shortlist-25 → exact re-rank). Returns every
-    * (qid, vec_id) pair with its integer ADC distance and rank.
+  /** PQ shape: M subquantizers of Sub dims each (M·Sub = the 64-dim
+    * embedding), K codewords per subquantizer.
     */
+  private val PqM = 4
+  private val PqSub = 16
+  private val PqK = 16
+
   /** Quantized corpus vectors (vec_id, embq) — integral 1e-3 units, the
     * shared input of the PQ family. All downstream distances are exact
     * BIGINT Σ(xq−yq)² with no FP fold for thread order to perturb.
@@ -964,38 +865,50 @@ object Similarity {
     * tie-breaking (lowest k on equal distance) and every integer
     * distance are bit-identical to the min(struct(du, k)) / join+sum
     * form, so the DuckDB oracles are unchanged.
+    *
+    * The kernels assume K full seed vectors (codeword k's slice m sits
+    * at k·M·Sub + m·Sub): a ragged codebook would misalign every higher
+    * codeword, so its length is checked here, once per codebook, and a
+    * wrong one fails the query instead of corrupting the codes.
     */
-  private def pqCodebook(e: DataFrame, K: Int): DataFrame =
-    e.filter(col("vec_id") < K)
+  private def pqCodebook(e: DataFrame): DataFrame = {
+    val n = PqK * PqM * PqSub
+    e.filter(col("vec_id") < PqK)
       .agg(flatten(transform(
         array_sort(collect_list(struct(col("vec_id").as("k"),
           col("embq").as("se")))),
         s => s.getField("se"))).as("cb"))
+      .select(when(size(col("cb")) =!= n, raise_error(concat(
+          lit("pqCodebook: flat codebook has "), size(col("cb")).cast("string"),
+          lit(s" elements, expected k*m*sub = $n"))))
+        .otherwise(col("cb")).as("cb"))
+  }
 
-  private def pqAdc(spark: SparkSession, dir: String): DataFrame = {
-    val M = 4; val Sub = 16; val K = 16
+  /** ADC-ranked candidates shared by [[knnPq]] (top-5 surface) and
+    * [[knnPqRerank]] (shortlist-25 → exact re-rank): each query's `k`
+    * nearest (qid, vec_id) pairs by integer ADC distance, with rank.
+    */
+  private def pqAdc(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val e = pqQuantized(spark, dir)
-    val cb = broadcast(pqCodebook(e, K))
+    val cb = broadcast(pqCodebook(e))
     // encode: in-row argmin per subquantizer (ties to low k)
     val codes = e.crossJoin(cb)
       .select(col("vec_id"),
         graft.functions.IntVecFunctions
-          .pqEncodeF(col("embq"), col("cb"), M, Sub, K)
+          .pqEncodeF(col("embq"), col("cb"), PqM, PqSub, PqK)
           .getField("codes").as("codes"))
     // per-query ADC lookup table, one array row per query
     val qlut = broadcast(e.filter(col("vec_id") < 16).crossJoin(cb)
       .select(col("vec_id").as("qid"),
         graft.functions.IntVecFunctions
-          .pqLutF(col("embq"), col("cb"), M, Sub, K).as("lut")))
+          .pqLutF(col("embq"), col("cb"), PqM, PqSub, PqK).as("lut")))
     // ADC scan: M integer table lookups per (query, corpus vector)
     val adc = codes.crossJoin(qlut)
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id"),
-        graft.functions.IntVecFunctions.adcSumF(col("codes"), col("lut"), K)
+        graft.functions.IntVecFunctions.adcSumF(col("codes"), col("lut"), PqK)
           .as("adist_units"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adist_units").asc, col("vec_id").asc)
-    adc.withColumn("rank", row_number().over(w))
+    topK(adc, k, Seq("qid"), col("adist_units").asc, col("vec_id").asc)
   }
 
   /** PQ codebook distortion audit: per subquantizer, the total / mean /
@@ -1010,16 +923,15 @@ object Similarity {
     * against the broadcast [[pqCodebook]] + one M-keyed agg.
     */
   def pqDistortion(spark: SparkSession, dir: String): DataFrame = {
-    val M = 4; val Sub = 16; val K = 16
     val e = pqQuantized(spark, dir)
-    val cb = broadcast(pqCodebook(e, K))
+    val cb = broadcast(pqCodebook(e))
     // best-code distances come from the same in-row encode kernel as
     // the ADC tier (see [[pqCodebook]]'s round-18 note) — the per-
     // (vec, m, k) row explode and its argmin exchange are gone
     val best = e.crossJoin(cb)
       .select(col("vec_id"),
         posexplode(graft.functions.IntVecFunctions
-          .pqEncodeF(col("embq"), col("cb"), M, Sub, K).getField("du")))
+          .pqEncodeF(col("embq"), col("cb"), PqM, PqSub, PqK).getField("du")))
       .withColumnRenamed("pos", "m").withColumnRenamed("col", "du")
     best.groupBy(col("m"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("du")).as("total_du"),
@@ -1043,11 +955,8 @@ object Similarity {
   def knnPqRerank(spark: SparkSession, dir: String): DataFrame = {
     // same 1e-3-unit input quantization as pqAdc: the exact tier's
     // full-width Σ(xq−yq)² is a pure BIGINT fold too (1e-6 units)
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        graft.functions.IntVecFunctions.quantizeMilliF(col("embedding"))
-          .as("embq"))
-    val short = pqAdc(spark, dir).filter(col("rank") <= 25)
+    val e = pqQuantized(spark, dir)
+    val short = pqAdc(spark, dir, 25)
       .select(col("qid"), col("vec_id").as("scid"))
     val q = broadcast(e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("eqid"), col("embq").as("qe")))
@@ -1056,10 +965,7 @@ object Similarity {
       .join(e, col("scid") === col("vec_id"))
       .withColumn("dist_units",
         graft.functions.IntVecFunctions.sqDistLongF(col("qe"), col("embq")))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist_units").asc, col("scid").asc)
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    topK(exact, 5, Seq("qid"), col("dist_units").asc, col("scid").asc)
       .select(col("qid"), col("rank"), col("scid").as("cid"), col("dist_units"))
       .orderBy("qid", "rank")
   }
@@ -1114,15 +1020,10 @@ object Similarity {
     * vector, elements in integral 1e-3 units (see [[pqAdc]]).
     */
   private def pqSubv(spark: SparkSession, dir: String): DataFrame = {
-    val M = 4; val Sub = 16
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"),
-        graft.functions.IntVecFunctions.quantizeMilliF(col("embedding"))
-          .as("embq"))
-    val ms = array((0 until M).map(lit): _*)
-    e.withColumn("m", explode(ms))
+    val ms = array((0 until PqM).map(lit): _*)
+    pqQuantized(spark, dir).withColumn("m", explode(ms))
       .select(col("vec_id"), col("m"),
-        slice(col("embq"), col("m") * Sub + 1, lit(Sub)).as("xvec"))
+        slice(col("embq"), col("m") * PqSub + 1, lit(PqSub)).as("xvec"))
   }
 
   /** Medoid-Lloyd-trained PQ codebook (cm, k, cvec), seeded from the K
@@ -1131,16 +1032,15 @@ object Similarity {
     */
   private def pqTrainedCodebook(subv: DataFrame,
       seedLo: Long, lloydRounds: Int): DataFrame = {
-    val K = 16
     def sqdist = pqSqdist _
     Fixpoint.scoped { scope =>
-      var cbT = broadcast(subv
-        .filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + K)
+      var cbT = subv
+        .filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + PqK)
         .select(col("m").as("cm"), (col("vec_id") - seedLo).as("k"),
-          col("xvec").as("cvec")))
+          col("xvec").as("cvec"))
       for (_ <- 1 to lloydRounds) {
         // assignment: argmin sub-L2² per (vec_id, m), ties to low k
-        val a = subv.join(cbT, col("cm") === col("m"))
+        val a = subv.join(broadcast(cbT), col("cm") === col("m"))
           .withColumn("du", sqdist(col("xvec"), col("cvec")))
           .groupBy(col("vec_id"), col("m"))
           .agg(min(struct(col("du"), col("k"))).as("mn"))
@@ -1172,13 +1072,15 @@ object Similarity {
         // re-optimizes an exponentially growing tree (the repo's
         // dedup_components fixpoint lesson; measured 36.8 s cold rep on
         // knn_pq_trained from exactly this).
-        cbT = broadcast(scope.local(medoid
+        cbT = scope.local(medoid
           .join(subv.select(col("vec_id").as("mvid"), col("m"), col("xvec")),
             Seq("mvid", "m"))
-          .select(col("m").as("cm"), col("code").as("k"), col("xvec").as("cvec"))))
+          .select(col("m").as("cm"), col("code").as("k"), col("xvec").as("cvec")))
       }
-      // hand callers a reliable, unpinned codebook and drop the round blocks
-      broadcast(Fixpoint.reliably(cbT))
+      // hand callers a reliable, unpinned codebook and drop the round
+      // blocks; it is staged unhinted (a broadcast hint outside a join
+      // is a planner warning) and broadcast where it is joined
+      Fixpoint.reliably(cbT)
     }
   }
 
@@ -1193,7 +1095,7 @@ object Similarity {
       seedLo: Long, lloydRounds: Int): Long = {
     val subv = pqSubv(spark, dir)
     val cbT = pqTrainedCodebook(subv, seedLo, lloydRounds)
-    subv.join(cbT, col("cm") === col("m"))
+    subv.join(broadcast(cbT), col("cm") === col("m"))
       .withColumn("du", pqSqdist(col("xvec"), col("cvec")))
       .groupBy(col("vec_id"), col("m"))
       .agg(min(col("du")).as("mn"))
@@ -1213,7 +1115,7 @@ object Similarity {
     val subv = pqSubv(spark, dir)
     val cbT = pqTrainedCodebook(subv, seedLo, lloydRounds)
     // re-encode + query LUT + ADC under the trained codebook
-    val sub1 = subv.join(cbT, col("cm") === col("m"))
+    val sub1 = subv.join(broadcast(cbT), col("cm") === col("m"))
       .withColumn("du", pqSqdist(col("xvec"), col("cvec")))
       .select(col("vec_id"), col("m"), col("k"), col("du"))
     val codes = sub1.groupBy(col("vec_id"), col("m"))
@@ -1227,10 +1129,7 @@ object Similarity {
           col("qid") =!= col("vec_id"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(sum(col("qdu")).as("adist_units"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adist_units").asc, col("vec_id").asc)
-    adc.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    topK(adc, 5, Seq("qid"), col("adist_units").asc, col("vec_id").asc)
       .select(col("qid"), col("rank"), col("vec_id").as("cid"), col("adist_units"))
       .orderBy("qid", "rank")
   }
@@ -1269,20 +1168,10 @@ object Similarity {
     * (K ≪ n); the assignment is one map-side pass.
     */
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
-    val bits = GraphCuration.adaptiveBits(Tables.embeddings(spark, dir).count())
+    val bits = GraphCuration.corpusBits(spark, dir)
     val e = withNorm(Tables.embeddings(spark, dir))
       .withColumn("bucket", signBucket(col("embedding"), bits))
-    val cents = broadcast(e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        col("nrm").as("cn")))
-    val assigned = e.select(col("vec_id"), col("embedding"), col("nrm"), col("bucket"))
-      .join(cents, col("vec_id") =!= col("cid"))
-      .withColumn("cos",
-        round(dotF(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid").asc)
-    val members = assigned.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    val members = nearest(e, "vec_id", "embedding", "nrm", "bucket")
       .select(col("vec_id"), col("cid").as("cluster"), col("cos").as("cc"),
         col("embedding"), col("nrm"), col("bucket"))
     val a = members.select(col("vec_id").as("a_id"), col("cluster").as("a_cl"),
@@ -1293,8 +1182,7 @@ object Similarity {
       col("bucket").as("b_bk"))
     val drops = a.join(b, col("a_cl") === col("b_cl") && col("a_bk") === col("b_bk")
         && col("a_id") =!= col("b_id"))
-      .withColumn("pcos",
-        round(dotF(col("ae"), col("be")) / (col("an") * col("bn")), 4))
+      .withColumn("pcos", cos4("ae", "an", "be", "bn"))
       .filter(col("pcos") >= 0.25 &&
         (col("b_cc") < col("a_cc")
           || (col("b_cc") === col("a_cc") && col("b_id") < col("a_id"))))

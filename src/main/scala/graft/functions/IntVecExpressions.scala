@@ -88,17 +88,11 @@ object IntVecOps {
     * (strict less — identical to min(struct(du, k))), plus that best
     * distance. Returns (codes array<int>[M], du array<long>[M]) — one
     * in-row pass replacing the corpus × M·K codebook cross join + the
-    * (vec_id, m)-keyed argmin exchange.
+    * (vec_id, m)-keyed argmin exchange. `cbFlat` must hold k·m·sub
+    * elements; Similarity.pqCodebook checks that once per codebook.
     */
   def pqEncode(x: ArrayData, cbFlat: ArrayData, m: Int, sub: Int,
       k: Int): InternalRow = {
-    // a ragged codebook would misalign every higher codeword's offset
-    // (coff = k·M·Sub + m·Sub assumes K full seed vectors); fail loudly
-    // instead of letting the min-length clamps corrupt neighbors
-    // (ADVICE r18 item 2)
-    require(cbFlat.numElements() == k * m * sub,
-      s"pqEncode: flat codebook has ${cbFlat.numElements()} elements, " +
-        s"expected k*m*sub = ${k * m * sub}")
     val codes = new Array[Int](m)
     val dus = new Array[Long](m)
     var mi = 0
@@ -120,13 +114,11 @@ object IntVecOps {
   }
 
   /** Per-query ADC lookup table: slot mi·K + ki = the integer
-    * sub-distance of the query's mi-th slice to codeword ki.
+    * sub-distance of the query's mi-th slice to codeword ki (`cbFlat`
+    * as in [[pqEncode]]).
     */
   def pqLut(x: ArrayData, cbFlat: ArrayData, m: Int, sub: Int,
       k: Int): ArrayData = {
-    require(cbFlat.numElements() == k * m * sub, // see pqEncode
-      s"pqLut: flat codebook has ${cbFlat.numElements()} elements, " +
-        s"expected k*m*sub = ${k * m * sub}")
     val out = new Array[Long](m * k)
     var mi = 0
     while (mi < m) {

@@ -44,6 +44,17 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestBase {
     assert(hits == Seq("Fixpoint.scala"))
   }
 
+  // Every embedding query scores pairs through Similarity.cos4; a second
+  // inline cosine is a second rounding/norm decision that can drift.
+  test("the etl sources call the codegen'd dot product in exactly one place") {
+    val needle = "dotF" + "("
+    val hits = Files.walk(Paths.get("src/main/scala/graft/etl")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => Files.readString(p).sliding(needle.length).count(_ == needle))
+      .sum
+    assert(hits == 1, s"$hits dotF call sites under etl/")
+  }
+
   test("the test session carries the factory's UTC, nanosAsLong and cleanCheckpoints") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")

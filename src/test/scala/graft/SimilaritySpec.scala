@@ -163,4 +163,49 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(maxPairSim(mmr) < maxPairSim(rel),
       "MMR did not reduce total within-set redundancy vs pure top-5")
   }
+
+  test("PQ medoid training logs no broadcast-hint warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val level = root.getLevel
+    if (!root.isWarnEnabled) root.setLevel(Level.WARN)
+    root.addAppender(appender)
+    try graft.etl.Similarity.pqQuantSse(spark, dir, 16L, 0)
+    finally {
+      root.removeAppender(appender)
+      root.setLevel(level)
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val warned = lines.asScala.filter(_.contains("HintErrorLogger"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+  }
+
+  test("a ragged PQ codebook fails knn_pq and pq_distortion, naming k*m*sub") {
+    // 40 vectors of 64 dims, except seed vector 3 (inside the K = 16
+    // codebook slice) with 63: the flat codebook holds 1023 elements
+    val d = java.nio.file.Files.createTempDirectory("graft_pq_ragged_")
+    (0L until 40L).map { i =>
+      val dim = if (i == 3L) 63 else 64
+      (i, Seq.tabulate(dim)(j => ((i * 7 + j * 3) % 11 - 5).toFloat / 10f), (i % 3).toInt)
+    }.toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(d.resolve("embeddings.parquet").toString)
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).toSeq
+    for (q <- Seq("knn_pq", "pq_distortion")) {
+      val err = intercept[Exception](SparkEntry.queries(q)(spark, d.toString).collect())
+      assert(messages(err).exists(_.contains("expected k*m*sub = 1024")),
+        s"$q: ${messages(err).mkString(" <- ")}")
+    }
+  }
 }
