@@ -939,8 +939,8 @@ object Oracles {
          |SELECT lang, rn, doc_id, relevance FROM r WHERE rn <= 3
          |ORDER BY lang, rn""".stripMargin,
 
-    // same truth as topk_per_lang — the Spark side runs the native
-    // GroupTopK physical operator instead of a window
+    // same truth as topk_per_lang, which serves both names (the plan
+    // pin reads this one for the native GroupTopK operator)
     "topk_native" ->
       s"""WITH s AS (SELECT doc_id, lang, $RelExpr AS relevance FROM documents),
          |r AS (SELECT lang, doc_id, relevance,

@@ -84,7 +84,7 @@ object SparkEntry {
     "hierarchical_stats" -> (Aggregates.hierarchicalStats _),
     "topk_pages"         -> (Aggregates.topkPages _),
     "topk_per_lang"      -> (Aggregates.topkPerLang _),
-    "topk_native"        -> (Aggregates.topkPerLangNative _),
+    "topk_native"        -> (Aggregates.topkPerLang _),
     "heading_extract"    -> (Aggregates.headingExtract _),
     "tree_closure"       -> (Aggregates.treeClosure _),
     "batch_pack"         -> ((s: SparkSession, d: String) => Aggregates.batchPack(s, d)),

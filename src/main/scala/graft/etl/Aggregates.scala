@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Aggregation-stage operators (SURVEY.md §2.4/§2.5/§2.8):
   *  - A1/A9 crawl statistics with relevance bands (crawler-summarizer.md:199-210)
@@ -66,26 +67,15 @@ object Aggregates {
       .orderBy(col("relevance").desc, col("doc_id").asc)
       .limit(10)
 
-  /** Per-group top-k variant (rank window): top-3 docs per language. */
-  def topkPerLang(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("relevance").desc, col("doc_id").asc)
-    scoredDocs(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("lang"), col("rn"), col("doc_id"), col("relevance"))
-      .orderBy("lang", "rn")
-  }
-
-  /** [[topkPerLang]] through the NATIVE [[graft.plans.GroupTopK]]
-    * operator (custom LogicalPlan + Strategy + SparkPlan): bounded
-    * per-group heaps, no window sort — same rows, same oracle, O(n log k)
-    * instead of O(n log n). The total order (relevance desc, doc_id asc)
-    * makes the ranks engine-deterministic.
+  /** Per-group top-k: top-3 docs per language, planned on the native
+    * [[GroupTopK]] operator (bounded per-group heaps, no window sort —
+    * O(n log k) instead of O(n log n)). The total order (relevance
+    * desc, doc_id asc) makes the ranks engine-deterministic. Serves both
+    * topk_per_lang and topk_native.
     */
-  def topkPerLangNative(spark: SparkSession, dir: String): DataFrame =
-    graft.plans.GroupTopK.topK(scoredDocs(spark, dir), Seq("lang"),
-        Seq(("relevance", false), ("doc_id", true)), 3)
+  def topkPerLang(spark: SparkSession, dir: String): DataFrame =
+    GroupTopK.topK(scoredDocs(spark, dir), 3, "rn", Seq("lang"),
+        col("relevance").desc, col("doc_id").asc)
       .select(col("lang"), col("rn"), col("doc_id"), col("relevance"))
       .orderBy("lang", "rn")
 

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** End-to-end training-corpus build — the LLM-data flow the north-star
   * operators exist for, composed into one run:
@@ -75,13 +76,10 @@ object CorpusPipeline {
       // 1b. per-source domain cap (round 6): keep at most DomainCapDocs
       //     best-quality docs per source so no domain dominates the mix
       //     (the domain_cap query's GroupTopK-able rank<=k shape)
-      val wSrc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source"))
-        .orderBy(col("quality_bp").desc, col("doc_id").asc)
-      val (capped, nDomCap) = scope.localObserved(kept1
-        .withColumn("src_rank", row_number().over(wSrc))
-        .filter(col("src_rank") <= DomainCapDocs)
-        .drop("quality_bp", "src_rank"))
+      val (capped, nDomCap) = scope.localObserved(
+        GroupTopK.topK(kept1, DomainCapDocs, "src_rank", Seq("source"),
+            col("quality_bp").desc, col("doc_id").asc)
+          .drop("quality_bp", "src_rank"))
 
       // 2. exact dedup: one survivor per distinct text (min doc_id)
       val (kept2, nExact) = scope.localObserved(capped.join(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Corpus-level duplication and vocabulary reports — the curation
   * dashboards a training-data pipeline runs before a training mix is
@@ -436,10 +437,7 @@ object CorpusStats {
         split(col("bg"), " ").getItem(1).as("w2"))
     val counts = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("w1"))
-      .orderBy(col("n").desc, col("w2").asc)
-    counts.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    GroupTopK.topK(counts, 3, "rank", Seq("w1"), col("n").desc, col("w2").asc)
       .select(col("w1"), col("rank"), col("w2"), col("n"))
       .orderBy("w1", "rank")
   }
@@ -1114,10 +1112,7 @@ object CorpusStats {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .filter(length(col("word")) >= 2)
       .withColumn("prefix", substring(col("word"), 1, 2))
-    val w = Window.partitionBy(col("prefix"))
-      .orderBy(col("freq").desc, col("word"))
-    wf.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    GroupTopK.topK(wf, 3, "rank", Seq("prefix"), col("freq").desc, col("word"))
       .select(col("prefix"), col("rank"), col("word"), col("freq"))
       .orderBy("prefix", "rank")
   }
@@ -1157,8 +1152,8 @@ object CorpusStats {
       .select(col("lang"),
         explode(Shingles.wordArray(col("text"))).as("word"))
       .groupBy(col("lang"), col("word")).agg(count(lit(1)).as("n"))
-    val top = graft.plans.GroupTopK.topK(counts, Seq("lang"),
-      Seq(("n", false), ("word", true)), 100)
+    val top = GroupTopK.topK(counts, 100, "rn", Seq("lang"),
+      col("n").desc, col("word").asc)
     val head = top.groupBy(col("lang"))
       .agg(sum(col("n")).as("head_occ"), count(lit(1)).as("n_head"))
     val tot = counts.groupBy(col("lang"))
@@ -1254,8 +1249,8 @@ object CorpusStats {
     val alloc = strata.crossJoin(broadcast(tot))
       .select(col("lang"), col("n_lang"),
         greatest(lit(1L), expr(s"($target * n_lang) div n_total")).as("n_alloc"))
-    graft.plans.GroupTopK.topK(docs, Seq("lang"),
-        Seq(("pick_key", true), ("doc_id", true)), target.toInt)
+    GroupTopK.topK(docs, target.toInt, "rn", Seq("lang"),
+        col("pick_key").asc, col("doc_id").asc)
       .join(broadcast(alloc), Seq("lang"))
       .filter(col("rn") <= col("n_alloc"))
       .select(col("lang"), col("rn"), col("doc_id"), col("n_alloc"))

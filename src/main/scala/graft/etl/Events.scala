@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Event-stream analytics over the `events` table — the batch forms of
   * the reference's incremental/stateful surface (SURVEY.md §2.11) plus
@@ -500,11 +501,8 @@ object Events {
     * ≤3-element struct array (interpreted HOF is fine at that size).
     */
   def topPaths(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val firstK = Tables.events(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    val firstK = GroupTopK.topK(Tables.events(spark, dir), 3, "rn",
+      Seq("user_id"), col("ts").asc, col("event_id").asc)
     firstK.groupBy(col("user_id"))
       .agg(concat_ws(">",
         transform(sort_array(collect_list(struct(col("rn"), col("event_type")))),
@@ -627,11 +625,8 @@ object Events {
         val y = col(c) * 4 - col("sx") - lit(qi)
         y * y
       }.reduce(_ + _)
-    val rankW = Window.partitionBy(col("cohort"))
-      .orderBy(col("d2").asc, col("hr").asc)
-    win.withColumn("d2", d2)
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
+    GroupTopK.topK(win.withColumn("d2", d2), 3, "rank", Seq("cohort"),
+        col("d2").asc, col("hr").asc)
       .select(col("cohort"), col("rank"), col("hr").as("hr_start"),
         col("d2"))
       .orderBy("cohort", "rank")
@@ -710,9 +705,8 @@ object Events {
       .withColumn("total", sum(col("n")).over(wAll))
       .withColumn("m", count(lit(1)).over(wAll))
       .withColumn("stat", abs(col("m") * col("cum") - col("k") * col("total")))
-    val wRank = Window.partitionBy(col("event_type"))
-      .orderBy(col("stat").desc, col("hr").asc)
-    c.withColumn("rk", row_number().over(wRank)).filter(col("rk") === 1)
+    GroupTopK.topK(c, 1, "rk", Seq("event_type"),
+        col("stat").desc, col("hr").asc)
       .select(col("event_type"), col("m").as("n_hours"),
         col("total").as("n_events"), col("hr").as("cp_hr"),
         col("k").as("cp_idx"), col("stat").as("cusum_peak"),
@@ -1409,9 +1403,8 @@ object Events {
     val wRun = Window.partitionBy(col("event_type")).orderBy(col("mn").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val conc = deltas.withColumn("conc", sum(col("delta")).over(wRun))
-    val wPeak = Window.partitionBy(col("event_type"))
-      .orderBy(col("conc").desc, col("mn").asc)
-    conc.withColumn("rk", row_number().over(wPeak)).filter(col("rk") === 1)
+    GroupTopK.topK(conc, 1, "rk", Seq("event_type"),
+        col("conc").desc, col("mn").asc)
       .select(col("event_type"), col("conc").as("peak"),
         col("mn").as("peak_minute"))
       .orderBy("event_type")

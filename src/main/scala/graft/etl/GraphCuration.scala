@@ -1,9 +1,9 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Graph-based corpus curation: the kNN-graph family a large-scale
   * training-data pipeline builds ON TOP of ANN search — a mutual
@@ -71,7 +71,7 @@ object GraphCuration {
     * 2^[[corpusBits]] cells.
     */
   private def directedKnn(spark: SparkSession, dir: String): DataFrame = {
-    import Similarity.{side, cos4, topK, ByCos}
+    import Similarity.{side, cos4, ByCos}
     val e = Similarity.withNorm(Tables.embeddings(spark, dir))
       .withColumn("bucket",
         Similarity.signBucket(col("embedding"), corpusBits(spark, dir)))
@@ -80,7 +80,7 @@ object GraphCuration {
     val scored = side(e, "q", cols: _*).join(side(e, "c", cols: _*),
         col("qb") === col("cb") && col("qid") =!= col("cid"))
       .withColumn("cos", cos4("qe", "qn", "ce", "cn"))
-    topK(scored, 5, Seq("qid"), ByCos: _*)
+    GroupTopK.topK(scored, 5, "rank", Seq("qid"), ByCos: _*)
       .select(col("qid"), col("cid"), col("cos"))
   }
 
@@ -146,10 +146,8 @@ object GraphCuration {
         .join(labeled.select(col("node")), Seq("node"), "left_anti")
         .groupBy(col("node"), col("lp_label"))
         .agg(count(lit(1)).as("n_votes"))
-      val w = Window.partitionBy(col("node"))
-        .orderBy(col("n_votes").desc, col("lp_label").asc)
-      val winners = votes.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
+      val winners = GroupTopK.topK(votes, 1, "rk", Seq("node"),
+          col("n_votes").desc, col("lp_label").asc)
         .select(col("node"), col("lp_label"), lit(roundNo).as("lp_round"))
       labeled.unionByName(winners)
     }
@@ -313,9 +311,8 @@ object GraphCuration {
       .distinct()
     val adj0 = und.select(col("a").as("node"), col("b").as("nbr"))
       .union(und.select(col("b").as("node"), col("a").as("nbr")))
-    val wN = Window.partitionBy(col("node")).orderBy(col("nbr").asc)
-    val adj = adj0.withColumn("rk", row_number().over(wN))
-      .filter(col("rk") <= 20).select(col("node"), col("nbr"))
+    val adj = GroupTopK.topK(adj0, 20, "rk", Seq("node"), col("nbr").asc)
+      .select(col("node"), col("nbr"))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val pairs = adj.as("x")
       .join(adj.as("y"),

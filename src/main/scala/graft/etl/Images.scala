@@ -1,9 +1,9 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Image-pipeline operators (SURVEY.md §2):
   *  - S7/F7 decorative-image filter: drop <100×100 px or skip-pattern
@@ -43,11 +43,9 @@ object Images {
 
   /** S7+F7+T4: filter decorative/small, keep first 5 per page (by id). */
   def imageFilter(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("page")).orderBy(col("img_id").asc)
-    imageCorpus(spark, dir)
-      .filter(keepImage(col("width"), col("height"), col("src"), col("alt")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
+    GroupTopK.topK(imageCorpus(spark, dir)
+        .filter(keepImage(col("width"), col("height"), col("src"), col("alt"))),
+        5, "rn", Seq("page"), col("img_id").asc)
       .select(col("page"), col("rn"), col("img_id"), col("src"),
         col("width"), col("height"))
       .orderBy("page", "rn")

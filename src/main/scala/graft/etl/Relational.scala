@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Core relational coverage on the TPC-H-ish tables: aggregation,
   * multi-way joins with broadcast dims, top-k, and window analytics.
@@ -85,11 +86,8 @@ object Relational {
     * the result is total-order deterministic).
     */
   def windowRank(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    Tables.orders(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    GroupTopK.topK(Tables.orders(spark, dir), 3, "rn", Seq("o_custkey"),
+        col("o_totalprice").desc, col("o_orderkey").asc)
       .select(col("o_custkey"), col("rn"), col("o_orderkey"), col("o_totalprice"))
       .orderBy("o_custkey", "rn")
   }

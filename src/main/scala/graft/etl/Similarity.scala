@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 import graft.functions.VectorFunctions.{dotF, normF}
 
 /** Similarity search over the `embeddings` table (Array[Float], dim 64):
@@ -122,8 +123,8 @@ object Similarity {
       val emb = if (trunc) slice(col("embedding"), 1, 16) else col("embedding")
       val e = withNorm(Tables.embeddings(spark, dir)
         .select(col("vec_id"), emb.as("embedding")))
-      topK(knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm"),
-          5, Seq("qid"), ByCos: _*)
+      GroupTopK.topK(knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm"),
+          5, "rank", Seq("qid"), ByCos: _*)
         .select(col("qid"), col("cid"))
     }
     val full = topk(trunc = false)
@@ -195,16 +196,6 @@ object Similarity {
       .join(side(e, "c", "vec_id" +: cols: _*), on)
       .withColumn("cos", cos4("qe", "qn", "ce", "cn"))
 
-  /** Rows ranked 1..k within each `partition` group under `order`, the
-    * rank in column "rank" (planned as a GroupTopK: no sort, map-side
-    * partial pruning).
-    */
-  private[etl] def topK(df: DataFrame, k: Int, partition: Seq[String],
-      order: Column*): DataFrame =
-    df.withColumn("rank", row_number().over(
-        Window.partitionBy(partition.map(col): _*).orderBy(order: _*)))
-      .filter(col("rank") <= k)
-
   /** Highest cosine first, ties to the lower cid: a total order. */
   private[etl] val ByCos = Seq(col("cos").desc, col("cid").asc)
 
@@ -222,7 +213,7 @@ object Similarity {
     * a rank-1 window keyed by vec_id (high cardinality, distributes).
     */
   private def nearest(e: DataFrame, cols: String*): DataFrame =
-    topK(centroidCos(e, cols: _*), 1, Seq("vec_id"), ByCos: _*)
+    GroupTopK.topK(centroidCos(e, cols: _*), 1, "rank", Seq("vec_id"), ByCos: _*)
 
   /** IVF search over a centroid-scored frame `cents` (vec_id,
     * embedding, nrm, cid, cos): the inverted lists — each vector's
@@ -234,8 +225,8 @@ object Similarity {
     * a_emb, a_nrm, cos.
     */
   private def ivfProbed(cents: DataFrame, nprobe: Int): DataFrame = {
-    val probes = broadcast(topK(cents.filter(col("vec_id") < 16), nprobe,
-        Seq("vec_id"), ByCos: _*)
+    val probes = broadcast(GroupTopK.topK(cents.filter(col("vec_id") < 16),
+        nprobe, "rank", Seq("vec_id"), ByCos: _*)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("nrm").as("qn"), col("cid").as("pcid"), col("rank").as("prk")))
     probes.join(invertedLists(cents),
@@ -270,8 +261,8 @@ object Similarity {
     */
   def knnBrute(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
-    topK(knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm"),
-        5, Seq("qid"), ByCos: _*)
+    GroupTopK.topK(knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm"),
+        5, "rank", Seq("qid"), ByCos: _*)
       .select(col("qid"), col("rank"), col("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -291,7 +282,7 @@ object Similarity {
     val scored = knnScored(e, 16,
       col("qid") =!= col("cid") && col("qlabel") =!= col("clabel"),
       "label", "embedding", "nrm")
-    topK(scored, 3, Seq("qid"), ByCos: _*)
+    GroupTopK.topK(scored, 3, "rank", Seq("qid"), ByCos: _*)
       .select(col("qid"), col("rank"), col("cid"), col("clabel"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -314,7 +305,7 @@ object Similarity {
       .withColumn("bucket", signBucket(col("embedding")))
     val scored = knnScored(e, 16, col("qb") === col("cb") && col("qid") =!= col("cid"),
       "embedding", "nrm", "bucket")
-    topK(scored, 5, Seq("qid"), ByCos: _*)
+    GroupTopK.topK(scored, 5, "rank", Seq("qid"), ByCos: _*)
       .select(col("qid"), col("qb").as("bucket"), col("rank"), col("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -418,7 +409,8 @@ object Similarity {
     val e = withNorm(Tables.embeddings(spark, dir))
     val scored = knnScored(e, 16, col("qid") =!= col("cid"), "embedding", "nrm")
     Fixpoint.scoped { scope =>
-      val cand = scope.local(topK(scored, 20, Seq("qid"), ByCos: _*)
+      val cand = scope.local(
+        GroupTopK.topK(scored, 20, "rank", Seq("qid"), ByCos: _*)
         .select(col("qid"), col("cid"),
           round(col("cos") * 10000).cast("bigint").as("rel_bp"),
           col("ce"), col("cn")))
@@ -431,7 +423,8 @@ object Similarity {
           round(cos4("ae", "an", "be", "bn") * 10000).cast("bigint").as("sim_bp"))
       val simsCk = scope.local(sims)
       val slim = cand.select(col("qid"), col("cid"), col("rel_bp"))
-      val first = topK(slim, 1, Seq("qid"), col("rel_bp").desc, col("cid").asc)
+      val first = GroupTopK.topK(slim, 1, "rank", Seq("qid"),
+          col("rel_bp").desc, col("cid").asc)
         .select(col("qid"), col("cid"), col("rel_bp"),
           col("rel_bp").as("mmr2"), lit(1).as("rank"))
       var selected = scope.local(first)
@@ -447,8 +440,9 @@ object Similarity {
             && col("cid") === col("acid") && col("scid") === col("bcid"))
           .groupBy(col("qid"), col("cid"), col("rel_bp"))
           .agg(max(col("sim_bp")).as("ms"))
-        val pick = topK(withMs.withColumn("mmr2", col("rel_bp") - col("ms")),
-            1, Seq("qid"), col("mmr2").desc, col("cid").asc)
+        val pick = GroupTopK.topK(
+            withMs.withColumn("mmr2", col("rel_bp") - col("ms")),
+            1, "rank", Seq("qid"), col("mmr2").desc, col("cid").asc)
           .select(col("qid"), col("cid"), col("rel_bp"), col("mmr2"),
             lit(r).as("rank"))
         selected = scope.local(selected.unionByName(pick))
@@ -477,7 +471,7 @@ object Similarity {
     val e = withNorm(Tables.embeddings(spark, dir))
     val scored = knnScored(e, 16, col("qid") =!= col("cid"), "label", "embedding", "nrm")
       .withColumn("pos", (col("qlabel") === col("clabel")).cast("int"))
-    topK(scored, 1, Seq("qid", "pos"), ByCos: _*)
+    GroupTopK.topK(scored, 1, "rank", Seq("qid", "pos"), ByCos: _*)
       .groupBy(col("qid"))
       .agg(
         max(when(col("pos") === 1, col("cid"))).as("pos_cid"),
@@ -502,11 +496,12 @@ object Similarity {
   def labelNoise(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
     val scored = knnScored(e, 64, col("qid") =!= col("cid"), "label", "embedding", "nrm")
-    val top5 = topK(scored, 5, Seq("qid"), ByCos: _*)
+    val top5 = GroupTopK.topK(scored, 5, "rank", Seq("qid"), ByCos: _*)
       .select(col("qid"), col("qlabel"), col("clabel"))
     val votes = top5.groupBy(col("qid"), col("qlabel"), col("clabel"))
       .agg(count(lit(1)).as("n"))
-    topK(votes, 1, Seq("qid"), col("n").desc, col("clabel").asc)
+    GroupTopK.topK(votes, 1, "rank", Seq("qid"),
+      col("n").desc, col("clabel").asc)
       .filter(col("clabel") =!= col("qlabel"))
       .select(col("qid"), col("qlabel").as("label"),
         col("clabel").as("neighbor_label"), col("n").as("n_votes"))
@@ -555,6 +550,14 @@ object Similarity {
       .orderBy("label", "vec_a", "vec_b")
   }
 
+  /** The b side of a bucketed near-dup pair join ([[neardupRecall]],
+    * [[embeddingNearDupMultiprobe]]): `e`'s vec_id, label, embedding,
+    * nrm and bucket as b_id, b_label, be, bn and b_bk.
+    */
+  private def bucketedBSide(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
+      col("embedding").as("be"), col("nrm").as("bn"), col("bucket").as("b_bk"))
+
   /** Blocking-recall audit for [[embeddingNearDup]] — the "measure,
     * don't guess" companion the round-15 adaptive blocking needs: the
     * adaptive sign-bucket key trades recall for boundedness (a near-dup
@@ -575,8 +578,7 @@ object Similarity {
       .withColumn("bucket", signBucket(col("embedding"), bits))
     val a = e.select(col("vec_id").as("a_id"), col("label"),
       col("embedding").as("ae"), col("nrm").as("an"), col("bucket").as("a_bk"))
-    val b = e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
-      col("embedding").as("be"), col("nrm").as("bn"), col("bucket").as("b_bk"))
+    val b = bucketedBSide(e)
     val exact = a.join(b, col("label") === col("b_label")
         && col("a_id") < col("b_id"))
       .withColumn("cos", cos4("ae", "an", "be", "bn"))
@@ -609,8 +611,7 @@ object Similarity {
     val a = e.withColumn("probe", explode(hamming1(col("bucket"), bits)))
       .select(col("vec_id").as("a_id"), col("label"),
         col("embedding").as("ae"), col("nrm").as("an"), col("probe"))
-    val b = e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
-      col("embedding").as("be"), col("nrm").as("bn"), col("bucket").as("b_bk"))
+    val b = bucketedBSide(e)
     a.join(b, col("label") === col("b_label")
         && col("probe") === col("b_bk") && col("a_id") < col("b_id"))
       .withColumn("cos", cos4("ae", "an", "be", "bn"))
@@ -640,7 +641,7 @@ object Similarity {
     val c = side(e, "c", "vec_id", "embedding", "nrm", "bucket")
     val scored = q.join(c, col("probe") === col("cb") && col("qid") =!= col("cid"))
       .withColumn("cos", cos4("qe", "qn", "ce", "cn"))
-    topK(scored, 5, Seq("qid"), ByCos: _*)
+    GroupTopK.topK(scored, 5, "rank", Seq("qid"), ByCos: _*)
       .select(col("qid"), col("rank"), col("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -705,7 +706,8 @@ object Similarity {
   def knnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))
     val scored = ivfProbed(centroidCos(e, "vec_id", "embedding", "nrm"), 2)
-    topK(scored, 5, Seq("qid"), col("cos").desc, col("a_vid").asc)
+    GroupTopK.topK(scored, 5, "rank", Seq("qid"),
+      col("cos").desc, col("a_vid").asc)
       .select(col("qid"), col("rank"), col("a_vid").as("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -734,7 +736,8 @@ object Similarity {
       val nExact = exact.agg(count(lit(1)).as("n_exact"))
       val stats = (1 to 3).map { p =>
         val cand = scoredCk.filter(col("prk") <= p)
-        val top = topK(cand, 5, Seq("qid"), ByCos: _*).select(col("qid"), col("cid"))
+        val top = GroupTopK.topK(cand, 5, "rank", Seq("qid"), ByCos: _*)
+          .select(col("qid"), col("cid"))
         val scanned = cand.agg(count(lit(1)).as("n_scanned"))
         val hits = exact.join(top, Seq("qid", "cid"), "left_semi")
           .agg(count(lit(1)).as("n_hit"))
@@ -782,7 +785,8 @@ object Similarity {
       .crossJoin(trained)
       .withColumn("cos",
         round(dot(col("embedding"), col("ce")) / (col("nrm") * col("cn")), 4))
-    topK(ivfProbed(cos2, 2), 5, Seq("qid"), col("cos").desc, col("a_vid").asc)
+    GroupTopK.topK(ivfProbed(cos2, 2), 5, "rank", Seq("qid"),
+      col("cos").desc, col("a_vid").asc)
       .select(col("qid"), col("rank"), col("a_vid").as("cid"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -908,7 +912,8 @@ object Similarity {
       .select(col("qid"), col("vec_id"),
         graft.functions.IntVecFunctions.adcSumF(col("codes"), col("lut"), PqK)
           .as("adist_units"))
-    topK(adc, k, Seq("qid"), col("adist_units").asc, col("vec_id").asc)
+    GroupTopK.topK(adc, k, "rank", Seq("qid"),
+      col("adist_units").asc, col("vec_id").asc)
   }
 
   /** PQ codebook distortion audit: per subquantizer, the total / mean /
@@ -965,7 +970,8 @@ object Similarity {
       .join(e, col("scid") === col("vec_id"))
       .withColumn("dist_units",
         graft.functions.IntVecFunctions.sqDistLongF(col("qe"), col("embq")))
-    topK(exact, 5, Seq("qid"), col("dist_units").asc, col("scid").asc)
+    GroupTopK.topK(exact, 5, "rank", Seq("qid"),
+      col("dist_units").asc, col("scid").asc)
       .select(col("qid"), col("rank"), col("scid").as("cid"), col("dist_units"))
       .orderBy("qid", "rank")
   }
@@ -1026,13 +1032,21 @@ object Similarity {
         slice(col("embq"), col("m") * PqSub + 1, lit(PqSub)).as("xvec"))
   }
 
+  /** Every subvector of `subv` against every codeword (cm, k, cvec) of
+    * its subspace in `cbT`, broadcast: the pair rows with their sub-L2²
+    * as `du`. The trained tier's Lloyd assignment, SSE and re-encode
+    * each take their argmin/min over this one frame.
+    */
+  private def pqSubDist(subv: DataFrame, cbT: DataFrame): DataFrame =
+    subv.join(broadcast(cbT), col("cm") === col("m"))
+      .withColumn("du", pqSqdist(col("xvec"), col("cvec")))
+
   /** Medoid-Lloyd-trained PQ codebook (cm, k, cvec), seeded from the K
     * corpus subvectors at vec_id ∈ [seedLo, seedLo+K). Broadcastable
     * by construction (M·K rows).
     */
   private def pqTrainedCodebook(subv: DataFrame,
       seedLo: Long, lloydRounds: Int): DataFrame = {
-    def sqdist = pqSqdist _
     Fixpoint.scoped { scope =>
       var cbT = subv
         .filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + PqK)
@@ -1040,8 +1054,7 @@ object Similarity {
           col("xvec").as("cvec"))
       for (_ <- 1 to lloydRounds) {
         // assignment: argmin sub-L2² per (vec_id, m), ties to low k
-        val a = subv.join(broadcast(cbT), col("cm") === col("m"))
-          .withColumn("du", sqdist(col("xvec"), col("cvec")))
+        val a = pqSubDist(subv, cbT)
           .groupBy(col("vec_id"), col("m"))
           .agg(min(struct(col("du"), col("k"))).as("mn"))
           .select(col("vec_id"), col("m"), col("mn.k").as("code"))
@@ -1062,7 +1075,7 @@ object Similarity {
             s => s.getField("c")).as("mvec"))
         val medoid = subv.join(a, Seq("vec_id", "m"))
           .join(broadcast(mean), Seq("m", "code"))
-          .withColumn("dm", sqdist(col("xvec"), col("mvec")))
+          .withColumn("dm", pqSqdist(col("xvec"), col("mvec")))
           .groupBy(col("m"), col("code"))
           .agg(min(struct(col("dm"), col("vec_id"))).as("md"))
           .select(col("m"), col("code"), col("md.vec_id").as("mvid"))
@@ -1095,8 +1108,7 @@ object Similarity {
       seedLo: Long, lloydRounds: Int): Long = {
     val subv = pqSubv(spark, dir)
     val cbT = pqTrainedCodebook(subv, seedLo, lloydRounds)
-    subv.join(broadcast(cbT), col("cm") === col("m"))
-      .withColumn("du", pqSqdist(col("xvec"), col("cvec")))
+    pqSubDist(subv, cbT)
       .groupBy(col("vec_id"), col("m"))
       .agg(min(col("du")).as("mn"))
       .agg(sum(col("mn")).as("sse"))
@@ -1115,8 +1127,7 @@ object Similarity {
     val subv = pqSubv(spark, dir)
     val cbT = pqTrainedCodebook(subv, seedLo, lloydRounds)
     // re-encode + query LUT + ADC under the trained codebook
-    val sub1 = subv.join(broadcast(cbT), col("cm") === col("m"))
-      .withColumn("du", pqSqdist(col("xvec"), col("cvec")))
+    val sub1 = pqSubDist(subv, cbT)
       .select(col("vec_id"), col("m"), col("k"), col("du"))
     val codes = sub1.groupBy(col("vec_id"), col("m"))
       .agg(min(struct(col("du"), col("k"))).as("mn"))
@@ -1129,7 +1140,8 @@ object Similarity {
           col("qid") =!= col("vec_id"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(sum(col("qdu")).as("adist_units"))
-    topK(adc, 5, Seq("qid"), col("adist_units").asc, col("vec_id").asc)
+    GroupTopK.topK(adc, 5, "rank", Seq("qid"),
+      col("adist_units").asc, col("vec_id").asc)
       .select(col("qid"), col("rank"), col("vec_id").as("cid"), col("adist_units"))
       .orderBy("qid", "rank")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Deterministic train/test splitting — the training-data pipeline's
   * sampling primitive done right at scale: hash-of-key mod N, never
@@ -103,14 +104,11 @@ object Splits {
     * whole reservoir idea executed distributively.
     */
   def reservoirSample(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         conv(substring(md5(concat(lit("reservoir:"), col("doc_id").cast("string"))), 1, 8), 16, 10)
           .cast("bigint").as("u"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("u").asc, col("doc_id").asc)
-    ranked.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 8)
+    GroupTopK.topK(ranked, 8, "rk", Seq("lang"), col("u").asc, col("doc_id").asc)
       .select(col("lang"), col("rk"), col("doc_id"), col("u"))
       .orderBy("lang", "rk")
   }
@@ -204,10 +202,8 @@ object Splits {
     val inter = bench.join(train, Seq("shingle"))
       .groupBy(col("bench_doc"), col("train_doc"))
       .agg(count(lit(1)).as("n_common"))
-    val w = Window.partitionBy(col("bench_doc"))
-      .orderBy(col("n_common").desc, col("train_doc").asc)
-    val top = inter.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    val top = GroupTopK.topK(inter, 1, "rk", Seq("bench_doc"),
+        col("n_common").desc, col("train_doc").asc)
       .select(col("bench_doc"), col("train_doc"), col("n_common"))
     sizes.join(top, Seq("bench_doc"), "left")
       .select(col("bench_doc"), col("n_sh"),

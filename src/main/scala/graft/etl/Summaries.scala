@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 import graft.functions.BoundedConcat
 
 /** Bounded hierarchical summarization queries built on the custom
@@ -49,8 +50,8 @@ object Summaries {
         Shingles.words(docs)
           .withColumn("cidx", expr("word_pos div 40")))
       val tf = w.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
-      val k3 = scope.local(graft.plans.GroupTopK.topK(tf, Seq("doc_id"),
-        Seq(("c", false), ("word", true)), 3)
+      val k3 = scope.local(GroupTopK.topK(tf, 3, "rn", Seq("doc_id"),
+          col("c").desc, col("word").asc)
         .select(col("doc_id"), col("word")))
       val kw = k3.groupBy(col("doc_id")).agg(collect_list(col("word")).as("kw"))
       // chunk-level frame: one keyword-marker join + one agg, all
@@ -60,8 +61,8 @@ object Summaries {
         .join(k3.withColumn("__kw", lit(1)), Seq("doc_id", "word"), "left")
         .groupBy(col("doc_id"), col("cidx"))
         .agg(count(col("__kw")).as("score")))
-      val kept = graft.plans.GroupTopK.topK(ch, Seq("doc_id"),
-          Seq(("score", false), ("cidx", true)), 2)
+      val kept = GroupTopK.topK(ch, 2, "rn", Seq("doc_id"),
+          col("score").desc, col("cidx").asc)
       val keptArr = kept.groupBy(col("doc_id"))
         .agg(sort_array(collect_list(struct(col("cidx"), col("score"))))
             .as("ka"), // cidx asc = document order (extract-don't-reorder)

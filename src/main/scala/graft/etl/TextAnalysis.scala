@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** North-star text-analysis operators for a training-data pipeline
   * (builder brief): token counting, quality scoring, language-ID
@@ -101,10 +102,8 @@ object TextAnalysis {
   def domainCap(spark: SparkSession, dir: String): DataFrame = {
     val scored = qualityAnnotated(Tables.documents(spark, dir))
       .select(col("source"), col("doc_id"), col("quality_bp"))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("quality_bp").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+    GroupTopK.topK(scored, 10, "rank", Seq("source"),
+        col("quality_bp").desc, col("doc_id").asc)
       .select(col("source"), col("rank"), col("doc_id"), col("quality_bp"))
       .orderBy("source", "rank")
   }

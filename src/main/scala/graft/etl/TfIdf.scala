@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** IR-flavored operators for the training-data pipeline: TF-IDF term
   * weighting, edit-distance fuzzy matching, and the analytic window-
@@ -27,10 +28,8 @@ object TfIdf {
     val scored = tf.join(df, Seq("word"))
       .withColumn("tfidf",
         round(col("tf") * log(lit(n.toDouble) / col("df")), 4))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("word").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    GroupTopK.topK(scored, 3, "rn", Seq("doc_id"),
+        col("tfidf").desc, col("word").asc)
       .select(col("doc_id"), col("rn"), col("word"), col("tf"), col("df"),
         col("tfidf"))
       .orderBy("doc_id", "rn")
@@ -79,10 +78,8 @@ object TfIdf {
         .select(col("doc_id").as("qid"), col("nsq").as("qn"))), Seq("qid"))
       .join(norms.select(col("doc_id").as("did"), col("nsq").as("dn")), Seq("did"))
       .withColumn("cos", round(col("num") / (sqrt(col("qn")) * sqrt(col("dn"))), 4))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("did").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    GroupTopK.topK(scored, 5, "rank", Seq("qid"),
+        col("cos").desc, col("did").asc)
       .select(col("qid"), col("rank"), col("did"), col("cos"))
       .orderBy("qid", "rank")
   }
@@ -125,10 +122,8 @@ object TfIdf {
       .groupBy(col("word")).agg(count(lit(1)).as("df"))
     val scored = tf.join(dfq, Seq("word")).join(dl, Seq("doc_id"))
       .withColumn("bm25", bm25Score(n, sumDl))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("bm25").desc, col("word").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    GroupTopK.topK(scored, 3, "rn", Seq("doc_id"),
+        col("bm25").desc, col("word").asc)
       .select(col("doc_id"), col("rn"), col("word"), col("tf"), col("df"),
         col("bm25"))
       .orderBy("doc_id", "rn")
@@ -159,10 +154,8 @@ object TfIdf {
       .withColumn("rrf",
         coalesce(expr("1000000 div (60 + lex_rank)"), lit(0L)) +
           coalesce(expr("1000000 div (60 + vec_rank)"), lit(0L)))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("rrf").desc, col("cand").asc)
-    fused.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    GroupTopK.topK(fused, 5, "rank", Seq("qid"),
+        col("rrf").desc, col("cand").asc)
       .select(col("qid"), col("rank"), col("cand"), col("rrf"),
         col("lex_rank"), col("vec_rank"))
       .orderBy("qid", "rank")
@@ -365,9 +358,8 @@ object TfIdf {
       Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .select(col("word"), col("doc_id")).distinct()
     val dfs = pairs.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("word")).orderBy(col("doc_id").asc)
-    val posts = pairs.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= PostingCap)
+    val posts = GroupTopK.topK(pairs, PostingCap, "rn", Seq("word"),
+        col("doc_id").asc)
       .groupBy(col("word"))
       .agg(concat_ws(",",
         transform(sort_array(collect_list(col("doc_id"))),
@@ -403,12 +395,10 @@ object TfIdf {
       .select(col("c_custkey").as("dk"),
         concat(substring(col("c_name"), 1, 3), substring(col("c_name"), 5, 100))
           .as("dname"), blk.as("blk"))
-    val w = Window.partitionBy(col("dk")).orderBy(col("dist"), col("ck"))
-    dirty.join(clean, Seq("blk"))
+    val cand = dirty.join(clean, Seq("blk"))
       .withColumn("dist", levenshtein(col("dname"), col("cname")))
       .filter(col("dist") <= 2)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    GroupTopK.topK(cand, 1, "rk", Seq("dk"), col("dist"), col("ck"))
       .select(col("dk"), col("ck").as("matched"), col("dist"),
         (col("dk") === col("ck")).as("correct"))
       .orderBy("dk")
@@ -437,13 +427,11 @@ object TfIdf {
     val sh = Tables.documents(spark, dir)
       .select(col("doc_id"),
         explode(Shingles.shingleArray(col("text"), 3)).as("shingle"))
-    val w = Window.partitionBy(col("phrase"))
-      .orderBy(col("n_hits").desc, col("doc_id"))
-    sh.join(broadcast(pdf), col("shingle") === col("phrase"))
+    val hits = sh.join(broadcast(pdf), col("shingle") === col("phrase"))
       .groupBy(col("phrase"), col("doc_id"))
       .agg(count(lit(1)).as("n_hits"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    GroupTopK.topK(hits, 5, "rank", Seq("phrase"),
+        col("n_hits").desc, col("doc_id"))
       .select(col("phrase"), col("rank"), col("doc_id"), col("n_hits"))
       .orderBy("phrase", "rank")
   }
@@ -453,6 +441,9 @@ object TfIdf {
     */
   val EvalTerms: Seq[String] = Seq(
     "spark", "window", "hash", "merge", "scan", "batch", "vector", "filter")
+
+  /** The evals' system ranking: best BM25 first, ties to the lower doc. */
+  private val ByBm25 = Seq(col("bm25").desc, col("doc_id").asc)
 
   /** The corpus-wide BM25 prelude shared by the [[EvalTerms]] evals:
     * the word stream, and per (doc, eval term) its tf, df, dl and
@@ -490,10 +481,7 @@ object TfIdf {
   def mrrEval(spark: SparkSession, dir: String): DataFrame = {
     val scored = evalScored(spark, dir)._2
       .withColumn("rel", when(col("tf") >= 3, 1L).otherwise(0L))
-    val w = Window.partitionBy(col("word"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 10)
+    GroupTopK.topK(scored, 10, "rk", Seq("word"), ByBm25: _*)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n_ranked"),
         coalesce(min(when(col("rel") === 1, col("rk"))), lit(0)).as("first_rank"),
@@ -527,12 +515,9 @@ object TfIdf {
     Fixpoint.scoped { scope =>
       val scored = scope.local(evalScored(spark, dir)._2
         .withColumn("rel", when(col("tf") >= 3, 1L).otherwise(0L)))
-      val w = Window.partitionBy(col("word"))
-        .orderBy(col("bm25").desc, col("doc_id").asc)
       val wc = Window.partitionBy(col("word")).orderBy(col("rk"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 10)
+      val cum = GroupTopK.topK(scored, 10, "rk", Seq("word"), ByBm25: _*)
         .withColumn("hits", sum(col("rel")).over(wc))
         .withColumn("prec_x2520",
           when(col("rel") === 1, expr("(2520 * hits) div rk"))
@@ -570,18 +555,12 @@ object TfIdf {
     val scored = evalScored(spark, dir)._2
       .withColumn("rel",
         when(col("tf") >= 5, 2L).when(col("tf") >= 3, 1L).otherwise(0L))
-    val wSys = Window.partitionBy(col("word"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-    val dcg = scored.withColumn("rk", row_number().over(wSys))
-      .filter(col("rk") <= 5)
+    val dcg = GroupTopK.topK(scored, 5, "rk", Seq("word"), ByBm25: _*)
       .groupBy(col("word"))
       .agg(sum(expr("rel * (10000 div rk)")).as("dcg"),
         sum(col("rel")).as("rel_mass5"))
-    val wIdeal = Window.partitionBy(col("word"))
-      .orderBy(col("rel").desc, col("doc_id").asc)
-    val idcg = scored.filter(col("rel") > 0)
-      .withColumn("rk", row_number().over(wIdeal))
-      .filter(col("rk") <= 5)
+    val idcg = GroupTopK.topK(scored.filter(col("rel") > 0), 5, "rk",
+        Seq("word"), col("rel").desc, col("doc_id").asc)
       .groupBy(col("word"))
       .agg(sum(expr("rel * (10000 div rk)")).as("idcg"))
     dcg.join(idcg, Seq("word"), "left")
@@ -610,20 +589,15 @@ object TfIdf {
     */
   def queryExpansion(spark: SparkSession, dir: String): DataFrame = {
     val (words, scored) = evalScored(spark, dir)
-    val wSys = Window.partitionBy(col("word"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-    val prf = scored.withColumn("rk", row_number().over(wSys))
-      .filter(col("rk") <= 3)
+    val prf = GroupTopK.topK(scored, 3, "rk", Seq("word"), ByBm25: _*)
       .select(col("word").as("query"), col("doc_id"))
     val mined = words.join(broadcast(prf), Seq("doc_id"))
       .filter(col("word") =!= col("query") && length(col("word")) >= 4)
       .groupBy(col("query"), col("word"))
       .agg(countDistinct(col("doc_id")).as("prf_df"),
         count(lit(1)).as("prf_tf"))
-    val wTop = Window.partitionBy(col("query"))
-      .orderBy(col("prf_df").desc, col("prf_tf").desc, col("word").asc)
-    mined.withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 5)
+    GroupTopK.topK(mined, 5, "rank", Seq("query"),
+        col("prf_df").desc, col("prf_tf").desc, col("word").asc)
       .select(col("query"), col("rank"), col("word").as("exp_word"),
         col("prf_df"), col("prf_tf"))
       .orderBy("query", "rank")
@@ -646,10 +620,7 @@ object TfIdf {
     */
   def bestSnippet(spark: SparkSession, dir: String): DataFrame = {
     val (words, scored) = evalScored(spark, dir)
-    val wSys = Window.partitionBy(col("word"))
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-    val top1 = scored.withColumn("rk", row_number().over(wSys))
-      .filter(col("rk") === 1)
+    val top1 = GroupTopK.topK(scored, 1, "rk", Seq("word"), ByBm25: _*)
       .select(col("word").as("query"), col("doc_id"))
     val occ = words.as("w").join(broadcast(top1.as("t")),
         col("w.doc_id") === col("t.doc_id") &&
@@ -665,9 +636,8 @@ object TfIdf {
       .groupBy(col("s.query").as("query"), col("s.doc_id").as("doc_id"),
         col("s.pos").as("start_pos"))
       .agg(count(lit(1)).as("hits"))
-    val wBest = Window.partitionBy(col("query"))
-      .orderBy(col("hits").desc, col("start_pos").asc)
-    cand.withColumn("rk", row_number().over(wBest)).filter(col("rk") === 1)
+    GroupTopK.topK(cand, 1, "rk", Seq("query"),
+        col("hits").desc, col("start_pos").asc)
       .select(col("query"), col("doc_id"), col("start_pos"), col("hits"))
       .orderBy("query")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.GroupTopK
 
 /** Synthetic URL/link corpus + the reference's URL-pipeline operators.
   *
@@ -247,10 +248,8 @@ object Urls {
       .select(urlDomain(col("url")).as("domain"), col("anchor_text"))
       .groupBy(col("domain"), col("anchor_text"))
       .agg(count(lit(1)).as("n_links"))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(col("n_links").desc, col("anchor_text").asc)
-    counts.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    GroupTopK.topK(counts, 5, "rank", Seq("domain"),
+        col("n_links").desc, col("anchor_text").asc)
       .select(col("domain"), col("rank").cast("int").as("rank"),
         col("anchor_text"), col("n_links"))
       .orderBy("domain", "rank")
@@ -276,15 +275,12 @@ object Urls {
 
   // ---- T1/T5: priority-queue pop (top-1 per domain, batch analog) ----
   def frontierPop(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val links = linkCorpus(spark, dir)
       .withColumn("norm_url", normalizeUrl(col("url")))
       .withColumn("domain", urlDomain(col("norm_url")))
       .withColumn("priority", (col("parent_relevance") + col("depth")).cast("int"))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(col("priority").desc, col("norm_url").asc)
-    links.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    GroupTopK.topK(links, 3, "rn", Seq("domain"),
+        col("priority").desc, col("norm_url").asc)
       .select("domain", "rn", "norm_url", "priority")
       .orderBy("domain", "rn")
   }

@@ -3,15 +3,15 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.graft.PlanBridge
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 
 /** Whole-operator extension tier (builder brief ladder (c)): a native
   * top-k-per-group operator — custom `LogicalPlan` + `SparkStrategy` +
@@ -34,9 +34,14 @@ import org.apache.spark.sql.types.IntegerType
   * Distribution contract instead of hand-planned shuffles: the exec
   * declares `ClusteredDistribution(groupCols)` and lets Spark insert
   * the hash exchange — so AQE, exchange reuse, and partition coalescing
-  * all still apply. A map-side partial top-k (same heap before the
-  * exchange, like partial aggregation) is the next refinement; the
-  * correctness contract is identical.
+  * all still apply; [[PartialGroupTopKExec]] runs the same heap before
+  * the exchange, like partial aggregation.
+  *
+  * One way in: callers never build this node. [[GroupTopK.topK]] emits
+  * the row_number + rank-filter window and [[RewriteRankFilterToGroupTopK]]
+  * turns it into this node, so the helper and the rule that matches
+  * its output live side by side here, and every per-key top-k under
+  * etl/ goes through the helper.
   */
 case class GroupTopK(
     groupCols: Seq[Expression],
@@ -56,23 +61,18 @@ case class GroupTopK(
 }
 
 object GroupTopK {
-  /** df grouped by `groupCols`, ordered inside each group by `order`
-    * (must be a total order for determinism — add a tie-break), keeping
-    * the best `k` rows per group plus a dense 1-based rank column.
+  /** `df` cut to its best `k` rows per `partition` key under `order`
+    * (a total order — add a tie-break), each ranked 1..k in column
+    * `rank`. Emits exactly the shape [[RewriteRankFilterToGroupTopK]]
+    * plans as this operator — one row_number over a non-empty
+    * partition, bounded by a positive Int literal — so every per-key
+    * top-k under etl/ calls this rather than hand-writing the window.
     */
-  def topK(df: DataFrame, groupCols: Seq[String], order: Seq[(String, Boolean)],
-      k: Int, rankName: String = "rn"): DataFrame = {
-    val child = df.queryExecution.analyzed
-    def attr(n: String) = child.output.find(_.name == n).getOrElse(
-      throw new IllegalArgumentException(s"no column $n in ${child.output.map(_.name)}"))
-    val sortOrders = order.map { case (n, asc) =>
-      if (asc) SortOrder(attr(n), org.apache.spark.sql.catalyst.expressions.Ascending)
-      else SortOrder(attr(n), org.apache.spark.sql.catalyst.expressions.Descending)
-    }
-    val rank = AttributeReference(rankName, IntegerType, nullable = false)()
-    PlanBridge.ofRows(df.sparkSession,
-      GroupTopK(groupCols.map(attr), sortOrders, k, rank, child))
-  }
+  def topK(df: DataFrame, k: Int, rank: String, partition: Seq[String],
+      order: Column*): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(partition.map(col): _*).orderBy(order: _*)))
+      .filter(col(rank) <= k)
 }
 
 /** Optimizer rule (injectOptimizerRule): restore filter pushdown

@@ -25,6 +25,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   */
 object StreamingOps {
 
+  /** Hash shards the sketch twins (heavy hitters, KMV, q-digest) key
+    * their group state by.
+    */
+  private val SketchShards = 8
+
   /** Event-time column from the canonical nanos-as-long `ts`. */
   def eventTime(c: Column): Column = timestamp_micros(expr("ts div 1000"))
 
@@ -165,13 +170,13 @@ object StreamingOps {
     * top-k, so state is O(queries × 2k) regardless of stream length.
     * Each micro-batch merges its hits (min rank per tier wins, exactly
     * the semantics of re-running the retriever) and re-emits the
-    * query's refreshed fused top-`k` in Update mode (downstream sinks
+    * query's refreshed fused top-5 in Update mode (downstream sinks
     * upsert by (qid, rank)). Contributions use the same exact-integer
     * `1000000 div (60 + rank)` as the batch operator, so a drained
     * stream converges to the batch result bit-for-bit — StreamingSpec
     * pins stream == batch on the sf0.001 corpus.
     */
-  def streamingRrf(hits: Dataset[TierHit], k: Int = 5): Dataset[FusedHit] = {
+  def streamingRrf(hits: Dataset[TierHit]): Dataset[FusedHit] = {
     import hits.sparkSession.implicits._
     hits.groupByKey(_.qid)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
@@ -190,7 +195,7 @@ object StreamingOps {
             r.map(x => 1000000L / (60L + x)).getOrElse(0L)
           m.toSeq.map { case (cand, (l, v)) => (cand, contrib(l) + contrib(v)) }
             .sortBy { case (cand, rrf) => (-rrf, cand) }
-            .take(k).zipWithIndex
+            .take(5).zipWithIndex
             .map { case ((cand, rrf), i) => FusedHit(qid, i + 1, cand, rrf) }
             .iterator
         })
@@ -200,14 +205,14 @@ object StreamingOps {
     * [[graft.etl.Skew.heavyHitters]]'s sketch pass. Keys are sharded by
     * hash and each shard's group state is a running Misra-Gries summary
     * ([[graft.functions.MisraGries]]) folded forward across
-    * micro-batches, so state is O(shards × capacity) REGARDLESS of
-    * stream length or key cardinality — the property that makes
+    * micro-batches, so state is O(shards × [[graft.etl.Skew.Capacity]])
+    * REGARDLESS of stream length or key cardinality — the property that makes
     * frequent-items safe on an unbounded stream where an exact
     * streaming groupBy-count would grow state per distinct key.
     *
     * Guarantee composition: a key lives wholly in one shard, and the
     * shard's stream is a sub-stream of the whole (N_s <= N), so every
-    * key with global count > N/(capacity+1) survives ITS shard's
+    * key with global count > N/(Capacity+1) survives ITS shard's
     * sketch. The union of shard candidate sets therefore contains every
     * global heavy hitter, and a recount over the candidates equals the
     * batch answer exactly — StreamingSpec pins stream == batch through
@@ -216,11 +221,10 @@ object StreamingOps {
     * Each micro-batch re-emits the shard's refreshed candidate list
     * (Update mode; downstream upserts by shard).
     */
-  def streamingHeavyHitters(rows: Dataset[String], shards: Int = 8,
-      capacity: Int = 32): Dataset[ShardSketch] = {
+  def streamingHeavyHitters(rows: Dataset[String]): Dataset[ShardSketch] = {
     import rows.sparkSession.implicits._
-    val mg = new graft.functions.MisraGries(capacity)
-    rows.groupByKey(k => math.floorMod(k.hashCode, shards))
+    val mg = new graft.functions.MisraGries(graft.etl.Skew.Capacity)
+    rows.groupByKey(k => math.floorMod(k.hashCode, SketchShards))
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
         (shard: Int, batch: Iterator[String], state: GroupState[Map[String, Long]]) => {
           val merged = batch.foldLeft(state.getOption.getOrElse(mg.zero))(mg.reduce)
@@ -292,11 +296,10 @@ object StreamingOps {
     * `kmv_union`/`kmv_diff` answer novelty against yesterday's 8 KB
     * sketch without touching either corpus.
     */
-  def streamingKmvSketch(words: Dataset[String], shards: Int = 8)
-      : Dataset[KmvShard] = {
+  def streamingKmvSketch(words: Dataset[String]): Dataset[KmvShard] = {
     import words.sparkSession.implicits._
     import graft.functions.{HllSketch, KmvSketch}
-    words.groupByKey(w => math.floorMod(w.hashCode, shards))
+    words.groupByKey(w => math.floorMod(w.hashCode, SketchShards))
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
         (shard: Int, batch: Iterator[String], state: GroupState[Array[Long]]) => {
           val buf = KmvSketch.newBuffer()
@@ -321,11 +324,10 @@ object StreamingOps {
     * p99 document length so far" gauge a streaming ingest keeps
     * without storing values. StreamingSpec pins band + exact mass.
     */
-  def streamingQdigest(values: Dataset[Long], shards: Int = 8)
-      : Dataset[QdigestShard] = {
+  def streamingQdigest(values: Dataset[Long]): Dataset[QdigestShard] = {
     import values.sparkSession.implicits._
     import graft.functions.QdigestSketch
-    values.groupByKey(v => QdigestSketch.clamp(v) % shards)
+    values.groupByKey(v => QdigestSketch.clamp(v) % SketchShards)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
         (shard: Int, batch: Iterator[Long], state: GroupState[Array[Long]]) => {
           val buf = QdigestSketch.newBuffer()

@@ -1,18 +1,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.DataFrame
 
-/** LogicalPlan → DataFrame bridge. `Dataset.ofRows` went private[sql]
-  * (Spark 4 classic split); custom logical operators handed to the
-  * planner need this one-hop shim — same pattern as [[ColumnBridge]].
+/** Checkpoint-plan bridge: reaches the RDD behind a checkpointed
+  * frame's `LogicalRDD` leaf and Spark's `private[spark]` unpersist —
+  * a one-hop shim in Spark's package, same pattern as [[ColumnBridge]].
   */
 object PlanBridge {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
   /** Unpersist the block-manager blocks behind a `localCheckpoint()`ed
     * frame (its analyzed plan is a `LogicalRDD` over the checkpointed
     * RDD — `Dataset.unpersist` can't reach it: that only clears the

@@ -55,6 +55,22 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestBase {
     assert(hits == 1, s"$hits dotF call sites under etl/")
   }
 
+  // Every per-key top-k cut goes through GroupTopK.topK, whose output is
+  // exactly the shape RewriteRankFilterToGroupTopK plans as a bounded
+  // heap; a hand-written rank window that drifts from it (rank() for
+  // row_number(), a non-literal bound) silently falls back to a sorted
+  // WindowExec. The row_number() lines left under etl/ number rows
+  // (batches, page ids, shard offsets, versions, rank statistics) or
+  // flag them; they do not cut.
+  test("the etl sources hand-write no top-k rank window") {
+    val needle = "row_number" + "()"
+    val lines = Files.walk(Paths.get("src/main/scala/graft/etl")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => Files.readAllLines(p).asScala.count(_.contains(needle)))
+      .sum
+    assert(lines == 17, s"$lines row_number() lines under etl/")
+  }
+
   test("the test session carries the factory's UTC, nanosAsLong and cleanCheckpoints") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")

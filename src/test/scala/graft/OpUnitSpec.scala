@@ -94,8 +94,8 @@ class OpUnitSpec extends AnyFunSuite with SparkTestBase {
       ("b", 5L, 7),                                               // short group
       ("c", 6L, 1), ("c", 7L, 2), ("c", 8L, 3), ("c", 9L, 4)
     ).toDF("g", "id", "score")
-    val got = graft.plans.GroupTopK.topK(df, Seq("g"),
-        Seq(("score", false), ("id", true)), 2)
+    val got = graft.plans.GroupTopK.topK(df, 2, "rn", Seq("g"),
+        col("score").desc, col("id").asc)
       .select("g", "rn", "id", "score")
       .as[(String, Int, Long, Int)].collect().toSet
     assert(got == Set(

@@ -325,8 +325,8 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
   test("group-column filters push through GroupTopK to the scan") {
     import org.apache.spark.sql.functions.col
     val base = graft.plans.GroupTopK.topK(
-      SparkEntry.queries("score_page")(spark, dir), Seq("lang"),
-      Seq(("relevance", false), ("doc_id", true)), 3)
+      SparkEntry.queries("score_page")(spark, dir), 3, "rn", Seq("lang"),
+      col("relevance").desc, col("doc_id").asc)
     val filtered = base.filter(col("lang") === "en")
     val p = filtered.queryExecution.explainString(FormattedMode)
     // without PushFilterThroughGroupTopK the predicate is stuck above
@@ -407,6 +407,38 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     for (q <- Seq("politeness_batches", "rank_functions")) {
       val p = plan(q)
       assert(p.contains("Window"), s"$q should not rewrite:\n$p")
+    }
+    // every query that cuts a per-key top-k (through GroupTopK.topK,
+    // directly or via a ranked upstream) plans the partial + final heap
+    // pair; a site that drifts from the helper's shape (rank() for
+    // row_number(), say) is left on a sorted WindowExec
+    val viaHelper = Seq(
+      "topk_per_lang", "topk_native", "bigram_next", "budget_sample",
+      "prefix_topk", "token_head_share", "cusum_changepoint",
+      "peak_concurrency", "top_paths", "ts_motif", "knn_graph",
+      "label_prop", "jaccard_linkpred", "image_filter", "window_rank",
+      "hard_negatives", "ivf_sweep", "knn_brute", "knn_bucketed",
+      "knn_ivf", "knn_ivf_trained", "knn_multiprobe", "knn_pq",
+      "knn_pq_rerank", "knn_pq_trained", "label_noise",
+      "matryoshka_recall", "triplet_mine", "decontaminate_eval",
+      "reservoir_sample", "summary_extract", "domain_cap", "ap_eval",
+      "best_snippet", "bm25_topk", "inverted_index", "mrr_eval",
+      "ndcg_eval", "phrase_search", "query_expansion", "record_linkage",
+      "rrf_fusion", "tfidf_search", "tfidf_topk", "anchor_text",
+      "frontier_pop", "cluster_purity", "cluster_assign", "kmeans_update",
+      "semdedup", "knn_recall", "rbo_inrow", "rbo_overlap",
+      "retriever_overlap")
+    for (q <- viaHelper) {
+      val p = plan(q)
+      assert(p.contains("PartialGroupTopK") && p.contains("GroupTopK"),
+        s"$q missed the GroupTopK rewrite:\n$p")
+    }
+    // modularity and mmr_diversify cut inside staged frames, which the
+    // returned plan reads as checkpoint scans: check what they execute
+    for (q <- Seq("modularity", "mmr_diversify")) {
+      val p = executedPlans(q).mkString("\n=== next executed plan ===\n")
+      assert(p.contains("PartialGroupTopK") && p.contains("GroupTopK"),
+        s"$q missed the GroupTopK rewrite:\n$p")
     }
   }
 
