@@ -6,10 +6,11 @@
 Each input is PlanDump's stdout, captured directly or through
 `sbt runMain` (sbt's "[info] " prefixes and interleaved log lines are
 dropped). Before comparing, the ids that change from run to run are
-normalized: expression ids (`#123`), exchange `plan_id`s, RDD numbers
-and `Fixpoint.scala` line numbers. Prints one unified diff per query
-whose plan differs and a summary line; exits 1 if any query differs
-or is missing from one side.
+normalized: expression ids (`#123`), exchange `plan_id`s, RDD numbers,
+`Fixpoint.scala` line numbers and the JVM identity hashes of objects
+printed by their default `toString` (`graft.functions.MisraGries@6febbb07`).
+Prints one unified diff per query whose plan differs and a summary line;
+exits 1 if any query differs or is missing from one side.
 """
 import difflib
 import re
@@ -23,6 +24,7 @@ NORMALIZE = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"Fixpoint\.scala:\d+"), "Fixpoint.scala:N"),
+    (re.compile(r"\b([A-Za-z_$][\w.$]*)@[0-9a-f]+\b"), r"\1@H"),
 ]
 
 

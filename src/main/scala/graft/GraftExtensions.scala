@@ -3,46 +3,28 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Expression, ExpressionInfo, If, Least, Literal, RLike}
+import org.apache.spark.sql.graft.ErrorBridge
 import org.apache.spark.sql.types.IntegerType
-import graft.functions.{ChunkText, ClippedGramMatches, ClippedWordGramMatches, CmsLookup, CmsSketchAgg, DotProduct, HllEstimate, HllSketchAgg, KmvCommon, KmvDiff, KmvEstimate, KmvMerge, KmvSketchAgg, KmvUnion, QdigestMerge, QdigestN, QdigestQuantile, QdigestSketchAgg, QdigestSketchWeightedAgg, SkipUrl, WordEditDistance}
+import graft.functions.{ChunkText, CmsSketchAgg, HllSketchAgg, Kernel, KmvSketchAgg, QdigestSketchAgg, QdigestSketchWeightedAgg}
 
 /** SQL surface of the engine's custom pieces, registered through
   * SparkSessionExtensions (spark.sql.extensions-compatible, so a
   * cluster deployment gets them via config; local sessions use
-  * `.withExtensions(new GraftExtensions)`):
+  * `.withExtensions(new GraftExtensions)`).
   *
-  *   dot_product(a, b)              codegen'd float-vector dot product
-  *   chunk_text(body, size, ovl)    generator: (chunk_idx, chunk) rows
-  *   score_link(url, anchor, ctx, topic)  X1 relevance 0-10
-  *   skip_url(url)                  F1 reference skip-list predicate
-  *   clipped_gram_matches(c, r, n)  paired-eval char-n-gram clip (chrF)
-  *   clipped_word_gram_matches(c, r, n)  word-n-gram clip (BLEU/ROUGE)
-  *   word_edit_distance(c, r)       word-level Levenshtein (WER core)
-  *   cms_sketch(word)               native Count-Min aggregate (1024 cells)
-  *   cms_lookup(sketch, word)       point query: min over the 4 hashed cells
-  *   hll_sketch(v)                  native HLL aggregate (p=12, 4096 bytes)
-  *   hll_estimate(regs)             cardinality estimate from a register file
-  *   kmv_sketch(v)                  native bottom-k set sketch (k=1024)
-  *   kmv_estimate(sk)               distinct estimate (exact when un-full)
-  *   kmv_common(a, b)               distinct-intersection estimate
-  *   kmv_union(a, b)                distinct-union estimate
-  *   kmv_diff(a, b)                 distinct-difference |A \ B| estimate
-  *   kmv_merge(a, b)                union sketch (lossless bottom-k rollup)
-  *   qdigest_sketch(v)              native q-digest quantile sketch (k=1024)
-  *   qdigest_sketch_w(v, w)         mass-weighted q-digest (truncation budgets)
-  *   qdigest_quantile(sk, q_bp)     quantile-value estimate (banded rank error)
-  *   qdigest_n(sk)                  exact total mass
-  *   qdigest_merge(a, b)            merged digest (guarantee-preserving)
+  * The functions are [[GraftExtensions.functions]]: every
+  * [[graft.functions.Kernel]] row with a usage line (its usage string is
+  * the function's documentation, `DESCRIBE FUNCTION` prints it), the
+  * five native sketch aggregates, the `chunk_text` generator and
+  * `score_link`. Each is registered with its arity, and a call with any
+  * other argument count fails analysis with WRONG_NUM_ARGS.
   *
   * Planner surface: [[graft.plans.GroupTopKStrategy]] (round 3) plans
   * the native [[graft.plans.GroupTopK]] top-k-per-group operator —
   * bounded per-group heaps, O(n log k), instead of the full window
-  * sort. Expression-level registrations below are unchanged.
+  * sort.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
@@ -51,118 +33,59 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // so the standard DataFrame top-k idiom gets the heap plan for free
     e.injectOptimizerRule(_ => graft.plans.RewriteRankFilterToGroupTopK)
 
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - float-vector dot product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
+    GraftExtensions.functions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo("graft", null, f.name, f.usage, ""),
+        (exprs: Seq[Expression]) => {
+          if (exprs.size != f.arity)
+            throw ErrorBridge.wrongNumArgs(f.name, f.arity, exprs.size)
+          f.build(exprs)
+        }))
+    }
+  }
+}
 
-    e.injectFunction((FunctionIdentifier("chunk_text"),
-      info("chunk_text", "chunk_text(body, size, overlap) - overlapping chunks"),
-      (exprs: Seq[Expression]) => ChunkText(exprs(0), exprs(1), exprs(2))))
+object GraftExtensions {
+  /** One SQL function: name, usage line, arity and its builder over
+    * exactly `arity` argument expressions.
+    */
+  final case class SqlFunction(name: String, usage: String, arity: Int,
+      build: Seq[Expression] => Expression)
 
-    e.injectFunction((FunctionIdentifier("clipped_gram_matches"),
-      info("clipped_gram_matches",
-        "clipped_gram_matches(cand, ref, n) - sum_g min(count_c, count_r) over char n-grams"),
-      (exprs: Seq[Expression]) => ClippedGramMatches(exprs(0), exprs(1), exprs(2))))
+  val functions: Seq[SqlFunction] =
+    Kernel.all.flatMap(k => k.usage.map(u =>
+      SqlFunction(k.name, u, k.inputTypes.size, args => k.call(args)))) ++ Seq(
+      SqlFunction("chunk_text",
+        "chunk_text(body, size, overlap) - overlapping chunks", 3,
+        a => ChunkText(a(0), a(1), a(2))),
+      SqlFunction("score_link",
+        "score_link(url, anchor, context, topic) - relevance 0-10", 4,
+        scoreLink),
+      SqlFunction("cms_sketch",
+        "cms_sketch(word) - d=4 x w=256 Count-Min sketch cells (aggregate)", 1,
+        a => CmsSketchAgg(a(0))),
+      SqlFunction("hll_sketch",
+        "hll_sketch(v) - p=12 HyperLogLog register file (aggregate, 4096 bytes)", 1,
+        a => HllSketchAgg(a(0))),
+      SqlFunction("kmv_sketch",
+        "kmv_sketch(v) - bottom-k (k=1024) distinct-hash set sketch (aggregate)", 1,
+        a => KmvSketchAgg(a(0))),
+      SqlFunction("qdigest_sketch",
+        "qdigest_sketch(v) - q-digest quantile sketch over [0, 2^16) (aggregate)", 1,
+        a => QdigestSketchAgg(a(0))),
+      SqlFunction("qdigest_sketch_w",
+        "qdigest_sketch_w(v, w) - mass-weighted q-digest (aggregate)", 2,
+        a => QdigestSketchWeightedAgg(a(0), a(1))))
 
-    e.injectFunction((FunctionIdentifier("clipped_word_gram_matches"),
-      info("clipped_word_gram_matches",
-        "clipped_word_gram_matches(cand, ref, n) - sum_g min(count_c, count_r) over word n-grams"),
-      (exprs: Seq[Expression]) => ClippedWordGramMatches(exprs(0), exprs(1), exprs(2))))
-
-    e.injectFunction((FunctionIdentifier("cms_sketch"),
-      info("cms_sketch",
-        "cms_sketch(word) - d=4 x w=256 Count-Min sketch cells (aggregate)"),
-      (exprs: Seq[Expression]) => CmsSketchAgg(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("cms_lookup"),
-      info("cms_lookup",
-        "cms_lookup(sketch, word) - one-sided-high point estimate from cms_sketch cells"),
-      (exprs: Seq[Expression]) => CmsLookup(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("hll_sketch"),
-      info("hll_sketch",
-        "hll_sketch(v) - p=12 HyperLogLog register file (aggregate, 4096 bytes)"),
-      (exprs: Seq[Expression]) => HllSketchAgg(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("hll_estimate"),
-      info("hll_estimate",
-        "hll_estimate(regs) - cardinality estimate from hll_sketch registers"),
-      (exprs: Seq[Expression]) => HllEstimate(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("kmv_sketch"),
-      info("kmv_sketch",
-        "kmv_sketch(v) - bottom-k (k=1024) distinct-hash set sketch (aggregate)"),
-      (exprs: Seq[Expression]) => KmvSketchAgg(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("kmv_estimate"),
-      info("kmv_estimate",
-        "kmv_estimate(sk) - distinct-count estimate (exact when un-full)"),
-      (exprs: Seq[Expression]) => KmvEstimate(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("word_edit_distance"),
-      info("word_edit_distance",
-        "word_edit_distance(cand, ref) - word-level Levenshtein (WER core)"),
-      (exprs: Seq[Expression]) => WordEditDistance(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("kmv_common"),
-      info("kmv_common",
-        "kmv_common(a, b) - distinct-intersection estimate from two sketches"),
-      (exprs: Seq[Expression]) => KmvCommon(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("kmv_union"),
-      info("kmv_union",
-        "kmv_union(a, b) - distinct-union estimate from two sketches"),
-      (exprs: Seq[Expression]) => KmvUnion(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("kmv_diff"),
-      info("kmv_diff",
-        "kmv_diff(a, b) - distinct-difference |A \\ B| estimate from two sketches"),
-      (exprs: Seq[Expression]) => KmvDiff(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("kmv_merge"),
-      info("kmv_merge",
-        "kmv_merge(a, b) - union sketch (lossless bottom-k rollup)"),
-      (exprs: Seq[Expression]) => KmvMerge(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("qdigest_sketch"),
-      info("qdigest_sketch",
-        "qdigest_sketch(v) - q-digest quantile sketch over [0, 2^16) (aggregate)"),
-      (exprs: Seq[Expression]) => QdigestSketchAgg(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("qdigest_sketch_w"),
-      info("qdigest_sketch_w",
-        "qdigest_sketch_w(v, w) - mass-weighted q-digest (aggregate)"),
-      (exprs: Seq[Expression]) => QdigestSketchWeightedAgg(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("qdigest_quantile"),
-      info("qdigest_quantile",
-        "qdigest_quantile(sk, q_bp) - quantile-value estimate (rank error <= 16n/1024)"),
-      (exprs: Seq[Expression]) => QdigestQuantile(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("qdigest_n"),
-      info("qdigest_n",
-        "qdigest_n(sk) - exact total mass of a digest"),
-      (exprs: Seq[Expression]) => QdigestN(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("qdigest_merge"),
-      info("qdigest_merge",
-        "qdigest_merge(a, b) - merged digest (rank guarantee preserved)"),
-      (exprs: Seq[Expression]) => QdigestMerge(exprs(0), exprs(1))))
-
-    e.injectFunction((FunctionIdentifier("skip_url"),
-      info("skip_url", "skip_url(url) - true iff the reference skip lists match"),
-      (exprs: Seq[Expression]) => SkipUrl(exprs.head)))
-
-    e.injectFunction((FunctionIdentifier("score_link"),
-      info("score_link", "score_link(url, anchor, context, topic) - relevance 0-10"),
-      (exprs: Seq[Expression]) => {
-        // raw catalyst tree (a Column-built tree would arrive unresolved
-        // through the function-registry path); mirrors Urls.scoreLink
-        def hit(e: Expression, pts: Int): Expression =
-          If(RLike(e, exprs(3)), Literal(pts), Literal(0))
-        Cast(Least(Seq(Literal(10),
-          Add(Add(hit(exprs(0), 3), hit(exprs(1), 5)), hit(exprs(2), 2)))),
-          IntegerType)
-      }))
+  /** X1 relevance as a raw catalyst tree (a Column-built tree would
+    * arrive unresolved through the function-registry path); mirrors
+    * Urls.scoreLink.
+    */
+  private def scoreLink(a: Seq[Expression]): Expression = {
+    def hit(e: Expression, pts: Int): Expression =
+      If(RLike(e, a(3)), Literal(pts), Literal(0))
+    Cast(Least(Seq(Literal(10),
+      Add(Add(hit(a(0), 3), hit(a(1), 5)), hit(a(2), 2)))),
+      IntegerType)
   }
 }

@@ -643,8 +643,9 @@ object CorpusStats {
     * what B brought that A didn't have — WITHOUT a distinct-join,
     * from two 8 KB sketches. Completes [[kmvOverlap]]'s intersection
     * with the union and difference surfaces
-    * ([[graft.functions.KmvUnion]]/[[graft.functions.KmvDiff]]/
-    * [[graft.functions.KmvMerge]]): |A∪B| = estimate(merge),
+    * ([[graft.functions.KmvSketch.unionEstimate]]/
+    * [[graft.functions.KmvSketch.diffEstimate]]/
+    * [[graft.functions.KmvSketch.mergeSketches]]): |A∪B| = estimate(merge),
     * |B∖A| = |B| − |A∩B| — inclusion–exclusion closed over sketches.
     *
     * Verified columns are the exact twins (the oracle recomputes

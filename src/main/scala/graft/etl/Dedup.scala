@@ -111,7 +111,7 @@ object Dedup {
     * hash primitive itself.
     *
     * Round 18: the kernel is ONE compiled pass
-    * ([[graft.functions.MinHashSigs]]) producing all numHashes min
+    * ([[graft.functions.ShingleOps.minhashMd5]]) producing all numHashes min
     * slots at once — the per-slot array_min(transform(...)) chain it
     * replaces ran numHashes interpreted passes over the shingle array
     * (HOFs are CodegenFallback). Values bit-identical; the mh_i
@@ -1146,7 +1146,7 @@ object Dedup {
   def simhashFrom(input: DataFrame): DataFrame = {
     // ONE compiled pass per doc (round 18): md5 per word + all 16
     // bit-sums + the sign fold in a single kernel
-    // ([[graft.functions.SimHashSig]], hexChars=4). The transform +
+    // ([[graft.functions.ShingleOps.simhashSig]], hexChars=4). The transform +
     // 16 interpreted aggregate folds this replaces scanned the word
     // array 17 times per row; values are bit-identical (integer
     // addition is order-insensitive). Still a pure map — no explode,

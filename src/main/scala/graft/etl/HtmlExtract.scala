@@ -21,8 +21,8 @@ import scala.collection.mutable.ArrayBuffer
   * remains the S3/S4 transport contract.
   *
   * Scale posture: extraction is a per-row linear scan (one pass, no
-  * backtracking, no regex) behind a codegen'd expression
-  * ([[graft.functions.HtmlMainTextExpr]] — a compiled static call, so
+  * backtracking, no regex) behind a compiled kernel
+  * ([[graft.functions.HtmlMainText.extract]] — a static call, so
   * whole-stage codegen spans the scan instead of breaking on a
   * ScalaUDF; round 14, VERDICT r13 item 5); at 100 TB it pipelines
   * inside the scan stage with zero shuffle. The tokenizer allocates

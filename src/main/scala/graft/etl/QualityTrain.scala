@@ -80,7 +80,7 @@ object QualityTrain {
     * bucket b, the bias at [[Buckets]]. None is a NULL weight — the
     * warm start's value when the train slice has no token features
     * (or, for the bias, no documents); it stays NULL through every
-    * update, and [[graft.functions.BagDot]] reads it as 0.
+    * update, and [[graft.functions.QualityKernelOps.bagDot]] reads it as 0.
     */
   private type Weights = Vector[Option[Long]]
 
@@ -89,10 +89,10 @@ object QualityTrain {
   /** (doc_id, y, bucket, bs) labeled feature rows for EVERY split
     * — ONE corpus scan, ZERO shuffles (round 18 optimization): the
     * hashed bag-of-words counts complete in-row
-    * ([[graft.functions.HashedBagCounts]] — identical (b, cnt) multiset
+    * ([[graft.functions.QualityKernelOps.hashedBagCounts]] — identical (b, cnt) multiset
     * to the old explode + md5 + (doc_id, b) groupBy, bias slot
     * included), the gopher label is the compiled per-row verdict
-    * ([[graft.functions.GopherPassOf]] — identical to the relational
+    * ([[graft.functions.QualityKernelOps.gopherPass]] — identical to the relational
     * `gopherRules` verdict, the streaming-twin semantics), and the
     * split bucket is the same salted doc-hash as
     * [[Splits.trainTestSplit]].

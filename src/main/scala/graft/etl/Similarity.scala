@@ -763,8 +763,8 @@ object Similarity {
     * fold over that array — the same ordered-sum discipline the knn
     * oracles already rely on. Assignment/probe distances against the
     * 8-row trained codebook use the interpreted double-dot (tiny,
-    * broadcast); the hot corpus-side exact scoring keeps the codegen'd
-    * [[graft.functions.DotProduct]].
+    * broadcast); the hot corpus-side exact scoring keeps the compiled
+    * [[graft.functions.VectorOps.dot]].
     */
   def knnIvfTrained(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, dir))

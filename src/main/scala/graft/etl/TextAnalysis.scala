@@ -236,7 +236,7 @@ object TextAnalysis {
 
   def gopherRules(spark: SparkSession, dir: String): DataFrame = {
     // ONE compiled pass per document (round 18): the five rule
-    // statistics come from [[graft.functions.GopherStatsOf]] — values
+    // statistics come from [[graft.functions.QualityKernelOps.gopherStats]] — values
     // identical to the word explode + two doc-keyed aggregations + the
     // bigram rank window this replaces (same split, same code-point
     // lengths, same (cnt desc, len desc) top-bigram tie-break; docs
@@ -549,8 +549,8 @@ object TextAnalysis {
     * multinomial-NB warm start + pocket-selected perceptron
     * refinement over the same hashed-bucket family, whose output
     * broadcast onto this scoring shape is exactly the production
-    * deployment (or a codegen'd Expression like functions/DotProduct
-    * for the hot path — HOFs are interpreted); the plan shape —
+    * deployment (or a compiled kernel like `bag_dot` for the hot
+    * path — HOFs are interpreted); the plan shape —
     * map-side scoring, no explode — is identical.
     */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame =
@@ -1047,7 +1047,7 @@ object TextAnalysis {
     *
     * Scale posture: a paired eval is 1:1, so the clip runs INSIDE the
     * pair row — [[graft.functions.GramClip]]'s compiled per-pair hash
-    * counting (the DotProduct never-an-interpreted-HOF discipline)
+    * counting (the never-an-interpreted-HOF kernel discipline)
     * replaces the gram-explode + (ref_id, n, gram) clip join the
     * round-11 ship measured at 6.7 s / sf0.1 (~150 M shuffled gram
     * rows at 10× — a corpus-sized shuffle whose every row joins back
@@ -1174,7 +1174,7 @@ object TextAnalysis {
     * priced as the cost of the byte-bijection verification vehicle),
     * while the computation itself is 1:1 per pair. Here the word-level
     * DP runs inside the pair row through the compiled
-    * [[graft.functions.WordEdit.distance]] (the GramClip/DotProduct
+    * [[graft.functions.WordEdit.distance]] (the GramClip kernel
     * discipline) — ONE staged scan, one doc_id-keyed pair join, a pure
     * map pass; no vocab window, no union, no per-pair aggregation.
     * Distances are identical to [[werEval]]'s by construction (the

@@ -78,7 +78,7 @@ object Urls {
     "(?i)login|logout|signup|signin|register|cart|checkout|payment|download|/static/|/assets/|/images/|/fonts/"
 
   // The patterns above are the SPEC (and the oracle's implementation).
-  // The Spark side evaluates them via the codegen'd SkipUrl expression —
+  // The Spark side evaluates them via the compiled skip_url kernel —
   // a literal suffix/substring scan, NOT a regex NFA, and crucially a
   // SINGLE expression node: a 33-predicate Column chain would get the
   // computed url inlined into every predicate once Catalyst hoists the

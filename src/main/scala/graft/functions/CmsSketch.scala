@@ -32,13 +32,9 @@ object CmsSketch {
   val Depth = 4
   val Width = 256
 
-  private val md5 = ThreadLocal.withInitial(() =>
-    java.security.MessageDigest.getInstance("MD5"))
-
   /** Point query: the sketch's one-sided-high estimate for `word` —
     * min over the d=4 rows of the cell the word hashes to (Cormode &
-    * Muthukrishnan 2005 §4.1). Static so generated code calls it
-    * directly (the DotProduct discipline); `cells` is the row-major
+    * Muthukrishnan 2005 §4.1); `cells` is the row-major
     * 1024-long buffer [[CmsSketchAgg]] emits.
     */
   def lookup(cells: org.apache.spark.sql.catalyst.util.ArrayData,
@@ -62,7 +58,7 @@ object CmsSketch {
     * % 256` in Spark SQL / the DuckDB oracle.
     */
   def bucket(j: Int, word: String): Int = {
-    val md = md5.get()
+    val md = Md5.get()
     md.reset()
     val d = md.digest((j.toString + word).getBytes("UTF-8"))
     // first 8 hex chars = first 4 bytes, unsigned
@@ -128,42 +124,19 @@ case class CmsSketchAgg(child: Expression,
     copy(child = newChild)
 }
 
-/** `cms_lookup(sketch, word)` — the sketch's answering surface: without
-  * it the 1024-cell array is an artifact you can only consume by
-  * exploding; with it the sketch is queryable in SQL the way a
-  * production counting tier is used (build once per window/partition,
-  * point-query per candidate word). Null-intolerant scalar; the min
-  * loop lives in [[CmsSketch.lookup]], a compiled static method the
-  * generated code calls directly — whole-stage codegen stays intact.
-  */
-case class CmsLookup(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false), StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cms_lookup"
-
-  override protected def nullSafeEval(cells: Any, word: Any): Any =
-    java.lang.Long.valueOf(CmsSketch.lookup(
-      cells.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      word.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (cells, word) =>
-      s"${ev.value} = graft.functions.CmsSketch.lookup($cells, $word);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object CmsSketchFunctions {
+  /** `cms_lookup(sketch, word)` — the sketch's answering surface: without
+    * it the 1024-cell array is an artifact you can only consume by
+    * exploding; with it the sketch is queryable in SQL the way a
+    * production counting tier is used (build once per window/partition,
+    * point-query per candidate word).
+    */
+  private val Lookup = Kernel("cms_lookup", CmsSketch.getClass, "lookup",
+    Seq(ArrayType(LongType, containsNull = false), StringType), LongType,
+    usage = Some("cms_lookup(sketch, word) - one-sided-high point estimate from cms_sketch cells"))
+
+  val kernels: Seq[Kernel] = Seq(Lookup)
+
   /** Column API: the 1024-cell sketch of a string column (row-major
     * d×w flattening: cell(j, b) at index (j−1)·256 + b).
     */
@@ -174,7 +147,5 @@ object CmsSketchFunctions {
   /** Column API: one-sided-high point estimate for `word` from a
     * sketch built by [[cmsSketch]].
     */
-  def cmsLookup(sketch: Column, word: Column): Column =
-    ColumnBridge.column(CmsLookup(ColumnBridge.expression(sketch),
-      ColumnBridge.expression(word)))
+  def cmsLookup(sketch: Column, word: Column): Column = Lookup(sketch, word)()
 }

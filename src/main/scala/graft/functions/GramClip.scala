@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Clipped character-n-gram match count for PAIRED text evals (the
@@ -20,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus-sized shuffle for nothing (measured: 6.7 s at sf0.1,
   * ~150 M shuffled gram rows at 10×, the whole cost of the round-11
   * chrf_eval ship; the same argument subsequently moved BLEU/ROUGE's
-  * word-gram clip in-row — see [[ClippedWordGramMatches]]). Per-pair
+  * word-gram clip in-row — see [[GramClip.clippedWords]]). Per-pair
   * hash-map counting inside the pair row is O(slice) with zero
   * shuffle, and at cluster scale it map-reduces perfectly: the only
   * movement left is the doc_id-keyed pair join.
@@ -30,11 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `substr`/`length` — bit-identical to the gram-join formulation
   * this replaced and to the DuckDB oracle. The heavy loop lives in
   * [[GramClip.clipped]], a compiled static method the generated code
-  * calls directly — whole-stage codegen stays intact around it (the
-  * DotProduct discipline: never an interpreted HOF in a hot path;
-  * here the per-row work IS the hash counting, so a static call costs
-  * the same as inlined generated code without Janino-compiling a
-  * hash map).
+  * calls directly — whole-stage codegen stays intact around it (never
+  * an interpreted HOF in a hot path; here the per-row work IS the hash
+  * counting, so a static call costs the same as inlined generated code
+  * without Janino-compiling a hash map).
   */
 object GramClip {
 
@@ -105,58 +101,6 @@ object GramClip {
   }
 }
 
-case class ClippedGramMatches(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with ExpectsInputTypes {
-
-  // analysis-time rejection of mistyped SQL calls (e.g. n passed as a
-  // string literal) — without this a bad call surfaces as a runtime
-  // ClassCastException inside generated code
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType, StringType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "clipped_gram_matches"
-
-  override protected def nullSafeEval(cand: Any, ref: Any, n: Any): Any =
-    java.lang.Long.valueOf(GramClip.clipped(
-      cand.asInstanceOf[UTF8String], ref.asInstanceOf[UTF8String],
-      n.asInstanceOf[Int]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, r, n) =>
-      s"${ev.value} = graft.functions.GramClip.clipped($c, $r, $n);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** Word-gram sibling of [[ClippedGramMatches]] — the BLEU/ROUGE clip
-  * over space-tokenized word n-grams, same compiled-static-call shape.
-  */
-case class ClippedWordGramMatches(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType, StringType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "clipped_word_gram_matches"
-
-  override protected def nullSafeEval(cand: Any, ref: Any, n: Any): Any =
-    java.lang.Long.valueOf(GramClip.clippedWords(
-      cand.asInstanceOf[UTF8String], ref.asInstanceOf[UTF8String],
-      n.asInstanceOf[Int]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, r, n) =>
-      s"${ev.value} = graft.functions.GramClip.clippedWords($c, $r, $n);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 /** Word-level Levenshtein distance for PAIRED evals — the WER core
   * (substitution/insertion/deletion at the word level) as ONE compiled
   * in-row DP instead of the relational re-encoding
@@ -199,42 +143,35 @@ object WordEdit {
   }
 }
 
-case class WordEditDistance(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType, StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "word_edit_distance"
-
-  override protected def nullSafeEval(cand: Any, ref: Any): Any =
-    java.lang.Long.valueOf(WordEdit.distance(
-      cand.asInstanceOf[UTF8String], ref.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, r) =>
-      s"${ev.value} = graft.functions.WordEdit.distance($c, $r);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object GramClipFunctions {
+  /** `clipped_gram_matches(cand, ref, n)` — the char-n-gram clip (chrF).
+    * n is a column, so a mistyped SQL call (n passed as a string
+    * literal) fails analysis here.
+    */
+  private val CharClip = Kernel("clipped_gram_matches", GramClip.getClass,
+    "clipped", Seq(StringType, StringType, IntegerType), LongType,
+    usage = Some("clipped_gram_matches(cand, ref, n) - sum_g min(count_c, count_r) over char n-grams"))
+  /** `clipped_word_gram_matches(cand, ref, n)` — the BLEU/ROUGE clip over
+    * space-tokenized word n-grams.
+    */
+  private val WordClip = Kernel("clipped_word_gram_matches", GramClip.getClass,
+    "clippedWords", Seq(StringType, StringType, IntegerType), LongType,
+    usage = Some("clipped_word_gram_matches(cand, ref, n) - sum_g min(count_c, count_r) over word n-grams"))
+  /** `word_edit_distance(cand, ref)` — word-level Levenshtein (WER core). */
+  private val WordEditDist = Kernel("word_edit_distance", WordEdit.getClass,
+    "distance", Seq(StringType, StringType), LongType, usage = Some(
+      "word_edit_distance(cand, ref) - word-level Levenshtein (WER core)"))
+
+  val kernels: Seq[Kernel] = Seq(CharClip, WordClip, WordEditDist)
+
   /** Column API: clipped char-n-gram matches between two string columns. */
   def clipF(cand: Column, ref: Column, n: Column): Column =
-    ColumnBridge.column(ClippedGramMatches(ColumnBridge.expression(cand),
-      ColumnBridge.expression(ref), ColumnBridge.expression(n)))
+    CharClip(cand, ref, n)()
 
   /** Column API: clipped word-n-gram matches (BLEU/ROUGE clip). */
   def wordClipF(cand: Column, ref: Column, n: Column): Column =
-    ColumnBridge.column(ClippedWordGramMatches(ColumnBridge.expression(cand),
-      ColumnBridge.expression(ref), ColumnBridge.expression(n)))
+    WordClip(cand, ref, n)()
 
   /** Column API: word-level Levenshtein distance (WER core). */
-  def wordEditF(cand: Column, ref: Column): Column =
-    ColumnBridge.column(WordEditDistance(ColumnBridge.expression(cand),
-      ColumnBridge.expression(ref)))
+  def wordEditF(cand: Column, ref: Column): Column = WordEditDist(cand, ref)()
 }

@@ -42,16 +42,13 @@ object HllSketch {
   val P = 12
   val M: Int = 1 << P // 4096 registers
 
-  private val md5 = ThreadLocal.withInitial(() =>
-    java.security.MessageDigest.getInstance("MD5"))
-
   /** Top 64 bits of md5(w) — the value of
     * `conv(substring(md5(w), 1, 16), 16, 10)` reinterpreted as a
     * signed long (conv yields the unsigned decimal; the BITS are
     * identical, which is all the sketch reads).
     */
   def hash64(w: String): Long = {
-    val md = md5.get()
+    val md = Md5.get()
     md.reset()
     val d = md.digest(w.getBytes("UTF-8"))
     var h = 0L
@@ -74,7 +71,7 @@ object HllSketch {
     (idx, rho)
   }
 
-  /** Raw-estimate machinery, used by [[HllEstimate]] and the specs:
+  /** Raw-estimate machinery, used by `hll_estimate` and the specs:
     * alpha_m · m² / Σ 2^(−reg)  with the small-range linear-counting
     * correction (Flajolet §4: E < 5m/2 and some register empty →
     * m·ln(m/V)). Bit-exact determinism is NOT claimed for the
@@ -98,8 +95,8 @@ object HllSketch {
     math.rint(corrected).toLong
   }
 
-  /** [[estimate]] over the catalyst array value — the static entry
-    * generated code calls (the GramClip/DotProduct discipline).
+  /** [[estimate]] over the catalyst array value — the `hll_estimate`
+    * kernel's static method.
     */
   def estimateData(a: org.apache.spark.sql.catalyst.util.ArrayData): Long =
     estimate(a.toByteArray())
@@ -151,46 +148,25 @@ case class HllSketchAgg(child: Expression,
     copy(child = newChild)
 }
 
-/** `hll_estimate(registers)` — the sketch's answering surface
-  * ([[CmsLookup]]'s rationale for the cardinality tier): harmonic-mean
-  * estimate with the small-range linear-counting correction, as a
-  * scalar over the register file so merged/persisted sketches stay
-  * queryable in SQL. Estimate semantics per [[HllSketch.estimate]] —
-  * NOT an exact-oracle value; verified queries band it in-engine.
-  */
-case class HllEstimate(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(ByteType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hll_estimate"
-
-  override protected def nullSafeEval(regs: Any): Any = {
-    val a = regs.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    java.lang.Long.valueOf(HllSketch.estimateData(a))
-  }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, regs =>
-      s"graft.functions.HllSketch.estimateData($regs)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HllSketchFunctions {
+  /** `hll_estimate(registers)` — the sketch's answering surface
+    * (cms_lookup's rationale for the cardinality tier): harmonic-mean
+    * estimate with the small-range linear-counting correction, as a
+    * scalar over the register file so merged/persisted sketches stay
+    * queryable in SQL. Estimate semantics per [[HllSketch.estimate]] —
+    * NOT an exact-oracle value; verified queries band it in-engine.
+    */
+  private val Estimate = Kernel("hll_estimate", HllSketch.getClass,
+    "estimateData", Seq(ArrayType(ByteType, containsNull = false)), LongType,
+    usage = Some("hll_estimate(regs) - cardinality estimate from hll_sketch registers"))
+
+  val kernels: Seq[Kernel] = Seq(Estimate)
+
   /** Column API: the 4096-byte HLL register file of a string column. */
   def hllSketch(word: Column): Column =
     ColumnBridge.column(
       HllSketchAgg(ColumnBridge.expression(word)).toAggregateExpression())
 
   /** Column API: cardinality estimate from a register file. */
-  def hllEstimate(regs: Column): Column =
-    ColumnBridge.column(HllEstimate(ColumnBridge.expression(regs)))
+  def hllEstimate(regs: Column): Column = Estimate(regs)()
 }

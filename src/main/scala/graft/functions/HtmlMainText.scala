@@ -1,18 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Main-content extraction as a codegen'd expression — the round-14
+/** Main-content extraction as a compiled kernel — the round-14
   * retirement of the last hot-path `udf` (VERDICT r13 item 5): the S5
   * extractor ([[graft.etl.HtmlExtract.mainText]]) runs per document
   * over the corpus in a verified query, and a Scala-closure UDF there
   * breaks whole-stage codegen around the scan at 100×. Same discipline
-  * as [[GramClip]]/DotProduct: the heavy loop stays a compiled static
+  * as [[GramClip]]: the heavy loop stays a compiled static
   * method (the tokenizer/classifier is real imperative code — nothing
   * to gain from Janino-compiling it), and the generated code calls it
   * directly, so the codegen stage spans the whole scan→project
@@ -26,28 +23,13 @@ object HtmlMainText {
     UTF8String.fromString(graft.etl.HtmlExtract.mainText(html.toString))
 }
 
-case class HtmlMainTextExpr(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "html_main_text"
-
-  override protected def nullSafeEval(html: Any): Any =
-    HtmlMainText.extract(html.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      h => s"graft.functions.HtmlMainText.extract($h)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** Column API of the `html_main_text` kernel. */
 object HtmlMainTextExpr {
+  private val MainText = Kernel("html_main_text", HtmlMainText.getClass,
+    "extract", Seq(StringType), StringType)
+
+  val kernels: Seq[Kernel] = Seq(MainText)
+
   /** Column API: extracted main text of an HTML string column. */
-  def mainTextF(html: Column): Column =
-    ColumnBridge.column(HtmlMainTextExpr(ColumnBridge.expression(html)))
+  def mainTextF(html: Column): Column = MainText(html)()
 }

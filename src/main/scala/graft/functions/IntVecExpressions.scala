@@ -2,14 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Compiled integer-vector kernels for the PQ/ANN family (round 18
-  * optimization — the DotProduct discipline applied to the exact-
+  * optimization — the compiled-kernel discipline applied to the exact-
   * integer distance tier).
   *
   * What they replace: `transform(embedding, x -> cast(round(x*1000) as
@@ -148,147 +146,49 @@ object IntVecOps {
   }
 }
 
-/** round(x·1000) per element of an array<float>, as array<long>. */
-case class QuantizeMilli(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "quantize_milli"
-
-  override protected def nullSafeEval(a: Any): Any =
-    IntVecOps.quantizeMilli(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.IntVecOps.quantizeMilli($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Exact integer squared L2 distance between two array<long> vectors. */
-case class SqDistLong(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sq_dist_long"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(IntVecOps.sqDistLong(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.IntVecOps.sqDistLong($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (codes, du) PQ encode of a quantized vector against a k-major flat
-  * codebook column — the in-row argmin over all M subquantizers.
-  */
-case class PqEncode(left: Expression, right: Expression, m: Int, sub: Int,
-    k: Int) extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("codes", ArrayType(IntegerType, containsNull = false),
-      nullable = false),
-    StructField("du", ArrayType(LongType, containsNull = false),
-      nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_encode"
-
-  override protected def nullSafeEval(x: Any, cb: Any): Any =
-    IntVecOps.pqEncode(x.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData],
-      m, sub, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, cb) =>
-      s"${ev.value} = graft.functions.IntVecOps.pqEncode($x, $cb, $m, $sub, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** M·K-slot integer ADC lookup table of a query vector. */
-case class PqLut(left: Expression, right: Expression, m: Int, sub: Int,
-    k: Int) extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_lut"
-
-  override protected def nullSafeEval(x: Any, cb: Any): Any =
-    IntVecOps.pqLut(x.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData],
-      m, sub, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, cb) =>
-      s"${ev.value} = graft.functions.IntVecOps.pqLut($x, $cb, $m, $sub, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Σ_m lut[m·K + codes[m]] — the ADC distance of one (codes, lut) pair. */
-case class AdcSum(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(IntegerType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "adc_sum"
-
-  override protected def nullSafeEval(codes: Any, lut: Any): Any =
-    java.lang.Long.valueOf(IntVecOps.adcSum(
-      codes.asInstanceOf[ArrayData], lut.asInstanceOf[ArrayData], k))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l) =>
-      s"${ev.value} = graft.functions.IntVecOps.adcSum($c, $l, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object IntVecFunctions {
+  private val Longs = ArrayType(LongType)
+
+  /** round(x·1000) per element of an array<float>, as array<long>. */
+  private val QuantizeMilli = Kernel("quantize_milli", IntVecOps.getClass,
+    "quantizeMilli", Seq(ArrayType(FloatType)),
+    ArrayType(LongType, containsNull = false))
+  /** Exact integer squared L2 distance between two array<long> vectors. */
+  private val SqDist = Kernel("sq_dist_long", IntVecOps.getClass,
+    "sqDistLong", Seq(Longs, Longs), LongType)
+  /** (codes, du) PQ encode of a quantized vector against a k-major flat
+    * codebook column — the in-row argmin over all M subquantizers.
+    */
+  private val PqEncode = Kernel("pq_encode", IntVecOps.getClass, "pqEncode",
+    Seq(Longs, Longs), StructType(Seq(
+      StructField("codes", ArrayType(IntegerType, containsNull = false),
+        nullable = false),
+      StructField("du", ArrayType(LongType, containsNull = false),
+        nullable = false))))
+  /** M·K-slot integer ADC lookup table of a query vector. */
+  private val PqLut = Kernel("pq_lut", IntVecOps.getClass, "pqLut",
+    Seq(Longs, Longs), ArrayType(LongType, containsNull = false))
+  /** Σ_m lut[m·K + codes[m]] — the ADC distance of one (codes, lut) pair. */
+  private val AdcSum = Kernel("adc_sum", IntVecOps.getClass, "adcSum",
+    Seq(ArrayType(IntegerType), Longs), LongType)
+
+  val kernels: Seq[Kernel] = Seq(QuantizeMilli, SqDist, PqEncode, PqLut, AdcSum)
+
   /** Column API: round(x·1000) quantization of an array<float>. */
-  def quantizeMilliF(a: Column): Column =
-    ColumnBridge.column(QuantizeMilli(ColumnBridge.expression(a)))
+  def quantizeMilliF(a: Column): Column = QuantizeMilli(a)()
 
   /** Column API: exact integer Σ(a−b)² over array<long> columns. */
-  def sqDistLongF(a: Column, b: Column): Column =
-    ColumnBridge.column(SqDistLong(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def sqDistLongF(a: Column, b: Column): Column = SqDist(a, b)()
 
   /** Column API: (codes, du) PQ encode against a flat codebook. */
   def pqEncodeF(x: Column, cb: Column, m: Int, sub: Int, k: Int): Column =
-    ColumnBridge.column(PqEncode(ColumnBridge.expression(x),
-      ColumnBridge.expression(cb), m, sub, k))
+    PqEncode(x, cb)(m, sub, k)
 
   /** Column API: M·K ADC lookup table of a query vector. */
   def pqLutF(x: Column, cb: Column, m: Int, sub: Int, k: Int): Column =
-    ColumnBridge.column(PqLut(ColumnBridge.expression(x),
-      ColumnBridge.expression(cb), m, sub, k))
+    PqLut(x, cb)(m, sub, k)
 
   /** Column API: ADC distance from (codes, lut). */
   def adcSumF(codes: Column, lut: Column, k: Int): Column =
-    ColumnBridge.column(AdcSum(ColumnBridge.expression(codes),
-      ColumnBridge.expression(lut), k))
+    AdcSum(codes, lut)(k)
 }

@@ -232,179 +232,63 @@ case class KmvSketchAgg(child: Expression,
     copy(child = newChild)
 }
 
-/** `kmv_estimate(sketch)` — distinct-count estimate (exact when the
-  * sketch holds the whole set). Answering-surface scalar, compiled
-  * static call ([[CmsLookup]]'s shape).
-  */
-case class KmvEstimate(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "kmv_estimate"
-
-  override protected def nullSafeEval(arr: Any): Any =
-    java.lang.Long.valueOf(KmvSketch.estimate(arr.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, arr =>
-      s"graft.functions.KmvSketch.estimate($arr)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `kmv_common(a, b)` — |A ∩ B| estimate from two sketches (exact when
-  * both are un-full): the set-algebra surface the KMV tier exists for.
-  */
-case class KmvCommon(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false),
-      ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "kmv_common"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(KmvSketch.commonEstimate(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.KmvSketch.commonEstimate($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Shared shape for the three binary sketch→long set-algebra scalars
-  * (`kmv_common` keeps its own class for source stability; these share
-  * one): compiled static call, analysis-time typing, null-intolerant.
-  */
-abstract class KmvBinaryLong
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-  /** Static method on [[KmvSketch]] the generated code calls. */
-  def staticName: String
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false),
-      ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.KmvSketch.$staticName($a, $b)")
-}
-
-/** `kmv_union(a, b)` — |A ∪ B| estimate = estimate(merge(a, b)); exact
-  * when the union fits in k. With [[KmvCommon]] and [[KmvDiff]] this
-  * completes the inclusion–exclusion surface: any boolean combination
-  * of two corpora's distinct sets answers from two 8 KB sketches.
-  */
-case class KmvUnion(left: Expression, right: Expression)
-  extends KmvBinaryLong {
-  override def staticName: String = "unionEstimate"
-  override def prettyName: String = "kmv_union"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(KmvSketch.unionEstimate(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `kmv_diff(a, b)` — |A ∖ B| estimate = |A| − |A ∩ B|, floored at 0;
-  * exact when both sketches are un-full. The cross-snapshot NOVELTY
-  * primitive: what did snapshot B bring that A didn't have.
-  */
-case class KmvDiff(left: Expression, right: Expression)
-  extends KmvBinaryLong {
-  override def staticName: String = "diffEstimate"
-  override def prettyName: String = "kmv_diff"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(KmvSketch.diffEstimate(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `kmv_merge(a, b)` — the union SKETCH itself (sorted-merge + dedup +
-  * trim to k): the reaggregation surface — identical to what one pass
-  * over A ∪ B would build, so periodic sketches roll up losslessly.
-  */
-case class KmvMerge(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false),
-      ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "kmv_merge"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    KmvSketch.mergeSketches(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.KmvSketch.mergeSketches($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object KmvSketchFunctions {
+  private val Sketch = ArrayType(LongType, containsNull = false)
+  private def binary(name: String, method: String, out: DataType,
+      usage: String) =
+    Kernel(name, KmvSketch.getClass, method, Seq(Sketch, Sketch), out,
+      usage = Some(usage))
+
+  /** `kmv_estimate(sketch)` — distinct-count estimate (exact when the
+    * sketch holds the whole set).
+    */
+  private val Estimate = Kernel("kmv_estimate", KmvSketch.getClass,
+    "estimate", Seq(Sketch), LongType, usage = Some(
+      "kmv_estimate(sk) - distinct-count estimate (exact when un-full)"))
+  /** `kmv_common(a, b)` — |A ∩ B| estimate from two sketches (exact when
+    * both are un-full): the set-algebra surface the KMV tier exists for.
+    */
+  private val Common = binary("kmv_common", "commonEstimate", LongType,
+    "kmv_common(a, b) - distinct-intersection estimate from two sketches")
+  /** `kmv_union(a, b)` — |A ∪ B| estimate = estimate(merge(a, b)); exact
+    * when the union fits in k. With kmv_common and kmv_diff this
+    * completes the inclusion–exclusion surface: any boolean combination
+    * of two corpora's distinct sets answers from two 8 KB sketches.
+    */
+  private val Union = binary("kmv_union", "unionEstimate", LongType,
+    "kmv_union(a, b) - distinct-union estimate from two sketches")
+  /** `kmv_diff(a, b)` — |A ∖ B| estimate = |A| − |A ∩ B|, floored at 0;
+    * exact when both sketches are un-full. The cross-snapshot NOVELTY
+    * primitive: what did snapshot B bring that A didn't have.
+    */
+  private val Diff = binary("kmv_diff", "diffEstimate", LongType,
+    "kmv_diff(a, b) - distinct-difference |A \\ B| estimate from two sketches")
+  /** `kmv_merge(a, b)` — the union SKETCH itself (sorted-merge + dedup +
+    * trim to k): the reaggregation surface — identical to what one pass
+    * over A ∪ B would build, so periodic sketches roll up losslessly.
+    */
+  private val Merge = binary("kmv_merge", "mergeSketches", Sketch,
+    "kmv_merge(a, b) - union sketch (lossless bottom-k rollup)")
+
+  val kernels: Seq[Kernel] = Seq(Estimate, Common, Union, Diff, Merge)
+
   /** Column API: the bottom-k (k = 1024) hash sketch of a string column. */
   def kmvSketch(word: Column): Column =
     ColumnBridge.column(
       KmvSketchAgg(ColumnBridge.expression(word)).toAggregateExpression())
 
   /** Column API: distinct-count estimate from a sketch. */
-  def kmvEstimate(sketch: Column): Column =
-    ColumnBridge.column(KmvEstimate(ColumnBridge.expression(sketch)))
+  def kmvEstimate(sketch: Column): Column = Estimate(sketch)()
 
   /** Column API: |A ∩ B| estimate from two sketches. */
-  def kmvCommon(a: Column, b: Column): Column =
-    ColumnBridge.column(KmvCommon(ColumnBridge.expression(a),
-      ColumnBridge.expression(b)))
+  def kmvCommon(a: Column, b: Column): Column = Common(a, b)()
 
   /** Column API: |A ∪ B| estimate from two sketches. */
-  def kmvUnion(a: Column, b: Column): Column =
-    ColumnBridge.column(KmvUnion(ColumnBridge.expression(a),
-      ColumnBridge.expression(b)))
+  def kmvUnion(a: Column, b: Column): Column = Union(a, b)()
 
   /** Column API: |A ∖ B| estimate from two sketches. */
-  def kmvDiff(a: Column, b: Column): Column =
-    ColumnBridge.column(KmvDiff(ColumnBridge.expression(a),
-      ColumnBridge.expression(b)))
+  def kmvDiff(a: Column, b: Column): Column = Diff(a, b)()
 
   /** Column API: the union sketch of two sketches (lossless rollup). */
-  def kmvMerge(a: Column, b: Column): Column =
-    ColumnBridge.column(KmvMerge(ColumnBridge.expression(a),
-      ColumnBridge.expression(b)))
+  def kmvMerge(a: Column, b: Column): Column = Merge(a, b)()
 }

@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** S9 PDF round-trip expressions — the `pdf_extract` oracle surface
+/** S9 PDF round-trip kernels — the `pdf_extract` oracle surface
   * (round 16, VERDICT r15 item 2: "narrow the S9 contract the way S5
   * was narrowed"). The [[graft.etl.HtmlExtract]] precedent applied to
   * PDF: build a REAL multi-page PDF around each document's words
@@ -194,45 +191,20 @@ object PdfExtractFn {
   }
 }
 
-case class PdfBuildExpr(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pdf_build"
-  override protected def nullSafeEval(text: Any): Any =
-    PdfBuild.build(text.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.PdfBuild.build($t)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class PdfExtractExpr(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(BinaryType)
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_pages", IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("pdf_text", StringType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pdf_extract"
-  override protected def nullSafeEval(b: Any): Any =
-    PdfExtractFn.extract(b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.functions.PdfExtractFn.extract($b)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PdfExprs {
+  private val Build = Kernel("pdf_build", PdfBuild.getClass, "build",
+    Seq(StringType), BinaryType)
+  private val Extract = Kernel("pdf_extract", PdfExtractFn.getClass,
+    "extract", Seq(BinaryType), StructType(Seq(
+      StructField("n_pages", IntegerType, nullable = false),
+      StructField("pdf_text", StringType, nullable = false))))
+
+  val kernels: Seq[Kernel] = Seq(Build, Extract)
+
   /** Column API: synthetic PDF bytes of a text column. */
-  def buildF(text: Column): Column =
-    ColumnBridge.column(PdfBuildExpr(ColumnBridge.expression(text)))
+  def buildF(text: Column): Column = Build(text)()
   /** Column API: (n_pages, pdf_text) struct of a payload — physical
     * (pre-cap) page count + the first 15 pages' text, one parse.
     */
-  def extractF(pdf: Column): Column =
-    ColumnBridge.column(PdfExtractExpr(ColumnBridge.expression(pdf)))
+  def extractF(pdf: Column): Column = Extract(pdf)()
 }

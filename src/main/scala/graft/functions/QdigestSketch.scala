@@ -240,8 +240,7 @@ object QdigestSketch {
 /** Shared TypedImperativeAggregate core for the two digest builders —
   * ONE definition of buffer, merge, and the serialized layout, so the
   * unit and mass-weighted producers can never diverge on the format
-  * `qdigest_merge` interops across (the KmvBinaryLong discipline,
-  * applied to the aggregate tier).
+  * `qdigest_merge` interops across.
   */
 abstract class QdigestAggBase
   extends TypedImperativeAggregate[QdigestSketch.Buffer]
@@ -339,95 +338,32 @@ case class QdigestSketchWeightedAgg(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** `qdigest_quantile(sketch, q_bp)` — the answering surface: the value
-  * estimate whose rank is within [[QdigestSketch.rankSlack]] of
-  * ⌈q·n⌉. Compiled static call (the CmsLookup discipline).
-  */
-case class QdigestQuantile(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false), IntegerType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "qdigest_quantile"
-
-  override protected def nullSafeEval(arr: Any, q: Any): Any =
-    java.lang.Long.valueOf(QdigestSketch.quantile(
-      arr.asInstanceOf[ArrayData], q.asInstanceOf[Int]))
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, q) =>
-      s"graft.functions.QdigestSketch.quantile($a, $q)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `qdigest_n(sketch)` — the total mass the digest summarizes (exact:
-  * counts are conserved by construction through every fold/merge).
-  */
-case class QdigestN(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "qdigest_n"
-
-  override protected def nullSafeEval(arr: Any): Any =
-    java.lang.Long.valueOf(QdigestSketch.total(arr.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, arr =>
-      s"graft.functions.QdigestSketch.total($arr)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `qdigest_merge(a, b)` — node-wise count sum + one compression: the
-  * lossless-mass rollup (daily digests → monthly percentiles without
-  * raw data; rank guarantee preserved per Mergeable Summaries).
-  */
-case class QdigestMerge(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(LongType, containsNull = false),
-      ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "qdigest_merge"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    QdigestSketch.mergeSketches(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.QdigestSketch.mergeSketches($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object QdigestSketchFunctions {
+  private val Digest = ArrayType(LongType, containsNull = false)
+
+  /** `qdigest_quantile(sketch, q_bp)` — the answering surface: the value
+    * estimate whose rank is within [[QdigestSketch.rankSlack]] of
+    * ⌈q·n⌉.
+    */
+  private val Quantile = Kernel("qdigest_quantile", QdigestSketch.getClass,
+    "quantile", Seq(Digest, IntegerType), LongType, usage = Some(
+      "qdigest_quantile(sk, q_bp) - quantile-value estimate (rank error <= 16n/1024)"))
+  /** `qdigest_n(sketch)` — the total mass the digest summarizes (exact:
+    * counts are conserved by construction through every fold/merge).
+    */
+  private val N = Kernel("qdigest_n", QdigestSketch.getClass, "total",
+    Seq(Digest), LongType,
+    usage = Some("qdigest_n(sk) - exact total mass of a digest"))
+  /** `qdigest_merge(a, b)` — node-wise count sum + one compression: the
+    * lossless-mass rollup (daily digests → monthly percentiles without
+    * raw data; rank guarantee preserved per Mergeable Summaries).
+    */
+  private val Merge = Kernel("qdigest_merge", QdigestSketch.getClass,
+    "mergeSketches", Seq(Digest, Digest), Digest, usage = Some(
+      "qdigest_merge(a, b) - merged digest (rank guarantee preserved)"))
+
+  val kernels: Seq[Kernel] = Seq(Quantile, N, Merge)
+
   /** Column API: the q-digest of a long column (values clamp into
     * [0, 2^16)).
     */
@@ -443,15 +379,11 @@ object QdigestSketchFunctions {
 
   /** Column API: quantile-value estimate at q basis points. */
   def qdigestQuantile(sketch: Column, qBp: Column): Column =
-    ColumnBridge.column(QdigestQuantile(ColumnBridge.expression(sketch),
-      ColumnBridge.expression(qBp)))
+    Quantile(sketch, qBp)()
 
   /** Column API: exact total mass of a digest. */
-  def qdigestN(sketch: Column): Column =
-    ColumnBridge.column(QdigestN(ColumnBridge.expression(sketch)))
+  def qdigestN(sketch: Column): Column = N(sketch)()
 
   /** Column API: merged digest of two digests. */
-  def qdigestMerge(a: Column, b: Column): Column =
-    ColumnBridge.column(QdigestMerge(ColumnBridge.expression(a),
-      ColumnBridge.expression(b)))
+  def qdigestMerge(a: Column, b: Column): Column = Merge(a, b)()
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled per-document kernels for the quality-classifier TRAINING
@@ -32,11 +29,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * feature build becomes a pure map with ZERO shuffles.
   */
 object QualityKernelOps {
-
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   private def splitWords(text: UTF8String): Array[UTF8String] = {
     val b = text.getBytes
@@ -161,7 +153,7 @@ object QualityKernelOps {
     val t = if (text == null) UTF8String.EMPTY_UTF8 else text
     val words = splitWords(t)
     val cnt = new Array[Long](buckets)
-    val md = mdLocal.get()
+    val md = Md5.get()
     val buf = new Array[Byte](16)
     var i = 0
     while (i < words.length) {
@@ -204,133 +196,57 @@ object QualityKernelOps {
   }
 }
 
-/** Σ cnt · w[b] over a (b, cnt) bag-of-words array and a dense weight
-  * array indexed by bucket — the linear-scorer dot product in-row.
-  * Bit-identical to sum(w * cnt) over the exploded (doc_id, b) rows
-  * joined against the 257-row weight frame (integer addition is
-  * order-insensitive).
-  */
-case class BagDot(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
+object QualityKernelFunctions {
+  /** Boolean gopher-gate verdict of a text column, one compiled pass. */
+  private val GopherPass = Kernel("gopher_pass_of", QualityKernelOps.getClass,
+    "gopherPass", Seq(StringType), BooleanType)
+  /** struct<n_words, sum_len, alpha_words, stop_hits, top2_chars> gopher
+    * rule statistics of a text column, one compiled pass.
+    */
+  private val GopherStats = Kernel("gopher_stats_of", QualityKernelOps.getClass,
+    "gopherStatsRow", Seq(StringType), StructType(Seq(
+      StructField("n_words", LongType, nullable = false),
+      StructField("sum_len", LongType, nullable = false),
+      StructField("alpha_words", LongType, nullable = false),
+      StructField("stop_hits", LongType, nullable = false),
+      StructField("top2_chars", LongType, nullable = false))))
+  /** array<struct<b,cnt>> hashed bag-of-words (plus bias slot) of a text
+    * column, one compiled pass.
+    */
+  private val HashedBag = Kernel("hashed_bag_counts", QualityKernelOps.getClass,
+    "hashedBagCounts", Seq(StringType), ArrayType(
+      StructType(Seq(StructField("b", LongType, nullable = false),
+        StructField("cnt", LongType, nullable = false))),
+      containsNull = false))
+  /** Σ cnt · w[b] over a (b, cnt) bag-of-words array and a dense weight
+    * array indexed by bucket — the linear-scorer dot product in-row.
+    * Bit-identical to sum(w * cnt) over the exploded (doc_id, b) rows
+    * joined against the 257-row weight frame (integer addition is
+    * order-insensitive).
+    */
+  private val BagDot = Kernel("bag_dot", QualityKernelOps.getClass, "bagDot",
     Seq(ArrayType(StructType(Seq(
       StructField("b", LongType), StructField("cnt", LongType)))),
-      ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bag_dot"
+      ArrayType(LongType)), LongType)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(QualityKernelOps.bagDot(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
+  val kernels: Seq[Kernel] = Seq(GopherPass, GopherStats, HashedBag, BagDot)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.QualityKernelOps.bagDot($a, $b);")
+  /** Column API: gopher-gate verdict of a text column (null-intolerant:
+    * callers coalesce null text to "").
+    */
+  def gopherPassF(text: Column): Column = GopherPass(text)()
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Boolean gopher-gate verdict of a text column, one compiled pass
-  * (null-intolerant: callers coalesce null text to "").
-  */
-case class GopherPassOf(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "gopher_pass_of"
-
-  override protected def nullSafeEval(t: Any): Any =
-    java.lang.Boolean.valueOf(
-      QualityKernelOps.gopherPass(t.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.QualityKernelOps.gopherPass($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** struct<n_words, sum_len, alpha_words, stop_hits, top2_chars> gopher
-  * rule statistics of a text column, one compiled pass (null-
-  * intolerant: callers coalesce null text to "").
-  */
-case class GopherStatsOf(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("sum_len", LongType, nullable = false),
-    StructField("alpha_words", LongType, nullable = false),
-    StructField("stop_hits", LongType, nullable = false),
-    StructField("top2_chars", LongType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "gopher_stats_of"
-
-  override protected def nullSafeEval(t: Any): Any =
-    QualityKernelOps.gopherStatsRow(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.QualityKernelOps.gopherStatsRow($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** array<struct<b,cnt>> hashed bag-of-words (plus bias slot) of a text
-  * column, one compiled pass.
-  */
-case class HashedBagCounts(child: Expression, buckets: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(buckets >= 1)
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("b", LongType, nullable = false),
-      StructField("cnt", LongType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hashed_bag_counts"
-
-  override protected def nullSafeEval(t: Any): Any =
-    QualityKernelOps.hashedBagCounts(t.asInstanceOf[UTF8String], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.QualityKernelOps.hashedBagCounts($c, $buckets);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object QualityKernelFunctions {
-  /** Column API: gopher-gate verdict of a text column. */
-  def gopherPassF(text: Column): Column =
-    ColumnBridge.column(GopherPassOf(ColumnBridge.expression(text)))
-
-  /** Column API: the five gopher rule statistics as a struct. */
-  def gopherStatsF(text: Column): Column =
-    ColumnBridge.column(GopherStatsOf(ColumnBridge.expression(text)))
+  /** Column API: the five gopher rule statistics as a struct (null-
+    * intolerant: callers coalesce null text to "").
+    */
+  def gopherStatsF(text: Column): Column = GopherStats(text)()
 
   /** Column API: hashed bag-of-words (b, cnt) slots + bias slot. */
-  def hashedBagCountsF(text: Column, buckets: Int): Column =
-    ColumnBridge.column(HashedBagCounts(ColumnBridge.expression(text), buckets))
+  def hashedBagCountsF(text: Column, buckets: Int): Column = {
+    require(buckets >= 1)
+    HashedBag(text)(buckets)
+  }
 
   /** Column API: in-row bag ⋅ dense-weight dot product. */
-  def bagDotF(bag: Column, w: Column): Column =
-    ColumnBridge.column(BagDot(
-      ColumnBridge.expression(bag), ColumnBridge.expression(w)))
+  def bagDotF(bag: Column, w: Column): Column = BagDot(bag, w)()
 }

@@ -2,16 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled single-pass kernels for the shingle/fingerprint hot path
-  * (round 18 optimization; the DotProduct/GramClip discipline: never an
+  * (round 18 optimization; the GramClip discipline: never an
   * interpreted HOF in a hot path).
   *
   * What they replace, and why it was slow:
@@ -36,11 +34,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * string/long min ordering — so every DuckDB oracle is unchanged.
   */
 object ShingleOps {
-
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   private val HexChars = "0123456789abcdef".toCharArray
 
@@ -151,7 +144,7 @@ object ShingleOps {
     val m = shs.numElements()
     if (m == 0) return null
     val pre = seedPrefixes(n)
-    val md = mdLocal.get()
+    val md = Md5.get()
     val mins = new Array[Array[Byte]](n)
     var spare = new Array[Byte](16)
     var s = 0
@@ -309,7 +302,7 @@ object ShingleOps {
   def simhashSig(ws: ArrayData, hexChars: Int): Long = {
     val bits = hexChars * 4
     val cnt = new Array[Int](bits)
-    val md = mdLocal.get()
+    val md = Md5.get()
     val buf = new Array[Byte](16)
     val m = ws.numElements()
     var s = 0
@@ -340,192 +333,67 @@ object ShingleOps {
   }
 }
 
-/** Array of the k-word shingles of a text column (k=1: the non-empty
-  * word array) — one compiled pass replacing the chained-zip_with
-  * construction. Output element order/values identical to
-  * `Shingles.shingleArray`.
-  */
-case class WordShingleArray(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(k >= 1 && k <= 24)
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "word_shingle_array"
-
-  override protected def nullSafeEval(t: Any): Any =
-    ShingleOps.shingles(t.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleOps.shingles($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** n-slot md5 MinHash signature of a shingle array (oracle tier):
-  * element i = min over shingles of md5("seed<i>:" ++ shingle), hex.
-  * Null on an empty array — callers filter those rows out, exactly as
-  * the array_min form yielded null slots there.
-  */
-case class MinHashSigs(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sigs"
-
-  override protected def nullSafeEval(a: Any): Any =
-    ShingleOps.minhashMd5(a.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.ShingleOps.minhashMd5($c, $n);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** n-slot xxhash64 MinHash signature (fast tier): element i = min over
-  * shingles of xxhash64(lit("seed<i>:"), shingle). Null on empty.
-  */
-case class MinHashSigsFast(child: Expression, n: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sigs_fast"
-
-  override protected def nullSafeEval(a: Any): Any =
-    ShingleOps.minhashXx(a.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.ShingleOps.minhashXx($c, $n);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** SimHash signature of a word array at `hexChars` md5 hex chars per
-  * word (4 → 16-bit tier, 15 → 60-bit Manku tier).
-  */
-case class SimHashSig(child: Expression, hexChars: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(hexChars >= 1 && hexChars <= 15)
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash_sig"
-
-  override protected def nullSafeEval(a: Any): Any =
-    java.lang.Long.valueOf(
-      ShingleOps.simhashSig(a.asInstanceOf[ArrayData], hexChars))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleOps.simhashSig($c, $hexChars);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Non-empty word count of a text column — `size(wordArray(c))` as one
-  * counting scan, no array allocation.
-  */
-case class WordCount(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "word_count"
-
-  override protected def nullSafeEval(t: Any): Any =
-    java.lang.Long.valueOf(ShingleOps.wordCount(t.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShingleOps.wordCount($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** (n_words, n_removed, clean_text) span-clip of a text column given
-  * the duplicated-gram start positions (filtered-word index space) —
-  * the in-row removal+reassembly kernel of `Dedup.spanClipFrom`.
-  */
-case class SpanClipStruct(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  require(k >= 1 && k <= 24)
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType, ArrayType(IntegerType))
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", LongType, nullable = false),
-    StructField("n_removed", LongType, nullable = false),
-    StructField("clean_text", StringType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "span_clip_struct"
-
-  override protected def nullSafeEval(t: Any, s: Any): Any =
-    ShingleOps.clipSpans(t.asInstanceOf[UTF8String],
-      s.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, s) =>
-      s"${ev.value} = graft.functions.ShingleOps.clipSpans($t, $s, $k);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object ShingleFunctions {
-  /** Column API: k-word shingle array (k=1 → non-empty word array). */
-  def shinglesF(text: Column, k: Int): Column =
-    ColumnBridge.column(WordShingleArray(ColumnBridge.expression(text), k))
+  private val Shingles = Kernel("word_shingle_array", ShingleOps.getClass,
+    "shingles", Seq(StringType), ArrayType(StringType, containsNull = false))
+  private val MinHash = Kernel("minhash_sigs", ShingleOps.getClass,
+    "minhashMd5", Seq(ArrayType(StringType)),
+    ArrayType(StringType, containsNull = false), mayReturnNull = true)
+  private val MinHashFast = Kernel("minhash_sigs_fast", ShingleOps.getClass,
+    "minhashXx", Seq(ArrayType(StringType)),
+    ArrayType(LongType, containsNull = false), mayReturnNull = true)
+  private val SimHash = Kernel("simhash_sig", ShingleOps.getClass,
+    "simhashSig", Seq(ArrayType(StringType)), LongType)
+  private val WordCount = Kernel("word_count", ShingleOps.getClass,
+    "wordCount", Seq(StringType), LongType)
+  private val SpanClip = Kernel("span_clip_struct", ShingleOps.getClass,
+    "clipSpans", Seq(StringType, ArrayType(IntegerType)), StructType(Seq(
+      StructField("n_words", LongType, nullable = false),
+      StructField("n_removed", LongType, nullable = false),
+      StructField("clean_text", StringType, nullable = false))))
 
-  /** Column API: n md5 minhash slots over a shingle-array column. */
-  def minhashF(sh: Column, n: Int): Column =
-    ColumnBridge.column(MinHashSigs(ColumnBridge.expression(sh), n))
+  val kernels: Seq[Kernel] =
+    Seq(Shingles, MinHash, MinHashFast, SimHash, WordCount, SpanClip)
 
-  /** Column API: n xxhash64 minhash slots (fast tier). */
-  def minhashFastF(sh: Column, n: Int): Column =
-    ColumnBridge.column(MinHashSigsFast(ColumnBridge.expression(sh), n))
+  /** Column API: k-word shingle array (k=1 → non-empty word array) —
+    * one compiled pass replacing the chained-zip_with construction.
+    * Output element order/values identical to `Shingles.shingleArray`.
+    */
+  def shinglesF(text: Column, k: Int): Column = {
+    require(k >= 1 && k <= 24)
+    Shingles(text)(k)
+  }
 
-  /** Column API: simhash signature over a word-array column. */
-  def simhashF(words: Column, hexChars: Int): Column =
-    ColumnBridge.column(SimHashSig(ColumnBridge.expression(words), hexChars))
+  /** Column API: n md5 minhash slots over a shingle-array column (oracle
+    * tier). Null on an empty array — callers filter those rows out,
+    * exactly as the array_min form yielded null slots there.
+    */
+  def minhashF(sh: Column, n: Int): Column = MinHash(sh)(n)
 
-  /** Column API: non-empty word count of a text column. */
-  def wordCountF(text: Column): Column =
-    ColumnBridge.column(WordCount(ColumnBridge.expression(text)))
+  /** Column API: n xxhash64 minhash slots (fast tier). Null on empty. */
+  def minhashFastF(sh: Column, n: Int): Column = MinHashFast(sh)(n)
 
-  /** Column API: (n_words, n_removed, clean_text) span clip. */
-  def spanClipF(text: Column, starts: Column, k: Int): Column =
-    ColumnBridge.column(SpanClipStruct(ColumnBridge.expression(text),
-      ColumnBridge.expression(starts), k))
+  /** Column API: simhash signature over a word-array column at
+    * `hexChars` md5 hex chars per word (4 → 16-bit tier, 15 → 60-bit
+    * Manku tier).
+    */
+  def simhashF(words: Column, hexChars: Int): Column = {
+    require(hexChars >= 1 && hexChars <= 15)
+    SimHash(words)(hexChars)
+  }
+
+  /** Column API: non-empty word count of a text column —
+    * `size(wordArray(c))` as one counting scan, no array allocation.
+    */
+  def wordCountF(text: Column): Column = WordCount(text)()
+
+  /** Column API: (n_words, n_removed, clean_text) span clip of a text
+    * column given the duplicated-gram start positions (filtered-word
+    * index space) — the in-row removal+reassembly kernel of
+    * `Dedup.spanClipFrom`.
+    */
+  def spanClipF(text: Column, starts: Column, k: Int): Column = {
+    require(k >= 1 && k <= 24)
+    SpanClip(text, starts)(k)
+  }
 }

@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared skip-list evaluation for [[SkipUrl]] (interpreted and codegen
-  * paths call the same static method, so they cannot diverge).
+/** Skip-list evaluation of the `skip_url` kernel (interpreted and
+  * codegen paths call the same static method, so they cannot diverge).
   *
   * The literal lists mirror the reference's skip config verbatim
   * (crawler-queue.sh:204-216) and are the evaluated twin of the regex
@@ -44,34 +41,23 @@ object UrlSkipUtil {
   }
 }
 
-/** Codegen'd F1 skip predicate (crawler-queue.sh:199-218).
-  *
-  * Why an Expression and not a Column predicate chain: a chain of 33
-  * EndsWith/Contains over a COMPUTED url column gets the url expression
-  * inlined into every predicate when Catalyst pushes the filter into a
-  * join condition (no subexpression elimination there) — measured 10×
-  * slower because the concat + two regexp_replaces re-ran 33 times per
-  * row. As a single UnaryExpression the url is this node's one child,
-  * evaluated exactly once wherever the predicate lands; the generated
-  * code is a static call into [[UrlSkipUtil]].
-  */
-case class SkipUrl(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "skip_url"
-
-  override protected def nullSafeEval(u: Any): Any =
-    java.lang.Boolean.valueOf(UrlSkipUtil.skip(u.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.UrlSkipUtil.skip($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UrlFunctions {
+  /** F1 skip predicate (crawler-queue.sh:199-218).
+    *
+    * Why a kernel and not a Column predicate chain: a chain of 33
+    * EndsWith/Contains over a COMPUTED url column gets the url expression
+    * inlined into every predicate when Catalyst pushes the filter into a
+    * join condition (no subexpression elimination there) — measured 10×
+    * slower because the concat + two regexp_replaces re-ran 33 times per
+    * row. As one call node the url is its one child, evaluated exactly
+    * once wherever the predicate lands.
+    */
+  private val Skip = Kernel("skip_url", UrlSkipUtil.getClass, "skip",
+    Seq(StringType), BooleanType, usage = Some(
+      "skip_url(url) - true iff the reference skip lists match"))
+
+  val kernels: Seq[Kernel] = Seq(Skip)
+
   /** Column API: true iff the url matches the reference skip lists. */
-  def skipUrl(url: Column): Column =
-    ColumnBridge.column(SkipUrl(ColumnBridge.expression(url)))
+  def skipUrl(url: Column): Column = Skip(url)()
 }

@@ -1,37 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions.sqrt
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** Codegen'd float-vector dot product.
+/** Compiled float-vector dot product.
   *
   * The declarative form — aggregate(zip_with(a, b, *), 0.0, +) — is
   * semantically right but HigherOrderFunctions evaluate INTERPRETED
   * (CodegenFallback): per element that is an expression-tree walk plus
   * boxing, and inside a join condition it dominated the similarity
-  * queries' runtime. This expression emits a tight primitive loop in
-  * whole-stage codegen: same left-to-right double accumulation over
-  * float→double widened products, so results are bit-identical to the
-  * declarative form AND to the DuckDB oracle's sum(x*y) over unnested
-  * pairs.
-  *
-  * Interpreted fallback (nullSafeEval) implements the identical loop.
+  * queries' runtime. This static method is one tight primitive loop that
+  * generated code calls directly: same left-to-right double accumulation
+  * over float→double widened products, so results are bit-identical to
+  * the declarative form AND to the DuckDB oracle's sum(x*y) over
+  * unnested pairs.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "dot_product"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+object VectorOps {
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -39,34 +26,19 @@ case class DotProduct(left: Expression, right: Expression)
       s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
       i += 1
     }
-    java.lang.Double.valueOf(s)
+    s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object VectorFunctions {
-  /** Column API for the codegen'd dot product over array<float>. */
-  def dotF(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  private val Dot = Kernel("dot_product", VectorOps.getClass, "dot",
+    Seq(ArrayType(FloatType), ArrayType(FloatType)), DoubleType,
+    usage = Some("dot_product(a, b) - float-vector dot product"))
+
+  val kernels: Seq[Kernel] = Seq(Dot)
+
+  /** Column API for the compiled dot product over array<float>. */
+  def dotF(a: Column, b: Column): Column = Dot(a, b)()
 
   def normF(a: Column): Column = sqrt(dotF(a, a))
 }

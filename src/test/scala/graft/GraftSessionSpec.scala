@@ -71,6 +71,15 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestBase {
     assert(lines == 17, s"$lines row_number() lines under etl/")
   }
 
+  // A per-row kernel is a static method plus one Kernel table row, called
+  // through KernelCall; a hand-written Expression class names its method
+  // twice (interpreted and codegen string) and the two can drift.
+  test("KernelCall.scala is the only functions source with a scalar Expression class") {
+    val hits = filesContaining("src/main/scala/graft/functions",
+      "Unary" + "Expression", "Binary" + "Expression", "Ternary" + "Expression")
+    assert(hits.forall(_ == "KernelCall.scala"), hits)
+  }
+
   test("the test session carries the factory's UTC, nanosAsLong and cleanCheckpoints") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")

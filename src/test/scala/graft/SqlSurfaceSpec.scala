@@ -187,6 +187,30 @@ class SqlSurfaceSpec extends AnyFunSuite with SparkTestBase {
     assert(got == ((true, true, false, false)))
   }
 
+  test("every registered function rejects too few and too many " +
+       "arguments at analysis time, naming itself and its arity") {
+    assert(GraftExtensions.functions.size == 22)
+    for (f <- GraftExtensions.functions; n <- Seq(f.arity - 1, f.arity + 1)) {
+      val ex = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT ${f.name}(${Seq.fill(n)("NULL").mkString(", ")})")
+          .collect()
+      }
+      assert(ex.getMessage.contains(f.name), ex.getMessage)
+      assert(ex.getMessage.contains(s"requires ${f.arity} parameters"),
+        ex.getMessage)
+    }
+  }
+
+  test("skip_url and dot_product reject mistyped arguments at analysis " +
+       "time") {
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT skip_url(42)").collect()
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT dot_product(array(1.5D), array(2.0D))").collect()
+    }
+  }
+
   test("chunk_text generator matches Chunker.chunk exactly") {
     val docs = Seq(
       (1L, "abcdefghij" * 30), // 300 chars
