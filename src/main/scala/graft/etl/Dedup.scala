@@ -288,14 +288,16 @@ object Dedup {
         Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
 
   /** Session-shared LSH pair frame — [[componentsFrame]]'s pattern one
-    * level down: SIX queries consume the same banded candidate pairs
-    * (lsh_quality, source_overlap, dedup_sweep, neardup_pipeline,
-    * split_leakage, and the components closure itself), and a
-    * production pipeline bands once per corpus snapshot. minhashLsh
-    * ends in a reliable checkpoint, so the memoized frame is an
-    * immutable file scan; the same honesty rules apply (cleared by the
-    * harness hook, bypassed under planOnly, dead sessions evicted,
-    * data-fingerprint identity — see [[SessionMemo]]).
+    * level down: the banded candidate pairs are read by minhash_lsh,
+    * lsh_quality's is_cand arm, source_overlap, split_leakage, the
+    * components closure, dedup_components_incremental, and the
+    * verified-pair memo [[pairOverlap]] (which containment_pipeline,
+    * neardup_pipeline, dedup_sweep and lsh_quality's verify arm read
+    * in turn), and a production pipeline bands once per corpus
+    * snapshot. minhashLsh ends in a reliable checkpoint, so the
+    * memoized frame is an immutable file scan; the same honesty rules
+    * apply (cleared by the harness hook, bypassed under planOnly, dead
+    * sessions evicted, data-fingerprint identity — see [[SessionMemo]]).
     */
   private val pairsMemo = new SessionMemo
 
@@ -734,6 +736,23 @@ object Dedup {
       .drop("sa", "sb")
   }
 
+  /** Session-shared exact verify of the LSH candidate pairs:
+    * [[candidateOverlap]] over [[minhashLsh]]'s pairs, (doc_a, doc_b,
+    * n_common, na, nb), held as one reliable-checkpoint scan per
+    * session snapshot. containment_pipeline, neardup_pipeline (and
+    * dedup_sweep through it) and lsh_quality's exact-verify arm all
+    * read it, so the documents scan and both sides' shingle sets are
+    * built once per fan-out instead of once per query (twice in
+    * dedup_sweep, once per rollup branch). Stored unsorted like the
+    * other memos; each declared surface projects and sorts on read.
+    * Same memo rules as [[minhashLsh]] (see [[SessionMemo]]).
+    */
+  def pairOverlap(spark: SparkSession, dir: String): DataFrame =
+    overlapMemo.get(spark, dir)(
+      Fixpoint.reliably(candidateOverlap(spark, dir, minhashLsh(spark, dir))))
+
+  private val overlapMemo = new SessionMemo
+
   /** Unthresholded exact Jaccard of every intersecting pair of `docs`. */
   private def pairJaccardFrom(docs: DataFrame): DataFrame =
     blockOverlap(docs).select(col("doc_a"), col("doc_b"), col("n_common"),
@@ -784,14 +803,13 @@ object Dedup {
     * quote/subset duplication a Jaccard threshold alone misses once
     * banding has surfaced the pair.
     *
-    * Scale posture: the session pair frame (reliable-checkpoint scan,
-    * 7th consumer of [[minhashLsh]]'s memo) + two doc-keyed joins
-    * against in-array shingle sets + an in-row intersect — no pair
+    * Scale posture: a projection of the session-shared verified pair
+    * frame ([[pairOverlap]], a reliable-checkpoint scan) — no pair
     * explosion, no new shuffle class. Unthresholded (the verify
     * tier); production cuts at ~9000 bp like [[containmentDedup]].
     */
   def containmentPipeline(spark: SparkSession, dir: String): DataFrame =
-    candidateOverlap(spark, dir, minhashLsh(spark, dir))
+    pairOverlap(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("n_common"),
         containmentBp("na").as("cont_a_bp"), containmentBp("nb").as("cont_b_bp"))
       .orderBy("doc_a", "doc_b")
@@ -805,24 +823,23 @@ object Dedup {
     * bounded block's intersecting pairs (the low-Jaccard mass where
     * the curve must collapse toward 0) and the corpus-wide candidate
     * pairs with their exact verify Jaccard via [[graft.etl.Splits
-    * .neardupPipeline]] (the high-Jaccard mass where it must rise
-    * toward 10000). Zero-overlap non-candidate pairs stay outside the
-    * frame: materializing them would need the cross join this repo
-    * bans, and their candidate rate is structurally ~0.
+    * .neardupPipeline]] over the session-shared [[pairOverlap]] (the
+    * high-Jaccard mass where it must rise toward 10000). Zero-overlap
+    * non-candidate pairs stay outside the frame: materializing them
+    * would need the cross join this repo bans, and their candidate
+    * rate is structurally ~0.
     */
   def lshQuality(spark: SparkSession, dir: String): DataFrame = {
     val block = Tables.documents(spark, dir).filter(col("doc_id") < 64)
-    // ONE banding pass: minhashLsh returns a reliable-checkpoint scan,
-    // so both the exact-verify arm and the is_cand arm read the same
-    // materialized pair frame (round 12 — this query used to run the
-    // whole signature+banding pipeline twice)
-    val pairs = minhashLsh(spark, dir)
+    // ONE banding pass: the exact-verify arm reads the memoized
+    // verified pairs and the is_cand arm the memoized pair frame the
+    // verify was built over — both reliable-checkpoint scans
     val truth = pairJaccardFrom(block)
       .select(col("doc_a"), col("doc_b"), col("jaccard_bp"))
-      .unionByName(Splits.neardupVerify(spark, dir, pairs)
+      .unionByName(Splits.neardupPipeline(spark, dir)
         .select(col("doc_a"), col("doc_b"), col("jaccard_bp")))
       .distinct() // overlap pairs carry identical jaccard rows
-    val cands = pairs.withColumn("is_cand", lit(1L))
+    val cands = minhashLsh(spark, dir).withColumn("is_cand", lit(1L))
     truth.join(cands, Seq("doc_a", "doc_b"), "left")
       .withColumn("bucket", expr("jaccard_bp div 1000"))
       .groupBy(col("bucket"))
@@ -938,7 +955,8 @@ object Dedup {
 
   /** [[dedupComponentsFrom]]'s closure as a lazy frame over the last
     * round's blocks staged in `scope` — valid only inside `scope`
-    * ([[CorpusPipeline.build]] stages it there itself).
+    * ([[CorpusPipeline.build]] stages it there itself;
+    * [[mergeDeltaIntoClosure]] reads it once, unstaged).
     */
   private[etl] def dedupComponentsIn(scope: Fixpoint.Scope, pairs: DataFrame): DataFrame = {
     val edges = scope.local(pairs
@@ -1043,7 +1061,7 @@ object Dedup {
     * fixpoint runs on the delta-sized quotient graph.
     */
   private[graft] def mergeDeltaIntoClosure(prior: DataFrame,
-      deltaPairs: DataFrame): DataFrame = {
+      deltaPairs: DataFrame): DataFrame = Fixpoint.scoped { scope =>
     val pa = prior.select(col("doc_id"), col("component"))
     // delta pairs through the prior assignment: an endpoint inside the
     // snapshot is represented by its component label, an unassigned
@@ -1062,8 +1080,10 @@ object Dedup {
         greatest(col("u"), col("v")).as("doc_b"))
       .distinct()
     // min-label closure of the quotient graph (the same fixpoint core
-    // as the full build — it is just running on a delta-sized input)
-    val remap = dedupComponentsFrom(quotient)
+    // as the full build — it is just running on a delta-sized input).
+    // Only the relabel join reads it, so it stays a lazy frame over the
+    // scope's last-round blocks: no checkpoint of its own
+    val remap = dedupComponentsIn(scope, quotient)
       .select(col("doc_id").as("node"), col("component").as("new_comp"))
     Fixpoint.lastRounds.put("incremental_merge",
       Fixpoint.lastRounds.getOrDefault("components_closure", 0))
@@ -1174,14 +1194,14 @@ object Dedup {
     val axisArr = array(thr.map(lit): _*)
     val base = spark.range(thr.size).select(
       element_at(axisArr, (col("id") + 1).cast("int")).as("threshold"))
-    // the verified pair frame is read by BOTH rollup branches, but its
-    // expensive prefix (the banding self-join) is ALREADY a reliable
-    // checkpoint inside minhashLsh — the re-run verify joins above it
-    // are pair-frame-sized and cheap. Staging the verified frame
-    // eagerly was measured SLOWER at sf0.1 (6.53 vs 5.83 s steady,
-    // round 12): the checkpoint write costs more than the duplicated
-    // branch, so the bounded-frame staging rule deliberately does NOT
-    // apply here.
+    // the verified pair frame is read by BOTH rollup branches. Staging
+    // it per call was measured SLOWER at sf0.1 in isolation (6.53 vs
+    // 5.83 s steady, round 12): one checkpoint write cost more than the
+    // duplicated verify branch. The frame is now the session-shared
+    // [[pairOverlap]] memo instead, which containment_pipeline,
+    // neardup_pipeline and lsh_quality read too: an isolated call
+    // still pays that one write, but both branches scan the checkpoint
+    // and a fan-out session builds the verify once for all four.
     val pt = Splits.neardupPipeline(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("jaccard_bp"))
       .select(col("*"), explode(axisArr).as("threshold"))

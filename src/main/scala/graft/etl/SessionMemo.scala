@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.PlanBridge
 
 /** Session-scoped memo for expensive checkpoint-backed frames (the
-  * components closure, the LSH pair frame) with DATA-IDENTITY keys and
+  * components closure, the LSH pair frame, its exact-overlap verify,
+  * the quality-trainer artifact) with DATA-IDENTITY keys and
   * lock-free builds — the round-14 hardening of the round-13 memos
   * (ADVICE r13 items 1-2, VERDICT r13 next-round item 3), re-hardened
   * round 15 (VERDICT r14 item 5, ADVICE r14 items 2/5).

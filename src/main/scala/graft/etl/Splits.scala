@@ -143,20 +143,11 @@ object Splits {
   /** End-to-end near-duplicate pipeline: LSH candidate pairs → exact
     * Jaccard verification on candidates only — the production dedup
     * flow (signatures: single scan; quadratic work bounded to LSH
-    * buckets; exact set math only on the surviving pairs).
+    * buckets; exact set math only on the surviving pairs). Reads the
+    * session-shared verified pair frame ([[Dedup.pairOverlap]]).
     */
   def neardupPipeline(spark: SparkSession, dir: String): DataFrame =
-    neardupVerify(spark, dir, Dedup.minhashLsh(spark, dir))
-
-  /** The exact-verify half of [[neardupPipeline]] over a CALLER-STAGED
-    * candidate-pair frame — compositions that also need the raw pair
-    * frame (lsh_quality's is_cand arm) pass the one materialized
-    * [[Dedup.minhashLsh]] result here instead of re-running the whole
-    * signature+banding pipeline a second time.
-    */
-  def neardupVerify(spark: SparkSession, dir: String,
-      pairs: DataFrame): DataFrame =
-    Dedup.candidateOverlap(spark, dir, pairs)
+    Dedup.pairOverlap(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("n_common"),
         Dedup.jaccardBp.as("jaccard_bp"))
       .orderBy("doc_a", "doc_b")

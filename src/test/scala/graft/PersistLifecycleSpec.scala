@@ -179,6 +179,63 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
     graft.etl.Memos.clearAll()
   }
 
+  test("verified-pair overlap memo: the exact verify of the LSH pairs " +
+      "is ONE frame per (session, dir, data) that containment_pipeline, " +
+      "neardup_pipeline, dedup_sweep and lsh_quality all read; cleared " +
+      "with the other memos, zero pinned blocks") {
+    freshStart()
+    graft.etl.Memos.clearAll()
+    import org.apache.spark.sql.graft.PlanBridge
+    val ov = graft.etl.Dedup.pairOverlap(spark, dir)
+    assert(ov eq graft.etl.Dedup.pairOverlap(spark, dir),
+      "second lookup rebuilt instead of hitting the memo")
+    Seq("containment_pipeline", "neardup_pipeline", "dedup_sweep",
+        "lsh_quality").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, dir).count() > 0,
+        s"$q returned no rows")
+      assert(graft.etl.Dedup.pairOverlap(spark, dir) eq ov,
+        s"$q replaced the shared overlap frame")
+    }
+    val f = PlanBridge.checkpointFile(ov)
+    assert(f.nonEmpty, "memoized overlap is not a reliable-checkpoint scan")
+    val p = new org.apache.hadoop.fs.Path(f.get)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(p), s"expected checkpoint files at $p")
+    graft.etl.Memos.clearAll()
+    assert(!fs.exists(p), s"Memos.clearAll left checkpoint files at $p")
+    assertNoPins("overlap memo consumers")
+  }
+
+  test("with the overlap memo warm, containment_pipeline, " +
+      "neardup_pipeline and dedup_sweep execute no documents.parquet " +
+      "scan: the shingle sets are built once per session, not per query") {
+    freshStart()
+    graft.etl.Memos.clearAll()
+    import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    graft.etl.Dedup.pairOverlap(spark, dir)
+    try Seq("containment_pipeline", "neardup_pipeline", "dedup_sweep")
+      .foreach { q =>
+        val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val l = new QueryExecutionListener {
+          override def onSuccess(funcName: String, qe: QueryExecution,
+              durationNs: Long): Unit = plans.add(qe.explainString(FormattedMode))
+          override def onFailure(funcName: String, qe: QueryExecution,
+              exception: Exception): Unit = ()
+        }
+        spark.listenerManager.register(l)
+        try {
+          Harness.materialize(SparkEntry.queries(q)(spark, dir))
+          org.apache.spark.graft.TestBusBridge.waitUntilEmpty(spark.sparkContext)
+        } finally spark.listenerManager.unregister(l)
+        assert(!plans.isEmpty, s"$q: no executed plan recorded")
+        plans.forEach(p => assert(!p.contains("documents.parquet"),
+          s"$q re-scanned documents.parquet with the overlap memo warm:\n$p"))
+      }
+    finally graft.etl.Memos.clearAll()
+    assertNoPins("warm overlap memo")
+  }
+
   test("Fixpoint.scoped releases every registered frame when its body " +
       "throws") {
     freshStart()
