@@ -5061,10 +5061,10 @@ object Oracles {
         |FROM x WHERE prev_us IS NULL OR us - prev_us > 600000000
         |ORDER BY event_id""".stripMargin,
 
-    // Character entropy — the count/sum/charset fragments are the SAME
-    // generated strings the Spark side compiles (TextAnalysis
-    // entropyCountSql/entropySumSql/charsetSizeSql): one source of
-    // truth, two dialect-identical evaluations.
+    // Character entropy — the count/sum/charset fragments are generated
+    // by TextAnalysis (entropyCountSql/entropySumSql/charsetSizeSql);
+    // Spark runs the char_entropy_sum/charset_size kernels instead, and
+    // CharEntropyKernelSpec checks them against these fragments.
     "char_entropy" -> {
       val cnts = graft.etl.TextAnalysis.EntropyCharSet.indices
         .map(i => s"${graft.etl.TextAnalysis.entropyCountSql(i)} AS c_$i")

@@ -124,11 +124,17 @@ object Dedup {
     val cols = (0 until numHashes).map { i =>
       element_at(col("__sig"), i + 1).as(s"mh_$i")
     }
+    signatureArray(docs, sigs).select(col("doc_id") +: cols: _*)
+  }
+
+  /** (doc_id, __sig): the signature kernel's array itself, for a reader
+    * that wants the whole signature as one value (minhash_fast's 256
+    * slots) rather than the mh_i columns the banding sites read.
+    */
+  private def signatureArray(docs: DataFrame, sigs: Column => Column): DataFrame =
     docs.select(col("doc_id"), Shingles.shingleArray(col("text"), 3).as("__sh"))
       .filter(size(col("__sh")) > 0)
       .select(col("doc_id"), sigs(col("__sh")).as("__sig"))
-      .select(col("doc_id") +: cols: _*)
-  }
 
   def minhashSignatureQuery(spark: SparkSession, dir: String): DataFrame =
     minhashSignature(
@@ -173,9 +179,11 @@ object Dedup {
     val k = 256
     val block = Tables.documents(spark, dir)
       .filter(col("doc_id") < 64).select(col("doc_id"), col("text"))
-    val sig = minhashSignatureFast(block, k)
-      .select(col("doc_id"),
-        array((0 until k).map(i => col(s"mh_$i")): _*).as("sig"))
+    // the kernel's array as is: re-packing 256 mh_i columns into an
+    // array generates one 40 KB method, past HotSpot's JIT limit
+    val sig = signatureArray(block,
+        sh => graft.functions.ShingleFunctions.minhashFastF(sh, k))
+      .select(col("doc_id"), col("__sig").as("sig"))
     pairJaccardFrom(block)
       .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")),
         Seq("doc_a"))
@@ -487,9 +495,11 @@ object Dedup {
     // keeping uncovered words in order = the anti join + string_agg).
     val grams = Shingles.wordShingles(docs, 8)
       .select(col("doc_id"), col("shingle_pos"), col("shingle"))
+    // min < max is "two or more distinct docs" (nulls included: both
+    // skip them) without countDistinct's extra (shingle, doc) exchange
     val crossDoc = grams.groupBy(col("shingle"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2)
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .filter(col("lo") < col("hi"))
       .select(col("shingle"))
     val dupStarts = grams.join(crossDoc, Seq("shingle"), "left_semi")
       .groupBy(col("doc_id"))
@@ -822,9 +832,9 @@ object Dedup {
     * guess"). The pair frame unions two scale-legal sources — the
     * bounded block's intersecting pairs (the low-Jaccard mass where
     * the curve must collapse toward 0) and the corpus-wide candidate
-    * pairs with their exact verify Jaccard via [[graft.etl.Splits
-    * .neardupPipeline]] over the session-shared [[pairOverlap]] (the
-    * high-Jaccard mass where it must rise toward 10000). Zero-overlap
+    * pairs with their exact verify Jaccard from the session-shared
+    * [[pairOverlap]] (the high-Jaccard mass where it must rise toward
+    * 10000). Zero-overlap
     * non-candidate pairs stay outside the frame: materializing them
     * would need the cross join this repo bans, and their candidate
     * rate is structurally ~0.
@@ -836,8 +846,8 @@ object Dedup {
     // verify was built over — both reliable-checkpoint scans
     val truth = pairJaccardFrom(block)
       .select(col("doc_a"), col("doc_b"), col("jaccard_bp"))
-      .unionByName(Splits.neardupPipeline(spark, dir)
-        .select(col("doc_a"), col("doc_b"), col("jaccard_bp")))
+      .unionByName(pairOverlap(spark, dir)
+        .select(col("doc_a"), col("doc_b"), jaccardBp.as("jaccard_bp")))
       .distinct() // overlap pairs carry identical jaccard rows
     val cands = minhashLsh(spark, dir).withColumn("is_cand", lit(1L))
     truth.join(cands, Seq("doc_a", "doc_b"), "left")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
+import graft.functions.QualityKernelFunctions.{charEntropySumF, charsetSizeF}
 import graft.plans.GroupTopK
 
 /** North-star text-analysis operators for a training-data pipeline
@@ -620,12 +621,13 @@ object TextAnalysis {
     */
   val EntropyCharSet: Seq[Char] = ('a' to 'z') ++ ('0' to '9') :+ ' '
 
-  /** SQL fragments shared VERBATIM with the DuckDB oracle (both
-    * dialects have length/replace/ln/CASE with identical semantics, so
-    * one generated string serves both engines and cannot drift):
-    * per-character counts via the length-delta trick — a pure string
-    * map, NO explode, no (doc, char) shuffle — then the entropy sum in
-    * a fixed left-fold order.
+  /** The DuckDB oracle's text of the entropy arithmetic: per-character
+    * counts via the length-delta trick, then the entropy sum in a fixed
+    * left-fold order and the charset size. Spark does not execute these:
+    * it runs [[graft.functions.QualityKernelOps.charEntropySum]] and
+    * [[graft.functions.QualityKernelOps.charsetSize]], one byte scan per
+    * row; CharEntropyKernelSpec checks that Spark's evaluation of these
+    * fragments and the kernels agree bit for bit on edge texts.
     */
   def entropyCountSql(i: Int): String = {
     val c = EntropyCharSet(i)
@@ -642,28 +644,14 @@ object TextAnalysis {
     EntropyCharSet.indices.map(i => s"(CASE WHEN c_$i > 0 THEN 1 ELSE 0 END)")
       .mkString(" + ")
 
-  /** `df` (string column `t`, its length `len`) plus the per-character
-    * counts `c_0`..`c_36` that [[entropySumSql]] and [[charsetSizeSql]]
-    * read, in one projection: analysing 37 chained `withColumn` calls
-    * took 194-631 ms per frame in spark-shell, one `withColumns` 35-94 ms.
-    */
-  private def withCharCounts(df: DataFrame): DataFrame =
-    df.withColumns(scala.collection.immutable.ListMap.from(
-      EntropyCharSet.indices.map(i => s"c_$i" -> expr(entropyCountSql(i)))))
-
   /** `df` plus `entropy` — [[charEntropy]]'s value of its `text`
-    * column, null where `text` is empty or null — computed in a
-    * projection, so the 37 counts each [[entropySumSql]] term reads
-    * three times are evaluated once per row (an entropy inlined into a
-    * `Filter` re-evaluates them: no subexpression elimination there).
-    * Gates stage this column and filter on it instead of joining
-    * [[charEntropyFrom]] back.
+    * column, null where `text` is empty or null. Gates stage this column
+    * and filter on it instead of joining [[charEntropyFrom]] back.
     */
-  def withCharEntropy(df: DataFrame): DataFrame =
-    withCharCounts(df.withColumn("t", txt(col("text"))).withColumn("len", length(col("t"))))
-      .withColumn("entropy",
-        when(col("len") > 0, expr(s"round($entropySumSql, 4)")))
-      .drop(("t" +: "len" +: EntropyCharSet.indices.map(i => s"c_$i")): _*)
+  def withCharEntropy(df: DataFrame): DataFrame = {
+    val t = txt(col("text"))
+    df.withColumn("entropy", when(length(t) > 0, round(charEntropySumF(t), 4)))
+  }
 
   /** Character-entropy quality signal: Shannon entropy of the per-doc
     * character distribution in nats (4dp; irrational-value rule). A
@@ -671,23 +659,21 @@ object TextAnalysis {
     * near the alphabet's ceiling — the standard cheap repetitiveness
     * gate next to the token-level Gopher rules ([[repetitionProfile]]),
     * catching sub-token degeneracy ("aaaa…") that word statistics miss.
-    * Map-only: 37 codegen'd length/replace pairs per row, no explode.
+    * Map-only: one compiled scan per row for each of the entropy and
+    * the charset size, no explode.
     */
   def charEntropy(spark: SparkSession, dir: String): DataFrame =
     charEntropyFrom(Tables.documents(spark, dir))
 
-  def charEntropyFrom(docs: DataFrame): DataFrame = {
-    val base = docs
+  def charEntropyFrom(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), txt(col("text")).as("t"))
       .withColumn("len", length(col("t")))
       .filter(col("len") > 0)
-    withCharCounts(base)
-      .withColumn("entropy", expr(s"round($entropySumSql, 4)"))
-      .withColumn("n_charset", expr(charsetSizeSql).cast("int"))
       .select(col("doc_id"), col("len").cast("int").as("len"),
-        col("n_charset"), col("entropy"))
+        charsetSizeF(col("t")).as("n_charset"),
+        round(charEntropySumF(col("t")), 4).as("entropy"))
       .orderBy("doc_id")
-  }
 
   /** Per-document verdicts of three independent quality gates — the
     * inputs to [[filterKappa]]: a word-count floor, the Gopher

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled per-document kernels for the quality-classifier TRAINING
@@ -27,6 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * cnt 1) the old plan unioned in with a second corpus scan. Because a
   * document is one row, the per-doc counts complete IN-ROW: the
   * feature build becomes a pure map with ZERO shuffles.
+  *
+  * [[QualityKernelOps.charEntropySum]] and [[QualityKernelOps.charsetSize]]
+  * are the character-entropy gate's arithmetic as one byte scan per row:
+  * the 37 per-character counts the DuckDB oracle takes with
+  * `length(t) - length(replace(t, c, ''))` and its left-fold entropy sum
+  * ([[graft.etl.TextAnalysis.entropySumSql]]), bit for bit. Spelled
+  * out as 37 replace pairs and 37 sum terms, whole-stage codegen puts
+  * them in one method of 18-20 KB of bytecode, which HotSpot never
+  * JIT-compiles.
   */
 object QualityKernelOps {
 
@@ -180,6 +189,54 @@ object QualityKernelOps {
     new GenericArrayData(out)
   }
 
+  /** [[graft.etl.TextAnalysis.EntropyCharSet]] slot of each ASCII byte,
+    * -1 for the others.
+    */
+  private val EntropySlot: Array[Int] = {
+    val a = Array.fill(128)(-1)
+    graft.etl.TextAnalysis.EntropyCharSet.zipWithIndex.foreach { case (c, i) => a(c) = i }
+    a
+  }
+
+  /** Occurrences of each [[graft.etl.TextAnalysis.EntropyCharSet]]
+    * character in `text`. A byte count is a code-point count here: in
+    * UTF-8 an ASCII byte never occurs inside a multi-byte character, so
+    * each count equals `length(t) - length(replace(t, c, ''))`.
+    */
+  private def charCounts(text: UTF8String): Array[Int] = {
+    val cnt = new Array[Int](graft.etl.TextAnalysis.EntropyCharSet.size)
+    val n = text.numBytes()
+    var i = 0
+    while (i < n) {
+      val b = text.getByte(i)
+      if (b >= 0 && EntropySlot(b) >= 0) cnt(EntropySlot(b)) += 1
+      i += 1
+    }
+    cnt
+  }
+
+  /** The unrounded character entropy of `text` in nats: Σ over the
+    * alphabet of -(c/len)·ln(c/len), len in code points, as the same
+    * left fold from slot 0 that [[graft.etl.TextAnalysis.entropySumSql]]
+    * spells out (a zero count adds 0.0), with Spark's `ln`
+    * (`StrictMath.log`), so the double is identical. 0.0 for "".
+    */
+  def charEntropySum(text: UTF8String): Double = {
+    val cnt = charCounts(text)
+    val len = text.numChars().toDouble
+    def term(c: Int): Double =
+      if (c > 0) { val p = c.toDouble / len; -p * StrictMath.log(p) } else 0.0
+    var s = term(cnt(0))
+    var i = 1
+    while (i < cnt.length) { s += term(cnt(i)); i += 1 }
+    s
+  }
+
+  /** How many alphabet characters occur in `text`
+    * ([[graft.etl.TextAnalysis.charsetSizeSql]]).
+    */
+  def charsetSize(text: UTF8String): Int = charCounts(text).count(_ > 0)
+
   /** Σ cnt · w[b] over (b, cnt) struct entries and a dense bucket-
     * indexed weight array.
     */
@@ -229,7 +286,15 @@ object QualityKernelFunctions {
       StructField("b", LongType), StructField("cnt", LongType)))),
       ArrayType(LongType)), LongType)
 
-  val kernels: Seq[Kernel] = Seq(GopherPass, GopherStats, HashedBag, BagDot)
+  /** Unrounded character entropy (nats) of a text column, one scan. */
+  private val CharEntropySum = Kernel("char_entropy_sum", QualityKernelOps.getClass,
+    "charEntropySum", Seq(StringType), DoubleType)
+  /** Alphabet characters present in a text column, one scan. */
+  private val CharsetSize = Kernel("charset_size", QualityKernelOps.getClass,
+    "charsetSize", Seq(StringType), IntegerType)
+
+  val kernels: Seq[Kernel] = Seq(GopherPass, GopherStats, HashedBag, BagDot,
+    CharEntropySum, CharsetSize)
 
   /** Column API: gopher-gate verdict of a text column (null-intolerant:
     * callers coalesce null text to "").
@@ -249,4 +314,13 @@ object QualityKernelFunctions {
 
   /** Column API: in-row bag ⋅ dense-weight dot product. */
   def bagDotF(bag: Column, w: Column): Column = BagDot(bag, w)()
+
+  /** Column API: unrounded character entropy of a text column (null-
+    * intolerant; 0.0 for ""). Callers round and apply the empty-text
+    * null rule as Spark expressions.
+    */
+  def charEntropySumF(text: Column): Column = CharEntropySum(text)()
+
+  /** Column API: alphabet characters present in a text column. */
+  def charsetSizeF(text: Column): Column = CharsetSize(text)()
 }

@@ -46,6 +46,8 @@ class KernelSpec extends AnyFunSuite with SparkTestBase {
     "gopher_pass_of" -> s()(Seq(text)),
     "gopher_stats_of" -> s()(Seq(text)),
     "hashed_bag_counts" -> s(16)(Seq("'The cat the CAT'")),
+    "char_entropy_sum" -> s()(Seq(text), Seq("''")),
+    "charset_size" -> s()(Seq(text)),
     "bag_dot" -> s()(Seq("array(named_struct('b', 0L, 'cnt', 2L), " +
       "named_struct('b', 2L, 'cnt', 1L))", "array(5L, 7L, 11L)")),
     "quantize_milli" -> s()(Seq(

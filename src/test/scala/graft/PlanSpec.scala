@@ -34,31 +34,6 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     executedQes(SparkEntry.queries(name)(spark, dir))
       .map(_.explainString(FormattedMode))
 
-  /** Materialize `df` and return every QueryExecution it ran. A
-    * QueryExecutionListener records each action (the per-round
-    * `checkpoint` actions included); delivery is async, so we drain the
-    * bus before unregistering.
-    */
-  private def executedQes(df: => DataFrame)
-      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val qes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = qes.add(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      Harness.materialize(df)
-      org.apache.spark.graft.TestBusBridge.waitUntilEmpty(spark.sparkContext)
-    } finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    qes.asScala.toSeq
-  }
-
   /** Single-partition exchanges that funnel real data through one task.
     *
     * Matched on SimpleMode output (FormattedMode prints the node name
