@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Expression, ExpressionInfo, If, Least, Literal, RLike}
 import org.apache.spark.sql.graft.ErrorBridge
 import org.apache.spark.sql.types.IntegerType
-import graft.functions.{ChunkText, CmsSketchAgg, HllSketchAgg, Kernel, KmvSketchAgg, QdigestSketchAgg, QdigestSketchWeightedAgg}
+import graft.functions.{ChunkText, Kernel, Sketch}
 
 /** SQL surface of the engine's custom pieces, registered through
   * SparkSessionExtensions (spark.sql.extensions-compatible, so a
@@ -15,9 +15,10 @@ import graft.functions.{ChunkText, CmsSketchAgg, HllSketchAgg, Kernel, KmvSketch
   * The functions are [[GraftExtensions.functions]]: every
   * [[graft.functions.Kernel]] row with a usage line (its usage string is
   * the function's documentation, `DESCRIBE FUNCTION` prints it), the
-  * five native sketch aggregates, the `chunk_text` generator and
-  * `score_link`. Each is registered with its arity, and a call with any
-  * other argument count fails analysis with WRONG_NUM_ARGS.
+  * `chunk_text` generator, `score_link` and every
+  * [[graft.functions.Sketch]] row as an aggregate. Each is registered
+  * with its arity, and a call with any other argument count fails
+  * analysis with WRONG_NUM_ARGS.
   *
   * Planner surface: [[graft.plans.GroupTopKStrategy]] (round 3) plans
   * the native [[graft.plans.GroupTopK]] top-k-per-group operator —
@@ -60,22 +61,8 @@ object GraftExtensions {
         a => ChunkText(a(0), a(1), a(2))),
       SqlFunction("score_link",
         "score_link(url, anchor, context, topic) - relevance 0-10", 4,
-        scoreLink),
-      SqlFunction("cms_sketch",
-        "cms_sketch(word) - d=4 x w=256 Count-Min sketch cells (aggregate)", 1,
-        a => CmsSketchAgg(a(0))),
-      SqlFunction("hll_sketch",
-        "hll_sketch(v) - p=12 HyperLogLog register file (aggregate, 4096 bytes)", 1,
-        a => HllSketchAgg(a(0))),
-      SqlFunction("kmv_sketch",
-        "kmv_sketch(v) - bottom-k (k=1024) distinct-hash set sketch (aggregate)", 1,
-        a => KmvSketchAgg(a(0))),
-      SqlFunction("qdigest_sketch",
-        "qdigest_sketch(v) - q-digest quantile sketch over [0, 2^16) (aggregate)", 1,
-        a => QdigestSketchAgg(a(0))),
-      SqlFunction("qdigest_sketch_w",
-        "qdigest_sketch_w(v, w) - mass-weighted q-digest (aggregate)", 2,
-        a => QdigestSketchWeightedAgg(a(0), a(1))))
+        scoreLink)) ++
+    Sketch.all.map(s => SqlFunction(s.name, s.usage, s.inputTypes.size, s.call))
 
   /** X1 relevance as a raw catalyst tree (a Column-built tree would
     * arrive unresolved through the function-registry path); mirrors

@@ -558,7 +558,7 @@ object SparkEntry {
     "unigram_sampling" -> (CorpusStats.unigramSampling _),
     // MAP: AP@10 per query term on the mrr_eval ranking/truth
     "ap_eval" -> (TfIdf.apEval _),
-    // CMS audit through the native TypedImperativeAggregate sketch
+    // CMS audit through the native cms_sketch aggregate
     "cms_native" -> (CorpusStats.cmsNative _),
     // join-size estimation from two CMS sketches (inner-product bound)
     "cms_join_size" -> (CorpusStats.cmsJoinSize _),

@@ -106,17 +106,22 @@ object CorpusPipeline {
       // 3b. span clipping (round 6): remove cross-survivor duplicated
       //     8-gram spans from the texts themselves (Lee et al. clip, not
       //     drop), then drop documents the clip hollowed out. The
-      //     character entropy (3c's signal) is a column of this stage.
+      //     hollowed-out flag and the character entropy (3c's signal)
+      //     are columns of this stage, and 3c filters on both: a filter
+      //     here is pushed below the clip's projection, where it calls
+      //     the clip kernel again for each field it reads.
       val (clipped, nClipped) = scope.localObserved(TextAnalysis.withCharEntropy(
         Dedup.spanClipFrom(kept3.select(col("doc_id"), col("text")))
-          .filter(col("n_words") - col("n_removed") >= MinCleanWords)
-          .select(col("doc_id"), col("clean_text").as("text"))
-          .join(kept3.select(col("doc_id"), col("lang")), Seq("doc_id"))))
+          .select(col("doc_id"), col("clean_text").as("text"),
+            (col("n_words") - col("n_removed") >= MinCleanWords).as("clip_ok"))
+          .join(kept3.select(col("doc_id"), col("lang")), Seq("doc_id"))),
+        count(when(col("clip_ok"), 1)))
 
       // 3c. character-entropy floor (round 6): a clip can leave
       //     degenerate repetition that word stats miss
       val (kept4, nEntropy) = scope.localObserved(clipped
-        .filter(col("entropy") >= EntropyFloor).drop("entropy"))
+        .filter(col("clip_ok") && col("entropy") >= EntropyFloor)
+        .drop("clip_ok", "entropy"))
 
       // 4. per-language mix rebalance toward a uniform budget (the
       //    mix_weights rates driving a salted-hash bucket cut)

@@ -574,7 +574,7 @@ object CorpusStats {
   }
 
   /** Cross-corpus distinct-overlap audit through the native KMV
-    * sketch ([[graft.functions.KmvSketchAgg]]) — the set-algebra
+    * sketch ([[graft.functions.KmvSketchFunctions.sketch]]) — the set-algebra
     * question the sketch tier exists for: how much does each
     * language's vocabulary overlap each other's, WITHOUT a
     * distinct-join, from 8 KB bottom-k sketches per slice. Per
@@ -716,7 +716,7 @@ object CorpusStats {
   }
 
   /** Per-language document-length QUANTILES through the native q-digest
-    * sketch ([[graft.functions.QdigestSketchAgg]]) — the fourth sketch
+    * sketch ([[graft.functions.QdigestSketchFunctions.sketch]]) — the fourth sketch
     * tier's verified query: p50/p90/p99 length from ≤24 KB digests per
     * slice instead of a per-slice sort, the "what does this corpus's
     * length distribution look like" primitive a curation tier asks per
@@ -804,7 +804,7 @@ object CorpusStats {
   }
 
   /** TOKEN-MASS-weighted length quantiles through the weighted q-digest
-    * ([[graft.functions.QdigestSketchWeightedAgg]]) — the truncation-
+    * ([[graft.functions.QdigestSketchFunctions.weighted]]) — the truncation-
     * budget question [[quantileDigest]]'s doc-count form can't answer:
     * "below what document length sits half the corpus's TOKEN mass".
     * A long tail of huge documents moves these far from the doc-count
@@ -878,8 +878,8 @@ object CorpusStats {
     }
 
   /** The Count-Min audit of [[cmsFrequency]] rebuilt through the NATIVE
-    * sketch aggregate ([[graft.functions.CmsSketchAgg]], a
-    * TypedImperativeAggregate): the whole corpus folds into ONE
+    * sketch aggregate ([[graft.functions.CmsSketchFunctions.sketch]], a
+    * [[graft.functions.Sketch]] row): the whole corpus folds into ONE
     * 1024-long buffer — each task sketches its partition locally and
     * the partials merge elementwise up the aggregation tree, so the
     * shuffle moves exactly 1024 longs per partition regardless of
@@ -926,7 +926,7 @@ object CorpusStats {
     * (broadcast-vs-shuffle admission, skew alarms, quota checks): the
     * two sides never exchange data — each folds into a constant
     * 1024-long sketch in one pass (map-side partial merge, 1024 longs
-    * per partition, the [[graft.functions.CmsSketchAgg]] shape) and
+    * per partition, the `cms_sketch` shape) and
     * the estimate is a 4×256 dot product on the driver-sized result,
     * while the exact answer requires the keyed join itself. The audit
     * emits both, the overshoot, and the Markov bound 2·n_A·n_B/w

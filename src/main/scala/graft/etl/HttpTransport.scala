@@ -52,9 +52,10 @@ object HttpFetch {
     * Bounded: once the map tracks more than [[MaxTrackedHosts]] hosts,
     * expired deadlines are evicted (a million-host frontier must not
     * leak an entry per host forever; an evicted-while-awaited entry
-    * just costs one politeness interval in the worst case).
+    * just costs one politeness interval in the worst case). Values are
+    * boxed so `putIfAbsent` can report an absent key as null.
     */
-  private val nextAllowed = new ConcurrentHashMap[String, Long]()
+  private val nextAllowed = new ConcurrentHashMap[String, java.lang.Long]()
   private val MaxTrackedHosts = 8192
 
   final class HttpStatusException(val code: Int)
@@ -136,10 +137,10 @@ object HttpFetch {
     var done = false
     while (!done) {
       val now = System.currentTimeMillis()
-      val prev = nextAllowed.getOrDefault(host, 0L)
+      val prev: Long = nextAllowed.getOrDefault(host, 0L)
       if (now >= prev) {
         done = nextAllowed.replace(host, prev, now + intervalMs) ||
-          (prev == 0L && nextAllowed.putIfAbsent(host, now + intervalMs) == null)
+          (prev == 0L && (nextAllowed.putIfAbsent(host, now + intervalMs) eq null))
       } else Thread.sleep(prev - now)
     }
   }

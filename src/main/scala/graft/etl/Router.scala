@@ -60,7 +60,7 @@ object Router {
     * relative error on a known-cardinality corpus.
     */
   /** [[distinctSketch]]'s audit re-run through the GRAFT-OWNED native
-    * HLL ([[graft.functions.HllSketchAgg]], p = 12): per group, the
+    * HLL (`hll_sketch`, [[graft.functions.HllSketchFunctions.sketch]], p = 12): per group, the
     * exact distinct count next to the native sketch's banded estimate.
     * Same error-band output discipline (the estimate itself never
     * reaches the oracle; the 10% band is ≈ 6× the p = 12 rsd of

@@ -537,6 +537,22 @@ object TextAnalysis {
         size(col("__sh")).cast("bigint").as("n_shingles"))
       .orderBy("doc_id")
 
+  /** (doc_id, n_tokens, score) per document with at least one token:
+    * the hashed-token score [[qualityClassifier]] and
+    * [[calibrationBins]] both read, each non-empty token weighing
+    * md5(lower(token)) mapped to [-1000, 1000].
+    */
+  private def hashedTokenScores(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        filter(split(txt(col("text")), " "), w => length(w) > 0).as("toks"))
+      .withColumn("n_tokens", size(col("toks")).cast("int"))
+      .filter(col("n_tokens") > 0)
+      .select(col("doc_id"), col("n_tokens"),
+        aggregate(col("toks"), lit(0L), (acc, w) =>
+          acc + (conv(substring(md5(lower(w)), 1, 8), 16, 10)
+            .cast("long") % 2001L) - 1000L).as("score"))
+
   /** Hashed-feature linear quality classifier — the fasttext-style
     * model-scoring step of a corpus pipeline, with the model swapped
     * for a deterministic hash-derived weight table so the oracle can
@@ -555,15 +571,7 @@ object TextAnalysis {
     * map-side scoring, no explode — is identical.
     */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        filter(split(txt(col("text")), " "), w => length(w) > 0).as("toks"))
-      .withColumn("n_tokens", size(col("toks")).cast("int"))
-      .filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens"),
-        aggregate(col("toks"), lit(0L), (acc, w) =>
-          acc + (conv(substring(md5(lower(w)), 1, 8), 16, 10)
-            .cast("long") % 2001L) - 1000L).as("score"))
+    hashedTokenScores(spark, dir)
       .withColumn("verdict",
         when(col("score") >= 0, lit("keep")).otherwise(lit("drop")))
       .orderBy("doc_id")
@@ -902,15 +910,7 @@ object TextAnalysis {
     * 10-row bin agg. Output ≤ 10 rows.
     */
   def calibrationBins(spark: SparkSession, dir: String): DataFrame = {
-    val pred = Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        filter(split(txt(col("text")), " "), w => length(w) > 0).as("toks"))
-      .withColumn("n_tokens", size(col("toks")).cast("int"))
-      .filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens"),
-        aggregate(col("toks"), lit(0L), (acc, w) =>
-          acc + (conv(substring(md5(lower(w)), 1, 8), 16, 10)
-            .cast("long") % 2001L) - 1000L).as("score"))
+    val pred = hashedTokenScores(spark, dir)
       .withColumn("p_bp",
         least(lit(10000L), greatest(lit(0L),
           (expr("score div n_tokens") + 1000L) * 5L)))

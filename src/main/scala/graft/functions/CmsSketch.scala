@@ -1,13 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Count-Min sketch AGGREGATE — the distributed-sketch shape a
@@ -17,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * add — the map-side-combine property that makes the sketch shuffle
   * exactly 1024 longs per partition regardless of vocabulary or row
   * count), and the final buffer answers point queries one-sided-high
-  * (Cormode & Muthukrishnan 2005). This is the TypedImperativeAggregate
-  * tier of the engine's UDAF surface (BoundedConcat covers the typed
-  * Aggregator tier); the relational build in
+  * (Cormode & Muthukrishnan 2005). This is a [[Sketch]] row of the
+  * engine's UDAF surface, aggregated by [[SketchAgg]] (BoundedConcat
+  * covers the typed Aggregator tier); the relational build in
   * [[graft.etl.CorpusStats.cmsFrequency]] computes the SAME cells
   * through groupBy — `cms_native` pins agg == relational cell-for-cell.
   *
@@ -35,7 +30,7 @@ object CmsSketch {
   /** Point query: the sketch's one-sided-high estimate for `word` —
     * min over the d=4 rows of the cell the word hashes to (Cormode &
     * Muthukrishnan 2005 §4.1); `cells` is the row-major
-    * 1024-long buffer [[CmsSketchAgg]] emits.
+    * 1024-long buffer `cms_sketch` emits.
     */
   def lookup(cells: org.apache.spark.sql.catalyst.util.ArrayData,
       word: UTF8String): Long = {
@@ -66,65 +61,36 @@ object CmsSketch {
       ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
     (v % Width).toInt
   }
-}
 
-case class CmsSketchAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression]
-  with ExpectsInputTypes {
-
-  import CmsSketch._
-
-  // reject mistyped SQL calls at analysis time, not inside update()
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "cms_sketch"
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](Depth * Width)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val w = v.asInstanceOf[UTF8String].toString
-      var j = 1
-      while (j <= Depth) {
-        buf((j - 1) * Width + bucket(j, w)) += 1L
-        j += 1
-      }
+  /** Adds one occurrence of `word` to its cell in each of the d rows. */
+  def add(cells: Array[Long], word: String): Unit = {
+    var j = 1
+    while (j <= Depth) {
+      cells((j - 1) * Width + bucket(j, word)) += 1L
+      j += 1
     }
-    buf
   }
 
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
+  /** Elementwise sum of `b` into `a`. */
+  def merge(a: Array[Long], b: Array[Long]): Unit = {
     var i = 0
-    while (i < b1.length) { b1(i) += b2(i); i += 1 }
-    b1
+    while (i < a.length) { a(i) += b(i); i += 1 }
   }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(Depth * Width)(bb.getLong)
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CmsSketchAgg =
-    copy(child = newChild)
 }
 
 object CmsSketchFunctions {
+  /** `cms_sketch(word)` — the d×w cells of a string column, merged by
+    * elementwise add.
+    */
+  val sketch: Sketch[Array[Long]] = Sketch[Array[Long]]("cms_sketch",
+    Seq(StringType), LongType,
+    "cms_sketch(word) - d=4 x w=256 Count-Min sketch cells (aggregate)",
+    zero = () => new Array[Long](CmsSketch.Depth * CmsSketch.Width),
+    add = (cells, v) => CmsSketch.add(cells, v.head.toString),
+    merge = CmsSketch.merge,
+    encode = UnsafeArrayData.fromPrimitiveArray(_),
+    decode = _.toLongArray())
+
   /** `cms_lookup(sketch, word)` — the sketch's answering surface: without
     * it the 1024-cell array is an artifact you can only consume by
     * exploding; with it the sketch is queryable in SQL the way a
@@ -140,9 +106,7 @@ object CmsSketchFunctions {
   /** Column API: the 1024-cell sketch of a string column (row-major
     * d×w flattening: cell(j, b) at index (j−1)·256 + b).
     */
-  def cmsSketch(word: Column): Column =
-    ColumnBridge.column(
-      CmsSketchAgg(ColumnBridge.expression(word)).toAggregateExpression())
+  def cmsSketch(word: Column): Column = sketch(word)
 
   /** Column API: one-sided-high point estimate for `word` from a
     * sketch built by [[cmsSketch]].

@@ -1,19 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.types.{ArrayType, ByteType, LongType, StringType}
 
 /** Native HyperLogLog AGGREGATE (Flajolet et al. 2007; the m = 2^p
   * register layout and bias regime of Heule et al. 2013 §3 without the
   * empirical bias table) — the OTHER half of the engine's native
-  * sketch tier: [[CmsSketchAgg]] is the mergeable FREQUENCY shape,
+  * sketch tier: `cms_sketch` is the mergeable FREQUENCY shape,
   * this is the mergeable CARDINALITY shape. Each task folds its
   * partition into a constant m = 2^12 = 4096 BYTE register file,
   * partials merge by elementwise MAX up the aggregation tree (the
@@ -71,6 +65,21 @@ object HllSketch {
     (idx, rho)
   }
 
+  /** Raises `w`'s register to its rho when that is higher. */
+  def add(regs: Array[Byte], w: String): Unit = {
+    val (idx, rho) = indexAndRho(w)
+    if (rho > regs(idx)) regs(idx) = rho
+  }
+
+  /** Elementwise max of `b` into `a`. */
+  def merge(a: Array[Byte], b: Array[Byte]): Unit = {
+    var i = 0
+    while (i < a.length) {
+      if (b(i) > a(i)) a(i) = b(i)
+      i += 1
+    }
+  }
+
   /** Raw-estimate machinery, used by `hll_estimate` and the specs:
     * alpha_m · m² / Σ 2^(−reg)  with the small-range linear-counting
     * correction (Flajolet §4: E < 5m/2 and some register empty →
@@ -102,53 +111,19 @@ object HllSketch {
     estimate(a.toByteArray())
 }
 
-case class HllSketchAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression]
-  with ExpectsInputTypes {
-
-  import HllSketch._
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "hll_sketch"
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val (idx, rho) = indexAndRho(v.asInstanceOf[UTF8String].toString)
-      if (rho > buf(idx)) buf(idx) = rho
-    }
-    buf
-  }
-
-  override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < b1.length) {
-      if (b2(i) > b1(i)) b1(i) = b2(i)
-      i += 1
-    }
-    b1
-  }
-
-  override def eval(buf: Array[Byte]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf.clone()
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes.clone()
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
-    copy(child = newChild)
-}
-
 object HllSketchFunctions {
+  /** `hll_sketch(v)` — the register file of a string column, merged by
+    * elementwise max.
+    */
+  val sketch: Sketch[Array[Byte]] = Sketch[Array[Byte]]("hll_sketch",
+    Seq(StringType), ByteType,
+    "hll_sketch(v) - p=12 HyperLogLog register file (aggregate, 4096 bytes)",
+    zero = () => new Array[Byte](HllSketch.M),
+    add = (regs, v) => HllSketch.add(regs, v.head.toString),
+    merge = HllSketch.merge,
+    encode = UnsafeArrayData.fromPrimitiveArray(_),
+    decode = _.toByteArray())
+
   /** `hll_estimate(registers)` — the sketch's answering surface
     * (cms_lookup's rationale for the cardinality tier): harmonic-mean
     * estimate with the small-range linear-counting correction, as a
@@ -163,9 +138,7 @@ object HllSketchFunctions {
   val kernels: Seq[Kernel] = Seq(Estimate)
 
   /** Column API: the 4096-byte HLL register file of a string column. */
-  def hllSketch(word: Column): Column =
-    ColumnBridge.column(
-      HllSketchAgg(ColumnBridge.expression(word)).toAggregateExpression())
+  def hllSketch(word: Column): Column = sketch(word)
 
   /** Column API: cardinality estimate from a register file. */
   def hllEstimate(regs: Column): Column = Estimate(regs)()

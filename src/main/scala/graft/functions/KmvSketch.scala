@@ -1,20 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native KMV (k-minimum-values / bottom-k, Bar-Yossef et al. 2002;
   * the Theta-sketch family of Dasgupta et al. 2016) AGGREGATE — the
   * third native sketch tier, covering the operation the other two
-  * can't: SET ALGEBRA over distincts. [[CmsSketchAgg]] answers
-  * frequencies, [[HllSketchAgg]] cardinalities; neither can estimate
+  * can't: SET ALGEBRA over distincts. `cms_sketch` answers
+  * frequencies, `hll_sketch` cardinalities; neither can estimate
   * |A ∩ B| across two corpora without rescanning. A KMV sketch — the
   * k smallest distinct hash values of a set — supports union (merge +
   * trim), and because every sketch is a uniform sample of the hash
@@ -57,7 +52,7 @@ object KmvSketch {
 
   /** The canonical serialized form: unsigned-ascending array of the
     * buffer's hashes — ONE definition of the buffer→sketch invariant
-    * shared by the aggregate's eval, the streaming twin, and tests.
+    * shared by the aggregate's result, the streaming twin, and tests.
     */
   def toArray(buf: Buffer): Array[Long] = {
     val out = new Array[Long](buf.size)
@@ -65,6 +60,14 @@ object KmvSketch {
     var i = 0
     while (it.hasNext) { out(i) = it.next(); i += 1 }
     out
+  }
+
+  /** The buffer of a finished sketch array. */
+  def fromArray(arr: ArrayData): Buffer = {
+    val buf = newBuffer()
+    var i = 0
+    while (i < arr.numElements()) { add(buf, arr.getLong(i)); i += 1 }
+    buf
   }
 
   /** 2^64 as a double — the hash-space size the fraction divides by. */
@@ -136,7 +139,7 @@ object KmvSketch {
   }
 
   /** Union sketch: sorted-merge + dedup + trim to k — the SAME
-    * operation [[KmvSketchAgg.merge]] performs on buffers, exposed
+    * operation the `kmv_sketch` merge performs on buffers, exposed
     * over finished sketch arrays so daily sketches roll up to monthly
     * ones without touching raw data (the HLL-union reaggregation
     * property, on the set-algebra tier). The result is exactly the
@@ -179,71 +182,31 @@ object KmvSketch {
     math.max(0L, estimate(a) - commonEstimate(a, b))
 }
 
-case class KmvSketchAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch.Buffer]
-  with UnaryLike[Expression] with ExpectsInputTypes {
-
-  import KmvSketch._
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "kmv_sketch"
-
-  override def createAggregationBuffer(): Buffer = newBuffer()
-
-  override def update(buf: Buffer, input: InternalRow): Buffer = {
-    val v = child.eval(input)
-    if (v != null)
-      add(buf, HllSketch.hash64(v.asInstanceOf[UTF8String].toString))
-    buf
-  }
-
-  override def merge(b1: Buffer, b2: Buffer): Buffer = {
-    val it = b2.iterator()
-    while (it.hasNext) add(b1, it.next())
-    b1
-  }
-
-  override def eval(buf: Buffer): Any =
-    new GenericArrayData(KmvSketch.toArray(buf))
-
-  override def serialize(buf: Buffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buf.size * 8)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next())
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buffer = {
-    val buf = newBuffer()
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    while (bb.hasRemaining) buf.add(bb.getLong)
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KmvSketchAgg =
-    copy(child = newChild)
-}
-
 object KmvSketchFunctions {
-  private val Sketch = ArrayType(LongType, containsNull = false)
+  /** `kmv_sketch(v)` — the bottom-k hash set of a string column, merged
+    * by re-adding the second set (the k smallest of a union are each
+    * among the k smallest of a part).
+    */
+  val sketch: Sketch[KmvSketch.Buffer] = Sketch[KmvSketch.Buffer]("kmv_sketch",
+    Seq(StringType), LongType,
+    "kmv_sketch(v) - bottom-k (k=1024) distinct-hash set sketch (aggregate)",
+    zero = () => KmvSketch.newBuffer(),
+    add = (buf, v) => KmvSketch.add(buf, HllSketch.hash64(v.head.toString)),
+    merge = (b1, b2) => b2.forEach(h => KmvSketch.add(b1, h)),
+    encode = buf => UnsafeArrayData.fromPrimitiveArray(KmvSketch.toArray(buf)),
+    decode = KmvSketch.fromArray)
+
+  private val Hashes = ArrayType(LongType, containsNull = false)
   private def binary(name: String, method: String, out: DataType,
       usage: String) =
-    Kernel(name, KmvSketch.getClass, method, Seq(Sketch, Sketch), out,
+    Kernel(name, KmvSketch.getClass, method, Seq(Hashes, Hashes), out,
       usage = Some(usage))
 
   /** `kmv_estimate(sketch)` — distinct-count estimate (exact when the
     * sketch holds the whole set).
     */
   private val Estimate = Kernel("kmv_estimate", KmvSketch.getClass,
-    "estimate", Seq(Sketch), LongType, usage = Some(
+    "estimate", Seq(Hashes), LongType, usage = Some(
       "kmv_estimate(sk) - distinct-count estimate (exact when un-full)"))
   /** `kmv_common(a, b)` — |A ∩ B| estimate from two sketches (exact when
     * both are un-full): the set-algebra surface the KMV tier exists for.
@@ -267,15 +230,13 @@ object KmvSketchFunctions {
     * trim to k): the reaggregation surface — identical to what one pass
     * over A ∪ B would build, so periodic sketches roll up losslessly.
     */
-  private val Merge = binary("kmv_merge", "mergeSketches", Sketch,
+  private val Merge = binary("kmv_merge", "mergeSketches", Hashes,
     "kmv_merge(a, b) - union sketch (lossless bottom-k rollup)")
 
   val kernels: Seq[Kernel] = Seq(Estimate, Common, Union, Diff, Merge)
 
   /** Column API: the bottom-k (k = 1024) hash sketch of a string column. */
-  def kmvSketch(word: Column): Column =
-    ColumnBridge.column(
-      KmvSketchAgg(ColumnBridge.expression(word)).toAggregateExpression())
+  def kmvSketch(word: Column): Column = sketch(word)
 
   /** Column API: distinct-count estimate from a sketch. */
   def kmvEstimate(sketch: Column): Column = Estimate(sketch)()

@@ -1,13 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** Native Q-DIGEST quantile sketch (Shrivastava, Buragohain, Agrawal &
   * Suri 2004) — the FOURTH native sketch tier, answering the question
@@ -111,6 +107,25 @@ object QdigestSketch {
       }
       d -= 1
     }
+  }
+
+  /** Node-wise count sum of `b` into `a`, then one compression against
+    * the combined mass.
+    */
+  def merge(a: Buffer, b: Buffer): Unit = {
+    b.foreach { case (id, c) => a.update(id, a.getOrElse(id, 0L) + c) }
+    compress(a)
+  }
+
+  /** Adds the `[id, count, …]` pairs of a serialized digest to `buf`. */
+  def addPairs(buf: Buffer, arr: ArrayData): Buffer = {
+    var i = 0
+    while (i < arr.numElements()) {
+      val id = arr.getLong(i)
+      buf.update(id, buf.getOrElse(id, 0L) + arr.getLong(i + 1))
+      i += 2
+    }
+    buf
   }
 
   def toArray(buf: Buffer): Array[Long] = {
@@ -220,125 +235,39 @@ object QdigestSketch {
     */
   def mergeSketches(a: ArrayData, b: ArrayData): ArrayData = {
     validate(a, "qdigest_merge"); validate(b, "qdigest_merge")
-    val buf = newBuffer()
-    var i = 0
-    while (i < a.numElements()) {
-      val id = a.getLong(i)
-      buf.update(id, buf.getOrElse(id, 0L) + a.getLong(i + 1))
-      i += 2
-    }
-    i = 0
-    while (i < b.numElements()) {
-      val id = b.getLong(i)
-      buf.update(id, buf.getOrElse(id, 0L) + b.getLong(i + 1))
-      i += 2
-    }
-    new GenericArrayData(toArray(buf))
+    new GenericArrayData(toArray(addPairs(addPairs(newBuffer(), a), b)))
   }
-}
-
-/** Shared TypedImperativeAggregate core for the two digest builders —
-  * ONE definition of buffer, merge, and the serialized layout, so the
-  * unit and mass-weighted producers can never diverge on the format
-  * `qdigest_merge` interops across.
-  */
-abstract class QdigestAggBase
-  extends TypedImperativeAggregate[QdigestSketch.Buffer]
-  with ExpectsInputTypes {
-
-  import QdigestSketch._
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Buffer = newBuffer()
-
-  override def merge(b1: Buffer, b2: Buffer): Buffer = {
-    b2.foreach { case (id, c) => b1.update(id, b1.getOrElse(id, 0L) + c) }
-    compress(b1)
-    b1
-  }
-
-  override def eval(buf: Buffer): Any = new GenericArrayData(toArray(buf))
-
-  override def serialize(buf: Buffer): Array[Byte] = {
-    val arr = toArray(buf)
-    val bb = java.nio.ByteBuffer.allocate(arr.length * 8)
-    arr.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buffer = {
-    val buf = newBuffer()
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    while (bb.hasRemaining) {
-      val id = bb.getLong
-      buf.update(id, buf.getOrElse(id, 0L) + bb.getLong)
-    }
-    buf
-  }
-}
-
-case class QdigestSketchAgg(child: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends QdigestAggBase with UnaryLike[Expression] {
-
-  import QdigestSketch._
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(LongType)
-  override def prettyName: String = "qdigest_sketch"
-
-  override def update(buf: Buffer, input: InternalRow): Buffer = {
-    val v = child.eval(input)
-    if (v != null) add(buf, v.asInstanceOf[Long])
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): QdigestSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QdigestSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): QdigestSketchAgg =
-    copy(child = newChild)
-}
-
-/** `qdigest_sketch_w(v, w)` — the MASS-weighted digest build: each
-  * value contributes its weight (token count, bytes) instead of 1, so
-  * `qdigest_quantile` answers mass-percentiles ("below what doc length
-  * sits half the corpus's token mass" — the truncation-budget form).
-  * Shares [[QdigestSketchAgg]]'s buffer/serde through the same core;
-  * the rank band reads in mass units (slack = 16·W/1024).
-  */
-case class QdigestSketchWeightedAgg(left: Expression, right: Expression,
-    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends QdigestAggBase
-  with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
-
-  import QdigestSketch._
-
-  override def inputTypes: Seq[org.apache.spark.sql.graft.TypeBridge.AbstractType] =
-    Seq(LongType, LongType)
-  override def prettyName: String = "qdigest_sketch_w"
-
-  override def update(buf: Buffer, input: InternalRow): Buffer = {
-    val v = left.eval(input)
-    val w = right.eval(input)
-    if (v != null && w != null)
-      addWeighted(buf, v.asInstanceOf[Long], w.asInstanceOf[Long])
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): QdigestSketchWeightedAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QdigestSketchWeightedAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): QdigestSketchWeightedAgg =
-    copy(left = newLeft, right = newRight)
 }
 
 object QdigestSketchFunctions {
+  private def digest(name: String, inputs: Int, usage: String,
+      add: (QdigestSketch.Buffer, Seq[Any]) => Unit) =
+    Sketch[QdigestSketch.Buffer](name, Seq.fill(inputs)(LongType), LongType,
+      usage, zero = () => QdigestSketch.newBuffer(), add = add,
+      merge = QdigestSketch.merge,
+      encode = buf => UnsafeArrayData.fromPrimitiveArray(QdigestSketch.toArray(buf)),
+      decode = QdigestSketch.addPairs(QdigestSketch.newBuffer(), _))
+
+  /** `qdigest_sketch(v)` — the q-digest of a long column (values clamp
+    * into [0, 2^16)).
+    */
+  val sketch: Sketch[QdigestSketch.Buffer] = digest("qdigest_sketch", 1,
+    "qdigest_sketch(v) - q-digest quantile sketch over [0, 2^16) (aggregate)",
+    (buf, v) => QdigestSketch.add(buf, v.head.asInstanceOf[Long]))
+
+  /** `qdigest_sketch_w(v, w)` — the MASS-weighted digest build: each
+    * value contributes its weight (token count, bytes) instead of 1, so
+    * `qdigest_quantile` answers mass-percentiles ("below what doc length
+    * sits half the corpus's token mass" — the truncation-budget form).
+    * It shares [[sketch]]'s buffer, merge and serialized layout, so the
+    * two producers never diverge on the format `qdigest_merge` interops
+    * across; the rank band reads in mass units (slack = 16·W/1024).
+    */
+  val weighted: Sketch[QdigestSketch.Buffer] = digest("qdigest_sketch_w", 2,
+    "qdigest_sketch_w(v, w) - mass-weighted q-digest (aggregate)",
+    (buf, v) => QdigestSketch.addWeighted(buf, v(0).asInstanceOf[Long],
+      v(1).asInstanceOf[Long]))
+
   private val Digest = ArrayType(LongType, containsNull = false)
 
   /** `qdigest_quantile(sketch, q_bp)` — the answering surface: the value
@@ -367,15 +296,10 @@ object QdigestSketchFunctions {
   /** Column API: the q-digest of a long column (values clamp into
     * [0, 2^16)).
     */
-  def qdigestSketch(v: Column): Column =
-    ColumnBridge.column(
-      QdigestSketchAgg(ColumnBridge.expression(v)).toAggregateExpression())
+  def qdigestSketch(v: Column): Column = sketch(v)
 
   /** Column API: the mass-weighted digest (v carries w units). */
-  def qdigestSketchWeighted(v: Column, w: Column): Column =
-    ColumnBridge.column(
-      QdigestSketchWeightedAgg(ColumnBridge.expression(v),
-        ColumnBridge.expression(w)).toAggregateExpression())
+  def qdigestSketchWeighted(v: Column, w: Column): Column = weighted(v, w)
 
   /** Column API: quantile-value estimate at q basis points. */
   def qdigestQuantile(sketch: Column, qBp: Column): Column =

@@ -2,11 +2,13 @@ package graft.streaming
 
 import java.time.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
   TimerValues, ValueState}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured Streaming forms of the engine's stateful surface
   * (SURVEY.md §2.11). The reference's crawl loop is a rate-limited,
@@ -29,6 +31,23 @@ object StreamingOps {
     * their group state by.
     */
   private val SketchShards = 8
+
+  /** The running fold the sketch twins share: `rows` hash into
+    * [[SketchShards]] groups by `shardOf`, each group's state folds
+    * forward across micro-batches through `fold(prior, batch)`, and
+    * every micro-batch re-emits the shard's refreshed state through
+    * `emit` (Update mode; downstream upserts by shard).
+    */
+  private def shardFold[V, S: Encoder, O: Encoder](rows: Dataset[V])(
+      shardOf: V => Int, fold: (Option[S], Iterator[V]) => S,
+      emit: (Int, S) => O): Dataset[O] =
+    rows.groupByKey(shardOf)(Encoders.scalaInt)
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
+        (shard: Int, batch: Iterator[V], state: GroupState[S]) => {
+          val next = fold(state.getOption, batch)
+          state.update(next)
+          Iterator.single(emit(shard, next))
+        })
 
   /** Event-time column from the canonical nanos-as-long `ts`. */
   def eventTime(c: Column): Column = timestamp_micros(expr("ts div 1000"))
@@ -217,20 +236,15 @@ object StreamingOps {
     * global heavy hitter, and a recount over the candidates equals the
     * batch answer exactly — StreamingSpec pins stream == batch through
     * that recount.
-    *
-    * Each micro-batch re-emits the shard's refreshed candidate list
-    * (Update mode; downstream upserts by shard).
     */
   def streamingHeavyHitters(rows: Dataset[String]): Dataset[ShardSketch] = {
     import rows.sparkSession.implicits._
     val mg = new graft.functions.MisraGries(graft.etl.Skew.Capacity)
-    rows.groupByKey(k => math.floorMod(k.hashCode, SketchShards))
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
-        (shard: Int, batch: Iterator[String], state: GroupState[Map[String, Long]]) => {
-          val merged = batch.foldLeft(state.getOption.getOrElse(mg.zero))(mg.reduce)
-          state.update(merged)
-          Iterator.single(ShardSketch(shard, merged.keysIterator.toSeq.sorted))
-        })
+    shardFold(rows)(k => math.floorMod(k.hashCode, SketchShards),
+      (prior: Option[Map[String, Long]], batch: Iterator[String]) =>
+        batch.foldLeft(prior.getOrElse(mg.zero))(mg.reduce),
+      (shard: Int, m: Map[String, Long]) =>
+        ShardSketch(shard, m.keysIterator.toSeq.sorted))
   }
 
   /** Streaming Count-Min sketch build: the unbounded-stream twin of
@@ -284,8 +298,9 @@ object StreamingOps {
     * symmetry (CMS cells for frequency, HLL registers for cardinality,
     * now the set-algebra tier): each shard's group state is the
     * running bottom-k hash set of ITS substream, folded forward across
-    * micro-batches by the SAME [[graft.functions.KmvSketch]] core the
-    * native aggregate runs — state is ≤ k longs per shard REGARDLESS
+    * micro-batches through the SAME `kmv_sketch` row
+    * ([[graft.functions.KmvSketchFunctions.sketch]]) the native
+    * aggregate folds through — state is ≤ k longs per shard REGARDLESS
     * of stream length or cardinality. Correctness composes exactly
     * like the batch merge: the k smallest of a union are each among
     * the k smallest of a part, so [[graft.functions.KmvSketch
@@ -298,24 +313,22 @@ object StreamingOps {
     */
   def streamingKmvSketch(words: Dataset[String]): Dataset[KmvShard] = {
     import words.sparkSession.implicits._
-    import graft.functions.{HllSketch, KmvSketch}
-    words.groupByKey(w => math.floorMod(w.hashCode, SketchShards))
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
-        (shard: Int, batch: Iterator[String], state: GroupState[Array[Long]]) => {
-          val buf = KmvSketch.newBuffer()
-          state.getOption.foreach(_.foreach(h => KmvSketch.add(buf, h)))
-          batch.foreach(w => KmvSketch.add(buf, HllSketch.hash64(w)))
-          val out = KmvSketch.toArray(buf)
-          state.update(out)
-          Iterator.single(KmvShard(shard, out.toSeq))
-        })
+    val kmv = graft.functions.KmvSketchFunctions.sketch
+    shardFold(words)(w => math.floorMod(w.hashCode, SketchShards),
+      (prior: Option[Array[Long]], batch: Iterator[String]) =>
+        kmv.fold(prior.map(UnsafeArrayData.fromPrimitiveArray),
+          batch.map(UTF8String.fromString))
+          .toLongArray(),
+      (shard: Int, out: Array[Long]) => KmvShard(shard, out.toSeq))
   }
 
   /** Streaming q-digest build — the quantile tier's unbounded-stream
     * twin (CMS cells / HLL registers / KMV bottom-k / now
     * distribution): each shard's group state is the running q-digest
-    * of ITS substream, folded forward across micro-batches by the SAME
-    * [[graft.functions.QdigestSketch]] core the native aggregate runs;
+    * of ITS substream, folded forward across micro-batches through the
+    * SAME `qdigest_sketch` row
+    * ([[graft.functions.QdigestSketchFunctions.sketch]]) the native
+    * aggregate folds through;
     * state is ≤ 3k nodes per shard REGARDLESS of stream length (the
     * digest compresses against its own running mass). Merging the
     * latest shard emissions answers any global quantile within the
@@ -326,23 +339,12 @@ object StreamingOps {
     */
   def streamingQdigest(values: Dataset[Long]): Dataset[QdigestShard] = {
     import values.sparkSession.implicits._
-    import graft.functions.QdigestSketch
-    values.groupByKey(v => QdigestSketch.clamp(v) % SketchShards)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
-        (shard: Int, batch: Iterator[Long], state: GroupState[Array[Long]]) => {
-          val buf = QdigestSketch.newBuffer()
-          state.getOption.foreach { arr =>
-            var i = 0
-            while (i < arr.length) {
-              buf.update(arr(i), buf.getOrElse(arr(i), 0L) + arr(i + 1))
-              i += 2
-            }
-          }
-          batch.foreach(v => QdigestSketch.add(buf, v))
-          val out = QdigestSketch.toArray(buf)
-          state.update(out)
-          Iterator.single(QdigestShard(shard, out.toSeq))
-        })
+    val digest = graft.functions.QdigestSketchFunctions.sketch
+    shardFold(values)(v => graft.functions.QdigestSketch.clamp(v) % SketchShards,
+      (prior: Option[Array[Long]], batch: Iterator[Long]) =>
+        digest.fold(prior.map(UnsafeArrayData.fromPrimitiveArray), batch)
+          .toLongArray(),
+      (shard: Int, out: Array[Long]) => QdigestShard(shard, out.toSeq))
   }
 
   /** Streaming NEAR-DUP — the live twin of

@@ -18,17 +18,23 @@ class CodegenSizeSpec extends AnyFunSuite with SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
   private val HugeMethodLimit = 8000
 
-  /** (stage, max method bytes) of every codegen subtree `df` executed. */
-  private def methodSizes(df: => DataFrame): Seq[(String, Int)] = {
-    val stages = executedQes(df).flatMap(qe => codegenStringSeq(qe.executedPlan))
-    stages.foreach { case (stage, _, stats) =>
-      assert(stats != ByteCodeStats.UNAVAILABLE, s"stage did not compile:\n$stage")
-    }
-    stages.map { case (stage, _, stats) => stage -> stats.maxMethodCodeSize }
+  /** (stage, generated code, bytecode stats) of every codegen subtree
+    * `df` executed.
+    */
+  private def stages(df: => DataFrame): Seq[(String, String, ByteCodeStats)] =
+    executedQes(df).flatMap(qe => codegenStringSeq(qe.executedPlan))
+
+  private lazy val corpusBuildStages = {
+    val out = java.nio.file.Files.createTempDirectory("graft_codegen_").toFile
+    try stages(etl.CorpusPipeline.build(spark, dir, out.toString))
+    finally Harness.deleteRecursively(out)
   }
 
-  private def assertFits(what: String, df: => DataFrame): Unit = {
-    val sizes = methodSizes(df)
+  private def assertFits(what: String, compiled: Seq[(String, String, ByteCodeStats)]): Unit = {
+    compiled.foreach { case (stage, _, stats) =>
+      assert(stats != ByteCodeStats.UNAVAILABLE, s"stage did not compile:\n$stage")
+    }
+    val sizes = compiled.map { case (stage, _, stats) => stage -> stats.maxMethodCodeSize }
     assert(sizes.nonEmpty, s"$what ran no whole-stage codegen")
     val huge = sizes.filter(_._2 > HugeMethodLimit)
     // each plan line cut to 200 characters: a wide projection prints
@@ -40,14 +46,22 @@ class CodegenSizeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("the corpus build generates no method past the JIT limit") {
-    val out = java.nio.file.Files.createTempDirectory("graft_codegen_").toFile
-    try assertFits("the corpus build",
-      etl.CorpusPipeline.build(spark, dir, out.toString))
-    finally Harness.deleteRecursively(out)
+    assertFits("the corpus build", corpusBuildStages)
+  }
+
+  // The clip gate reads two fields of the kernel's struct; filtered in
+  // the clip stage, it is pushed below the projection and calls the
+  // kernel once per field it reads, on top of the projection's own call.
+  test("the corpus build's clip stage calls the span-clip kernel once per row") {
+    val calls = corpusBuildStages.collect {
+      case (stage, code, _) if stage.contains("span_clip_struct") =>
+        "ShingleOps\\.clipSpans\\(".r.findAllMatchIn(code).size
+    }
+    assert(calls == Seq(1), s"clipSpans call sites per clip stage: $calls")
   }
 
   for (q <- Seq("char_entropy", "minhash_fast"))
     test(s"$q generates no method past the JIT limit") {
-      assertFits(q, SparkEntry.queries(q)(spark, dir))
+      assertFits(q, stages(SparkEntry.queries(q)(spark, dir)))
     }
 }

@@ -413,6 +413,23 @@ class FetchSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("HTTP transport: the first fetch to a new host does not wait out its floor") {
+    Loopback.withServer { srv =>
+      srv.route("/a") { ex => Loopback.respond(ex, 200, "x".getBytes) }
+      val t = new BinaryHttpTransport(
+        maxAttempts = 1, initialDelayMs = 5, perHostIntervalMs = 1500)
+      t.open()
+      try {
+        // every other loopback case names 127.0.0.1, so no earlier
+        // fetch has reserved a window for "localhost"
+        val t0 = System.nanoTime()
+        t.fetch(s"http://localhost:${srv.server.getAddress.getPort}/a")
+        val ms = (System.nanoTime() - t0) / 1000000
+        assert(ms < 750, s"first fetch to a new host took ${ms}ms under a 1500ms floor")
+      } finally t.close()
+    }
+  }
+
   test("fetch placement: byHost puts every host in exactly one partition, " +
       "and single-host fetches serialize at the floor with parallelism > 1") {
     import org.apache.spark.sql.functions.{col, expr, spark_partition_id}

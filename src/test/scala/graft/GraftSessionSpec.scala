@@ -80,6 +80,15 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestBase {
     assert(hits.forall(_ == "KernelCall.scala"), hits)
   }
 
+  // A mergeable sketch is a Sketch table row aggregated through SketchAgg;
+  // a hand-written aggregate class restates the same buffer members and
+  // its serialized form can drift from the result the kernels read.
+  test("SketchAgg.scala is the only functions source with a TypedImperativeAggregate") {
+    val hits = filesContaining("src/main/scala/graft/functions",
+      "TypedImperative" + "Aggregate")
+    assert(hits == Seq("SketchAgg.scala"), hits)
+  }
+
   test("the test session carries the factory's UTC, nanosAsLong and cleanCheckpoints") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")

@@ -556,7 +556,7 @@ class OpUnitSpec extends AnyFunSuite with SparkTestBase {
   test("HllSketch: hash64 replicates the SQL md5 analog; merge is " +
        "elementwise max; registers are partitioning-invariant; " +
        "estimate lands inside the band on known cardinality") {
-    import graft.functions.{HllSketch, HllSketchAgg}
+    import graft.functions.HllSketch
     import graft.functions.HllSketchFunctions.{hllEstimate, hllSketch}
     // hash64 bits == conv(substring(md5(w), 1, 16), 16, 10)
     val fromSql = spark.sql(
@@ -565,7 +565,8 @@ class OpUnitSpec extends AnyFunSuite with SparkTestBase {
     assert(java.lang.Long.compareUnsigned(HllSketch.hash64("spark"),
       java.lang.Long.parseUnsignedLong(fromSql)) == 0)
     // merge = elementwise max + serialization round-trip
-    val agg = HllSketchAgg(org.apache.spark.sql.catalyst.expressions.Literal("x"))
+    val agg = graft.functions.HllSketchFunctions.sketch
+      .call(Seq(org.apache.spark.sql.catalyst.expressions.Literal("x")))
     val b1 = agg.createAggregationBuffer(); b1(0) = 3; b1(5) = 1
     val b2 = agg.createAggregationBuffer(); b2(0) = 2; b2(5) = 4; b2(4095) = 7
     val m = agg.merge(b1, b2)
@@ -935,14 +936,15 @@ class OpUnitSpec extends AnyFunSuite with SparkTestBase {
   test("CmsSketch: bucket replicates the SQL md5 analog exactly; " +
        "merge is elementwise-associative; the aggregate's cells equal " +
        "the relational groupBy build") {
-    import graft.functions.{CmsSketch, CmsSketchAgg}
+    import graft.functions.CmsSketch
     // bucket == conv(substring(md5(concat(j, word)), 1, 8), 16, 10) % 256
     val fromSql = spark.sql(
       "SELECT CAST(conv(substring(md5(concat('2', 'spark')), 1, 8), 16, 10) " +
         "AS BIGINT) % 256").collect().head.getLong(0)
     assert(CmsSketch.bucket(2, "spark") == fromSql.toInt)
     // merge associativity on hand buffers
-    val agg = CmsSketchAgg(org.apache.spark.sql.catalyst.expressions.Literal("x"))
+    val agg = graft.functions.CmsSketchFunctions.sketch
+      .call(Seq(org.apache.spark.sql.catalyst.expressions.Literal("x")))
     def buf(pairs: (Int, Long)*): Array[Long] = {
       val b = agg.createAggregationBuffer()
       pairs.foreach { case (i, v) => b(i) = v }; b
