@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.plans.GroupTopK
@@ -19,8 +19,9 @@ import graft.plans.GroupTopK
   * semantics (reference analog: commands/transform.md:92-155 composes
   * extract → score → chunk the same way; the mix/dedup stages are the
   * builder brief's training-data extensions). All sampling/dedup
-  * decisions are salted-hash or struct-min deterministic — two runs on
-  * the same input produce byte-identical corpora.
+  * decisions are salted-hash cuts or top-1 cuts with a doc_id
+  * tie-break — two runs on the same input produce byte-identical
+  * corpora.
   *
   * Scale notes: the stage chain is linear in the corpus with the LSH
   * candidate graph quadratic only inside buckets (minhashLshFrom), the
@@ -42,12 +43,36 @@ import graft.plans.GroupTopK
   * every count re-ran the whole upstream chain: a 5,000-document build
   * launched 199 jobs and took ~9× its stage-by-stage replay (4-core
   * host); staged and counted with `count()`, 79 jobs; counted in the
-  * staging jobs, 54. Local checkpoints are MEMORY_AND_DISK, so a
-  * corpus-sized stage spills rather than fails; the returned report is
-  * a local relation, so the scope releases every staged block on exit,
-  * normal or exceptional. Per-stage counts are one driver-side scalar
-  * per stage (the build report — same discipline as Pipeline.run's
-  * artifacts).
+  * staging jobs, 54; with one exchange per survivor decision, 38
+  * (PersistLifecycleSpec pins the sf0.001 build). Local checkpoints are
+  * MEMORY_AND_DISK, so a corpus-sized stage spills rather than fails;
+  * the returned report is a local relation, so the scope releases every
+  * staged block on exit, normal or exceptional. Per-stage counts are
+  * one driver-side scalar per stage (the build report — same discipline
+  * as Pipeline.run's artifacts).
+  *
+  * Decision shapes. Past the domain cap a 5,000-document build holds
+  * 400 documents or fewer per stage, so its cost is its jobs, exchanges
+  * and generated classes, not its rows; each survivor decision is one
+  * exchange over the frame that carries the rows:
+  *  - exact dedup: a top-1 cut per `md5(coalesce(text, ""))` by doc_id
+  *    ([[exactSurvivors]]), not [[Dedup.dedupExactFrom]]'s sorted
+  *    aggregate joined back;
+  *  - near-dup keepers: a top-1 cut per `coalesce(component, doc_id)`
+  *    over the documents left-joined to the closure labels
+  *    ([[nearDupSurvivors]]), not a `max(struct(len, -doc_id))`
+  *    aggregate joined back plus a `left_anti` arm and a union;
+  *  - closure labels: read as (node, lbl) from the last round's staged
+  *    blocks ([[Dedup.componentLabelsIn]]), without the `cluster_size`
+  *    aggregate and join that only [[Dedup.dedupComponentsFrom]] needs;
+  *  - span clip: the unsorted clip core ([[Dedup.spanClipped]]) carries
+  *    `lang` through its own doc-keyed join, with no range exchange and
+  *    no join back;
+  *  - mix rates: the per-language token sums (one row per language) are
+  *    collected and the rates applied as a per-language literal
+  *    ([[mixRates]]), so the corpus is not shuffled to meet them.
+  * CodegenSizeSpec pins the build's distinct generated stages and that
+  * no executed plan has a range exchange.
   */
 object CorpusPipeline {
 
@@ -82,26 +107,16 @@ object CorpusPipeline {
           .drop("quality_bp", "src_rank"))
 
       // 2. exact dedup: one survivor per distinct text (min doc_id)
-      val (kept2, nExact) = scope.localObserved(capped.join(
-        Dedup.dedupExactFrom(capped).select(col("canonical_doc").as("doc_id")),
-        Seq("doc_id")))
+      val (kept2, nExact) = scope.localObserved(exactSurvivors(capped))
 
       // 3. near-dup canonicalization: LSH candidates → connected
       //    components → best copy per cluster (longest text, id
-      //    tie-break). Pairs and components are read only here, so they
+      //    tie-break). Pairs and labels are read only here, so they
       //    stay in this scope's blocks: no checkpoint files.
       val pairs = scope.local(
         Dedup.minhashLshIn(scope, kept2.select(col("doc_id"), col("text"))))
-      val comp = scope.local(Dedup.dedupComponentsIn(scope, pairs))
-      val keepers = comp
-        .join(kept2.select(col("doc_id"), length(col("text")).as("len")), Seq("doc_id"))
-        .groupBy(col("component"))
-        .agg(max(struct(col("len"), (-col("doc_id")).as("nid"))).as("m"))
-        .select((-col("m.nid")).as("doc_id"))
-      val clustered = comp.select("doc_id")
       val (kept3, nNearDup) = scope.localObserved(
-        kept2.join(clustered, Seq("doc_id"), "left_anti")
-          .unionByName(kept2.join(keepers, Seq("doc_id"))))
+        nearDupSurvivors(kept2, Dedup.componentLabelsIn(scope, pairs)))
 
       // 3b. span clipping (round 6): remove cross-survivor duplicated
       //     8-gram spans from the texts themselves (Lee et al. clip, not
@@ -109,12 +124,12 @@ object CorpusPipeline {
       //     hollowed-out flag and the character entropy (3c's signal)
       //     are columns of this stage, and 3c filters on both: a filter
       //     here is pushed below the clip's projection, where it calls
-      //     the clip kernel again for each field it reads.
+      //     the clip kernel again for each field it reads. `lang` rides
+      //     through the clip's own join.
       val (clipped, nClipped) = scope.localObserved(TextAnalysis.withCharEntropy(
-        Dedup.spanClipFrom(kept3.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), col("clean_text").as("text"),
-            (col("n_words") - col("n_removed") >= MinCleanWords).as("clip_ok"))
-          .join(kept3.select(col("doc_id"), col("lang")), Seq("doc_id"))),
+        Dedup.spanClipped(kept3.select(col("doc_id"), col("text"), col("lang")))
+          .select(col("doc_id"), col("clean_text").as("text"), col("lang"),
+            (col("n_words") - col("n_removed") >= MinCleanWords).as("clip_ok"))),
         count(when(col("clip_ok"), 1)))
 
       // 3c. character-entropy floor (round 6): a clip can leave
@@ -124,17 +139,14 @@ object CorpusPipeline {
         .drop("clip_ok", "entropy"))
 
       // 4. per-language mix rebalance toward a uniform budget (the
-      //    mix_weights rates driving a salted-hash bucket cut)
-      val toks = kept4
+      //    mix_weights rates driving a salted-hash bucket cut); the
+      //    rates are a per-language literal, so the corpus is not
+      //    shuffled to meet them
+      val rates = mixRates(kept4
         .select(col("lang"), TextAnalysis.tokenCount(col("text")).as("t"))
-        .groupBy(col("lang")).agg(sum(col("t")).as("n_tokens"))
-      val tot = toks.agg(sum(col("n_tokens")).as("total"), count(lit(1)).as("n_langs"))
-      val rates = toks.crossJoin(broadcast(tot))
-        .select(col("lang"),
-          least(lit(10000L),
-            expr("(10000 * (total div n_langs)) div n_tokens")).as("rate_bp"))
-      val (sampled, nSampled) = scope.localObserved(kept4.join(broadcast(rates), Seq("lang"))
-        .filter(Splits.hashBucket(col("doc_id"), "mix:") * lit(100) < col("rate_bp")))
+        .groupBy(col("lang")).agg(sum(col("t")).as("n_tokens")))
+      val (sampled, nSampled) = scope.localObserved(kept4
+        .filter(Splits.hashBucket(col("doc_id"), "mix:") * lit(100) < rateOf(rates)))
 
       // 5. RAG chunking (reference chunk_size/overlap limits), counted
       //    as the writer consumes it
@@ -151,6 +163,65 @@ object CorpusPipeline {
       report.write.mode("overwrite").parquet(s"$outDir/report")
       report
     }
+
+  /** One survivor per distinct text: the lowest doc_id of each
+    * `md5(coalesce(text, ""))` group, cut top-1 per digest — the rows
+    * of `docs` that are their group's [[Dedup.dedupExactFrom]]
+    * `canonical_doc`, without its sort or a join back. A null doc_id
+    * never survives, as it never matched in the join back.
+    */
+  private[graft] def exactSurvivors(docs: DataFrame): DataFrame =
+    GroupTopK.topK(docs.filter(col("doc_id").isNotNull)
+        .withColumn("text_hash", md5(coalesce(col("text"), lit("")))),
+      1, "exact_rank", Seq("text_hash"), col("doc_id").asc)
+      .drop("text_hash", "exact_rank")
+
+  /** The near-dup survivors of `docs`: the best copy of each closure
+    * component in `labels` (node, lbl) — longest text, lowest doc_id on
+    * a tie, a null text shortest — and every document outside a
+    * component. One top-1 cut per `coalesce(component, doc_id)`: a
+    * document outside every component is its own group, and no
+    * component label can collide with it, since a label is the id of a
+    * member.
+    */
+  private[graft] def nearDupSurvivors(docs: DataFrame, labels: DataFrame): DataFrame =
+    GroupTopK.topK(docs
+        .join(labels.select(col("node").as("doc_id"), col("lbl").as("component")),
+          Seq("doc_id"), "left")
+        .withColumn("keep_group", coalesce(col("component"), col("doc_id"))),
+      1, "keep_rank", Seq("keep_group"), length(col("text")).desc, col("doc_id").asc)
+      .drop("component", "keep_group", "keep_rank")
+
+  /** Per-language mix rates in basis points, (lang, rate_bp), from the
+    * (lang, n_tokens) token sums `toks` (one row per language, the null
+    * language included): `least(10000, (10000 * (total div n_langs))
+    * div n_tokens)`, where `total` and `n_langs` run over every group.
+    * The sums are collected, and the rate is evaluated as a Spark
+    * expression over a local relation of them, so its arithmetic (ANSI
+    * errors included) is the SQL's.
+    */
+  private[graft] def mixRates(toks: DataFrame): Seq[(String, Option[Long])] = {
+    val sums = toks.select(col("lang"), col("n_tokens")).collect()
+      .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    val counted = sums.flatMap(_._2)
+    val total = if (counted.isEmpty) None else Some(counted.reduce(Math.addExact(_, _)))
+    toks.sparkSession
+      .createDataFrame(sums.toSeq.map { case (l, n) => (l, n, total, sums.length.toLong) })
+      .toDF("lang", "n_tokens", "total", "n_langs")
+      .select(col("lang"),
+        least(lit(10000L), expr("(10000 * (total div n_langs)) div n_tokens")))
+      .collect().toSeq
+      .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+  }
+
+  /** Each row's rate from [[mixRates]] by its `lang` — null for the
+    * null language, like the inner join on lang it replaces.
+    */
+  private def rateOf(rates: Seq[(String, Option[Long])]): Column =
+    rates.filter(_._1 != null).sortBy(_._1)
+      .foldLeft(when(lit(false), typedLit(Option.empty[Long]))) {
+        case (acc, (l, r)) => acc.when(col("lang") === l, typedLit(r))
+      }
 
   /** Quality-gate threshold for [[curationFunnel]] — cuts near the
     * corpus median so the funnel's middle stage measurably bites.

@@ -473,7 +473,17 @@ object Dedup {
     spanClipFrom(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")))
 
-  def spanClipFrom(docs: DataFrame): DataFrame = {
+  def spanClipFrom(docs: DataFrame): DataFrame =
+    spanClipped(docs).orderBy("doc_id")
+
+  /** [[spanClipFrom]] unsorted, with every column of `docs` besides
+    * `doc_id` and `text` carried through its doc-keyed left join after
+    * the clip's columns: a caller that needs another column of the
+    * clipped documents (the corpus build's `lang`) reads it here
+    * instead of joining it back, and a caller that reads the clip
+    * without an order pays no range exchange.
+    */
+  private[graft] def spanClipped(docs: DataFrame): DataFrame = {
     // measured-both-ways note (round 14): [[substringDedupFrom]]'s
     // 60-bit digest keys were tried here too and REJECTED — span_clip's
     // wall is dominated by the coverage/removal machinery, not the gram
@@ -507,15 +517,15 @@ object Dedup {
     // coalesce(text, ""): the kernel is nullIntolerant — a null text
     // must keep the old wordArray "" semantics (n_words=0, clean "")
     // rather than null out the row (ADVICE r18 item 3)
+    val carried = docs.columns.toSeq.filterNot(Set("doc_id", "text")).map(col)
     docs.join(dupStarts, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        graft.functions.ShingleFunctions.spanClipF(
+      .select(col("doc_id") +: graft.functions.ShingleFunctions.spanClipF(
           coalesce(col("text"), lit("")),
-          coalesce(col("starts"), typedLit(Array.empty[Int])), 8).as("r"))
-      .select(col("doc_id"), col("r.n_words").as("n_words"),
+          coalesce(col("starts"), typedLit(Array.empty[Int])), 8).as("r") +:
+        carried: _*)
+      .select(Seq(col("doc_id"), col("r.n_words").as("n_words"),
         col("r.n_removed").as("n_removed"),
-        col("r.clean_text").as("clean_text"))
-      .orderBy("doc_id")
+        col("r.clean_text").as("clean_text")) ++ carried: _*)
   }
 
   /** Global FIRST-OCCURRENCE-WINS paragraph dedup with document
@@ -961,14 +971,26 @@ object Dedup {
     * needs).
     */
   def dedupComponentsFrom(pairs: DataFrame): DataFrame =
-    Fixpoint.scoped(s => Fixpoint.reliably(dedupComponentsIn(s, pairs)))
+    Fixpoint.scoped { s =>
+      val labels = componentLabelsIn(s, pairs)
+      val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
+      // unsorted (round 19): only the declared dedup_components surface
+      // needs doc_id order — SparkEntry adds it on top of the memoized
+      // scan; every other consumer aggregates, and the build was paying
+      // a sampling pass + range exchange per isolated rebuild for it
+      Fixpoint.reliably(labels.join(sizes, Seq("lbl"))
+        .select(col("node").as("doc_id"), col("lbl").as("component"),
+          col("cluster_size")))
+    }
 
-  /** [[dedupComponentsFrom]]'s closure as a lazy frame over the last
-    * round's blocks staged in `scope` — valid only inside `scope`
-    * ([[CorpusPipeline.build]] stages it there itself;
-    * [[mergeDeltaIntoClosure]] reads it once, unstaged).
+  /** The closure's labels, (node, lbl = min node id of its component),
+    * as a lazy frame over the last round's blocks staged in `scope` —
+    * valid only inside `scope`. [[dedupComponentsFrom]] joins the
+    * cluster sizes onto it; [[CorpusPipeline.build]] and
+    * [[mergeDeltaIntoClosure]] read the labels alone, so they pay for
+    * no size aggregate and no join back.
     */
-  private[etl] def dedupComponentsIn(scope: Fixpoint.Scope, pairs: DataFrame): DataFrame = {
+  private[etl] def componentLabelsIn(scope: Fixpoint.Scope, pairs: DataFrame): DataFrame = {
     val edges = scope.local(pairs
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))))
@@ -1007,14 +1029,7 @@ object Dedup {
       prevSum = curSum
     }
     Fixpoint.lastRounds.put("components_closure", rounds)
-    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-    // unsorted (round 19): only the declared dedup_components surface
-    // needs doc_id order — SparkEntry adds it on top of the memoized
-    // scan; every other consumer aggregates, and the build was paying
-    // a sampling pass + range exchange per isolated rebuild for it
-    labels.join(sizes, Seq("lbl"))
-      .select(col("node").as("doc_id"), col("lbl").as("component"),
-        col("cluster_size"))
+    labels
   }
 
   /** INCREMENTAL components closure — the daily-snapshot production
@@ -1093,8 +1108,8 @@ object Dedup {
     // as the full build — it is just running on a delta-sized input).
     // Only the relabel join reads it, so it stays a lazy frame over the
     // scope's last-round blocks: no checkpoint of its own
-    val remap = dedupComponentsIn(scope, quotient)
-      .select(col("doc_id").as("node"), col("component").as("new_comp"))
+    val remap = componentLabelsIn(scope, quotient)
+      .select(col("node"), col("lbl").as("new_comp"))
     Fixpoint.lastRounds.put("incremental_merge",
       Fixpoint.lastRounds.getOrDefault("components_closure", 0))
     // standing assignment ∪ newly-paired docs, then one label-keyed

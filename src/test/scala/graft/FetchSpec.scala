@@ -447,22 +447,27 @@ class FetchSpec extends AnyFunSuite with SparkTestBase {
     assert(spread.nonEmpty && spread.forall(_ == 1L), spread.toSeq.toString)
     // serialization: a 5-request single-host frame through the real
     // transport honors the per-host floor end to end, even though the
-    // session runs parallel tasks — the server observes monotonic
-    // arrivals spaced >= the floor
+    // session runs parallel tasks. The floor spaces the reservations 60
+    // ms apart, each at or after t0, and a request arrives after its
+    // reservation, so the i-th arrival is at least t0 + i * 60 ms. The
+    // gaps between arrivals are not bounded: a request that leaves late
+    // after its reservation shortens the next gap. Both clocks are the
+    // wall clock the reservations are taken on.
     Loopback.withServer { srv =>
       val arrivals = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
       srv.route("/p") { ex =>
-        arrivals.add(System.nanoTime()); Loopback.respond(ex, 200, "x".getBytes)
+        arrivals.add(System.currentTimeMillis()); Loopback.respond(ex, 200, "x".getBytes)
       }
       val urls = (1 to 5).map(i => srv.base + s"/p?i=$i").toDF("url")
+      val t0 = System.currentTimeMillis()
       val got = Sources.fetchBinary(urls,
           new BinaryHttpTransport(maxAttempts = 1, perHostIntervalMs = 60),
           hostPartitions = 2)
         .select("status").as[String].collect()
       assert(got.length == 5 && got.forall(_ == "ok"))
-      val ts = arrivals.toArray(Array.empty[java.lang.Long]).map(_.toLong).sorted
-      val gaps = ts.sliding(2).map(p => (p(1) - p(0)) / 1000000).toSeq
-      assert(gaps.forall(_ >= 45), s"same-host fetches under the 60ms floor: $gaps")
+      val since = arrivals.toArray(Array.empty[java.lang.Long]).map(_.longValue - t0).sorted.toSeq
+      assert(since.length == 5 && since.zipWithIndex.forall { case (ms, i) => ms >= i * 60 },
+        s"same-host arrivals (ms after the start) under the 60ms floor: $since")
     }
   }
 

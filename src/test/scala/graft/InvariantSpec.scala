@@ -2,6 +2,7 @@ package graft
 
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.etl.{Chunker, Scoring, Shingles, Sinks, Urls}
 
@@ -660,5 +661,101 @@ class InvariantSpec extends AnyFunSuite with SparkTestBase {
     // docs straddle the split — the signal split_leakage predicts);
     // an all-zero report would make the query vacuously green
     assert(rows.exists(_._6 == 1L), "no contaminated items found")
+  }
+
+  // The corpus build's survivor decisions, each against the
+  // aggregate-and-join-back form the build used before, kept here as
+  // the reference.
+
+  test("near-dup keepers: one top-1 cut per component equals the keeper " +
+       "aggregate + left_anti + union form (ties, null texts, singletons)") {
+    import graft.etl.{CorpusPipeline, Dedup}
+    // random part: lengths from 4 values so components tie, every 9th
+    // text null, ids 70..89 never paired; fixed part: a 4-chain of
+    // equal lengths and a null (keeper 100, the lowest tied id) and a
+    // pair of null texts (keeper 110)
+    val random = (0 until 90).map { i =>
+      (i.toLong, if (i % 9 == 4) null else "w" * (1 + rnd.nextInt(4)), if (i % 2 == 0) "en" else "de")
+    }
+    val fixed = Seq((100L, "xx", "en"), (101L, "yy", "de"), (102L, null, "en"),
+      (103L, "zz", "en"), (110L, null, "de"), (111L, null, "en"))
+    val docs = (random ++ fixed).toDF("doc_id", "text", "lang")
+    val pairEdges = (1 to 60).map { _ =>
+      val a = rnd.nextInt(70).toLong; val b = rnd.nextInt(70).toLong
+      (math.min(a, b), math.max(a, b))
+    }.filter(p => p._1 != p._2).distinct ++
+      Seq((100L, 101L), (101L, 102L), (102L, 103L), (110L, 111L))
+    val comp = Dedup.dedupComponentsFrom(pairEdges.toDF("doc_a", "doc_b"))
+    val keepers = comp
+      .join(docs.select(col("doc_id"), length(col("text")).as("len")), Seq("doc_id"))
+      .groupBy(col("component"))
+      .agg(max(struct(col("len"), (-col("doc_id")).as("nid"))).as("m"))
+      .select((-col("m.nid")).as("doc_id"))
+    val ref = docs.join(comp.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(docs.join(keepers, Seq("doc_id")))
+    val got = CorpusPipeline.nearDupSurvivors(docs,
+      comp.select(col("doc_id").as("node"), col("component").as("lbl")))
+    def rows(df: DataFrame) = df.as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    val want = rows(ref)
+    assert(got.columns.toSeq == ref.columns.toSeq)
+    assert(rows(got) == want)
+    val ids = want.map(_._1).toSet
+    assert(ids.contains(100L) && !ids.exists(Set(101L, 102L, 103L, 111L)) &&
+      ids.contains(110L) && (70L until 90L).forall(ids), s"reference keepers: $ids")
+  }
+
+  test("exact dedup: one top-1 cut per text digest equals the join back " +
+       "onto dedupExactFrom, null doc_ids and a null text included") {
+    import graft.etl.{CorpusPipeline, Dedup}
+    // a null text hashes as "": doc 3 (null) and doc 7 ("") are copies
+    val docs = Seq[(Option[Long], String, String)](
+      (Some(5L), "same", "en"), (Some(2L), "same", "de"), (Some(9L), "same", "en"),
+      (None, "same", "en"), (None, "lonely", "fr"), (Some(3L), null, "en"),
+      (Some(7L), "", "de"), (Some(4L), "other", "en"), (Some(8L), "other", null))
+      .toDF("doc_id", "text", "lang")
+    val ref = docs.join(
+      Dedup.dedupExactFrom(docs).select(col("canonical_doc").as("doc_id")), Seq("doc_id"))
+    val got = CorpusPipeline.exactSurvivors(docs)
+    def rows(df: DataFrame) = df.as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    assert(got.columns.toSeq == ref.columns.toSeq)
+    assert(rows(ref) == Seq((2L, "same", "de"), (3L, null, "en"), (4L, "other", "en")))
+    assert(rows(got) == rows(ref))
+  }
+
+  test("span clip core with a carried column equals spanClipFrom joined " +
+       "back to lang") {
+    import graft.etl.Dedup
+    // every third doc carries a shared 9-word tail (cross-doc 8-grams to
+    // clip); a null text and a null lang ride along
+    val tail = " please login to continue reading the full page now"
+    val docs = (corpus.zipWithIndex.map { case (t, i) =>
+        (i.toLong, if (i % 3 == 0) t + tail else t, Seq("en", "de", null, "fr")(i % 4))
+      } :+ ((-1L, null, "fr"))).toDF("doc_id", "text", "lang")
+    val ref = Dedup.spanClipFrom(docs.select(col("doc_id"), col("text")))
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+    val got = Dedup.spanClipped(docs)
+    def rows(df: DataFrame) =
+      df.as[(Long, Long, Long, String, String)].collect().sortBy(_._1).toSeq
+    val want = rows(ref)
+    assert(got.columns.toSeq == ref.columns.toSeq)
+    assert(want.exists(_._3 > 0), "vacuous: nothing clipped")
+    assert(rows(got) == want)
+  }
+
+  test("mix rates: collected sums evaluated over a local relation equal " +
+       "the crossJoin rates, a null-lang and a null-sum group included") {
+    import graft.etl.CorpusPipeline
+    val toks = Seq[(String, Option[Long])](("en", Some(90000L)), ("de", Some(12000L)),
+      (null, Some(8000L)), ("fr", Some(200000L)), ("zz", None)).toDF("lang", "n_tokens")
+    val tot = toks.agg(sum(col("n_tokens")).as("total"), count(lit(1)).as("n_langs"))
+    val ref = toks.crossJoin(broadcast(tot))
+      .select(col("lang"),
+        least(lit(10000L), expr("(10000 * (total div n_langs)) div n_tokens")).as("rate_bp"))
+      .as[(String, Option[Long])].collect().toSet
+    // total 310000 over 5 groups: en 6888, fr 3100, de and null capped;
+    // zz's null quotient is skipped by least, so it reads the cap too
+    assert(ref == Set(("en", Some(6888L)), ("de", Some(10000L)), (null, Some(10000L)),
+      ("fr", Some(3100L)), ("zz", Some(10000L))))
+    assert(CorpusPipeline.mixRates(toks).toSet == ref)
   }
 }

@@ -274,8 +274,10 @@ class PersistLifecycleSpec extends AnyFunSuite with SparkTestBase {
     // that staging job. A stage left lazy re-runs its whole upstream
     // chain at every later count and read (199 jobs here with no stage
     // staged); a trailing count() per stage costs two more jobs each
-    // (79 jobs with every stage staged and counted that way).
-    val MaxBuildJobs = 54
+    // (79 jobs with every stage staged and counted that way), and
+    // counted in the staging jobs, 54. With each survivor decision one
+    // top-1 cut or one clip core, and the mix rates collected, 38.
+    val MaxBuildJobs = 38
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
